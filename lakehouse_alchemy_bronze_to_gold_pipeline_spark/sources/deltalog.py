@@ -50,6 +50,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import rebalance_partitions
+
 #: reader features this implementation understands (protocol v1/v2
 #: tables, plus v3 tables that only list these features)
 _SUPPORTED_READER_FEATURES = {"timestampNtz", "vacuumProtocolCheck"}
@@ -547,7 +549,7 @@ class DeltaLogTable:
         # table root under fresh UUID names (Delta file names are
         # opaque; uniqueness is what matters)
         stage = os.path.join(self.path, f"_stage_{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
+        writer = rebalance_partitions(df, partition_by).write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(stage)

@@ -12,11 +12,18 @@ Scale notes baked in here:
   timestamp: ``partitionBy("order_timestamp")`` in the reference
   (``gold_transformation.py:157``) creates one directory per distinct
   timestamp string — pathological at scale (SURVEY 4.3-L2).
+- Every partitioned write goes through ``rebalance_partitions``: one
+  file per partition value per write (or micro-batch) instead of one
+  per (task, value).  Without native Hadoop IO the local file system
+  forks ``chmod`` for every file and partition directory it creates,
+  so the file count is the cost of a partitioned write.
 - ``compact()`` is the OSS fallback for ``OPTIMIZE ... ZORDER BY``
   (``gold_transformation.py:85,160``): ``repartitionByRange`` on the
   cluster keys + sortWithinPartitions gives the same data-skipping
   locality (min/max pruning on sorted parquet row groups) without
-  Delta-only commands.
+  Delta-only commands.  The layout step itself is ``cluster``, which a
+  writer can also apply before a table's first write and skip the
+  rewrite entirely.
 """
 
 from __future__ import annotations
@@ -25,6 +32,51 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import has_delta
+
+
+def rebalance_partitions(
+    df: DataFrame, partition_by: list[str] | None
+) -> DataFrame:
+    """Route each partition value of ``df`` to one task before a
+    ``partitionBy`` write, so the write makes one file per value
+    instead of one per (task, value).  ``REBALANCE`` rather than
+    ``repartition``: in batch, AQE may still split a skewed value over
+    several tasks or coalesce small ones; a streaming micro-batch gets
+    a plain hash exchange.  No-op for an unpartitioned write."""
+    if not partition_by:
+        return df
+    return df.hint("rebalance", *partition_by)
+
+
+def cluster(
+    df: DataFrame,
+    cluster_by: list[str],
+    n_files: int | None = None,
+    equidepth: bool = False,
+) -> DataFrame:
+    """Lay ``df`` out clustered on ``cluster_by`` for the next write:
+    ONE key -> range-partitioned + sorted (lexicographic is optimal for
+    a single dimension); SEVERAL keys -> a Morton/Z-order interleave
+    key (``operators.zorder``), so file-level min/max pruning works on
+    EVERY clustered column, not just the leading one — the property
+    ZORDER buys at scale.  ``n_files`` fixes the range partition count
+    (default: the session's shuffle partitions, AQE-coalesced)."""
+    if len(cluster_by) > 1:
+        from ..operators.zorder import zorder_key, zorder_key_equidepth
+
+        mk = zorder_key_equidepth if equidepth else zorder_key
+        df, key = mk(df, cluster_by)
+        parts = [F.col(key)]
+    else:
+        key = None
+        parts = [F.col(c) for c in cluster_by]
+    out = (
+        df.repartitionByRange(n_files, *parts)
+        if n_files
+        else df.repartitionByRange(*parts)
+    )
+    out = out.sortWithinPartitions(*parts)
+    return out.drop(key) if key else out
 
 
 class TableIO:
@@ -39,16 +91,26 @@ class TableIO:
         """Batch table scan (SURVEY S5)."""
         return self.spark.read.table(table)
 
-    def write_append(self, df: DataFrame, table: str) -> None:
+    def write_append(
+        self, df: DataFrame, table: str, partition_by: list[str] | None = None
+    ) -> None:
         """Batch append sink (SURVEY S9 — the DQ issue log pattern)."""
-        df.write.format(self.fmt).mode("append").saveAsTable(table)
+        writer = (
+            rebalance_partitions(df, partition_by)
+            .write.format(self.fmt)
+            .mode("append")
+        )
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.saveAsTable(table)
 
     def write_overwrite(
         self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> None:
         """Batch overwrite with schema evolution (SURVEY S8)."""
         writer = (
-            df.write.format(self.fmt)
+            rebalance_partitions(df, partition_by)
+            .write.format(self.fmt)
             .mode("overwrite")
             .option("overwriteSchema", "true")
         )
@@ -92,7 +154,8 @@ class TableIO:
         one unbounded batch.
         """
         writer = (
-            df.writeStream.format(self.fmt)
+            rebalance_partitions(df, partition_by)
+            .writeStream.format(self.fmt)
             .outputMode("append")
             .option("checkpointLocation", checkpoint)
         )
@@ -137,12 +200,10 @@ class TableIO:
         """``OPTIMIZE t ZORDER BY (cols)`` (SURVEY S12) or fallback.
 
         Delta path issues the real command.  Parquet path rewrites the
-        table clustered on the keys: ONE key -> range-partitioned +
-        sorted (lexicographic is optimal for a single dimension);
-        SEVERAL keys -> a Morton/Z-order interleave key
-        (``operators.zorder``), so file-level min/max pruning works on
-        EVERY clustered column, not just the leading one — the
-        property ZORDER buys at scale.
+        table through ``cluster`` (range key for one column, Z-order
+        key for several).  A table about to be written anyway should
+        be written through ``cluster`` instead: that skips the
+        snapshot copy and the second full write.
         """
         if self.fmt == "delta":
             cols = ", ".join(cluster_by)
@@ -158,24 +219,9 @@ class TableIO:
         self.spark.read.table(table).write.format(self.fmt).mode(
             "overwrite"
         ).saveAsTable(tmp)
-        df = self.spark.read.table(tmp)
-        if len(cluster_by) > 1:
-            from ..operators.zorder import zorder_key, zorder_key_equidepth
-
-            mk = zorder_key_equidepth if equidepth else zorder_key
-            df, key = mk(df, cluster_by)
-            parts = [F.col(key)]
-        else:
-            key = None
-            parts = [F.col(c) for c in cluster_by]
-        rewritten = (
-            df.repartitionByRange(n_files, *parts)
-            if n_files
-            else df.repartitionByRange(*parts)
+        rewritten = cluster(
+            self.spark.read.table(tmp), cluster_by, n_files, equidepth
         )
-        rewritten = rewritten.sortWithinPartitions(*parts)
-        if key:
-            rewritten = rewritten.drop(key)
         rewritten.write.format(self.fmt).mode("overwrite").saveAsTable(
             table
         )

@@ -43,7 +43,7 @@ from ..sources.json_source import (
     read_json_stream,
     with_ingest_metadata,
 )
-from ..sources.tables import TableIO
+from ..sources.tables import TableIO, cluster
 
 
 @dataclass
@@ -80,12 +80,21 @@ class MedallionPipeline:
     # ------------------------------------------------------------ bronze
     def bronze_ingest(self, name: str) -> str:
         """JSON dir -> bronze table: infer-once schema, payload wrap,
-        lineage columns, availableNow append with checkpoint."""
+        lineage columns, availableNow append with checkpoint.
+
+        The schema is inferred from the landing directory only when the
+        bronze table does not exist yet; later calls freeze it to the
+        table's ``payload`` struct, so an incremental call reads only
+        the new files and a field first seen after the first call is
+        not ingested."""
         e = self.entities[name]
-        schema = infer_json_schema(self.spark, e.source_dir)
+        table = self.lh.table("bronze", name)
+        if self.spark.catalog.tableExists(table):
+            schema = self.io.read(table).schema["payload"].dataType
+        else:
+            schema = infer_json_schema(self.spark, e.source_dir)
         stream = read_json_stream(self.spark, e.source_dir, schema)
         bronze = with_ingest_metadata(stream)
-        table = self.lh.table("bronze", name)
         q = self.io.write_stream(
             bronze, table, self.lh.checkpoint("bronze", name)
         )
@@ -127,11 +136,13 @@ class MedallionPipeline:
         cluster_by: Sequence[str] = (),
     ) -> str:
         """Batch overwrite dimension (reference dim_products shape,
-        gold_transformation.py:79-85) + compaction."""
+        gold_transformation.py:79-85), written already clustered on
+        ``cluster_by`` — the layout ``OPTIMIZE ... ZORDER BY`` would
+        give, in the same write."""
         table = self.lh.table("gold", table_suffix or f"dim_{name}")
-        self.io.write_overwrite(dim_df, table)
         if cluster_by:
-            self.io.compact(table, list(cluster_by))
+            dim_df = cluster(dim_df, list(cluster_by))
+        self.io.write_overwrite(dim_df, table)
         return table
 
     def build_gold_fact(
@@ -142,7 +153,8 @@ class MedallionPipeline:
         checkpoint_name: str | None = None,
     ) -> str:
         """Fact sink: streaming append when the input is streaming,
-        batch append otherwise; partitioned by derived date (L2)."""
+        batch append otherwise; partitioned by derived date (L2), one
+        file per date per micro-batch (or batch)."""
         table = self.lh.table("gold", table_name)
         if fact_df.isStreaming:
             q = self.io.write_stream(
@@ -153,10 +165,9 @@ class MedallionPipeline:
             )
             q.awaitTermination()
         else:
-            writer = fact_df.write.format(self.io.fmt).mode("append")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.saveAsTable(table)
+            self.io.write_append(
+                fact_df, table, partition_by=list(partition_by) or None
+            )
         return table
 
     # ----------------------------------------------------------- quality

@@ -119,7 +119,9 @@ def test_protocol_optimize_equals_compact_fallback(spark, tmp_path):
 # writer emits, so a regression in the dispatch seam (a renamed
 # option, a dropped trigger, a mode change) is caught without
 # delta-spark installed.  A recording fake stands in for the
-# DataFrame(Stream)Writer chain.
+# DataFrame(Stream)Writer chain; it records the ``rebalance`` hint a
+# partitioned write applies before ``.write``, since dropping it would
+# bring back one file per (task, partition value).
 # ------------------------------------------------------------------
 
 
@@ -141,6 +143,10 @@ class _Recorder:
 class _FakeDF:
     def __init__(self, log):
         self._log = log
+
+    def hint(self, name, *params):
+        self._log.append(("hint", (name, *params), {}))
+        return self
 
     @property
     def write(self):
@@ -164,12 +170,28 @@ def test_delta_write_append_option_strings(spark):
     ]
 
 
+def test_delta_write_append_partitioned_option_strings(spark):
+    log = []
+    TableIO(spark, fmt="delta").write_append(
+        _FakeDF(log), "gold.fact_sales", partition_by=["order_date"]
+    )
+    assert log == [
+        ("hint", ("rebalance", "order_date"), {}),
+        ("write", (), {}),
+        ("format", ("delta",), {}),
+        ("mode", ("append",), {}),
+        ("partitionBy", ("order_date",), {}),
+        ("saveAsTable", ("gold.fact_sales",), {}),
+    ]
+
+
 def test_delta_write_overwrite_option_strings(spark):
     log = []
     TableIO(spark, fmt="delta").write_overwrite(
         _FakeDF(log), "gold.dim_customer", partition_by=["order_date"]
     )
     assert log == [
+        ("hint", ("rebalance", "order_date"), {}),
         ("write", (), {}),
         ("format", ("delta",), {}),
         ("mode", ("overwrite",), {}),
@@ -188,6 +210,7 @@ def test_delta_write_stream_option_strings(spark):
         partition_by=["order_date"],
     )
     assert log == [
+        ("hint", ("rebalance", "order_date"), {}),
         ("writeStream", (), {}),
         ("format", ("delta",), {}),
         ("outputMode", ("append",), {}),

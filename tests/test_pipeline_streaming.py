@@ -103,3 +103,25 @@ def test_infer_schema_raises_on_empty(spark, tmp_path):
     os.makedirs(empty, exist_ok=True)
     with pytest.raises(Exception):
         infer_json_schema(spark, empty)
+
+
+def test_bronze_schema_frozen_at_first_ingest(spark, pipeline):
+    """A field first seen in a later file lands without that field:
+    Bronze freezes the schema inferred when the table was created and
+    later calls reuse the table's ``payload`` struct.  Drift detection
+    (ROADMAP item 5) will change this — the new field is to be recorded
+    or evolved, not silently dropped."""
+    pipe, src, lh = pipeline
+    pipe.bronze_ingest("customers")
+    write_json(src, "customers_new.json", [
+        {"customer_id": 4, "name": "Di", "email": "di@ex.com",
+         "address": {"city": "oslo", "country": "no"}, "phone": "555"},
+    ])
+    table = pipe.bronze_ingest("customers")
+    bronze = spark.read.table(table)
+    assert bronze.count() == 3
+    payload = bronze.schema["payload"].dataType
+    assert "phone" not in payload.fieldNames()
+    new = bronze.filter(F.col("ingest_file").endswith("customers_new.json"))
+    row = new.select("payload.*").first()
+    assert (row.customer_id, row.name, row.address.city) == (4, "Di", "oslo")
