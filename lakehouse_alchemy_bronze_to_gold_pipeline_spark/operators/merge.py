@@ -94,12 +94,9 @@ def upsert_keep_latest(
         )
         return
 
-    latest = merge_keep_latest(io.read(table), updates, keys, order_col)
-    # materialize before overwriting the table we read from
-    tmp = f"{table}__merge_tmp"
-    latest.write.format(io.fmt).mode("overwrite").saveAsTable(tmp)
-    io.write_overwrite(spark.read.table(tmp), table)
-    spark.sql(f"DROP TABLE {tmp}")
+    io.rewrite(
+        table, lambda snap: merge_keep_latest(snap, updates, keys, order_col)
+    )
 
 
 def streaming_upsert(

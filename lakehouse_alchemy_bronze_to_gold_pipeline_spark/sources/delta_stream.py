@@ -36,6 +36,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from .deltalog import DeltaLogTable
+
 
 class _FilePartition(InputPartition):
     def __init__(
@@ -48,56 +50,21 @@ class _FilePartition(InputPartition):
         self.tz_cols = tz_cols
 
 
-def _log_dir(path: str) -> str:
-    return os.path.join(os.path.abspath(path.rstrip("/")), "_delta_log")
-
-
-def _json_versions(log: str) -> list[int]:
-    if not os.path.isdir(log):
-        return []
-    return sorted(
-        int(f[:-5])
-        for f in os.listdir(log)
-        if f.endswith(".json") and f[:-5].isdigit()
-    )
-
-
-def _table_meta(log: str) -> dict:
-    """metaData from the earliest available JSON commit (falls back
-    to the newest checkpoint if the head was truncated)."""
-    for v in _json_versions(log):
-        with open(os.path.join(log, f"{v:020d}.json")) as fh:
-            for line in fh:
-                a = json.loads(line)
-                if "metaData" in a:
-                    return a["metaData"]
-    cps = sorted(
-        int(f.split(".")[0])
-        for f in os.listdir(log)
-        if f.endswith(".checkpoint.parquet") and f.split(".")[0].isdigit()
-    )
-    if cps:
-        import pyarrow.parquet as pq
-
-        for row in pq.read_table(
-            os.path.join(log, f"{cps[-1]:020d}.checkpoint.parquet")
-        ).to_pylist():
-            if row.get("metaData") is not None:
-                return row["metaData"]
-    raise ValueError(f"no metaData action found under {log}")
+def _table(options) -> DeltaLogTable:
+    """The log reader for the ``path`` option.  Only its metadata
+    methods run here (in the data source's Python worker), so it needs
+    no session."""
+    path = str(options.get("path", ""))
+    if not path:
+        raise ValueError("delta_log_cdc requires .option('path', ...)")
+    return DeltaLogTable(None, path)
 
 
 class DeltaCdcStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options):
-        self.table_path = os.path.abspath(
-            str(options.get("path", "")).rstrip("/")
-        )
-        if not self.table_path:
-            raise ValueError("delta_log_cdc requires .option('path', ...)")
-        self.log = _log_dir(self.table_path)
+        self.table = _table(options)
         self.schema = schema
-        meta = _table_meta(self.log)
-        if meta.get("partitionColumns"):
+        if self.table._replay(None)["meta"].get("partitionColumns"):
             raise NotImplementedError(
                 "delta_log_cdc streams unpartitioned tables; partition-"
                 "column reconstruction from hive paths is out of scope"
@@ -111,7 +78,7 @@ class DeltaCdcStreamReader(DataSourceStreamReader):
         return {"version": self._start}
 
     def latestOffset(self) -> dict:
-        vs = _json_versions(self.log)
+        vs = self.table.versions()
         return {"version": vs[-1] if vs else -1}
 
     def partitions(self, start: dict, end: dict):
@@ -128,32 +95,29 @@ class DeltaCdcStreamReader(DataSourceStreamReader):
         ]
         parts = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            name = os.path.join(self.log, f"{v:020d}.json")
-            if not os.path.exists(name):
+            try:
+                actions = self.table._actions(v)
+            except FileNotFoundError:
                 raise ValueError(
-                    f"commit {v} missing from {self.log} — the stream's "
-                    "checkpoint predates log retention"
-                )
-            with open(name) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "add" in a:
-                        parts.append(
-                            _FilePartition(
-                                os.path.join(
-                                    self.table_path, a["add"]["path"]
-                                ),
-                                len(names),
-                                names,
-                                tz_cols,
-                            )
+                    f"commit {v} missing from {self.table.path} — the "
+                    "stream's checkpoint predates log retention"
+                ) from None
+            for a in actions:
+                if "add" in a:
+                    parts.append(
+                        _FilePartition(
+                            os.path.join(self.table.path, a["add"]["path"]),
+                            len(names),
+                            names,
+                            tz_cols,
                         )
-                    elif "remove" in a and a["remove"].get("dataChange"):
-                        raise NotImplementedError(
-                            "delta_log_cdc is append-only: commit "
-                            f"{v} removes data (use batch read for "
-                            "overwrite workloads)"
-                        )
+                    )
+                elif "remove" in a and a["remove"].get("dataChange"):
+                    raise NotImplementedError(
+                        "delta_log_cdc is append-only: commit "
+                        f"{v} removes data (use batch read for "
+                        "overwrite workloads)"
+                    )
         return parts
 
     def read(self, partition: _FilePartition):
@@ -184,7 +148,7 @@ class DeltaCdcDataSource(DataSource):
         return "delta_log_cdc"
 
     def schema(self):
-        meta = _table_meta(_log_dir(str(self.options.get("path", ""))))
+        meta = _table(self.options)._replay(None)["meta"]
         return StructType.fromJson(json.loads(meta["schemaString"]))
 
     def streamReader(self, schema) -> DeltaCdcStreamReader:

@@ -4,12 +4,12 @@ JSON, no delta-spark dependency).
 The reference writes every table as Delta (`bronze_ingestion.py:83`,
 `gold_transformation.py:79-85,150-160`); in this environment the
 delta-spark package is absent, so `TableIO` falls back to plain
-parquet and `VersionedTable` supplies portable time travel.  This
-module closes the remaining gap HONESTLY: the Delta *protocol* is a
-public, documented format (an ordered `_delta_log/%020d.json` of
-`metaData` / `add` / `remove` actions over immutable parquet files —
-delta.io PROTOCOL.md), and reading or writing that format needs no
-library, only JSON + parquet.
+parquet catalog tables, which keep no history.  This module is the
+engine's one table layer with history and file skipping: the Delta
+*protocol* is a public, documented format (an ordered
+`_delta_log/%020d.json` of `metaData` / `add` / `remove` actions
+over immutable parquet files — delta.io PROTOCOL.md), and reading or
+writing that format needs no library, only JSON + parquet.
 
 What this gives the engine:
 
@@ -26,6 +26,11 @@ What this gives the engine:
   wrote.  Optimistic concurrency is the protocol's put-if-absent on
   the next log name — a concurrent writer loses the create race and
   must retry.
+- History and file skipping on the same log: ``restore`` (RESTORE,
+  metadata only), ``changes`` (a change feed by snapshot diff),
+  ``forget_keys`` (erasure that also drops the history holding the
+  keys), ``vacuum``, ``optimize`` (OPTIMIZE ZORDER BY) and
+  ``pruned_read`` (data skipping on ``add.stats`` min/max).
 
 Deliberate scope cuts (each raises, never guesses): checkpoint
 parquet files are NOT required for correctness (the JSON log is
@@ -49,6 +54,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .tables import rebalance_partitions
 
@@ -250,11 +256,11 @@ class DeltaLogTable:
         version: int | None = None,
     ) -> tuple[DataFrame, int, int]:
         """Range read via the per-file ``add.stats`` min/max envelopes
-        (Delta data skipping, the protocol-native form of
-        ``sources/zonemap.py``): returns (df filtered to [lo, hi],
-        n_files_total, n_files_read).  Files without stats for
-        ``col`` are conservatively kept; the residual filter keeps
-        correctness exact inside survivors."""
+        (Delta data skipping, the zone-map idea): returns (df filtered
+        to [lo, hi], n_files_total, n_files_read).  Files whose
+        envelope misses the range are never opened; files without
+        stats for ``col`` are conservatively kept; the residual filter
+        keeps correctness exact inside survivors."""
         snap = self._replay(version)
         total = len(snap["files"])
         keep = []
@@ -269,8 +275,6 @@ class DeltaLogTable:
                     skip = mx < lo or mn > hi
             if not skip:
                 keep.append(os.path.join(self.path, path))
-        from pyspark.sql import functions as F
-
         if not keep:
             return (
                 self.read(version).filter(F.lit(False)),
@@ -299,6 +303,79 @@ class DeltaLogTable:
             )
             out.append({"version": v, **info})
         return out
+
+    def changes(
+        self, v_from: int, v_to: int | None = None, keys=("id",)
+    ) -> DataFrame:
+        """Change data feed between two versions: (keys..., change)
+        rows with change in insert/delete/update — Delta CDF's role,
+        derived by diffing the two snapshots with
+        ``operators.diff.snapshot_diff`` (one full-outer key join; no
+        change log is stored, which trades write-path cost for
+        read-path compute)."""
+        from ..operators.diff import snapshot_diff
+
+        return snapshot_diff(
+            self.read(v_from), self.read(v_to), list(keys)
+        )
+
+    def restore(self, version: int) -> int:
+        """RESTORE TO VERSION AS OF ``version``: one metadata-only
+        commit that removes every live file ``version`` lacks and
+        re-adds (stats included) every file of ``version`` that is no
+        longer live.  No data file is read or written, so the cost is
+        O(files); re-added files must not have been vacuumed.  Returns
+        the new version."""
+        cur = self._replay(None)
+        old = self._replay(version)
+        readd = sorted(old["files"].keys() - cur["files"].keys())
+        gone = [
+            p for p in readd
+            if not os.path.exists(os.path.join(self.path, p))
+        ]
+        if gone:
+            raise FileNotFoundError(
+                f"cannot restore version {version}: {len(gone)} of its "
+                f"files were vacuumed (e.g. {gone[0]})"
+            )
+        ts = int(time.time() * 1000)
+        actions: list[dict] = []
+        if old["meta"] != cur["meta"]:
+            actions.append({"metaData": old["meta"]})
+        actions.extend(
+            {"remove": {"path": p, "deletionTimestamp": ts,
+                        "dataChange": True}}
+            for p in sorted(cur["files"].keys() - old["files"].keys())
+        )
+        actions.extend(
+            {"add": {**old["files"][p], "dataChange": True}} for p in readd
+        )
+        return self._commit(
+            cur["version"] + 1, "RESTORE", {"version": version}, actions
+        )
+
+    def forget_keys(self, key_col: str, keys) -> dict:
+        """Right-to-be-forgotten: overwrite the current snapshot
+        without ``keys``, then drop all history behind it.  Erasure
+        is only real once nothing still holds the rows: older log
+        entries go (their ``add.stats`` min/max can quote an erased
+        key), with a checkpoint of the new version standing in for
+        them, and ``vacuum`` deletes every data file the new version
+        does not reference."""
+        v = self.write(
+            self.read().filter(~F.col(key_col).isin(list(keys))),
+            "overwrite",
+        )
+        self.checkpoint()
+        for old in self.versions():
+            if old < v:
+                os.remove(os.path.join(self._log, f"{old:020d}.json"))
+        for old in self._checkpoints():
+            if old < v:
+                os.remove(os.path.join(
+                    self._log, f"{old:020d}.checkpoint.parquet"
+                ))
+        return {"version": v, **self.vacuum(keep_versions=1)}
 
     def upsert(self, updates: DataFrame, keys: list[str]) -> int:
         """MERGE INTO (matched -> update whole row, unmatched ->
@@ -394,17 +471,10 @@ class DeltaLogTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        vs = self.versions()
         snap = self._replay(None)
         v = snap["version"]
-        txns = {}
-        for jv in vs:
-            for a in self._actions(jv):
-                t = a.get("txn")
-                if t:
-                    txns[t["appId"]] = max(
-                        txns.get(t["appId"], -1), int(t["version"])
-                    )
+        txns = self._txn_watermarks()
+
         def _nz(obj):
             # parquet cannot store an EMPTY struct; {} fields (an
             # unpartitioned add's partitionValues, a bare metaData
@@ -435,12 +505,10 @@ class DeltaLogTable:
         return v
 
     # ---------------------------------------------- streaming write
-    def last_txn_version(self, app_id: str) -> int:
-        """Highest ``txn.version`` committed for ``app_id`` (-1 if
-        none) — the protocol's idempotent-writer bookkeeping.
-        Checkpoints carry the per-app watermarks forward, so the
-        answer survives JSON log truncation."""
-        last = -1
+    def _txn_watermarks(self) -> dict[str, int]:
+        """Highest ``txn.version`` per appId: the newest checkpoint's
+        watermarks plus the JSON tail after it, so the answer survives
+        JSON log truncation."""
         cps = self._checkpoints()
         streams = []
         if cps:
@@ -449,12 +517,20 @@ class DeltaLogTable:
         else:
             tail = self.versions()
         streams.extend(self._actions(v) for v in tail)
+        out: dict[str, int] = {}
         for actions in streams:
             for a in actions:
                 txn = a.get("txn")
-                if txn and txn.get("appId") == app_id:
-                    last = max(last, int(txn["version"]))
-        return last
+                if txn:
+                    out[txn["appId"]] = max(
+                        out.get(txn["appId"], -1), int(txn["version"])
+                    )
+        return out
+
+    def last_txn_version(self, app_id: str) -> int:
+        """Highest ``txn.version`` committed for ``app_id`` (-1 if
+        none) — the protocol's idempotent-writer bookkeeping."""
+        return self._txn_watermarks().get(app_id, -1)
 
     def write_batch_exactly_once(
         self,
@@ -505,28 +581,21 @@ class DeltaLogTable:
         # a truncated-head log (JSON entries vacuumed after a
         # checkpoint) still has a current version — the checkpoint's
         latest = max(vs[-1] if vs else -1, cps[-1] if cps else -1)
+
+        def fields(schema_json: str) -> set[tuple[str, str]]:
+            return {
+                # nested types compare by name only
+                (f["name"], "<nested>" if isinstance(f["type"], dict)
+                 else f["type"])
+                for f in json.loads(schema_json)["fields"]
+            }
+
         schema_changed = False
         if latest >= 0:
             prev = self._replay(None)
             prev_part = prev["meta"].get("partitionColumns") or []
-            prev_fields = {
-                (f["name"], f["type"])
-                for f in json.loads(prev["meta"]["schemaString"])["fields"]
-                if not isinstance(f["type"], dict)  # nested: name-only
-            } | {
-                (f["name"], "<nested>")
-                for f in json.loads(prev["meta"]["schemaString"])["fields"]
-                if isinstance(f["type"], dict)
-            }
-            new_fields = {
-                (f["name"], f["type"])
-                for f in json.loads(df.schema.json())["fields"]
-                if not isinstance(f["type"], dict)
-            } | {
-                (f["name"], "<nested>")
-                for f in json.loads(df.schema.json())["fields"]
-                if isinstance(f["type"], dict)
-            }
+            prev_fields = fields(prev["meta"]["schemaString"])
+            new_fields = fields(df.schema.json())
             schema_changed = new_fields != prev_fields
             if mode == "append":
                 if list(partition_by or []) != list(prev_part):
@@ -592,16 +661,7 @@ class DeltaLogTable:
         shutil.rmtree(stage)
 
         # 2. actions
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "WRITE" if _data_change else "OPTIMIZE",
-                    "operationParameters": {"mode": mode.upper()},
-                    "engineInfo": "lakehouse-alchemy-spark-deltalog",
-                }
-            }
-        ]
+        actions: list[dict] = []
         next_v = latest + 1
         if next_v == 0:
             actions.append(
@@ -648,15 +708,37 @@ class DeltaLogTable:
             actions.append({"txn": {**_txn, "lastUpdated":
                                     int(time.time() * 1000)}})
         actions.extend(adds)
+        return self._commit(
+            next_v,
+            "WRITE" if _data_change else "OPTIMIZE",
+            {"mode": mode.upper()},
+            actions,
+        )
 
-        # 3. atomic commit: put-if-absent on the next log name — the
-        # protocol's optimistic-concurrency primitive.  A concurrent
-        # writer that claimed this version first makes the open fail;
-        # single-writer pipelines never hit it.
+    def _commit(
+        self,
+        version: int,
+        operation: str,
+        parameters: dict,
+        actions: list[dict],
+    ) -> int:
+        """Atomic commit of ``actions`` (after a ``commitInfo``) as log
+        entry ``version``: put-if-absent on the log name — the
+        protocol's optimistic-concurrency primitive.  A concurrent
+        writer that claimed this version first makes the open fail;
+        single-writer pipelines never hit it."""
+        info = {
+            "commitInfo": {
+                "timestamp": int(time.time() * 1000),
+                "operation": operation,
+                "operationParameters": parameters,
+                "engineInfo": "lakehouse-alchemy-spark-deltalog",
+            }
+        }
         os.makedirs(self._log, exist_ok=True)
-        name = os.path.join(self._log, f"{next_v:020d}.json")
+        name = os.path.join(self._log, f"{version:020d}.json")
         fd = os.open(name, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         with os.fdopen(fd, "w") as fh:
-            for a in actions:
+            for a in (info, *actions):
                 fh.write(json.dumps(a) + "\n")
-        return next_v
+        return version

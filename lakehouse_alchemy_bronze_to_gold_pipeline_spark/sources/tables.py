@@ -24,9 +24,18 @@ Scale notes baked in here:
   Delta-only commands.  The layout step itself is ``cluster``, which a
   writer can also apply before a table's first write and skip the
   rewrite entirely.
+- ``rewrite()`` is the one way a catalog table is replaced by a
+  function of its own contents (compaction, the SCD-1 merge fallback,
+  the sketch sinks): a parquet table cannot overwrite itself, so the
+  snapshot goes through a tmp table first.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from typing import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,6 +86,12 @@ def cluster(
     )
     out = out.sortWithinPartitions(*parts)
     return out.drop(key) if key else out
+
+
+def rewrite_tmp(table: str) -> str:
+    """Name of the tmp table ``TableIO.rewrite`` snapshots ``table``
+    into (same database, so it lands next to the table)."""
+    return f"{table}__rewrite_tmp"
 
 
 class TableIO:
@@ -199,33 +214,59 @@ class TableIO:
     ) -> None:
         """``OPTIMIZE t ZORDER BY (cols)`` (SURVEY S12) or fallback.
 
-        Delta path issues the real command.  Parquet path rewrites the
-        table through ``cluster`` (range key for one column, Z-order
-        key for several).  A table about to be written anyway should
-        be written through ``cluster`` instead: that skips the
+        Delta path issues the real command.  Parquet path ``rewrite``s
+        the table through ``cluster`` (range key for one column,
+        Z-order key for several).  A table about to be written anyway
+        should be written through ``cluster`` instead: that skips the
         snapshot copy and the second full write.
         """
         if self.fmt == "delta":
             cols = ", ".join(cluster_by)
             self.spark.sql(f"OPTIMIZE {table} ZORDER BY ({cols})")
             return
-        # snapshot FIRST, cluster LAST: a table cannot overwrite
-        # itself, so a tmp copy is unavoidable — but the clustered
-        # write must be the FINAL one.  (Clustering into tmp and then
-        # copying tmp -> table re-packs the carefully ranged files by
-        # SIZE, interleaving key ranges and silently undoing the
-        # layout the rewrite just paid for.)
-        tmp = f"{table}__compact_tmp"
-        self.spark.read.table(table).write.format(self.fmt).mode(
+        self.rewrite(
+            table, lambda snap: cluster(snap, cluster_by, n_files, equidepth)
+        )
+
+    def rewrite(
+        self, table: str, fn: Callable[[DataFrame], DataFrame]
+    ) -> None:
+        """Replace catalog ``table`` with ``fn(snapshot)``.
+
+        A table cannot overwrite itself while a plan still reads it, so
+        the current contents are copied into ``rewrite_tmp(table)``
+        first, ``fn`` runs over that copy, and its result is written
+        to ``table`` as the FINAL write: a clustered layout survives
+        only then (copying a clustered tmp into the table re-packs the
+        ranged files by SIZE, interleaving key ranges).  The tmp table
+        is dropped afterwards.
+
+        A tmp location orphaned by a crashed run is cleared first
+        (``saveAsTable`` refuses a managed path that already exists).
+        ``table`` is refreshed in this session and in the session of
+        ``fn``'s frame: inside ``foreachBatch`` that is the micro-batch
+        clone, whose relation cache keeps stale file lists otherwise.
+        """
+        tmp = rewrite_tmp(table)
+        self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+        shutil.rmtree(self._default_location(tmp), ignore_errors=True)
+        self.read(table).write.format(self.fmt).mode(
             "overwrite"
         ).saveAsTable(tmp)
-        rewritten = cluster(
-            self.spark.read.table(tmp), cluster_by, n_files, equidepth
-        )
-        rewritten.write.format(self.fmt).mode("overwrite").saveAsTable(
-            table
-        )
+        out = fn(self.read(tmp))
+        self.write_overwrite(out, table)
         self.spark.sql(f"DROP TABLE {tmp}")
+        for session in (self.spark, out.sparkSession):
+            session.catalog.refreshTable(table)
+
+    def _default_location(self, table: str) -> str:
+        """Managed location of ``table`` (``<database dir>/<name>``),
+        whether or not the table exists."""
+        db, _, name = table.rpartition(".")
+        loc = self.spark.catalog.getDatabase(
+            db or self.spark.catalog.currentDatabase()
+        ).locationUri
+        return os.path.join(urlparse(loc).path, name.lower())
 
     def _table_location(self, table: str) -> str:
         row = (

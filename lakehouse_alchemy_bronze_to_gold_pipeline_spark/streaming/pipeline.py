@@ -172,16 +172,25 @@ class MedallionPipeline:
 
     # ----------------------------------------------------------- quality
     def run_quality(self, name: str, layer: str = "silver") -> DataFrame:
-        """Single-pass rule counts + failing-row audit append."""
+        """Single-pass rule counts + failing-row audit append.
+
+        Every entity appends to the one ``quality_issues`` table, so
+        its rows have a fixed schema ``(entity, rule, check_ts,
+        record)`` whatever the entity's columns: ``record`` is the
+        failing row as a JSON object."""
         e = self.entities[name]
         if not e.quality_rules:
             raise ValueError(f"no quality rules configured for {name!r}")
         df = self.io.read(self.lh.table(layer, name))
         engine = QualityEngine(list(e.quality_rules))
         issues_table = self.lh.table("quality", "quality_issues")
+        record = F.to_json(F.struct(*df.columns)).alias("record")
 
         def sink(rows: DataFrame) -> None:
-            self.io.write_append(rows, issues_table)
+            self.io.write_append(
+                rows.select("entity", "rule", "check_ts", record),
+                issues_table,
+            )
 
         return engine.apply(df, name, sink=sink)
 

@@ -23,9 +23,9 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..operators.merge import upsert_keep_latest
+from ..operators.merge import merge_keep_latest, upsert_keep_latest
+from ..sources.deltalog import DeltaLogTable
 from ..sources.tables import TableIO
 from .windows import tumbling_agg
 
@@ -72,7 +72,7 @@ def continuous_aggregate(
 
 def continuous_aggregate_versioned(
     events: DataFrame,
-    versioned,
+    versioned: DeltaLogTable,
     ts_col: str = "ts",
     window: str = "1 hour",
     watermark: str = "30 minutes",
@@ -80,45 +80,30 @@ def continuous_aggregate_versioned(
     checkpoint: str = "",
 ):
     """Continuous aggregate with HISTORY: every micro-batch commits
-    the refreshed rollup as a new ``VersionedTable`` snapshot, so the
-    materialized view supports as-of reads ("what did the hourly
-    rollup say before this batch landed?") and O(manifest) rollback —
-    the Delta-history behavior (``sources.versions``) composed with
+    the refreshed rollup as a new version of the Delta-log table
+    ``versioned``, so the materialized view supports as-of reads
+    ("what did the hourly rollup say before this batch landed?") and
+    metadata-only ``restore`` — Delta history composed with
     incremental maintenance.
 
     Merge semantics match ``continuous_aggregate`` (newest window
     emission wins via n_events monotonicity); the difference is only
-    the sink: read-latest + merge + commit, data immutable per
-    version."""
-    from ..sources.versions import VersionedTable
-
-    assert isinstance(versioned, VersionedTable)
+    the sink: read-latest + merge + overwrite commit.  The overwrite
+    may read the table it replaces: the log only tombstones the old
+    files, which stay on disk."""
     agg = tumbling_agg(events, ts_col, window, watermark, keys=keys)
     merge_keys = ["window_start", *keys]
-    spark = events.sparkSession
 
     def merge_batch(batch: DataFrame, _batch_id: int) -> None:
         if not batch.columns or batch.isEmpty():
             return
         try:
-            current = versioned.read()
+            merged = merge_keep_latest(
+                versioned.read(), batch, merge_keys, "n_events"
+            )
         except FileNotFoundError:
-            current = None
-        if current is None:
             merged = batch
-        else:
-            from pyspark.sql import Window as W
-
-            union = current.unionByName(batch)
-            w = W.partitionBy(*merge_keys).orderBy(
-                F.col("n_events").desc()
-            )
-            merged = (
-                union.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        versioned.write(merged, mode="overwrite")
+        versioned.write(merged, "overwrite")
 
     return (
         agg.writeStream.foreachBatch(merge_batch)

@@ -28,26 +28,10 @@ from pyspark.sql import functions as F
 from ..operators.sketch import cms_cells
 from ..sources.tables import TableIO
 
-
-
-def _replace_table(spark, io: TableIO, tmp: str, merged: DataFrame,
-                   table: str) -> None:
-    """tmp-materialize -> overwrite -> drop-tmp, defensively clearing
-    any orphaned tmp location a previous crashed run left behind
-    (saveAsTable refuses a managed-table path that already exists)."""
-    import os
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    shutil.rmtree(os.path.join(wh, tmp), ignore_errors=True)
-    merged.write.format(io.fmt).mode("overwrite").saveAsTable(tmp)
-    io.write_overwrite(spark.read.table(tmp), table)
-    spark.sql(f"DROP TABLE {tmp}")
-    spark.catalog.refreshTable(table)
-    io.spark.catalog.refreshTable(table)
+# Every merge_*_batch below folds the batch into the stored table
+# through ``TableIO.rewrite`` with the batch's own frame on the left of
+# the union, so the final write runs in the micro-batch session and
+# ``rewrite`` refreshes the table there as well as in ``io``'s session.
 
 
 def merge_cms_batch(
@@ -58,22 +42,18 @@ def merge_cms_batch(
     depth: int = 4,
     width: int = 256,
 ) -> None:
-    """Sum one batch's CMS grid into the stored cells table
-    (read -> cell-wise add -> tmp-materialize -> overwrite, the same
-    self-overwrite-safe dance as the SCD-1 parquet merge)."""
+    """Sum one batch's CMS grid into the stored cells table (cell-wise
+    add over ``TableIO.rewrite``, the same self-overwrite-safe path as
+    the SCD-1 parquet merge)."""
     spark = batch.sparkSession
     cells = cms_cells(batch, item_col, depth, width)
     if spark.catalog.tableExists(table):
-        merged = (
-            io.read(table)
-            .unionByName(cells)
+        io.rewrite(
+            table,
+            lambda snap: cells.unionByName(snap)
             .groupBy("r", "cell")
-            .agg(F.sum("cnt").alias("cnt"))
+            .agg(F.sum("cnt").alias("cnt")),
         )
-        # NOTE: inside foreachBatch `batch.sparkSession` is a
-        # MICRO-BATCH CLONE — _replace_table refreshes through the
-        # owning session too, or outer readers keep stale file lists
-        _replace_table(spark, io, f"{table}__cms_tmp", merged, table)
     else:
         io.write_overwrite(cells, table)
 
@@ -133,15 +113,21 @@ def merge_kmv_batch(
         .select(F.col(group_col).alias("grp"), h.alias("h"))
         .distinct()
     )
-    if spark.catalog.tableExists(table):
-        fresh = io.read(table).unionByName(fresh).distinct()
     w = Window.partitionBy("grp").orderBy("h")
-    merged = (
-        fresh.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("grp", "h")
-    )
-    _replace_table(spark, io, f"{table}__kmv_tmp", merged, table)
+
+    def k_min(hashes: DataFrame) -> DataFrame:
+        return (
+            hashes.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= k)
+            .select("grp", "h")
+        )
+
+    if spark.catalog.tableExists(table):
+        io.rewrite(
+            table, lambda snap: k_min(fresh.unionByName(snap).distinct())
+        )
+    else:
+        io.write_overwrite(k_min(fresh), table)
 
 
 def kmv_estimates(summary: DataFrame, k: int = 64) -> DataFrame:
@@ -317,13 +303,14 @@ def merge_hll_batch(
     spark = batch.sparkSession
     fresh = hll_registers(batch, group_col, item_col)
     if spark.catalog.tableExists(table):
-        fresh = (
-            io.read(table)
-            .unionByName(fresh)
+        io.rewrite(
+            table,
+            lambda snap: fresh.unionByName(snap)
             .groupBy("grp", "bucket")
-            .agg(F.max("reg").alias("reg"))
+            .agg(F.max("reg").alias("reg")),
         )
-    _replace_table(spark, io, f"{table}__hll_tmp", fresh, table)
+    else:
+        io.write_overwrite(fresh, table)
 
 
 def hll_reach(summary: DataFrame) -> DataFrame:
@@ -392,23 +379,26 @@ def merge_mg_batch(
     from ..operators.sketch import mg_summaries
 
     spark = batch.sparkSession
-    fresh = mg_summaries(batch, item_col, capacity)
+    # the summaries feed both the threshold collect and the write
+    fresh = mg_summaries(batch, item_col, capacity).persist()
+
+    def decrement(counters: DataFrame) -> DataFrame:
+        merged = counters.groupBy("value").agg(F.sum("est").alias("est"))
+        head = (
+            merged.orderBy(F.col("est").desc(), "value")
+            .limit(capacity + 1)
+            .collect()
+        )
+        d = int(head[capacity]["est"]) if len(head) > capacity else 0
+        return merged.select(
+            "value", (F.col("est") - F.lit(d)).alias("est")
+        ).filter(F.col("est") > 0)
+
     if spark.catalog.tableExists(table):
-        fresh = io.read(table).unionByName(fresh)
-    merged = (
-        fresh.groupBy("value").agg(F.sum("est").alias("est")).persist()
-    )
-    head = (
-        merged.orderBy(F.col("est").desc(), "value")
-        .limit(capacity + 1)
-        .collect()
-    )
-    d = int(head[capacity]["est"]) if len(head) > capacity else 0
-    out = merged.select(
-        "value", (F.col("est") - F.lit(d)).alias("est")
-    ).filter(F.col("est") > 0)
-    _replace_table(spark, io, f"{table}__mg_tmp", out, table)
-    merged.unpersist()
+        io.rewrite(table, lambda snap: decrement(fresh.unionByName(snap)))
+    else:
+        io.write_overwrite(decrement(fresh), table)
+    fresh.unpersist()
 
 
 def mg_topk(summary: DataFrame, k: int = 20) -> DataFrame:
@@ -503,38 +493,42 @@ def merge_qdigest_batch(
         .groupBy(*keys, "id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    if spark.catalog.tableExists(table):
-        fresh = (
-            io.read(table)
-            .select(*keys, "id", "cnt")
-            .unionByName(fresh)
-            .groupBy(*keys, "id")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    # ``fresh`` (stored-table read + the data-scale batch groupBy)
-    # feeds BOTH the per-group sigma totals and the join below —
-    # persist so the micro-batch aggregation runs once, not twice.
+    # the data-scale batch groupBy feeds BOTH the per-group sigma
+    # totals and the join below — persist so it runs once, not twice.
     fresh = fresh.persist()
     sigma = F.greatest(
         F.lit(1).cast("bigint"),
         F.expr(f"sum(cnt) DIV {sigma_frac}"),
     ).alias("sigma")
-    if keys:
+
+    def compress(nodes: DataFrame) -> DataFrame:
+        if not keys:
+            leaves = nodes.crossJoin(F.broadcast(nodes.agg(sigma)))
+            return qdigest_compress(leaves, bits, keys=keys)
         # NULL is a legal group key (groupBy keeps it as its own
         # group), so the totals join must be null-safe or NULL-keyed
         # rows silently vanish from the stored digest — breaking the
         # per-group mass-conservation contract.
-        tots = fresh.groupBy(*keys).agg(sigma)
+        tots = nodes.groupBy(*keys).agg(sigma)
         for k in keys:
             tots = tots.withColumnRenamed(k, f"__{k}")
         cond = F.lit(True)
         for k in keys:
             cond = cond & F.col(k).eqNullSafe(F.col(f"__{k}"))
-        leaves = fresh.join(tots, cond).drop(*[f"__{k}" for k in keys])
+        leaves = nodes.join(tots, cond).drop(*[f"__{k}" for k in keys])
+        return qdigest_compress(leaves, bits, keys=keys)
+
+    if spark.catalog.tableExists(table):
+        io.rewrite(
+            table,
+            lambda snap: compress(
+                fresh.unionByName(snap.select(*keys, "id", "cnt"))
+                .groupBy(*keys, "id")
+                .agg(F.sum("cnt").alias("cnt"))
+            ),
+        )
     else:
-        leaves = fresh.crossJoin(F.broadcast(fresh.agg(sigma)))
-    merged = qdigest_compress(leaves, bits, keys=keys)
-    _replace_table(spark, io, f"{table}__qd_tmp", merged, table)
+        io.write_overwrite(compress(fresh), table)
     fresh.unpersist()
 
 

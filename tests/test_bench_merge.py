@@ -7,11 +7,17 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import sys
+
+#: root of the checkout these tests live in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load(mod_name, path):
-    spec = importlib.util.spec_from_file_location(mod_name, path)
+    spec = importlib.util.spec_from_file_location(
+        mod_name, os.path.join(ROOT, path)
+    )
     mod = importlib.util.module_from_spec(spec)
     sys.modules[mod_name] = mod
     spec.loader.exec_module(mod)
@@ -19,7 +25,7 @@ def _load(mod_name, path):
 
 
 def test_merge_prior_mins_guards(tmp_path):
-    bench = _load("bench_under_test", "/root/repo/bench.py")
+    bench = _load("bench_under_test", "bench.py")
 
     def detail(name, fp, sf, queries):
         with open(tmp_path / name, "w") as fh:
@@ -55,7 +61,7 @@ def test_merge_filters_on_core_count(tmp_path):
     c8 run's merged values were byte-identical 32-core minima).  A
     prior merges only when its recorded ``cpus`` equals the current
     run's; legacy cpus-less files merge only with cpus-less calls."""
-    bench = _load("bench_under_test_cpus", "/root/repo/bench.py")
+    bench = _load("bench_under_test_cpus", "bench.py")
     times = {"q1": 5.0}
 
     def detail(name, queries, cpus):
@@ -95,7 +101,7 @@ def test_merge_skips_legacy_details_without_this_run(tmp_path):
     already-merged ``queries`` map must NOT participate — through it
     an aged-out outlier would re-enter every merge, defeating the
     MERGE_CAP aging.  Same for a present-but-empty this_run."""
-    bench = _load("bench_under_test4", "/root/repo/bench.py")
+    bench = _load("bench_under_test4", "bench.py")
     times = {"q1": 5.0}
     with open(tmp_path / "BENCH_DETAIL_legacy.json", "w") as fh:
         json.dump({"fingerprint": "FP", "sf": 0.1,
@@ -116,7 +122,7 @@ def test_merge_discards_canary_contaminated_priors(tmp_path):
     exceeds CANARY_DISCARD_FACTOR x the best canary in the candidate
     series is dropped from the merge; canary-less priors (predating
     the probe) are kept."""
-    bench = _load("bench_under_test5", "/root/repo/bench.py")
+    bench = _load("bench_under_test5", "bench.py")
     times = {"q1": 5.0}
 
     def detail(name, queries, canary):
@@ -149,7 +155,7 @@ def test_merge_discards_mt_canary_contaminated_priors(tmp_path):
     while the saturating probe (and the 32-thread sweep) ran slow —
     steal against the other cores is invisible to one thread.  EITHER
     probe blowing its series floor drops the prior."""
-    bench = _load("bench_under_test5b", "/root/repo/bench.py")
+    bench = _load("bench_under_test5b", "bench.py")
     times = {"q1": 5.0}
 
     def detail(name, queries, st, mt):
@@ -180,7 +186,7 @@ def test_merge_ignores_degraded_mt_readings(tmp_path):
     must neither (a) set an artificially low mt_best that discards
     clean priors, nor (b) let a hot degraded run pass the mt gate.
     Degraded priors are st-only gated."""
-    bench = _load("bench_under_test5c", "/root/repo/bench.py")
+    bench = _load("bench_under_test5c", "bench.py")
     times = {"q1": 5.0}
 
     def detail(name, queries, st, mt, degraded=False):
@@ -218,7 +224,7 @@ def test_merge_ignores_degraded_mt_readings(tmp_path):
 
 
 def test_canary_probe_shape():
-    bench = _load("bench_under_test6", "/root/repo/bench.py")
+    bench = _load("bench_under_test6", "bench.py")
     v = bench._canary()
     assert 0.0 < v < 5.0  # a fixed busy loop, not a no-op
     m, degraded = bench._canary_mt(4)
@@ -234,7 +240,7 @@ def test_merge_series_capped_at_most_recent(tmp_path):
     same-fingerprint priors join the merge — an old outlier run (here
     the very fast q1=0.1 in the OLDEST detail) ages out of the series
     instead of pinning the headline down forever."""
-    bench = _load("bench_under_test3", "/root/repo/bench.py")
+    bench = _load("bench_under_test3", "bench.py")
     cap = bench.MERGE_CAP
     times = {"q1": 5.0}
     # oldest first (sorted glob order = filename order): one stale
@@ -253,14 +259,14 @@ def test_merge_series_capped_at_most_recent(tmp_path):
 
 
 def test_source_fingerprint_is_stable_and_content_sensitive(tmp_path):
-    bench = _load("bench_under_test2", "/root/repo/bench.py")
+    bench = _load("bench_under_test2", "bench.py")
     a = bench._source_fingerprint()
     b = bench._source_fingerprint()
     assert a == b and len(a) == 32
 
 
 def test_correctness_cell_canon_full_precision():
-    cc = _load("cc_under_test", "/root/repo/tools/check_correctness.py")
+    cc = _load("cc_under_test", "tools/check_correctness.py")
     # integral floats collapse (engine int/float parity)
     assert cc.cell(2.0) == "2"
     # NON-integral floats keep FULL precision: the r5 red cell was a

@@ -26,6 +26,7 @@ from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
 )
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
     TableIO,
+    rewrite_tmp,
 )
 
 
@@ -75,10 +76,8 @@ def test_protocol_optimize_equals_compact_fallback(spark, tmp_path):
     box touches a strict subset of files)."""
     table = "dispatch_probe"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}__compact_tmp")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for d in (table, f"{table}__compact_tmp"):
-        shutil.rmtree(f"{wh}/{d}", ignore_errors=True)
+    shutil.rmtree(f"{wh}/{table}", ignore_errors=True)
 
     # two scattered cluster keys so neither axis is pre-sorted
     df = spark.range(4000).select(
@@ -110,6 +109,7 @@ def test_protocol_optimize_equals_compact_fallback(spark, tmp_path):
     assert a.select(F.input_file_name()).distinct().count() == 4
     assert _files_for(spark, a, box) < 4
     assert _files_for(spark, b, box) < 4
+    assert not spark.catalog.tableExists(rewrite_tmp(table))
 
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 

@@ -198,6 +198,13 @@ def test_checkpoint_and_log_truncation(spark, tmp_path):
     assert t.write_batch_exactly_once(spark.range(0, 1), "app", 6) is None
     with pytest.raises(ValueError, match="truncated|missing"):
         t.read(1)                                # predates checkpoint
+    # a later checkpoint, taken with the JSON head gone, still carries
+    # the watermark forward from the earlier checkpoint
+    assert t.checkpoint() == 3
+    os.remove(log / f"{3:020d}.json")
+    os.remove(log / f"{2:020d}.checkpoint.parquet")
+    assert t.last_txn_version("app") == 7
+    assert _ids(t.read()) == list(range(8))
 
 
 def test_checkpoint_partitioned_roundtrip(spark, tmp_path):
@@ -354,8 +361,8 @@ def test_concurrent_writer_loses_create_race(spark, tmp_path):
 
 def test_random_commit_sequences_match_model(spark, tmp_path):
     """Model-based check: a random interleaving of append/overwrite/
-    checkpoint/optimize commits must always read back exactly what a
-    trivial in-Python model of the table holds, at EVERY version —
+    checkpoint/optimize/restore commits must always read back exactly
+    what a trivial in-Python model of the table holds, at EVERY version —
     with and without the JSON head truncated behind a checkpoint.
     (Deterministic seeded sequences; hypothesis adds little here
     beyond seeds because each step costs a Spark write.)"""
@@ -369,7 +376,7 @@ def test_random_commit_sequences_match_model(spark, tmp_path):
         last_cp = None
         for step in range(6):
             op = rng.choice(["append", "append", "overwrite",
-                             "checkpoint", "optimize"])
+                             "checkpoint", "optimize", "restore"])
             cur = list(model[-1]) if model else []
             if op == "append":
                 ids = list(range(nxt, nxt + rng.randint(1, 3)))
@@ -388,11 +395,17 @@ def test_random_commit_sequences_match_model(spark, tmp_path):
                     continue
                 last_cp = t.checkpoint()
                 continue                   # no new version
-            else:  # optimize
+            elif op == "optimize":
                 if not model or not cur:
                     continue
                 t.optimize(n_files=1)
                 model.append(sorted(cur))  # rows unchanged
+            else:  # restore
+                if not model:
+                    continue
+                back = rng.randrange(len(model))
+                t.restore(back)
+                model.append(list(model[back]))
             assert _ids(t.read()) == model[-1]
         # every version still replays to its model state
         for v, expect in enumerate(model):
@@ -475,7 +488,8 @@ def test_delta_inspect_tool_smoke(spark, tmp_path):
     t.checkpoint()
     out = subprocess.run(
         [_sys.executable, "tools/delta_inspect.py", t.path],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert out.returncode == 0
     assert "CHECKPOINT" in out.stdout

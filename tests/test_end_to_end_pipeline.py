@@ -1,6 +1,6 @@
 """Capstone integration: one pipeline threads ten engine subsystems
 end-to-end — generate → clean → gate → dedup → cluster → prune →
-pack → split → versioned write → zone map → pruned read — proving
+pack → split → Delta-log write → pruned read → erasure — proving
 the pieces COMPOSE, not just pass their own tests.
 
 The flow is the real training-data shape: a custom Spark-4 Python
@@ -8,8 +8,8 @@ DataSource stands in for ingestion, encoding hygiene and
 expectations gating stand in for cleaning, MinHash + connected
 components + canonical-keep is the dedup stage, chunk packing and
 the hash split produce the training artifact, and the artifact
-lands in a manifest-versioned table whose zone map serves pruned
-range reads.  Every stage's output feeds the next stage's input
+lands in a Delta-log table whose per-file stats serve pruned range
+reads.  Every stage's output feeds the next stage's input
 contract unchanged.
 """
 
@@ -112,40 +112,26 @@ def test_training_pipeline_end_to_end(spark, tmp_path):
     }
     assert set(sizes) == {"train", "val"} and sizes["train"] > sizes["val"]
 
-    # 6) land the artifact in a versioned table
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.versions import (
-        VersionedTable,
+    # 6) land the artifact in a Delta-log table, clustered on doc_id
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+        DeltaLogTable,
     )
 
-    vt = VersionedTable(spark, str(tmp_path / "corpus"))
-    v1 = vt.write(split, "overwrite")
-    assert vt.read(v1).count() == n_docs
+    t = DeltaLogTable(spark, str(tmp_path / "corpus"))
+    v0 = t.write(split.repartitionByRange(4, "doc_id"), "overwrite")
+    assert t.read(v0).count() == n_docs
 
-    # 7) zone map over the doc_id layout -> pruned range read
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.zonemap import (
-        pruned_read,
-        write_zone_map,
-    )
-
-    (
-        vt.read(v1)
-        .repartitionByRange(4, "doc_id")
-        .write.mode("overwrite")
-        .parquet(str(tmp_path / "clustered"))
-    )
-    write_zone_map(spark, str(tmp_path / "clustered"), ["doc_id"])
-    got, total, read = pruned_read(
-        spark, str(tmp_path / "clustered"), "doc_id", 0, 50
-    )
+    # 7) the log's per-file min/max stats serve a pruned range read
+    got, total, read = t.pruned_read("doc_id", 0, 50)
     assert read < total
     want = (
-        vt.read(v1)
+        t.read(v0)
         .filter((F.col("doc_id") >= 0) & (F.col("doc_id") <= 50))
         .count()
     )
     assert got.count() == want
 
     # 8) erasure closes the loop: forget two doc ids, history dies
-    stats = vt.forget_keys("doc_id", [5, 7])
-    assert vt.read().filter(F.col("doc_id").isin(5, 7)).count() == 0
-    assert vt.versions() == [stats["version"]]
+    stats = t.forget_keys("doc_id", [5, 7])
+    assert t.read().filter(F.col("doc_id").isin(5, 7)).count() == 0
+    assert t.versions() == [stats["version"]]

@@ -15,6 +15,7 @@ from lakehouse_alchemy_bronze_to_gold_pipeline_spark.catalog import Lakehouse
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.quality import (
     email_rule,
     null_pk_rule,
+    positive_rule,
 )
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.json_source import (
     infer_json_schema,
@@ -94,8 +95,68 @@ def test_quality_layer_end_to_end(spark, pipeline):
     assert counts["null_pk[customer_id]"] == 0
     assert counts["email[email]"] == 1
     issues = spark.read.table(lh.table("quality", "quality_issues"))
+    assert issues.columns == ["entity", "rule", "check_ts", "record"]
     bad = issues.filter(F.col("rule").startswith("email")).collect()
-    assert len(bad) == 1 and bad[0].customer_id == 2
+    assert len(bad) == 1 and bad[0].entity == "customers"
+    assert json.loads(bad[0].record)["customer_id"] == 2
+
+
+def test_quality_audit_shared_by_entities_with_different_columns(
+    spark, tmp_path
+):
+    """Every entity appends to the one ``quality_issues`` table, whose
+    rows have a fixed (entity, rule, check_ts, record) schema, so an
+    entity whose columns differ from the first one's appends too."""
+    customers = str(tmp_path / "src" / "customers")
+    products = str(tmp_path / "src" / "products")
+    write_json(customers, "customers.json", CUSTOMERS)
+    write_json(products, "products.json", [
+        {"product_id": 10, "price": -1.0, "category": "a"},
+        {"product_id": 11, "price": 0.0, "category": "b"},
+        {"product_id": 12, "price": 5.0, "category": "c"},
+    ])
+    lh = Lakehouse(spark, str(tmp_path / "wh"), prefix=f"q{os.getpid()}")
+    pipe = MedallionPipeline(spark, lh, [
+        EntityConfig(
+            name="customers", source_dir=customers,
+            primary_keys=["customer_id"],
+            quality_rules=[null_pk_rule(["customer_id"]),
+                           email_rule("email")],
+        ),
+        EntityConfig(
+            name="products", source_dir=products,
+            primary_keys=["product_id"],
+            quality_rules=[null_pk_rule(["product_id"]),
+                           positive_rule(["price"])],
+        ),
+    ])
+    try:
+        pipe.run_bronze_silver()
+        counts = {
+            name: {r.rule: r.n_violations
+                   for r in pipe.run_quality(name).collect()}
+            for name in ("customers", "products")
+        }
+        assert counts["products"] == {
+            "null_pk[product_id]": 0, "positive[price]": 2,
+        }
+        issues = spark.read.table(lh.table("quality", "quality_issues"))
+        per_entity = {
+            r.entity: r.n
+            for r in issues.groupBy("entity").count()
+            .withColumnRenamed("count", "n").collect()
+        }
+        assert per_entity == {
+            name: sum(c.values()) for name, c in counts.items()
+        }
+        prices = sorted(
+            json.loads(r.record)["price"]
+            for r in issues.filter(F.col("entity") == "products").collect()
+        )
+        assert prices == [-1.0, 0.0]
+    finally:
+        for layer in ("bronze", "silver", "quality"):
+            spark.sql(f"DROP DATABASE IF EXISTS {lh.prefix}_{layer} CASCADE")
 
 
 def test_infer_schema_raises_on_empty(spark, tmp_path):

@@ -331,15 +331,15 @@ def test_stream_stream_left_outer_emits_after_watermark(spark, tmp_path):
 
 
 def test_continuous_aggregate_versioned_history(spark, tmp_path):
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.versions import (
-        VersionedTable,
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+        DeltaLogTable,
     )
     from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.rollup import (
         continuous_aggregate_versioned,
     )
 
     src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
-    vt = VersionedTable(spark, str(tmp_path / "rollup_hist"))
+    vt = DeltaLogTable(spark, str(tmp_path / "rollup_hist"))
 
     def run():
         stream = spark.readStream.schema(SCHEMA).json(src)
@@ -354,25 +354,25 @@ def test_continuous_aggregate_versioned_history(spark, tmp_path):
         {"user_id": "u1", "ts": "2024-01-01 10:20:00", "value": 2.0},
     ])
     run()
-    assert vt.versions() == [1]
-    v1 = {r.window_start.strftime("%H:%M"): r.n_events
-          for r in vt.read(1).collect()}
-    assert v1 == {"10:00": 1, "10:15": 1}
+    assert vt.versions() == [0]
+    v0 = {r.window_start.strftime("%H:%M"): r.n_events
+          for r in vt.read(0).collect()}
+    assert v0 == {"10:00": 1, "10:15": 1}
 
     _write(src, "b.json", [
         {"user_id": "u1", "ts": "2024-01-01 10:06:00", "value": 5.0},
         {"user_id": "u1", "ts": "2024-01-01 11:00:00", "value": 3.0},
     ])
     run()
-    assert vt.versions() == [1, 2]
+    assert vt.versions() == [0, 1]
     # latest reflects the refreshed live window + the new one...
-    v2 = {r.window_start.strftime("%H:%M"): (r.n_events, r.sum_value)
+    v1 = {r.window_start.strftime("%H:%M"): (r.n_events, r.sum_value)
           for r in vt.read().collect()}
-    assert v2 == {"10:00": (2, 6.0), "10:15": (1, 2.0), "11:00": (1, 3.0)}
+    assert v1 == {"10:00": (2, 6.0), "10:15": (1, 2.0), "11:00": (1, 3.0)}
     # ...and the AS-OF read still answers with the pre-batch state
-    v1_again = {r.window_start.strftime("%H:%M"): r.n_events
-                for r in vt.read(1).collect()}
-    assert v1_again == {"10:00": 1, "10:15": 1}
+    v0_again = {r.window_start.strftime("%H:%M"): r.n_events
+                for r in vt.read(0).collect()}
+    assert v0_again == {"10:00": 1, "10:15": 1}
 
 
 def test_watermark_fixed_model_matches_real_stream(spark, tmp_path):

@@ -14,20 +14,20 @@ from pyspark.sql import functions as F
 
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
     TableIO,
+    rewrite_tmp,
 )
 
 
 def _fresh_table(spark, table: str):
     """Drop the table AND any orphaned managed location (a failed
     earlier run aborts before its DROP, and LOCATION_ALREADY_EXISTS
-    would then cascade into unrelated failures)."""
+    would then cascade into unrelated failures).  The rewrite's own
+    tmp table needs no clearing: ``TableIO.rewrite`` does that."""
     import shutil
 
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}__compact_tmp")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for d in (table, f"{table}__compact_tmp"):
-        shutil.rmtree(f"{wh}/{d}", ignore_errors=True)
+    shutil.rmtree(f"{wh}/{table}", ignore_errors=True)
 
 
 def _files_for(spark, table: str, pred):
@@ -65,7 +65,7 @@ def test_compact_clusters_and_preserves_content(spark):
     # (one range partition owns keys 0..~500)
     assert _files_for(spark, table, pred) <= 2
     # the tmp swap table is gone
-    assert not spark.catalog.tableExists(f"{table}__compact_tmp")
+    assert not spark.catalog.tableExists(rewrite_tmp(table))
     spark.sql(f"DROP TABLE {table}")
 
 
@@ -159,3 +159,69 @@ def test_compact_zorder_equidepth_balances_skew(spark):
         _files_for(spark, table, F.col("y") < (1 << 16) // 8) <= 8
     )
     spark.sql(f"DROP TABLE {table}")
+
+
+def test_rewrite_clears_orphaned_tmp(spark):
+    """A crashed rewrite leaves its tmp location on disk with no
+    catalog entry, and ``saveAsTable`` refuses an existing managed
+    path (LOCATION_ALREADY_EXISTS).  Every self-rewrite — compact, the
+    SCD-1 merge fallback and a sketch merge — goes through
+    ``TableIO.rewrite``, which clears that orphan first."""
+    import os
+
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.merge import (
+        upsert_keep_latest,
+    )
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.sketch_rollup import (
+        merge_cms_batch,
+    )
+
+    io = TableIO(spark, fmt="parquet")
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+    def plant_orphan(table):
+        orphan = os.path.join(wh, rewrite_tmp(table))
+        os.makedirs(orphan, exist_ok=True)
+        with open(os.path.join(orphan, "part-00000.parquet"), "w") as fh:
+            fh.write("left by a crashed run")
+        assert not spark.catalog.tableExists(rewrite_tmp(table))
+
+    compacted, merged, cms = "orphan_compact", "orphan_merge", "orphan_cms"
+    for t in (compacted, merged, cms):
+        _fresh_table(spark, t)
+
+    io.write_overwrite(spark.range(100).withColumnRenamed("id", "k"),
+                       compacted)
+    plant_orphan(compacted)
+    io.compact(compacted, ["k"])
+    assert sorted(r.k for r in io.read(compacted).collect()) == list(
+        range(100)
+    )
+
+    io.write_overwrite(
+        spark.createDataFrame([(1, 1, "a"), (2, 1, "b")],
+                              "id bigint, ver bigint, v string"),
+        merged,
+    )
+    plant_orphan(merged)
+    upsert_keep_latest(
+        spark, io, merged,
+        spark.createDataFrame([(2, 2, "B"), (3, 1, "c")],
+                              "id bigint, ver bigint, v string"),
+        keys=["id"], order_col="ver",
+    )
+    assert sorted((r.id, r.v) for r in io.read(merged).collect()) == [
+        (1, "a"), (2, "B"), (3, "c"),
+    ]
+
+    items = spark.range(50).selectExpr("CAST(id % 7 AS STRING) AS item")
+    merge_cms_batch(items, io, cms, "item")      # creates the table
+    plant_orphan(cms)
+    merge_cms_batch(items, io, cms, "item")      # rewrites it
+    per_row = io.read(cms).groupBy("r").agg(F.sum("cnt").alias("n"))
+    assert {r.n for r in per_row.collect()} == {100}
+
+    for t in (compacted, merged, cms):
+        assert not spark.catalog.tableExists(rewrite_tmp(t))
+        assert not os.path.exists(os.path.join(wh, rewrite_tmp(t)))
+        spark.sql(f"DROP TABLE {t}")
