@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_table
+
 
 def _mg_compress(counters: dict, cap: int) -> None:
     """Keep <= cap counters by subtracting the (cap+1)-th largest
@@ -398,7 +400,7 @@ def qdigest_quantiles(
         cum = iv.select(*keys, "hi", "id", F.sum("cnt").over(w).alias("cum"))
         tot = nodes.groupBy(*keys).agg(F.sum("cnt").alias("n"))
         qs = (
-            spark.createDataFrame([(int(p),) for p in pcts], "q_pct int")
+            local_table(spark, [(int(p),) for p in pcts], "q_pct int")
             .crossJoin(tot)
             .select(
                 *keys,
@@ -431,7 +433,7 @@ def qdigest_quantiles(
     cum = iv.select("hi", F.sum("cnt").over(w).alias("cum"))
     tot = nodes.agg(F.sum("cnt").alias("n"))
     qs = (
-        spark.createDataFrame([(int(p),) for p in pcts], "q_pct int")
+        local_table(spark, [(int(p),) for p in pcts], "q_pct int")
         .crossJoin(F.broadcast(tot))
         .select("q_pct", F.expr("(q_pct * n + 99) DIV 100").alias("target"))
     )

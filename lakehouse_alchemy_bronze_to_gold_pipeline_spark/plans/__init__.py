@@ -6,7 +6,7 @@ users before launching a large job: structured facts about a
 DataFrame's physical plan (``report``) and an anti-pattern linter
 (``lint``) that flags the shapes that melt at 100 TB — cartesian
 products, unpartitioned windows, scans without column pruning,
-shuffle counts.
+shuffle counts, scans that fork Python workers.
 """
 
 from .inspect import (
@@ -14,6 +14,7 @@ from .inspect import (
     lint,
     lint_plan,
     ops,
+    python_rdd_scans,
     report,
     shuffles,
     unpartitioned_windows,
@@ -24,6 +25,7 @@ __all__ = [
     "ops",
     "shuffles",
     "unpartitioned_windows",
+    "python_rdd_scans",
     "report",
     "lint",
     "lint_plan",

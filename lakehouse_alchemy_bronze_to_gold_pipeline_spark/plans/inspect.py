@@ -77,6 +77,22 @@ def unpartitioned_windows(plan: str) -> int:
     return n
 
 
+def python_rdd_scans(plan: str) -> int:
+    """Scans of an RDD built from Python objects (``createDataFrame``
+    over a list, a Python RDD's ``toDF``): running one forks the
+    Python daemon and its workers.  The node prints as ``Scan
+    ExistingRDD`` over an RDD made by ``applySchemaToPythonRDD``; a
+    ``localCheckpoint`` prints the same node over a JVM-side RDD and
+    is not counted."""
+    return len(
+        re.findall(
+            r"\(\d+\) Scan ExistingRDD[^\n]*\n(?:[^\n]*\n)*?"
+            r"Arguments: [^\n]* at applySchemaToPythonRDD ",
+            plan,
+        )
+    )
+
+
 def report(df: DataFrame) -> dict:
     """Structured plan facts for dashboards/CI."""
     plan = formatted(df)
@@ -95,6 +111,7 @@ def report(df: DataFrame) -> dict:
         "unpartitioned_windows": unpartitioned_windows(plan),
         "pushed_filters": plan.count("PushedFilters: ["),
         "in_memory_scans": plan.split("\n\n")[0].count("InMemoryTableScan"),
+        "python_rdd_scans": python_rdd_scans(plan),
     }
 
 
@@ -107,6 +124,9 @@ _RULES = {
     "whole relation to ONE task",
     "many-shuffles": "plan has an unusually deep shuffle chain — "
     "look for repeated repartitioning or non-colocated joins",
+    "python-rdd-scan": "scan of a Python-built RDD forks Python "
+    "workers to run — build constant tables with "
+    "sources.tables.local_table",
 }
 
 
@@ -154,4 +174,6 @@ def lint_plan(
             f"many-shuffles ({shuffles(plan)} > {max_shuffles}): "
             f"{_RULES['many-shuffles']}"
         )
+    if python_rdd_scans(plan):
+        findings.append(f"python-rdd-scan: {_RULES['python-rdd-scan']}")
     return findings

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.window import const_bucket
 from ..operators.rangejoin import band_join
+from ..sources.tables import local_table
 from .core import _dec_sum
 from .data import load
 
@@ -2291,7 +2292,8 @@ def q_join_size_estimate(spark: SparkSession, sf: str) -> DataFrame:
         ("orders_x_lineitem", exact_ol, int(round(est_ol / p))),
         ("orders_x_customer", exact_oc, int(round(est_oc / p))),
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (
                 name,

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.window import const_bucket
 from ..operators.sketch import qdigest_compress, qdigest_intervals
+from ..sources.tables import local_table
 from .data import load
 
 _QD_BITS = 14
@@ -97,7 +98,7 @@ def q_quantile_digest_accuracy(spark: SparkSession, sf: str) -> DataFrame:
         "bucket", F.sum("cnt").over(wl).alias("cum")
     )
     qs = (
-        spark.createDataFrame([(p,) for p in _QD_PCTS], "q_pct int")
+        local_table(spark, [(p,) for p in _QD_PCTS], "q_pct int")
         .crossJoin(F.broadcast(tot))
         .select(
             "q_pct",
@@ -327,7 +328,7 @@ def q_quantile_digest_grouped(spark: SparkSession, sf: str) -> DataFrame:
         "rf", "bucket", F.sum("cnt").over(wl).alias("cum")
     )
     qs = (
-        spark.createDataFrame([(25,), (50,), (75,)], "q_pct int")
+        local_table(spark, [(25,), (50,), (75,)], "q_pct int")
         .crossJoin(F.broadcast(tots))
         .select(
             "rf",

@@ -23,6 +23,7 @@ from ..operators.minhash import minhash_near_duplicates
 from ..operators.multimodal import attach_binary_payload, extract_features
 from ..operators.simhash import simhash
 from ..operators.similarity import knn_join, lsh_topk, topk_bruteforce
+from ..sources.tables import local_table
 from .data import load, spread_scan
 
 #: fixed query text for n-gram similarity scoring
@@ -2041,7 +2042,8 @@ def q_embedding_fd_profile(spark: SparkSession, sf: str) -> DataFrame:
         )
         for i in range(top)
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows,
         "component bigint, exact_eig double, fd_eig double, "
         "gap double, fd_bound double, within_bound boolean",
@@ -2129,7 +2131,7 @@ def q_fd_whitening_handoff(spark: SparkSession, sf: str) -> DataFrame:
         .collect()
     )
     if not srows:
-        return spark.createDataFrame([], schema)
+        return local_table(spark, [], schema)
     b = fd_merge(
         [np.asarray(r["sketch"]).reshape(ell, d) for r in srows], ell
     )
@@ -2184,7 +2186,7 @@ def q_fd_whitening_handoff(spark: SparkSession, sf: str) -> DataFrame:
                 n_conserved,
             )
         )
-    return spark.createDataFrame(rows, schema)
+    return local_table(spark, rows, schema)
 
 
 def q_embedding_covariance_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -3052,7 +3054,8 @@ def q_embedding_whitening(spark: SparkSession, sf: str) -> DataFrame:
     d = len(mean)
     diag = cov2.diagonal()
     off = cov2 - _np_diag(diag)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (
                 int(n),
@@ -3489,7 +3492,8 @@ def q_bpe_train_report(spark: SparkSession, sf: str) -> DataFrame:
         (i + 1, a, b, w, float(round(comp, 4)))
         for i, (a, b, w) in enumerate(merges)
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows,
         "round bigint, a string, b string, weight bigint, "
         "chars_per_token double",

@@ -56,7 +56,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import rebalance_partitions
+from .tables import local_table, rebalance_partitions
 
 #: reader features this implementation understands (protocol v1/v2
 #: tables, plus v3 tables that only list these features)
@@ -233,19 +233,26 @@ class DeltaLogTable:
         default).  Hive-partitioned layouts keep their partition
         columns via ``basePath``; an empty snapshot returns an empty
         frame with the schema from ``metaData.schemaString``."""
-        snap = self._replay(version)
-        paths = [
-            os.path.join(self.path, p) for p in sorted(snap["files"])
-        ]
-        if not paths:
-            from pyspark.sql.types import StructType
+        return self._scan(self._replay(version))
 
-            schema = StructType.fromJson(
-                json.loads(snap["meta"]["schemaString"])
-            )
-            return self.spark.createDataFrame([], schema)
+    def _scan(self, snap: dict, paths: list[str] | None = None) -> DataFrame:
+        """Parquet scan of ``paths`` (default: every live file of
+        ``snap``) under the snapshot's logged schema.  The log, not
+        the files, types the columns: partition discovery over the
+        hive paths would narrow a ``bigint`` partition column to
+        ``int`` (and inferring a schema from the footers costs a
+        job)."""
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(json.loads(snap["meta"]["schemaString"]))
+        if paths is None:
+            paths = [os.path.join(self.path, p) for p in sorted(snap["files"])]
+        if not paths:
+            return local_table(self.spark, [], schema)
         return (
-            self.spark.read.option("basePath", self.path).parquet(*paths)
+            self.spark.read.schema(schema)
+            .option("basePath", self.path)
+            .parquet(*paths)
         )
 
     def pruned_read(
@@ -281,10 +288,8 @@ class DeltaLogTable:
                 total,
                 0,
             )
-        df = (
-            self.spark.read.option("basePath", self.path)
-            .parquet(*keep)
-            .filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
+        df = self._scan(snap, keep).filter(
+            (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
         )
         return df, total, len(keep)
 
@@ -362,9 +367,11 @@ class DeltaLogTable:
         key), with a checkpoint of the new version standing in for
         them, and ``vacuum`` deletes every data file the new version
         does not reference."""
+        snap = self._replay(None)
         v = self.write(
-            self.read().filter(~F.col(key_col).isin(list(keys))),
+            self._scan(snap).filter(~F.col(key_col).isin(list(keys))),
             "overwrite",
+            partition_by=snap["meta"].get("partitionColumns"),
         )
         self.checkpoint()
         for old in self.versions():
@@ -385,11 +392,17 @@ class DeltaLogTable:
         ``operators/merge.py``; here the last duplicate key wins via
         anti-join semantics).  Row-level MERGE without deletion
         vectors IS a rewrite; the prior version still time-travels."""
-        current = self.read()
-        merged = current.join(updates, keys, "left_anti").unionByName(
-            updates
+        snap = self._replay(None)
+        merged = (
+            self._scan(snap)
+            .join(updates, keys, "left_anti")
+            .unionByName(updates)
         )
-        return self.write(merged, "overwrite")
+        return self.write(
+            merged,
+            "overwrite",
+            partition_by=snap["meta"].get("partitionColumns"),
+        )
 
     def vacuum(self, keep_versions: int = 1) -> dict:
         """Delete data files referenced ONLY by versions older than
@@ -680,10 +693,11 @@ class DeltaLogTable:
                 }
             )
         elif mode == "overwrite":
-            if schema_changed:
+            if schema_changed or list(partition_by or []) != list(prev_part):
                 # overwriteSchema semantics: an overwrite MAY evolve
-                # the schema, and the protocol records that as a new
-                # metaData action in the same commit (table id kept)
+                # the schema or the partitioning, and the protocol
+                # records that as a new metaData action in the same
+                # commit (table id kept)
                 actions.append(
                     {
                         "metaData": {

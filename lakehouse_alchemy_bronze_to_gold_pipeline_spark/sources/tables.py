@@ -28,6 +28,9 @@ Scale notes baked in here:
   function of its own contents (compaction, the SCD-1 merge fallback,
   the sketch sinks): a parquet table cannot overwrite itself, so the
   snapshot goes through a tmp table first.
+- ``local_table()`` is how the engine builds a constant relation:
+  typed literals in the JVM, never a Python list handed to
+  ``createDataFrame`` (that forks Python workers to scan it).
 """
 
 from __future__ import annotations
@@ -39,6 +42,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType, _parse_datatype_string
 
 from ..session import has_delta
 
@@ -86,6 +90,37 @@ def cluster(
     )
     out = out.sortWithinPartitions(*parts)
     return out.drop(key) if key else out
+
+
+def local_table(
+    spark: SparkSession, rows, schema: str | StructType
+) -> DataFrame:
+    """A small constant relation built entirely in the JVM.
+
+    Same schema (nullability included) and bit-identical values as
+    ``spark.createDataFrame`` gives for the same rows and schema —
+    None, NaN, +-inf, -0.0, bigints, unicode, arrays, zero rows — but
+    ``createDataFrame`` over a Python list plans as a scan of a
+    pickled Python RDD, so running it forks the Python daemon and its
+    workers.  Here every row is a struct of typed literals and the
+    relation is ONE ``inline`` over their array on a 1-row range: a
+    codegen'd ``Generate``, no Python process.  ``rows`` are
+    sequences of values in ``schema`` order; ``schema`` is a DDL
+    string or a ``StructType``.  For literal tables (percentile
+    lists, driver-side readouts), not for data."""
+    st = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    structs = [
+        F.struct(
+            *[F.lit(v).cast(f.dataType).alias(f.name)
+              for v, f in zip(row, st.fields)]
+        )
+        for row in rows
+    ]
+    # containsNull=False keeps non-nullable fields non-nullable:
+    # inline marks every field nullable when the array may hold nulls
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*structs).cast(ArrayType(st, False)))
+    )
 
 
 def rewrite_tmp(table: str) -> str:
@@ -269,12 +304,10 @@ class TableIO:
         return os.path.join(urlparse(loc).path, name.lower())
 
     def _table_location(self, table: str) -> str:
-        row = (
-            self.spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
-            .filter(F.col("col_name") == "Location")
-            .select("data_type")
-            .first()
-        )
-        if row is None:
-            raise ValueError(f"cannot resolve location of table {table!r}")
-        return row[0]
+        # collect() hands back the command's local result rows with no
+        # Spark job; a filter().first() on them would plan and run two
+        desc = self.spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
+        for row in desc.collect():
+            if row["col_name"] == "Location":
+                return row["data_type"]
+        raise ValueError(f"cannot resolve location of table {table!r}")

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.fd import fd_merge, fd_partials
-from ..sources.tables import TableIO
+from ..sources.tables import TableIO, local_table
 
 
 class IncrementalFDSketch:
@@ -161,7 +161,8 @@ class IncrementalFDSketch:
         out = [
             (b.reshape(-1).tolist(), float(frob_sq), int(n), -1)
         ] + [([], 0.0, 0, bid) for bid in seen]
-        one = spark.createDataFrame(
+        one = local_table(
+            spark,
             out,
             "sketch array<double>, frob_sq double, n bigint, "
             "batch_id bigint",

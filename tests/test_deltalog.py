@@ -495,3 +495,64 @@ def test_delta_inspect_tool_smoke(spark, tmp_path):
     assert "CHECKPOINT" in out.stdout
     assert "txn watermark: app -> 5" in out.stdout
     assert "live files:" in out.stdout
+
+
+def _partitioned_bigint_table(spark, path):
+    """6 rows partitioned by a ``bigint`` column ``p`` (3 values)."""
+    t = DeltaLogTable(spark, path)
+    t.write(
+        spark.range(6).selectExpr("id", "id % 3 AS p"),
+        "append",
+        partition_by=["p"],
+    )
+    return t
+
+
+def test_bigint_partition_column_keeps_its_type(spark, tmp_path):
+    """The log types the columns: hive-path partition discovery would
+    read the ``bigint`` partition column back as ``int``."""
+    t = _partitioned_bigint_table(spark, str(tmp_path / "pt"))
+    types = dict(t.read().dtypes)
+    assert types == {"id": "bigint", "p": "bigint"}
+    got, _, _ = t.pruned_read("id", 0, 3)
+    assert dict(got.dtypes) == types
+
+
+def _assert_partitioned_by_p(t):
+    snap = t._replay(None)
+    assert snap["meta"]["partitionColumns"] == ["p"]
+    assert snap["files"]
+    for path, add in snap["files"].items():
+        v = add["partitionValues"]["p"]
+        assert path.startswith(f"p={v}/"), path
+
+
+def test_upsert_and_forget_keep_partitioning(spark, tmp_path):
+    """Both read-modify-overwrites rewrite a partitioned table as a
+    partitioned table: the log's partitionColumns, every live add's
+    partitionValues and the file layout stay in agreement."""
+    t = _partitioned_bigint_table(spark, str(tmp_path / "pk"))
+    t.upsert(
+        spark.createDataFrame([(1, 1), (7, 1)], "id bigint, p bigint"),
+        keys=["id"],
+    )
+    _assert_partitioned_by_p(t)
+    assert dict(t.read().dtypes) == {"id": "bigint", "p": "bigint"}
+    assert sorted((r.id, r.p) for r in t.read().collect()) == [
+        (i, i % 3) for i in range(6)
+    ] + [(7, 1)]
+
+    t.forget_keys("id", [0, 4])
+    _assert_partitioned_by_p(t)
+    want = [(i, i % 3) for i in (1, 2, 3, 5)] + [(7, 1)]
+    assert sorted((r.id, r.p) for r in t.read().collect()) == want
+    # the partition column still prunes like a plain filter
+    assert sorted(
+        (r.id, r.p) for r in t.read().filter("p = 1").collect()
+    ) == [x for x in want if x[1] == 1]
+    # an overwrite that drops the partitioning logs it, schema unchanged
+    v = t.write(t.read(), "overwrite")
+    assert any("metaData" in a for a in t._actions(v))
+    snap = t._replay(None)
+    assert snap["meta"]["partitionColumns"] == []
+    assert all(a["partitionValues"] == {} for a in snap["files"].values())

@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Row, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.plans import lint, report
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.queries import SPARK_QUERIES
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
+    local_table,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,14 +25,14 @@ def test_fact_sales_reports_clean(spark):
 
 
 def test_lint_flags_cartesian(spark):
-    a = spark.createDataFrame([Row(x=1), Row(x=2)])
-    b = spark.createDataFrame([Row(y=1), Row(y=2)])
+    a = local_table(spark, [(1,), (2,)], "x bigint")
+    b = local_table(spark, [(1,), (2,)], "y bigint")
     findings = lint(a.crossJoin(b))
     assert any(f.startswith("cartesian") for f in findings)
 
 
 def test_lint_flags_unpartitioned_window(spark):
-    df = spark.createDataFrame([Row(x=i) for i in range(5)])
+    df = local_table(spark, [(i,) for i in range(5)], "x bigint")
     w = Window.orderBy("x")
     bad = df.withColumn("rn", F.row_number().over(w))
     findings = lint(bad)
@@ -39,10 +42,32 @@ def test_lint_flags_unpartitioned_window(spark):
 
 
 def test_lint_clean_on_partitioned_window(spark):
-    df = spark.createDataFrame([Row(k=i % 2, x=i) for i in range(6)])
+    df = local_table(
+        spark, [(i % 2, i) for i in range(6)], "k bigint, x bigint"
+    )
     w = Window.partitionBy("k").orderBy("x")
     ok = df.withColumn("rn", F.row_number().over(w))
     assert lint(ok) == []
+
+
+def test_lint_flags_python_rdd_scan(spark):
+    """A list handed to ``createDataFrame`` scans a Python-built RDD
+    (forks Python workers when run); the same rows from
+    ``local_table`` do not, and neither does a localCheckpoint — the
+    other ``Scan ExistingRDD`` source, whose RDD lives in the JVM."""
+    rows, schema = [(1, "a"), (2, "b")], "x bigint, s string"
+    bad = spark.createDataFrame(rows, schema)
+    assert report(bad)["python_rdd_scans"] == 1
+    assert any(f.startswith("python-rdd-scan") for f in lint(bad))
+    # the count is per scan
+    both = bad.unionByName(spark.createDataFrame(rows, schema))
+    assert report(both)["python_rdd_scans"] == 2
+    ok = local_table(spark, rows, schema)
+    assert report(ok)["python_rdd_scans"] == 0
+    assert lint(ok) == []
+    cp = spark.range(4).localCheckpoint(eager=True)
+    assert report(cp)["python_rdd_scans"] == 0
+    assert lint(cp) == []
 
 
 #: bounded-by-construction unpartitioned windows (see
