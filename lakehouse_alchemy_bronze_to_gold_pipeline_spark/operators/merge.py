@@ -113,15 +113,13 @@ def streaming_upsert(
     append sink would accumulate stale versions).  Exactly-once comes
     from the checkpoint: a replayed batch re-merges idempotently
     (last-writer-wins on the same rows)."""
+    from ..streaming.sink import foreach_batch
+
     spark = stream.sparkSession
 
-    def merge_batch(batch: DataFrame, _batch_id: int) -> None:
+    def merge_batch(batch: DataFrame, **_ids) -> None:
         # dedup within the batch first so MERGE sees one row per key
         one = collapse_keep_latest(batch, keys, order_col)
         upsert_keep_latest(spark, io, table, one, keys, order_col)
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(stream, checkpoint, merge_batch)

@@ -52,6 +52,7 @@ import json
 import os
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -249,10 +250,13 @@ class DeltaLogTable:
             paths = [os.path.join(self.path, p) for p in sorted(snap["files"])]
         if not paths:
             return local_table(self.spark, [], schema)
+        # the parquet reader puts hive partition columns last; the
+        # logged order is the table's order, empty snapshot or not
         return (
             self.spark.read.schema(schema)
             .option("basePath", self.path)
             .parquet(*paths)
+            .select(*schema.fieldNames())
         )
 
     def pruned_read(
@@ -367,11 +371,8 @@ class DeltaLogTable:
         key), with a checkpoint of the new version standing in for
         them, and ``vacuum`` deletes every data file the new version
         does not reference."""
-        snap = self._replay(None)
-        v = self.write(
-            self._scan(snap).filter(~F.col(key_col).isin(list(keys))),
-            "overwrite",
-            partition_by=snap["meta"].get("partitionColumns"),
+        v = self._fold(
+            lambda snap: snap.filter(~F.col(key_col).isin(list(keys)))
         )
         self.checkpoint()
         for old in self.versions():
@@ -391,17 +392,11 @@ class DeltaLogTable:
         collapsed keep-latest happens upstream in
         ``operators/merge.py``; here the last duplicate key wins via
         anti-join semantics).  Row-level MERGE without deletion
-        vectors IS a rewrite; the prior version still time-travels."""
-        snap = self._replay(None)
-        merged = (
-            self._scan(snap)
-            .join(updates, keys, "left_anti")
-            .unionByName(updates)
-        )
-        return self.write(
-            merged,
-            "overwrite",
-            partition_by=snap["meta"].get("partitionColumns"),
+        vectors IS a rewrite; the prior version still time-travels.
+        The first upsert into a table with no log creates it."""
+        return self._fold(
+            lambda snap: updates if snap is None
+            else snap.join(updates, keys, "left_anti").unionByName(updates)
         )
 
     def vacuum(self, keep_versions: int = 1) -> dict:
@@ -547,31 +542,48 @@ class DeltaLogTable:
 
     def write_batch_exactly_once(
         self,
-        df: DataFrame,
+        data: DataFrame | Callable[[DataFrame | None], DataFrame],
         app_id: str,
         batch_id: int,
         partition_by: list[str] | None = None,
     ) -> int | None:
-        """foreachBatch sink with protocol-level exactly-once: a
+        """The one exactly-once commit for ``foreachBatch`` sinks: a
         ``txn {appId, version}`` action rides in the same atomic
         commit as the data, so a RESTARTED stream that replays an
         already-committed micro-batch sees ``last_txn_version >=
         batch_id`` and skips — the duplicate never reaches the log.
         Returns the committed version, or None for a skipped replay.
 
-        Usage::
-
-            q = (df.writeStream.foreachBatch(
-                     lambda b, i: t.write_batch_exactly_once(b, "app", i)
-                 ).trigger(availableNow=True).start())
-        """
+        ``data`` is a frame to APPEND, or a fold ``fn(snapshot)``
+        whose result REPLACES the table (the merge sinks' case:
+        ``fn(None)`` on a table with no commit yet).
+        ``streaming.sink.foreach_batch`` supplies both ids (the
+        checkpoint path and Spark's batch id)."""
         if batch_id <= self.last_txn_version(app_id):
             return None
+        txn = {"appId": app_id, "version": int(batch_id)}
+        if callable(data):
+            return self._fold(data, txn)
+        return self.write(data, "append", partition_by=partition_by, _txn=txn)
+
+    def _fold(
+        self,
+        fn: Callable[[DataFrame | None], DataFrame],
+        txn: dict | None = None,
+    ) -> int:
+        """Commit ``fn(current snapshot)`` as an overwrite that keeps
+        the table's partitioning (``fn(None)`` when there is no log
+        yet).  ``fn`` may read the snapshot it replaces: an overwrite
+        only tombstones the old files, which stay on disk, so no tmp
+        copy is needed."""
+        if not self.versions() and not self._checkpoints():
+            return self.write(fn(None), "overwrite", _txn=txn)
+        snap = self._replay(None)
         return self.write(
-            df,
-            "append",
-            partition_by=partition_by,
-            _txn={"appId": app_id, "version": int(batch_id)},
+            fn(self._scan(snap)),
+            "overwrite",
+            partition_by=snap["meta"].get("partitionColumns"),
+            _txn=txn,
         )
 
     # -------------------------------------------------------- write

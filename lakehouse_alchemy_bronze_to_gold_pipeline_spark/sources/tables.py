@@ -25,9 +25,11 @@ Scale notes baked in here:
   writer can also apply before a table's first write and skip the
   rewrite entirely.
 - ``rewrite()`` is the one way a catalog table is replaced by a
-  function of its own contents (compaction, the SCD-1 merge fallback,
-  the sketch sinks): a parquet table cannot overwrite itself, so the
-  snapshot goes through a tmp table first.
+  function of its own contents (compaction and the SCD-1 merge
+  fallback): a parquet table cannot overwrite itself, so the snapshot
+  goes through a tmp table first.  Streaming state tables live on the
+  Delta log instead (``DeltaLogTable.write_batch_exactly_once``),
+  where an overwrite can read the files it replaces.
 - ``local_table()`` is how the engine builds a constant relation:
   typed literals in the JVM, never a Python list handed to
   ``createDataFrame`` (that forks Python workers to scan it).

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 
 from ..operators.ivf import ivf_assign, ivf_probe
 from ..sources.tables import TableIO
+from .sink import foreach_batch
 
 
 class IncrementalIVFIndex:
@@ -106,16 +107,8 @@ class IncrementalIVFIndex:
     def writer(self, stream: DataFrame, checkpoint: str):
         """writeStream maintaining the index from an embedding stream
         (availableNow + checkpoint, the TableIO sink contract)."""
-
-        def run(batch: DataFrame, _batch_id: int) -> None:
-            if batch.isEmpty():
-                return
-            self.append_batch(batch)
-
-        return (
-            stream.writeStream.foreachBatch(run)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
+        return foreach_batch(
+            stream, checkpoint, lambda batch, **_ids: self.append_batch(batch)
         )
 
     # --------------------------------------------------------- queries
@@ -199,15 +192,8 @@ class IncrementalPQIndex:
 
     # ------------------------------------------------------- streaming
     def writer(self, stream: DataFrame, checkpoint: str):
-        def run(batch: DataFrame, _batch_id: int) -> None:
-            if batch.isEmpty():
-                return
-            self.append_batch(batch)
-
-        return (
-            stream.writeStream.foreachBatch(run)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
+        return foreach_batch(
+            stream, checkpoint, lambda batch, **_ids: self.append_batch(batch)
         )
 
     # --------------------------------------------------------- queries

@@ -2,10 +2,11 @@
 maintained windowed-metrics table.
 
 Composition of the engine's own parts: watermarked tumbling
-aggregation (``streaming.windows.tumbling_agg``) upserted into a
-rollup table keyed by (window_start, keys...) via the SCD-1 merge
-sink (``operators.merge``).  Each ``availableNow`` run processes only
-new source files (checkpoint), re-aggregates only LIVE windows
+aggregation (``streaming.windows.tumbling_agg``) folded into a
+rollup table keyed by (window_start, keys...) with the SCD-1
+last-writer-wins merge (``operators.merge.merge_keep_latest``).
+Each ``availableNow`` run processes only new source files
+(checkpoint), re-aggregates only LIVE windows
 (watermark bounds state), and merges refreshed window rows over the
 previous values — the classic continuous-aggregate contract:
 
@@ -13,6 +14,12 @@ previous values — the classic continuous-aggregate contract:
   dropped deterministically);
 - the rollup table always holds exactly one row per (window, key);
 - a full rebuild is never needed — cost per run is O(new data).
+
+The rollup table is a ``DeltaLogTable``: every micro-batch commits
+the refreshed rollup as a new version, so the materialized view also
+answers as-of reads ("what did the hourly rollup say before this
+batch landed?") and metadata-only ``restore``.  The commit carries
+the stream's ``txn``, so a batch replayed after a crash is skipped.
 
 At 100 TB this is the pattern that replaces nightly full-table
 re-aggregation with per-micro-batch incremental maintenance.
@@ -24,16 +31,15 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 
-from ..operators.merge import merge_keep_latest, upsert_keep_latest
+from ..operators.merge import merge_keep_latest
 from ..sources.deltalog import DeltaLogTable
-from ..sources.tables import TableIO
+from .sink import foreach_batch
 from .windows import tumbling_agg
 
 
 def continuous_aggregate(
     events: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     ts_col: str = "ts",
     window: str = "1 hour",
     watermark: str = "30 minutes",
@@ -44,70 +50,22 @@ def continuous_aggregate(
     ``table`` as the rollup of ``events``.
 
     ``update`` output mode re-emits a window row whenever it changes;
-    the merge keeps the newest emission per (window_start, keys).
-    ``n_events`` serves as the version column: counts are monotone
-    per window (update mode only emits when new events arrived), so
-    last-writer-wins on n_events is exactly
-    newest-aggregation-wins."""
+    each batch folds into the table's snapshot keeping the newest
+    emission per (window_start, keys).  ``n_events`` serves as the
+    version column: counts are monotone per window (update mode only
+    emits when new events arrived), so last-writer-wins on n_events
+    is exactly newest-aggregation-wins."""
     agg = tumbling_agg(events, ts_col, window, watermark, keys=keys)
     merge_keys = ["window_start", *keys]
-    spark = events.sparkSession
 
-    def merge_batch(batch: DataFrame, _batch_id: int) -> None:
-        if not batch.columns:
-            return
+    def merge_batch(batch: DataFrame, app_id: str, batch_id: int) -> None:
         # one row per window/key within the batch is guaranteed by the
         # upstream aggregation; merge over the table keyed by window
-        upsert_keep_latest(
-            spark, io, table, batch, merge_keys, order_col="n_events"
+        table.write_batch_exactly_once(
+            lambda snap: batch if snap is None
+            else merge_keep_latest(snap, batch, merge_keys, "n_events"),
+            app_id,
+            batch_id,
         )
 
-    return (
-        agg.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
-
-
-def continuous_aggregate_versioned(
-    events: DataFrame,
-    versioned: DeltaLogTable,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-    keys: Sequence[str] = (),
-    checkpoint: str = "",
-):
-    """Continuous aggregate with HISTORY: every micro-batch commits
-    the refreshed rollup as a new version of the Delta-log table
-    ``versioned``, so the materialized view supports as-of reads
-    ("what did the hourly rollup say before this batch landed?") and
-    metadata-only ``restore`` — Delta history composed with
-    incremental maintenance.
-
-    Merge semantics match ``continuous_aggregate`` (newest window
-    emission wins via n_events monotonicity); the difference is only
-    the sink: read-latest + merge + overwrite commit.  The overwrite
-    may read the table it replaces: the log only tombstones the old
-    files, which stay on disk."""
-    agg = tumbling_agg(events, ts_col, window, watermark, keys=keys)
-    merge_keys = ["window_start", *keys]
-
-    def merge_batch(batch: DataFrame, _batch_id: int) -> None:
-        if not batch.columns or batch.isEmpty():
-            return
-        try:
-            merged = merge_keep_latest(
-                versioned.read(), batch, merge_keys, "n_events"
-            )
-        except FileNotFoundError:
-            merged = batch
-        versioned.write(merged, "overwrite")
-
-    return (
-        agg.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(agg, checkpoint, merge_batch).outputMode("update")

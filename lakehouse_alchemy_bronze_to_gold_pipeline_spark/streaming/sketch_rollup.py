@@ -18,79 +18,82 @@ error is probabilistic).
 At 100 TB/day the pattern holds: per-batch state is the fixed grid,
 merge cost is O(depth*width), and the stored sketch answers point
 frequency queries over ALL history at any time.
+
+Every sketch table is a ``DeltaLogTable``, and every ``merge_*_batch``
+below is one fold through ``DeltaLogTable.write_batch_exactly_once``:
+the table's snapshot merged with the batch, committed as an overwrite
+together with the writer's ``txn`` (``app_id``, ``batch_id``).  So a
+batch replayed after a crash is skipped instead of adding its mass
+twice.  A one-off batch merge names itself the same way.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketch import cms_cells
-from ..sources.tables import TableIO
+from ..sources.deltalog import DeltaLogTable
+from .sink import foreach_batch
 
-# Every merge_*_batch below folds the batch into the stored table
-# through ``TableIO.rewrite`` with the batch's own frame on the left of
-# the union, so the final write runs in the micro-batch session and
-# ``rewrite`` refreshes the table there as well as in ``io``'s session.
+
+def _plus(fresh: DataFrame, snap: DataFrame | None) -> DataFrame:
+    """The batch's summary, with the stored one unioned in when the
+    table has a snapshot (``None`` before its first commit)."""
+    return fresh if snap is None else fresh.unionByName(snap)
 
 
 def merge_cms_batch(
     batch: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     item_col: str,
     depth: int = 4,
     width: int = 256,
-) -> None:
+    *,
+    app_id: str,
+    batch_id: int,
+) -> int | None:
     """Sum one batch's CMS grid into the stored cells table (cell-wise
-    add over ``TableIO.rewrite``, the same self-overwrite-safe path as
-    the SCD-1 parquet merge)."""
-    spark = batch.sparkSession
+    add of the batch's grid and the snapshot's)."""
     cells = cms_cells(batch, item_col, depth, width)
-    if spark.catalog.tableExists(table):
-        io.rewrite(
-            table,
-            lambda snap: cells.unionByName(snap)
-            .groupBy("r", "cell")
-            .agg(F.sum("cnt").alias("cnt")),
-        )
-    else:
-        io.write_overwrite(cells, table)
+    return table.write_batch_exactly_once(
+        lambda snap: _plus(cells, snap)
+        .groupBy("r", "cell")
+        .agg(F.sum("cnt").alias("cnt")),
+        app_id,
+        batch_id,
+    )
 
 
 def streaming_cms(
     stream: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     item_col: str,
     checkpoint: str,
     depth: int = 4,
     width: int = 256,
 ):
     """Returns a ready writeStream (call ``.start()``) maintaining
-    ``table`` as the CMS of every item ever streamed.  Checkpointing
-    makes each source file count exactly once across runs."""
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        merge_cms_batch(batch, io, table, item_col, depth, width)
-
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    ``table`` as the CMS of every item ever streamed, each source file
+    counted exactly once across runs and restarts."""
+    return foreach_batch(stream, checkpoint, partial(
+        merge_cms_batch, table=table, item_col=item_col, depth=depth,
+        width=width,
+    ))
 
 
 def merge_kmv_batch(
     batch: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     group_col: str,
     item_col: str,
     k: int = 64,
-) -> None:
+    *,
+    app_id: str,
+    batch_id: int,
+) -> int | None:
     """Merge one batch into a per-group KMV summary table (<= k
     distinct minimum hashes per group): hash the batch's items,
     union with the stored summary, keep the k smallest distinct per
@@ -103,7 +106,6 @@ def merge_kmv_batch(
     k-min slot, poisoning ``h_k`` and every estimate for its group."""
     from pyspark.sql import Window
 
-    spark = batch.sparkSession
     h = F.expr(
         f"CAST(conv(substring(md5(concat('kmv:', "
         f"CAST({item_col} AS STRING))), 1, 13), 16, 10) AS BIGINT)"
@@ -122,12 +124,9 @@ def merge_kmv_batch(
             .select("grp", "h")
         )
 
-    if spark.catalog.tableExists(table):
-        io.rewrite(
-            table, lambda snap: k_min(fresh.unionByName(snap).distinct())
-        )
-    else:
-        io.write_overwrite(k_min(fresh), table)
+    return table.write_batch_exactly_once(
+        lambda snap: k_min(_plus(fresh, snap).distinct()), app_id, batch_id
+    )
 
 
 def kmv_estimates(summary: DataFrame, k: int = 64) -> DataFrame:
@@ -220,8 +219,7 @@ def kmv_overlap(summary: DataFrame, k: int = 64) -> DataFrame:
 
 def streaming_kmv(
     stream: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     group_col: str,
     item_col: str,
     checkpoint: str,
@@ -229,67 +227,53 @@ def streaming_kmv(
 ):
     """writeStream maintaining a per-group KMV distinct sketch of
     every item ever streamed — state <= k rows per group forever."""
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        merge_kmv_batch(batch, io, table, group_col, item_col, k)
-
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(stream, checkpoint, partial(
+        merge_kmv_batch, table=table, group_col=group_col,
+        item_col=item_col, k=k,
+    ))
 
 
 def streaming_expectations(
     stream: DataFrame,
-    io: TableIO,
     rules,
-    pass_table: str,
-    quarantine_table: str,
+    pass_table: DeltaLogTable,
+    quarantine_table: DeltaLogTable,
     checkpoint: str,
 ):
     """Streaming DLT-expectations sink: each micro-batch splits
     against the rule set (``operators.quality.expectations_gate``,
     drop mode) — passing rows append to ``pass_table``, violating
     rows (tagged with their ``violated_rules``) append to
-    ``quarantine_table``.  Appends + checkpoint give exactly-once
-    per source file; the quarantine table IS the audit log, replayed
-    rows and all.  (Lives here with the other foreachBatch sinks;
-    the gate itself is batch-agnostic.)"""
+    ``quarantine_table``.  Each append carries the stream's ``txn``
+    in its own table's log, so a replayed batch adds to neither (and
+    a crash between the two appends completes only the missing one).
+    (Lives here with the other foreachBatch sinks; the gate itself
+    is batch-agnostic.)"""
     from ..operators.quality import expectations_gate
 
-    def _gate(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def _gate(batch: DataFrame, app_id: str, batch_id: int) -> None:
         ok, bad = expectations_gate(batch, rules, "drop")
-        io.write_append(ok, pass_table)
-        io.write_append(
+        pass_table.write_batch_exactly_once(ok, app_id, batch_id)
+        quarantine_table.write_batch_exactly_once(
             bad.withColumn(
                 "violated_rules", F.array_join("violated_rules", ",")
             ),
-            quarantine_table,
+            app_id,
+            batch_id,
         )
-        # appends ran on the micro-batch session CLONE: refresh the
-        # owning session so its cached file listings see the new files
-        for t in (pass_table, quarantine_table):
-            io.spark.catalog.refreshTable(t)
 
-    return (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(stream, checkpoint, _gate)
 
 
 def merge_hll_batch(
     batch: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     group_col: str,
     item_col: str,
-) -> None:
+    *,
+    app_id: str,
+    batch_id: int,
+) -> int | None:
     """Merge one batch into a per-group HLL register table (m=16,
     <= 16 rows per group FOREVER): build the batch's registers
     (``operators.sketch.hll_registers`` — the same md5 string-rank
@@ -300,17 +284,14 @@ def merge_hll_batch(
     only the estimate carries sketch error, never the maintenance."""
     from ..operators.sketch import hll_registers
 
-    spark = batch.sparkSession
     fresh = hll_registers(batch, group_col, item_col)
-    if spark.catalog.tableExists(table):
-        io.rewrite(
-            table,
-            lambda snap: fresh.unionByName(snap)
-            .groupBy("grp", "bucket")
-            .agg(F.max("reg").alias("reg")),
-        )
-    else:
-        io.write_overwrite(fresh, table)
+    return table.write_batch_exactly_once(
+        lambda snap: _plus(fresh, snap)
+        .groupBy("grp", "bucket")
+        .agg(F.max("reg").alias("reg")),
+        app_id,
+        batch_id,
+    )
 
 
 def hll_reach(summary: DataFrame) -> DataFrame:
@@ -324,8 +305,7 @@ def hll_reach(summary: DataFrame) -> DataFrame:
 
 def streaming_hll(
     stream: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     group_col: str,
     item_col: str,
     checkpoint: str,
@@ -334,28 +314,23 @@ def streaming_hll(
     registers of every item ever streamed — the third mergeable-
     sketch rollup next to CMS (cell SUM) and KMV (k-min), with the
     tightest state of the three (16 rows per group) and an exact
-    merge.  Checkpointing makes each source file count exactly once
-    across runs; ``hll_reach`` reads the estimate at any time."""
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        merge_hll_batch(batch, io, table, group_col, item_col)
-
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    merge.  Each source file counts exactly once across runs and
+    restarts; ``hll_reach`` reads the estimate at any time."""
+    return foreach_batch(stream, checkpoint, partial(
+        merge_hll_batch, table=table, group_col=group_col,
+        item_col=item_col,
+    ))
 
 
 def merge_mg_batch(
     batch: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     item_col: str,
     capacity: int = 256,
-) -> None:
+    *,
+    app_id: str,
+    batch_id: int,
+) -> int | None:
     """Merge one batch into a stored Misra-Gries heavy-hitters table
     (<= ``capacity`` counter rows FOREVER) — the fifth mergeable
     rollup, completing the streaming sketch family next to CMS (cell
@@ -378,7 +353,6 @@ def merge_mg_batch(
     are ignored at ingest (uniform sketch-family contract)."""
     from ..operators.sketch import mg_summaries
 
-    spark = batch.sparkSession
     # the summaries feed both the threshold collect and the write
     fresh = mg_summaries(batch, item_col, capacity).persist()
 
@@ -394,11 +368,12 @@ def merge_mg_batch(
             "value", (F.col("est") - F.lit(d)).alias("est")
         ).filter(F.col("est") > 0)
 
-    if spark.catalog.tableExists(table):
-        io.rewrite(table, lambda snap: decrement(fresh.unionByName(snap)))
-    else:
-        io.write_overwrite(decrement(fresh), table)
-    fresh.unpersist()
+    try:
+        return table.write_batch_exactly_once(
+            lambda snap: decrement(_plus(fresh, snap)), app_id, batch_id
+        )
+    finally:
+        fresh.unpersist()
 
 
 def mg_topk(summary: DataFrame, k: int = 20) -> DataFrame:
@@ -409,39 +384,31 @@ def mg_topk(summary: DataFrame, k: int = 20) -> DataFrame:
 
 def streaming_mg(
     stream: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     item_col: str,
     checkpoint: str,
     capacity: int = 256,
 ):
     """writeStream maintaining ``table`` as the MG heavy-hitters
     counters of every item ever streamed — state <= capacity rows
-    forever.  Checkpointing makes each source file count exactly once
-    across runs; ``mg_topk`` reads the current heavy hitters any
-    time."""
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        merge_mg_batch(batch, io, table, item_col, capacity)
-
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    forever.  Each source file counts exactly once across runs and
+    restarts; ``mg_topk`` reads the current heavy hitters any time."""
+    return foreach_batch(stream, checkpoint, partial(
+        merge_mg_batch, table=table, item_col=item_col, capacity=capacity,
+    ))
 
 
 def merge_qdigest_batch(
     batch: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     bucket_col: str,
     bits: int = 14,
     sigma_frac: int = 1024,
     keys=(),
-) -> None:
+    *,
+    app_id: str,
+    batch_id: int,
+) -> int | None:
     """Merge one batch into a stored q-digest (quantile sketch) —
     the fourth mergeable rollup next to CMS (cell SUM), KMV (k-min)
     and HLL (register MAX).  Digest nodes are weighted tree nodes;
@@ -470,7 +437,6 @@ def merge_qdigest_batch(
     from ..operators.sketch import qdigest_compress
 
     keys = tuple(keys)
-    spark = batch.sparkSession
     u = 1 << bits
     # NULL measurement VALUES are ignored (uniform sketch-family
     # contract; NULL group KEYS remain first-class): a NULL bucket
@@ -518,24 +484,24 @@ def merge_qdigest_batch(
         leaves = nodes.join(tots, cond).drop(*[f"__{k}" for k in keys])
         return qdigest_compress(leaves, bits, keys=keys)
 
-    if spark.catalog.tableExists(table):
-        io.rewrite(
-            table,
-            lambda snap: compress(
-                fresh.unionByName(snap.select(*keys, "id", "cnt"))
-                .groupBy(*keys, "id")
-                .agg(F.sum("cnt").alias("cnt"))
-            ),
+    def fold(snap: DataFrame | None) -> DataFrame:
+        if snap is None:
+            return compress(fresh)
+        return compress(
+            fresh.unionByName(snap.select(*keys, "id", "cnt"))
+            .groupBy(*keys, "id")
+            .agg(F.sum("cnt").alias("cnt"))
         )
-    else:
-        io.write_overwrite(compress(fresh), table)
-    fresh.unpersist()
+
+    try:
+        return table.write_batch_exactly_once(fold, app_id, batch_id)
+    finally:
+        fresh.unpersist()
 
 
 def streaming_qdigest(
     stream: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     bucket_col: str,
     checkpoint: str,
     bits: int = 14,
@@ -547,16 +513,7 @@ def streaming_qdigest(
     ``operators.sketch.qdigest_quantiles``.  ``keys`` maintains one
     independent digest per key group (pass the same ``keys`` to the
     quantile readout)."""
-
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        merge_qdigest_batch(
-            batch, io, table, bucket_col, bits, sigma_frac, keys
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return foreach_batch(stream, checkpoint, partial(
+        merge_qdigest_batch, table=table, bucket_col=bucket_col,
+        bits=bits, sigma_frac=sigma_frac, keys=keys,
+    ))

@@ -556,3 +556,21 @@ def test_upsert_and_forget_keep_partitioning(spark, tmp_path):
     snap = t._replay(None)
     assert snap["meta"]["partitionColumns"] == []
     assert all(a["partitionValues"] == {} for a in snap["files"].values())
+
+
+def test_partitioned_read_keeps_the_logged_column_order(spark, tmp_path):
+    """The parquet reader puts hive partition columns last; the read
+    gives the logged order whether the snapshot has files or not."""
+    t = DeltaLogTable(spark, str(tmp_path / "order"))
+    t.write(
+        spark.range(4).selectExpr("id % 2 AS p", "id"),
+        "append",
+        partition_by=["p"],
+    )
+    assert t.read().columns == ["p", "id"]
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (0, 0), (0, 2), (1, 1), (1, 3),
+    ]
+    t.write(spark.range(0).selectExpr("id AS p", "id"), "overwrite",
+            partition_by=["p"])
+    assert t.read().columns == ["p", "id"]

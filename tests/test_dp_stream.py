@@ -40,22 +40,20 @@ def _released(spark, df):
 
 
 def test_incremental_and_batch_release_identically(spark, tmp_path):
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-        TableIO,
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+        DeltaLogTable,
     )
     from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.rollup import (
         continuous_aggregate,
     )
 
     src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
-    io = TableIO(spark, fmt="parquet")
-    table = "dp_rollup_tbl_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    table = DeltaLogTable(spark, str(tmp_path / "dp_rollup"))
 
     def run():
         stream = spark.readStream.schema(SCHEMA).json(src)
         q = continuous_aggregate(
-            stream, io, table, ts_col="ts", window="15 minutes",
+            stream, table, ts_col="ts", window="15 minutes",
             watermark="30 minutes", checkpoint=cp,
         ).start()
         q.awaitTermination()
@@ -71,7 +69,7 @@ def test_incremental_and_batch_release_identically(spark, tmp_path):
     ])
     run()
 
-    maintained = spark.read.table(table)
+    maintained = table.read()
     inc = _released(spark, maintained)
 
     # one-shot batch twin over ALL the source data
@@ -90,7 +88,6 @@ def test_incremental_and_batch_release_identically(spark, tmp_path):
     # noise came from the declared per-column mechanism
     tbl = dp.laplace_noise_table(1 / (_SPECS[0][2] / 1e6))
     assert all(n in tbl for n, _ in inc.values())
-    spark.sql(f"DROP TABLE {table}")
 
 
 def test_release_ledger_and_multi_spec(spark):

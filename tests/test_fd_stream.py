@@ -8,7 +8,6 @@ must not erase)."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import numpy as np
 import pytest
@@ -21,8 +20,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-    TableIO,
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+    DeltaLogTable,
 )
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.fd_maintain import (
     IncrementalFDSketch,
@@ -36,15 +35,6 @@ SCHEMA = StructType([
 ])
 
 ELL = 16
-
-
-def _drop(spark, *tables):
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in tables:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
 
 
 def _corpus(spark):
@@ -69,10 +59,12 @@ def _gap(g, b):
     return float(np.linalg.eigvalsh(g - b.T @ b).max())
 
 
+def _sketch(spark, path, **kw):
+    return IncrementalFDSketch(DeltaLogTable(spark, str(path)), **kw)
+
+
 def test_incremental_fd_stream(spark, tmp_path):
-    _drop(spark, "fdinc_fd")
-    io = TableIO(spark, fmt="parquet")
-    sk = IncrementalFDSketch(io, "fdinc", ell=ELL, d=64)
+    sk = _sketch(spark, tmp_path / "fdinc", ell=ELL, d=64)
 
     emb = _corpus(spark)
     g, mass, n_all = _exact(emb)
@@ -106,16 +98,14 @@ def test_incremental_fd_stream(spark, tmp_path):
     assert m == pytest.approx(mass, rel=1e-9)
     assert _gap(g, b) <= m / ELL + 1e-9 * m
 
-    # replay guard: re-presenting an already-folded batch_id is a
-    # no-op (mass would double without it)
-    sk.append_batch(b1, batch_id=0)
+    # replay guard: re-presenting an already-folded batch of this
+    # stream is a no-op (mass would double without it)
+    assert sk.append_batch(b1, app_id=os.path.abspath(cp), batch_id=0) is None
     b_r, m_r, n_r = sk.merged()
     assert (n_r, m_r) == (n, m)
 
-    _drop(spark, "fdinc_fd")
 
-
-def test_fd_whitening_handoff_decision(spark):
+def test_fd_whitening_handoff_decision(spark, tmp_path):
     """The sketch-to-decision handoff query: certified dominance must
     agree with EXACT spectral dominance (computed here by an
     independent numpy path over the same scaled features), the
@@ -156,9 +146,7 @@ def test_fd_whitening_handoff_decision(spark):
         assert 1.0 - 1e-6 <= out[i]["white_diag"] <= out[i]["white_diag_max"]
 
     # the real maintained-table path reaches the same decision
-    _drop(spark, "fdwh_fd")
-    io = TableIO(spark, fmt="parquet")
-    sk = IncrementalFDSketch(io, "fdwh", ell=ELL, d=64, vec_col="feat")
+    sk = _sketch(spark, tmp_path / "fdwh", ell=ELL, d=64, vec_col="feat")
     feats = emb.select(
         "vec_id",
         F.transform(
@@ -169,8 +157,9 @@ def test_fd_whitening_handoff_decision(spark):
             .otherwise(F.lit(1.0)),
         ).alias("feat"),
     )
-    sk.append_batch(feats.filter(F.xxhash64("vec_id") % 2 == 0), 0)
-    sk.append_batch(feats.filter(F.xxhash64("vec_id") % 2 != 0), 1)
+    even = F.xxhash64("vec_id") % 2 == 0
+    for i, part in enumerate((even, ~even)):
+        sk.append_batch(feats.filter(part), app_id="handoff", batch_id=i)
     b, m, n_s = sk.merged()
     assert n_s == n and m == pytest.approx(frob, rel=1e-9)
     fd_eig = np.sort(np.linalg.svd(b, compute_uv=False) ** 2)[::-1]
@@ -178,7 +167,6 @@ def test_fd_whitening_handoff_decision(spark):
     assert list(cert[:8]) == [
         out[i]["certified_dominant"] for i in range(8)
     ]
-    _drop(spark, "fdwh_fd")
 
 
 def test_fd_whitening_streaming_end_to_end(spark, tmp_path):
@@ -201,9 +189,7 @@ def test_fd_whitening_streaming_end_to_end(spark, tmp_path):
         q_fd_whitening_handoff,
     )
 
-    _drop(spark, "fdstr_fd")
-    io = TableIO(spark, fmt="parquet")
-    sk = IncrementalFDSketch(io, "fdstr", ell=ELL, d=64, vec_col="feat")
+    sk = _sketch(spark, tmp_path / "fdstr", ell=ELL, d=64, vec_col="feat")
 
     emb = _corpus(spark)
     feats = emb.select(
@@ -278,48 +264,79 @@ def test_fd_whitening_streaming_end_to_end(spark, tmp_path):
         for r in q_fd_whitening_handoff(spark, SF).collect()
     }
     assert [bool(c) for c in cert[:8]] == [released[i] for i in range(8)]
-    _drop(spark, "fdstr_fd")
 
 
-def test_fd_compaction_preserves_state_and_guard(spark):
-    _drop(spark, "fdcpt_fd")
-    io = TableIO(spark, fmt="parquet")
-    sk = IncrementalFDSketch(io, "fdcpt", ell=ELL, d=64)
+def test_fd_compaction_preserves_state_and_guard(spark, tmp_path):
+    sk = _sketch(spark, tmp_path / "fdcpt", ell=ELL, d=64)
 
     emb = _corpus(spark)
     g, mass, n_all = _exact(emb)
-    b1 = emb.filter(F.col("vec_id") % 3 == 0)
-    b2 = emb.filter(F.col("vec_id") % 3 != 0)
+    src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
+    os.makedirs(src, exist_ok=True)
+
+    def run():
+        stream = (
+            spark.readStream.schema(SCHEMA)
+            .option("recursiveFileLookup", "true")
+            .parquet(src)
+        )
+        sk.writer(stream, cp).start().awaitTermination(120)
+
     # multi-partition batches: several partial-sketch rows per batch
-    sk.append_batch(b1.repartition(4), batch_id=0)
-    sk.append_batch(b2.repartition(4), batch_id=1)
+    emb.filter(F.col("vec_id") % 3 == 0).repartition(4).write.parquet(
+        os.path.join(src, "p1")
+    )
+    run()
+    emb.filter(F.col("vec_id") % 3 != 0).repartition(4).write.parquet(
+        os.path.join(src, "p2")
+    )
+    run()
     _, m0, n0 = sk.merged()
-    rows_before = io.read("fdcpt_fd").count()
-    assert rows_before > 3  # something to compact
+    rows_before = sk.table.read().count()
+    assert rows_before > 2  # something to compact
 
     sk.compact()
-    # storage collapsed to 1 content row + 2 replay markers
-    stored = io.read("fdcpt_fd").collect()
-    assert len(stored) == 3 < rows_before
-    assert sorted(r["batch_id"] for r in stored) == [-1, 0, 1]
+    # storage collapsed to ONE row, no marker rows
+    assert sk.table.read().count() == 1
 
     b, m, n = sk.merged()
     assert (n, m) == (n0, m0)
     assert m == pytest.approx(mass, rel=1e-9)
     assert _gap(g, b) <= m / ELL + 1e-9 * m
 
-    # the guard SURVIVES compaction: replaying batch 1 is still a
-    # no-op...
-    sk.append_batch(b2, batch_id=1)
+    # the guard SURVIVES compaction: a restarted stream replaying its
+    # last batch through the runner is skipped...
+    commits = os.path.join(cp, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    versions = sk.table.versions()
+    run()
+    assert sk.table.versions() == versions
     _, m2, n2 = sk.merged()
     assert (n2, m2) == (n, m)
 
     # ...while genuinely new batches still fold in
-    nv = spark.createDataFrame(
-        [(900001, [1.0] * 64)], SCHEMA
+    spark.createDataFrame([(900001, [1.0] * 64)], SCHEMA).write.parquet(
+        os.path.join(src, "p3")
     )
-    sk.append_batch(nv, batch_id=2)
+    run()
     _, m3, n3 = sk.merged()
     assert n3 == n + 1
     assert m3 == pytest.approx(m + 64.0, rel=1e-9)
-    _drop(spark, "fdcpt_fd")
+
+
+def test_fd_two_checkpoints_feed_one_sketch(spark, tmp_path):
+    """Two streams with their own checkpoints are two writers: each
+    one's batch 0 counts, so ``n`` is every row that arrived."""
+    sk = _sketch(spark, tmp_path / "fd2", ell=ELL, d=64)
+    emb = _corpus(spark)
+    src = str(tmp_path / "src")
+    emb.write.parquet(src)
+    for cp in ("cp_a", "cp_b"):
+        stream = spark.readStream.schema(SCHEMA).parquet(src)
+        sk.writer(stream, str(tmp_path / cp)).start().awaitTermination(120)
+    _, m, n = sk.merged()
+    _, mass, n_all = _exact(emb)
+    assert n == 2 * n_all
+    assert m == pytest.approx(2 * mass, rel=1e-9)

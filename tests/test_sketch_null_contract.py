@@ -17,9 +17,7 @@ per-incident:
 
 from __future__ import annotations
 
-import os
 import random
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,8 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-    TableIO,
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+    DeltaLogTable,
 )
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.sketch_rollup import (
     hll_reach,
@@ -49,15 +47,6 @@ SCHEMA = StructType([
     StructField("item", StringType()),
     StructField("bucket", LongType()),
 ])
-
-
-def _drop(spark, *tables):
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in tables:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
 
 
 def _batches():
@@ -91,23 +80,24 @@ def _sorted_rows(df):
 
 FAMILIES = {
     "cms": dict(
-        merge=lambda b, io, t: merge_cms_batch(b, io, t, "item"),
-        readout=lambda io, t: io.read(t),
+        merge=lambda b, t, **ids: merge_cms_batch(b, t, "item", **ids),
+        readout=lambda t: t.read(),
     ),
     "kmv": dict(
-        merge=lambda b, io, t: merge_kmv_batch(b, io, t, "grp", "item",
-                                               k=16),
-        readout=lambda io, t: kmv_estimates(io.read(t), k=16),
+        merge=lambda b, t, **ids: merge_kmv_batch(b, t, "grp", "item",
+                                                  k=16, **ids),
+        readout=lambda t: kmv_estimates(t.read(), k=16),
     ),
     "hll": dict(
-        merge=lambda b, io, t: merge_hll_batch(b, io, t, "grp", "item"),
-        readout=lambda io, t: hll_reach(io.read(t)),
+        merge=lambda b, t, **ids: merge_hll_batch(b, t, "grp", "item",
+                                                  **ids),
+        readout=lambda t: hll_reach(t.read()),
     ),
     "qdigest": dict(
-        merge=lambda b, io, t: merge_qdigest_batch(
-            b, io, t, "bucket", bits=10, sigma_frac=64, keys=("grp",)
+        merge=lambda b, t, **ids: merge_qdigest_batch(
+            b, t, "bucket", bits=10, sigma_frac=64, keys=("grp",), **ids
         ),
-        readout=lambda io, t: io.read(t)
+        readout=lambda t: t.read()
         .groupBy("grp")
         .agg(F.sum("cnt").alias("mass")),
     ),
@@ -116,33 +106,32 @@ FAMILIES = {
         # design (unlike the exact CMS/KMV/HLL merges), so the
         # dirty-vs-clean comparison needs identical partitioning —
         # the contract under test is null handling, not layout
-        merge=lambda b, io, t: merge_mg_batch(b.coalesce(1), io, t,
-                                              "item", capacity=32),
-        readout=lambda io, t: mg_topk(io.read(t), k=10),
+        merge=lambda b, t, **ids: merge_mg_batch(b.coalesce(1), t, "item",
+                                                 capacity=32, **ids),
+        readout=lambda t: mg_topk(t.read(), k=10),
     ),
 }
 
 
 @pytest.mark.parametrize("family", sorted(FAMILIES))
-def test_sketch_null_contract(spark, family):
+def test_sketch_null_contract(spark, tmp_path, family):
     fam = FAMILIES[family]
-    t_dirty, t_clean = f"nulc_{family}_d", f"nulc_{family}_c"
-    _drop(spark, t_dirty, t_clean)
-    io = TableIO(spark, fmt="parquet")
+    t_dirty = DeltaLogTable(spark, str(tmp_path / "dirty"))
+    t_clean = DeltaLogTable(spark, str(tmp_path / "clean"))
 
-    for rows in _batches():  # two-run merge: store, then merge again
-        fam["merge"](spark.createDataFrame(rows, SCHEMA), io, t_dirty)
+    # two-run merge: store, then merge again
+    for i, rows in enumerate(_batches()):
+        ids = dict(app_id="nulls", batch_id=i)
+        fam["merge"](spark.createDataFrame(rows, SCHEMA), t_dirty, **ids)
         fam["merge"](
-            spark.createDataFrame(_clean(rows), SCHEMA), io, t_clean
+            spark.createDataFrame(_clean(rows), SCHEMA), t_clean, **ids
         )
 
     # NULL items were no-ops: stored state AND readout are identical
     # to the null-free twin's
-    assert _sorted_rows(io.read(t_dirty)) == _sorted_rows(
-        io.read(t_clean)
-    )
-    got = _sorted_rows(fam["readout"](io, t_dirty))
-    assert got == _sorted_rows(fam["readout"](io, t_clean))
+    assert _sorted_rows(t_dirty.read()) == _sorted_rows(t_clean.read())
+    got = _sorted_rows(fam["readout"](t_dirty))
+    assert got == _sorted_rows(fam["readout"](t_clean))
 
     # grouped families: NULL key is its own group (cms/mg are keyless)
     if family not in ("cms", "mg"):
@@ -152,5 +141,3 @@ def test_sketch_null_contract(spark, family):
             # per-group mass conservation counts only non-null VALUES
             mass = {r[0]: r[1] for r in got}
             assert mass == {"a": 240, "b": 240, None: 240}
-
-    _drop(spark, t_dirty, t_clean)

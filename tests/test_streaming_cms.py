@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -17,8 +16,8 @@ from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.sketch import (
     cms_cells,
     cms_estimate,
 )
-from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-    TableIO,
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+    DeltaLogTable,
 )
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.sketch_rollup import (
     streaming_cms,
@@ -36,13 +35,7 @@ def _write(dirpath, name, items):
 
 
 def test_streaming_cms_equals_batch_union(spark, tmp_path):
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in ("cms_stream_cells",):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
+    cells = DeltaLogTable(spark, str(tmp_path / "cms_stream_cells"))
     src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
 
     batch1 = ["a", "b", "a", "c", "d", "a"]
@@ -51,7 +44,7 @@ def test_streaming_cms_equals_batch_union(spark, tmp_path):
     def run():
         stream = spark.readStream.schema(SCHEMA).json(src)
         q = streaming_cms(
-            stream, io, "cms_stream_cells", "item", cp,
+            stream, cells, "item", cp,
             depth=DEPTH, width=WIDTH,
         ).start()
         q.awaitTermination(120)
@@ -70,7 +63,7 @@ def test_streaming_cms_equals_batch_union(spark, tmp_path):
     }
     got = {
         (r["r"], r["cell"]): r["cnt"]
-        for r in io.read("cms_stream_cells").collect()
+        for r in cells.read().collect()
     }
     assert got == want, "streamed cells != batch cells over the union"
 
@@ -80,7 +73,7 @@ def test_streaming_cms_equals_batch_union(spark, tmp_path):
     est = {
         r["item"]: r["cms_est"]
         for r in cms_estimate(
-            probes, io.read("cms_stream_cells"), "item", DEPTH, WIDTH
+            probes, cells.read(), "item", DEPTH, WIDTH
         ).collect()
     }
     assert est["a"] >= 4 and est["f"] >= 3 and est["zz"] >= 0
@@ -98,13 +91,8 @@ def test_streaming_kmv_equals_batch_union(spark, tmp_path):
     schema = StructType(
         [StructField("grp", StringType()), StructField("uid", LongType())]
     )
-    for t in ("kmv_stream_sum", "kmv_batch_sum"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
+    streamed = DeltaLogTable(spark, str(tmp_path / "kmv_stream_sum"))
+    one_shot = DeltaLogTable(spark, str(tmp_path / "kmv_batch_sum"))
     src, cp = str(tmp_path / "ksrc"), str(tmp_path / "kcp")
 
     b1 = [("a", i) for i in range(40)] + [("b", i) for i in range(5)]
@@ -119,7 +107,7 @@ def test_streaming_kmv_equals_batch_union(spark, tmp_path):
     def run():
         stream = spark.readStream.schema(schema).json(src)
         q = streaming_kmv(
-            stream, io, "kmv_stream_sum", "grp", "uid", cp, k=16
+            stream, streamed, "grp", "uid", cp, k=16
         ).start()
         q.awaitTermination(120)
 
@@ -129,20 +117,17 @@ def test_streaming_kmv_equals_batch_union(spark, tmp_path):
     run()
 
     # streamed summary == one-shot merge over the union
-    spark.sql("DROP TABLE IF EXISTS kmv_batch_sum")
     union = spark.createDataFrame(b1 + b2, schema)
-    merge_kmv_batch(union, io, "kmv_batch_sum", "grp", "uid", k=16)
-    got = {
-        (r["grp"], r["h"]) for r in io.read("kmv_stream_sum").collect()
-    }
-    want = {
-        (r["grp"], r["h"]) for r in io.read("kmv_batch_sum").collect()
-    }
+    merge_kmv_batch(
+        union, one_shot, "grp", "uid", k=16, app_id="one-shot", batch_id=0
+    )
+    got = {(r["grp"], r["h"]) for r in streamed.read().collect()}
+    want = {(r["grp"], r["h"]) for r in one_shot.read().collect()}
     assert got == want
 
     est = {
         r["grp"]: r["est_distinct"]
-        for r in kmv_estimates(io.read("kmv_stream_sum"), k=16).collect()
+        for r in kmv_estimates(streamed.read(), k=16).collect()
     }
     # group b has 6 distinct (< k): exact; group a (90 distinct) is
     # estimated within the sketch's 4-sigma band
@@ -163,13 +148,7 @@ def test_streaming_mg_heavy_hitters(spark, tmp_path):
     )
 
     CAP = 8
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in ("mg_stream_sum",):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
+    counters = DeltaLogTable(spark, str(tmp_path / "mg_stream_sum"))
     src, cp = str(tmp_path / "msrc"), str(tmp_path / "mcp")
 
     b1 = ["hot1"] * 150 + ["hot2"] * 90 + [f"t{i}" for i in range(60)]
@@ -178,18 +157,17 @@ def test_streaming_mg_heavy_hitters(spark, tmp_path):
     def run():
         stream = spark.readStream.schema(SCHEMA).json(src)
         q = streaming_mg(
-            stream, io, "mg_stream_sum", "item", cp, capacity=CAP
+            stream, counters, "item", cp, capacity=CAP
         ).start()
         q.awaitTermination(120)
 
     _write(src, "b1.json", b1)
     run()
-    assert io.read("mg_stream_sum").count() <= CAP
+    assert counters.read().count() <= CAP
     _write(src, "b2.json", b2)
     run()  # checkpoint: b1 not re-folded
 
-    stored = {r["value"]: r["est"]
-              for r in io.read("mg_stream_sum").collect()}
+    stored = {r["value"]: r["est"] for r in counters.read().collect()}
     assert len(stored) <= CAP  # bounded state forever
 
     import collections
@@ -205,23 +183,33 @@ def test_streaming_mg_heavy_hitters(spark, tmp_path):
         if c > debt:
             assert v in stored, (v, c, debt)
 
-    top = mg_topk(io.read("mg_stream_sum"), k=2).collect()
+    top = mg_topk(counters.read(), k=2).collect()
     assert [r["value"] for r in top] == ["hot1", "hot2"]
 
-    # a replayed batch through the batch-level API still merges
-    # correctly (upper bound keeps holding with the extra mass)
+    # a replay of the stream's last batch through the batch-level API
+    # (same app id and batch id) is skipped: no commit, no mass added
+    versions = counters.versions()
+    assert merge_mg_batch(
+        spark.createDataFrame([(x,) for x in b2], SCHEMA),
+        counters, "item", capacity=CAP,
+        app_id=os.path.abspath(cp), batch_id=1,
+    ) is None
+    assert counters.versions() == versions
+    assert {r["value"]: r["est"]
+            for r in counters.read().collect()} == stored
+
+    # the same frame under a new batch id is new data: it merges, and
+    # the upper bound keeps holding with the extra mass
     merge_mg_batch(
         spark.createDataFrame([(x,) for x in b2], SCHEMA),
-        io, "mg_stream_sum", "item", capacity=CAP,
+        counters, "item", capacity=CAP,
+        app_id=os.path.abspath(cp), batch_id=2,
     )
     true2 = true + collections.Counter(b2)
-    stored2 = {r["value"]: r["est"]
-               for r in io.read("mg_stream_sum").collect()}
+    stored2 = {r["value"]: r["est"] for r in counters.read().collect()}
     assert len(stored2) <= CAP
     for v, est in stored2.items():
         assert est <= true2[v]
-
-    spark.sql("DROP TABLE IF EXISTS mg_stream_sum")
 
 
 def test_streaming_expectations_split(spark, tmp_path):
@@ -238,13 +226,8 @@ def test_streaming_expectations_split(spark, tmp_path):
     schema = StructType(
         [StructField("pk", LongType()), StructField("amt", DoubleType())]
     )
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in ("exp_pass", "exp_quar"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
+    passed = DeltaLogTable(spark, str(tmp_path / "exp_pass"))
+    quarantined = DeltaLogTable(spark, str(tmp_path / "exp_quar"))
     src, cp = str(tmp_path / "esrc"), str(tmp_path / "ecp")
     rules = [null_pk_rule(["pk"]), positive_rule(["amt"])]
 
@@ -259,14 +242,14 @@ def test_streaming_expectations_split(spark, tmp_path):
 
     q = streaming_expectations(
         spark.readStream.schema(schema).json(src),
-        io, rules, "exp_pass", "exp_quar", cp,
+        rules, passed, quarantined, cp,
     ).start()
     q.awaitTermination(120)
 
-    assert [r["pk"] for r in io.read("exp_pass").collect()] == [1]
+    assert [r["pk"] for r in passed.read().collect()] == [1]
     quar = {
         r["pk"]: r["violated_rules"]
-        for r in io.read("exp_quar").collect()
+        for r in quarantined.read().collect()
     }
     assert len(quar) == 2 and "positive" in quar[3]
 
@@ -275,11 +258,11 @@ def test_streaming_expectations_split(spark, tmp_path):
         f.write(json.dumps({"pk": 9, "amt": 1.0}) + "\n")
     q = streaming_expectations(
         spark.readStream.schema(schema).json(src),
-        io, rules, "exp_pass", "exp_quar", cp,
+        rules, passed, quarantined, cp,
     ).start()
     q.awaitTermination(120)
-    assert sorted(r["pk"] for r in io.read("exp_pass").collect()) == [1, 9]
-    assert io.read("exp_quar").count() == 2
+    assert sorted(r["pk"] for r in passed.read().collect()) == [1, 9]
+    assert quarantined.read().count() == 2
 
 
 def test_streaming_hll_registers_equal_batch_union(spark, tmp_path):
@@ -296,13 +279,7 @@ def test_streaming_hll_registers_equal_batch_union(spark, tmp_path):
     schema = StructType(
         [StructField("grp", StringType()), StructField("uid", LongType())]
     )
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in ("hll_stream_regs",):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
+    regs = DeltaLogTable(spark, str(tmp_path / "hll_stream_regs"))
     src, cp = str(tmp_path / "hsrc"), str(tmp_path / "hcp")
 
     b1 = [("a", i) for i in range(200)] + [("b", i) for i in range(8)]
@@ -316,9 +293,7 @@ def test_streaming_hll_registers_equal_batch_union(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).json(src)
-        q = streaming_hll(
-            stream, io, "hll_stream_regs", "grp", "uid", cp
-        ).start()
+        q = streaming_hll(stream, regs, "grp", "uid", cp).start()
         q.awaitTermination(120)
 
     _w("b1.json", b1)
@@ -335,13 +310,13 @@ def test_streaming_hll_registers_equal_batch_union(spark, tmp_path):
     }
     got = {
         (r["grp"], r["bucket"]): r["reg"]
-        for r in io.read("hll_stream_regs").collect()
+        for r in regs.read().collect()
     }
     assert got == want, "streamed registers != batch registers"
     # state bound: never more than m=16 rows per group
     assert all(
         r["n"] <= 16
-        for r in io.read("hll_stream_regs")
+        for r in regs.read()
         .groupBy("grp")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -350,7 +325,7 @@ def test_streaming_hll_registers_equal_batch_union(spark, tmp_path):
     # estimates from the maintained table land inside the 3-sigma
     # envelope (1.04/sqrt(16) per sigma) of the true distincts
     est = {r["grp"]: r["hll_raw_estimate"]
-           for r in hll_reach(io.read("hll_stream_regs")).collect()}
+           for r in hll_reach(regs.read()).collect()}
     true = {"a": 400, "b": 9}
     for g, t in true.items():
         assert abs(est[g] - t) / t < 0.78, (g, est[g], t)
@@ -371,21 +346,16 @@ def test_kmv_overlap_readout(spark, tmp_path):
     schema = StructType(
         [StructField("grp", StringType()), StructField("uid", LongType())]
     )
-    for t in ("kmv_ovl_exact", "kmv_ovl_est"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
+    exact = DeltaLogTable(spark, str(tmp_path / "kmv_ovl_exact"))
+    estimated = DeltaLogTable(spark, str(tmp_path / "kmv_ovl_est"))
 
     # exact regime: |a|=30, |b|=20, |a ∩ b| = 10, k=64 > all
     rows = [("a", i) for i in range(30)] + [("b", i) for i in range(20, 40)]
     merge_kmv_batch(
-        spark.createDataFrame(rows, schema), io, "kmv_ovl_exact",
-        "grp", "uid", k=64,
+        spark.createDataFrame(rows, schema), exact, "grp", "uid", k=64,
+        app_id="one-shot", batch_id=0,
     )
-    out = kmv_overlap(io.read("kmv_ovl_exact"), k=64).collect()
+    out = kmv_overlap(exact.read(), k=64).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["grp_a"], r["grp_b"]) == ("a", "b")
@@ -398,17 +368,14 @@ def test_kmv_overlap_readout(spark, tmp_path):
         ("b", i) for i in range(300, 600)
     ]
     merge_kmv_batch(
-        spark.createDataFrame(rows, schema), io, "kmv_ovl_est",
-        "grp", "uid", k=32,
+        spark.createDataFrame(rows, schema), estimated, "grp", "uid", k=32,
+        app_id="one-shot", batch_id=0,
     )
-    r = kmv_overlap(io.read("kmv_ovl_est"), k=32).collect()[0]
+    r = kmv_overlap(estimated.read(), k=32).collect()[0]
     sigma = 1 / (32 - 2) ** 0.5
     assert abs(r["union_est"] - 600) / 600 <= 4 * sigma
     # intersection compounds union + jaccard noise: wider band
     assert abs(r["inter_est"] - 100) / 100 <= 8 * sigma
-
-    for t in ("kmv_ovl_exact", "kmv_ovl_est"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 from hypothesis import HealthCheck, given, settings

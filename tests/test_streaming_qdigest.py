@@ -8,15 +8,14 @@ from __future__ import annotations
 import json
 import os
 import random
-import shutil
 
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.sketch import (
     qdigest_quantiles,
 )
-from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-    TableIO,
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+    DeltaLogTable,
 )
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.sketch_rollup import (
     streaming_qdigest,
@@ -42,13 +41,7 @@ def _write(dirpath, name, values):
 
 
 def test_streaming_qdigest_two_runs(spark, tmp_path):
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in ("qd_stream_nodes",):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
+    table = DeltaLogTable(spark, str(tmp_path / "qd_stream_nodes"))
     src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
 
     rng = random.Random(3)
@@ -58,7 +51,7 @@ def test_streaming_qdigest_two_runs(spark, tmp_path):
     def run():
         stream = spark.readStream.schema(SCHEMA).json(src)
         q = streaming_qdigest(
-            stream, io, "qd_stream_nodes", "bucket", cp,
+            stream, table, "bucket", cp,
             bits=BITS, sigma_frac=SIGMA_FRAC,
         ).start()
         q.awaitTermination(120)
@@ -68,7 +61,7 @@ def test_streaming_qdigest_two_runs(spark, tmp_path):
     _write(src, "b2.json", batch2)
     run()  # checkpoint: b1 not re-counted
 
-    nodes = io.read("qd_stream_nodes")
+    nodes = table.read()
     rows = nodes.collect()
     n = len(batch1) + len(batch2)
     # mass conservation is EXACT across merges
@@ -121,13 +114,7 @@ def test_streaming_qdigest_grouped_two_runs(spark, tmp_path):
         merge_qdigest_batch,
     )
 
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in ("qd_stream_grouped",):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
+    table = DeltaLogTable(spark, str(tmp_path / "qd_stream_grouped"))
     src, cp = str(tmp_path / "gsrc"), str(tmp_path / "gcp")
 
     rng = random.Random(11)
@@ -143,7 +130,7 @@ def test_streaming_qdigest_grouped_two_runs(spark, tmp_path):
     def run():
         stream = spark.readStream.schema(GSCHEMA).json(src)
         q = streaming_qdigest(
-            stream, io, "qd_stream_grouped", "bucket", cp,
+            stream, table, "bucket", cp,
             bits=BITS, sigma_frac=SIGMA_FRAC, keys=("grp",),
         ).start()
         q.awaitTermination(120)
@@ -153,7 +140,7 @@ def test_streaming_qdigest_grouped_two_runs(spark, tmp_path):
     _write_grouped(src, "b2.json", batch2)
     run()  # checkpoint: b1 not re-counted
 
-    nodes = io.read("qd_stream_grouped")
+    nodes = table.read()
     rows = nodes.collect()
     streamed = collections.defaultdict(list)
     for g, v in batch1 + batch2:
@@ -196,10 +183,11 @@ def test_streaming_qdigest_grouped_two_runs(spark, tmp_path):
         [("u", 5)] * 40 + [("g", 200)] * 60, GSCHEMA
     )
     merge_qdigest_batch(
-        extra, io, "qd_stream_grouped", "bucket",
+        extra, table, "bucket",
         bits=BITS, sigma_frac=SIGMA_FRAC, keys=("grp",),
+        app_id="extra", batch_id=0,
     )
-    rows3 = io.read("qd_stream_grouped").collect()
+    rows3 = table.read().collect()
     mass3 = collections.Counter()
     for r in rows3:
         mass3[r.grp] += r.cnt
@@ -219,13 +207,7 @@ def test_qdigest_grouped_null_key(spark, tmp_path):
         merge_qdigest_batch,
     )
 
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in ("qd_null_grouped",):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
+    table = DeltaLogTable(spark, str(tmp_path / "qd_null_grouped"))
 
     rng = random.Random(7)
     b1 = [("a", rng.randint(0, U - 1)) for _ in range(500)] + [
@@ -234,14 +216,14 @@ def test_qdigest_grouped_null_key(spark, tmp_path):
     b2 = [("a", rng.randint(0, U - 1)) for _ in range(300)] + [
         (None, rng.randint(64, 127)) for _ in range(600)
     ]
-    for batch in (b1, b2):
+    for i, batch in enumerate((b1, b2)):
         merge_qdigest_batch(
-            spark.createDataFrame(batch, GSCHEMA), io,
-            "qd_null_grouped", "bucket",
+            spark.createDataFrame(batch, GSCHEMA), table, "bucket",
             bits=BITS, sigma_frac=SIGMA_FRAC, keys=("grp",),
+            app_id="nulls", batch_id=i,
         )
 
-    rows = io.read("qd_null_grouped").collect()
+    rows = table.read().collect()
     mass = collections.Counter()
     for r in rows:
         mass[r.grp] += r.cnt
@@ -251,7 +233,7 @@ def test_qdigest_grouped_null_key(spark, tmp_path):
 
     got = collections.defaultdict(dict)
     for r in qdigest_quantiles(
-        io.read("qd_null_grouped"), BITS, pcts=(50,), keys=("grp",)
+        table.read(), BITS, pcts=(50,), keys=("grp",)
     ).collect():
         got[r.grp][r.q_pct] = r.est_bucket
     # the NULL group answers quantiles from its own digest
@@ -283,7 +265,9 @@ from hypothesis import strategies as st
         min_size=1, max_size=60,
     ),
 )
-def test_grouped_merge_mass_conservation_any_split(spark, rows):
+def test_grouped_merge_mass_conservation_any_split(
+    spark, tmp_path_factory, rows
+):
     """Property form of the grouped-merge contract: for ANY
     assignment of rows (including NULL-keyed ones) to up to three
     merge batches, the stored digest conserves every group's mass
@@ -295,28 +279,23 @@ def test_grouped_merge_mass_conservation_any_split(spark, rows):
         merge_qdigest_batch,
     )
 
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in ("qd_fuzz_grouped",):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
+    # a fresh table per example
+    table = DeltaLogTable(spark, str(tmp_path_factory.mktemp("qd_fuzz")))
 
     batches = collections.defaultdict(list)
     for g, v, b in rows:
         batches[b].append((g, v))
     for b in sorted(batches):
         merge_qdigest_batch(
-            spark.createDataFrame(batches[b], GSCHEMA), io,
-            "qd_fuzz_grouped", "bucket",
+            spark.createDataFrame(batches[b], GSCHEMA), table, "bucket",
             bits=BITS, sigma_frac=SIGMA_FRAC, keys=("grp",),
+            app_id="split", batch_id=b,
         )
 
     want = collections.Counter(g for g, _v, _b in rows)
     mass = collections.Counter()
     state = collections.Counter()
-    for r in io.read("qd_fuzz_grouped").collect():
+    for r in table.read().collect():
         mass[r.grp] += r.cnt
         state[r.grp] += 1
     assert mass == want

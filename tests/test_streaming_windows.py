@@ -221,22 +221,20 @@ def test_streaming_upsert_scd1(spark, tmp_path):
 
 
 def test_continuous_aggregate_incremental_rollup(spark, tmp_path):
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+        DeltaLogTable,
+    )
     from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.rollup import (
         continuous_aggregate,
     )
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-        TableIO,
-    )
 
     src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
-    io = TableIO(spark, fmt="parquet")
-    table = "rollup_tbl_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    table = DeltaLogTable(spark, str(tmp_path / "rollup"))
 
     def run():
         stream = spark.readStream.schema(SCHEMA).json(src)
         q = continuous_aggregate(
-            stream, io, table, ts_col="ts", window="15 minutes",
+            stream, table, ts_col="ts", window="15 minutes",
             watermark="30 minutes", checkpoint=cp,
         ).start()
         q.awaitTermination()
@@ -248,7 +246,7 @@ def test_continuous_aggregate_incremental_rollup(spark, tmp_path):
     run()
     got = {
         r.window_start.strftime("%H:%M"): r.n_events
-        for r in spark.read.table(table).collect()
+        for r in table.read().collect()
     }
     assert got == {"10:00": 1, "10:15": 1}
 
@@ -260,11 +258,10 @@ def test_continuous_aggregate_incremental_rollup(spark, tmp_path):
         {"user_id": "u1", "ts": "2024-01-01 11:00:00", "value": 3.0},
     ])
     run()
-    rows = spark.read.table(table).collect()
+    rows = table.read().collect()
     got = {r.window_start.strftime("%H:%M"): (r.n_events, r.sum_value) for r in rows}
     assert got == {"10:00": (2, 6.0), "10:15": (1, 2.0), "11:00": (1, 3.0)}
     assert len(rows) == 3  # exactly one row per window
-    spark.sql(f"DROP TABLE {table}")
 
 
 def test_stream_stream_left_outer_emits_after_watermark(spark, tmp_path):
@@ -335,7 +332,7 @@ def test_continuous_aggregate_versioned_history(spark, tmp_path):
         DeltaLogTable,
     )
     from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.rollup import (
-        continuous_aggregate_versioned,
+        continuous_aggregate,
     )
 
     src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
@@ -343,7 +340,7 @@ def test_continuous_aggregate_versioned_history(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(SCHEMA).json(src)
-        q = continuous_aggregate_versioned(
+        q = continuous_aggregate(
             stream, vt, ts_col="ts", window="15 minutes",
             watermark="30 minutes", checkpoint=cp,
         ).start()
@@ -373,6 +370,9 @@ def test_continuous_aggregate_versioned_history(spark, tmp_path):
     v0_again = {r.window_start.strftime("%H:%M"): r.n_events
                 for r in vt.read(0).collect()}
     assert v0_again == {"10:00": 1, "10:15": 1}
+    # each version carries its batch's txn: the stream's watermark is
+    # in the log, so a restarted stream skips what it already folded
+    assert vt.last_txn_version(os.path.abspath(cp)) >= 1
 
 
 def test_watermark_fixed_model_matches_real_stream(spark, tmp_path):

@@ -164,16 +164,13 @@ def test_compact_zorder_equidepth_balances_skew(spark):
 def test_rewrite_clears_orphaned_tmp(spark):
     """A crashed rewrite leaves its tmp location on disk with no
     catalog entry, and ``saveAsTable`` refuses an existing managed
-    path (LOCATION_ALREADY_EXISTS).  Every self-rewrite — compact, the
-    SCD-1 merge fallback and a sketch merge — goes through
+    path (LOCATION_ALREADY_EXISTS).  Every catalog self-rewrite —
+    compact and the SCD-1 merge fallback — goes through
     ``TableIO.rewrite``, which clears that orphan first."""
     import os
 
     from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.merge import (
         upsert_keep_latest,
-    )
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.sketch_rollup import (
-        merge_cms_batch,
     )
 
     io = TableIO(spark, fmt="parquet")
@@ -186,8 +183,8 @@ def test_rewrite_clears_orphaned_tmp(spark):
             fh.write("left by a crashed run")
         assert not spark.catalog.tableExists(rewrite_tmp(table))
 
-    compacted, merged, cms = "orphan_compact", "orphan_merge", "orphan_cms"
-    for t in (compacted, merged, cms):
+    compacted, merged = "orphan_compact", "orphan_merge"
+    for t in (compacted, merged):
         _fresh_table(spark, t)
 
     io.write_overwrite(spark.range(100).withColumnRenamed("id", "k"),
@@ -214,14 +211,40 @@ def test_rewrite_clears_orphaned_tmp(spark):
         (1, "a"), (2, "B"), (3, "c"),
     ]
 
-    items = spark.range(50).selectExpr("CAST(id % 7 AS STRING) AS item")
-    merge_cms_batch(items, io, cms, "item")      # creates the table
-    plant_orphan(cms)
-    merge_cms_batch(items, io, cms, "item")      # rewrites it
-    per_row = io.read(cms).groupBy("r").agg(F.sum("cnt").alias("n"))
-    assert {r.n for r in per_row.collect()} == {100}
-
-    for t in (compacted, merged, cms):
+    for t in (compacted, merged):
         assert not spark.catalog.tableExists(rewrite_tmp(t))
         assert not os.path.exists(os.path.join(wh, rewrite_tmp(t)))
         spark.sql(f"DROP TABLE {t}")
+
+
+def test_sketch_fold_reads_the_snapshot_it_replaces(spark, tmp_path):
+    """A sketch merge is a fold on the Delta log: it reads the table's
+    own current files and commits the result as an overwrite, with no
+    tmp copy.  The overwritten files stay on disk, so the previous
+    version still reads, and nothing but the log and data files is
+    left in the table directory."""
+    import os
+
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+        DeltaLogTable,
+    )
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.sketch_rollup import (
+        merge_cms_batch,
+    )
+
+    cms = DeltaLogTable(spark, str(tmp_path / "cms"))
+    items = spark.range(50).selectExpr("CAST(id % 7 AS STRING) AS item")
+    for i in range(2):  # creates the table, then folds into it
+        assert merge_cms_batch(
+            items, cms, "item", app_id="fold", batch_id=i
+        ) == i
+
+    def per_row(df):
+        return {r.n for r in df.groupBy("r").agg(F.sum("cnt").alias("n"))
+                .collect()}
+
+    assert per_row(cms.read()) == {100}
+    assert per_row(cms.read(0)) == {50}
+    assert sorted(
+        e for e in os.listdir(cms.path) if not e.endswith(".parquet")
+    ) == ["_delta_log"]
