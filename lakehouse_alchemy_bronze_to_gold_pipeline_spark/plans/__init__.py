@@ -10,9 +10,11 @@ shuffle counts, scans that fork Python workers.
 """
 
 from .inspect import (
+    fingerprint,
     formatted,
     lint,
     lint_plan,
+    normalize,
     ops,
     python_rdd_scans,
     report,
@@ -22,6 +24,8 @@ from .inspect import (
 
 __all__ = [
     "formatted",
+    "normalize",
+    "fingerprint",
     "ops",
     "shuffles",
     "unpartitioned_windows",

@@ -8,6 +8,7 @@ are not.  Everything here is pure string analysis — no execution.
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 from pyspark.sql import DataFrame
@@ -20,6 +21,35 @@ def formatted(df: DataFrame) -> str:
         "formatted"
     )
     return df._jdf.queryExecution().explainString(mode)
+
+
+#: what differs between two captures of the same plan: expression
+#: ids, exchange plan ids, lambda variable suffixes (a session-wide
+#: counter), cached-relation statistics, RDD ids with their call
+#: sites, and file paths
+_NOISE = (
+    (re.compile(r"\[plan_id=\d+\]"), ""),
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1"),
+    (re.compile(r"Statistics\([^)]*\)"), "Statistics()"),
+    (re.compile(r"RDD\[\d+\] at [^,]*"), "RDD[]"),
+    (re.compile(r"(?:file:)?(?:/[\w.=-]+){2,}"), "<path>"),
+)
+
+
+def normalize(plan: str) -> str:
+    """A formatted explain with its run-to-run noise stripped: two
+    sessions that plan the same query the same way print the same
+    text."""
+    for pattern, repl in _NOISE:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
+def fingerprint(plan: str) -> str:
+    """sha1 of :func:`normalize` — a stable identity of a plan's
+    shape, for goldens that pin a whole registry's plans."""
+    return hashlib.sha1(normalize(plan).encode()).hexdigest()
 
 
 def ops(plan: str) -> list[str]:
