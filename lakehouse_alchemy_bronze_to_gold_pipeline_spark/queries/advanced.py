@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .data import load, spread_scan
+from .data import load, registry, spread_scan
 
 # ---------------------------------------------------------------------
 # Q21-shape: EXISTS + NOT EXISTS decorrelated into one grouped pass
@@ -119,7 +119,7 @@ def q_pair_containment(spark: SparkSession, sf: str) -> DataFrame:
     only on candidate pairs, never all-pairs."""
     from ..operators.minhash import md5_signatures_and_pairs
 
-    # r12: spread the single-row-group scan before the heavy per-row
+    # spread the single-row-group scan before the heavy per-row
     # work (see queries/data.py:spread_scan; A/B-measured win)
     d = spread_scan(load(spark, sf, "documents"))
     sigs, pairs = md5_signatures_and_pairs(d, "doc_id", "text")
@@ -1842,58 +1842,6 @@ SELECT '{child}.{fk} -> {parent}.{pk}' AS fk_edge,
     return " UNION ALL ".join(parts) + " ORDER BY fk_edge"
 
 
-def _register() -> tuple[dict, dict]:
-    q = {
-        "sole_late_supplier": q_sole_late_supplier,
-        "pair_containment": q_pair_containment,
-        "zipf_fit_report": q_zipf_fit_report,
-        "tokenizer_fertility": q_tokenizer_fertility,
-        "ann_hubness_report_sampled": q_ann_hubness_report,
-        "weekly_stickiness": q_weekly_stickiness,
-        "bloom_semijoin_prune": q_bloom_semijoin_prune,
-        "cms_bigram_accuracy": q_cms_bigram_accuracy,
-        "weighted_reservoir_sample": q_weighted_reservoir_sample,
-        "dow_seasonality": q_dow_seasonality,
-        "ordered_funnel_3step": q_ordered_funnel_3step,
-        "brand_label_propagation": q_brand_label_propagation,
-        "reach_kmv_accuracy": q_reach_kmv_accuracy,
-        "audience_overlap_kmv": q_audience_overlap_kmv,
-        "top_supplier_revenue": q_top_supplier_revenue,
-        "nation_revenue_share": q_nation_revenue_share,
-        "doc_cleaning_report": q_doc_cleaning_report,
-        "holt_revenue_forecast": q_holt_revenue_forecast,
-        "pit_feature_join": q_pit_feature_join,
-        "ab_test_zscore": q_ab_test_zscore,
-        "daily_revenue_autocorr": q_daily_revenue_autocorr,
-        "referential_integrity_sweep": q_referential_integrity_sweep,
-    }
-    sql = {
-        "sole_late_supplier": SQL_SOLE_LATE_SUPPLIER,
-        "pair_containment": _sql_pair_containment(),
-        "zipf_fit_report": SQL_ZIPF_FIT_REPORT,
-        "tokenizer_fertility": _sql_tokenizer_fertility(),
-        "ann_hubness_report_sampled": SQL_ANN_HUBNESS_REPORT,
-        "weekly_stickiness": SQL_WEEKLY_STICKINESS,
-        "bloom_semijoin_prune": SQL_BLOOM_SEMIJOIN_PRUNE,
-        "cms_bigram_accuracy": SQL_CMS_BIGRAM_ACCURACY,
-        "weighted_reservoir_sample": SQL_WEIGHTED_RESERVOIR_SAMPLE,
-        "dow_seasonality": SQL_DOW_SEASONALITY,
-        "ordered_funnel_3step": SQL_ORDERED_FUNNEL_3STEP,
-        "brand_label_propagation": _sql_label_propagation(),
-        "reach_kmv_accuracy": SQL_REACH_KMV_ACCURACY,
-        "audience_overlap_kmv": SQL_AUDIENCE_OVERLAP_KMV,
-        "top_supplier_revenue": SQL_TOP_SUPPLIER_REVENUE,
-        "nation_revenue_share": SQL_NATION_REVENUE_SHARE,
-        "doc_cleaning_report": SQL_DOC_CLEANING_REPORT,
-        "holt_revenue_forecast": SQL_HOLT_REVENUE_FORECAST,
-        "pit_feature_join": SQL_PIT_FEATURE_JOIN,
-        "ab_test_zscore": SQL_AB_TEST_ZSCORE,
-        "daily_revenue_autocorr": SQL_DAILY_REVENUE_AUTOCORR,
-        "referential_integrity_sweep": _sql_ri_sweep(),
-    }
-    return q, sql
-
-
 # ---------------------------------------------------------------------
 # bloom-filter semi-join reduction (runtime filter, self-measuring)
 # ---------------------------------------------------------------------
@@ -2010,7 +1958,7 @@ def q_cms_bigram_accuracy(spark: SparkSession, sf: str) -> DataFrame:
     combine bounds the exchange (see ``operators/sketch.cms_cells``)."""
     from ..operators.sketch import cms_cells, cms_estimate
 
-    # r12: spread the single-row-group scan before the heavy per-row
+    # spread the single-row-group scan before the heavy per-row
     # work (see queries/data.py:spread_scan; A/B-measured win)
     d = spread_scan(load(spark, sf, "documents"))
     from ..functions.text import nonempty_tokens
@@ -2144,4 +2092,34 @@ LIMIT {_WRS_K}
 """
 
 
-SPARK_QUERIES, ORACLE_SQL = _register()
+QUERIES = (
+    ("sole_late_supplier", q_sole_late_supplier, SQL_SOLE_LATE_SUPPLIER),
+    ("pair_containment", q_pair_containment, _sql_pair_containment()),
+    ("zipf_fit_report", q_zipf_fit_report, SQL_ZIPF_FIT_REPORT),
+    ("tokenizer_fertility", q_tokenizer_fertility, _sql_tokenizer_fertility()),
+    ("ann_hubness_report_sampled", q_ann_hubness_report,
+     SQL_ANN_HUBNESS_REPORT),
+    ("weekly_stickiness", q_weekly_stickiness, SQL_WEEKLY_STICKINESS),
+    ("bloom_semijoin_prune", q_bloom_semijoin_prune, SQL_BLOOM_SEMIJOIN_PRUNE),
+    ("cms_bigram_accuracy", q_cms_bigram_accuracy, SQL_CMS_BIGRAM_ACCURACY),
+    ("weighted_reservoir_sample", q_weighted_reservoir_sample,
+     SQL_WEIGHTED_RESERVOIR_SAMPLE),
+    ("dow_seasonality", q_dow_seasonality, SQL_DOW_SEASONALITY),
+    ("ordered_funnel_3step", q_ordered_funnel_3step, SQL_ORDERED_FUNNEL_3STEP),
+    ("brand_label_propagation", q_brand_label_propagation,
+     _sql_label_propagation()),
+    ("reach_kmv_accuracy", q_reach_kmv_accuracy, SQL_REACH_KMV_ACCURACY),
+    ("audience_overlap_kmv", q_audience_overlap_kmv, SQL_AUDIENCE_OVERLAP_KMV),
+    ("top_supplier_revenue", q_top_supplier_revenue, SQL_TOP_SUPPLIER_REVENUE),
+    ("nation_revenue_share", q_nation_revenue_share, SQL_NATION_REVENUE_SHARE),
+    ("doc_cleaning_report", q_doc_cleaning_report, SQL_DOC_CLEANING_REPORT),
+    ("holt_revenue_forecast", q_holt_revenue_forecast,
+     SQL_HOLT_REVENUE_FORECAST),
+    ("pit_feature_join", q_pit_feature_join, SQL_PIT_FEATURE_JOIN),
+    ("ab_test_zscore", q_ab_test_zscore, SQL_AB_TEST_ZSCORE),
+    ("daily_revenue_autocorr", q_daily_revenue_autocorr,
+     SQL_DAILY_REVENUE_AUTOCORR),
+    ("referential_integrity_sweep", q_referential_integrity_sweep,
+     _sql_ri_sweep()),
+)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)

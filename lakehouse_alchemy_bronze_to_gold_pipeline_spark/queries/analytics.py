@@ -16,7 +16,7 @@ from ..functions.window import const_bucket
 from ..operators.rangejoin import band_join
 from ..sources.tables import local_table
 from .core import _dec_sum
-from .data import load
+from .data import load, registry
 
 
 # ------------------------------------------------------- percentiles
@@ -1068,7 +1068,7 @@ def _brand_edges(spark: SparkSession, sf: str) -> DataFrame:
     so every node has out-edges and dangling mass is structurally
     zero, which the SQL oracle relies on).
 
-    Execution shape (r12): the per-order brand set is collected ONCE
+    Execution shape: the per-order brand set is collected ONCE
     (``collect_set`` dedupes exactly like the former
     ``ob.distinct()``) and the ordered pairs are generated IN-ROW by
     array transforms — the ``brand_cooccurrence_top`` basket
@@ -1904,7 +1904,7 @@ def q_brand_triangles(spark: SparkSession, sf: str) -> DataFrame:
     permits by swapping the orientation key."""
     li = load(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     p = load(spark, sf, "part").select("p_partkey", "p_brand")
-    # r12: oriented edges via the in-basket pair generator
+    # oriented edges via the in-basket pair generator
     # (brand_cooccurrence_top idiom) instead of the ob self-join —
     # per order the sorted distinct brand set yields every b1 < b2
     # pair exactly once, so the DISTINCT edge set is identical while
@@ -2050,7 +2050,7 @@ def q_gap_fill_interpolate(spark: SparkSession, sf: str) -> DataFrame:
     hash is bit-identical in any engine; the filled value in currency
     units is num/(100*den)).  The earlier rounded-double formulation
     hit round-half boundaries that Spark and DuckDB resolve
-    differently (r5 driver: 77/60,125 cells off by 1 ulp).
+    differently (77 of 60,125 cells off by 1 ulp on the driver).
 
     Scale: the spine is |nations| x |days| (calendar-bounded, built
     by sequence+explode — no driver loop); observed revenue joins on
@@ -2264,7 +2264,7 @@ def q_join_size_estimate(spark: SparkSession, sf: str) -> DataFrame:
         return F.md5(F.col(col).cast("string").cast("binary")) < "10"
 
     p = 16.0 / 256.0
-    # r12: ONE action for all four cardinalities — the former four
+    # ONE action for all four cardinalities — the former four
     # sequential .count() calls paid four driver round-trips and ran
     # their scans serially; a union of tagged 1-row aggregates
     # computes the same four counts in a single job whose branches
@@ -2438,7 +2438,7 @@ def q_part_kcore_profile(spark: SparkSession, sf: str) -> DataFrame:
         )
         .select("o_orderkey")
     )
-    # r12 note: the _brand_edges in-basket generator was tried here
+    # the _brand_edges in-basket generator was tried here
     # and interleave-A/B-measured SLOWER (4.9 s vs 6.0 s at sf0.1) —
     # unlike the 25-node brand graph, the part-key pair relation is
     # dominated by its own high-cardinality dedup exchange, and the
@@ -2552,13 +2552,13 @@ def q_copurchase_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
         # >= 2 support floor cuts the anti-join's left side ~30x
         # while never touching the released top-25 at any driver sf
         # (minimum top-25 support measured 12/6/4 at
-        # sf0.001/0.01/0.1 — re-measured r11; sf0.1 IS the largest
+        # sf0.001/0.01/0.1; sf0.1 IS the largest
         # driver scale).  The margin is PINNED by
         # tests/test_plans.py::test_copurchase_support_floor_has_margin
         # so a data regeneration that erodes it fails loudly, and the
         # HAVING clause mirrors the floor in the oracle either way
-        # (oracle equality holds even at the floor; only cross-round
-        # stability of the released rows is at stake — r10 ADVICE).
+        # (oracle equality holds even at the floor; only the stability
+        # of the released rows across data generations is at stake).
         .filter(F.col("common_customers") >= 2)
     )
     edges = (
@@ -2624,7 +2624,7 @@ _WM_DAY_US = 86_400_000_000
 
 def q_watermark_late_events_fixed(spark: SparkSession, sf: str) -> DataFrame:
     """Structured Streaming LATE-DATA semantics certified at rest
-    (r11 verdict task 6, the decomposition-certification pattern):
+    (the decomposition-certification pattern):
     the events table replays as one micro-batch per ARRIVAL day —
     arrival = event time + a deterministic md5 jitter in
     [0, 6h), so a slice of every batch is late — through the exact
@@ -2767,93 +2767,64 @@ ORDER BY win_start_us
 """
 
 
-SPARK_QUERIES = {
-    "part_kcore_profile": q_part_kcore_profile,
-    "watermark_late_events_fixed": q_watermark_late_events_fixed,
-    "copurchase_link_prediction": q_copurchase_link_prediction,
-    "rolling_reach_hll": q_rolling_reach_hll,
-    "brand_random_walks": q_brand_random_walks,
-    "join_size_estimate": q_join_size_estimate,
-    "temporal_split_leakage": q_temporal_split_leakage,
-    "rolling_distinct_users": q_rolling_distinct_users,
-    "gap_fill_interpolate": q_gap_fill_interpolate,
-    "nation_revenue_trend": q_nation_revenue_trend,
-    "ewma_monthly_revenue": q_ewma_monthly_revenue,
-    "segment_spend_gini": q_segment_spend_gini,
-    "brand_triangles": q_brand_triangles,
-    "brand_supplier_hhi": q_brand_supplier_hhi,
-    "event_transition_matrix": q_event_transition_matrix,
-    "key_skew_profile": q_key_skew_profile,
-    "purchase_attribution": q_purchase_attribution,
-    "brand_pagerank": q_brand_pagerank,
-    "events_value_outliers": q_events_value_outliers,
-    "user_reach_sketch": q_user_reach_sketch,
-    "reach_hll_relational": q_reach_hll_relational,
-    "brand_cooccurrence_top": q_brand_cooccurrence_top,
-    "order_backlog_daily": q_order_backlog_daily,
-    "user_retention_cohorts": q_user_retention_cohorts,
-    "price_percentiles": q_price_percentiles,
-    "price_percentiles_approx": q_price_percentiles_approx,
-    "revenue_grouping_sets": q_revenue_grouping_sets,
-    "events_band_join": q_events_band_join,
-    "late_shipment_orders": q_late_shipment_orders,
-    "brand_small_quantity_revenue": q_brand_small_quantity_revenue,
-    "daily_activity": q_daily_activity,
-    "customer_recent_spend": q_customer_recent_spend,
-    "top_unshipped_orders": q_top_unshipped_orders,
-    "order_date_math": q_order_date_math,
-    "token_array_ops": q_token_array_ops,
-    "orders_profile": q_orders_profile,
-    "events_window_fn": q_events_window_fn,
-    "asia_nation_revenue": q_asia_nation_revenue,
-    "embedding_top_pairs": q_embedding_top_pairs,
-    "embedding_top_pairs_lsh": q_embedding_top_pairs_lsh,
-    "embedding_neardup_lsh": q_embedding_neardup_lsh,
-}
-
-ORACLE_SQL = {
-    "watermark_late_events_fixed": SQL_WATERMARK_LATE_EVENTS_FIXED,
-    "copurchase_link_prediction": SQL_COPURCHASE_LINK_PREDICTION,
-    "brand_random_walks": sql_brand_random_walks(),
-    "join_size_estimate": SQL_JOIN_SIZE_ESTIMATE,
-    "temporal_split_leakage": SQL_TEMPORAL_SPLIT_LEAKAGE,
-    "rolling_distinct_users": SQL_ROLLING_DISTINCT_USERS,
-    "gap_fill_interpolate": SQL_GAP_FILL_INTERPOLATE,
-    "nation_revenue_trend": SQL_NATION_REVENUE_TREND,
-    "ewma_monthly_revenue": SQL_EWMA_MONTHLY_REVENUE,
-    "segment_spend_gini": SQL_SEGMENT_SPEND_GINI,
-    "brand_triangles": SQL_BRAND_TRIANGLES,
-    "brand_supplier_hhi": SQL_BRAND_SUPPLIER_HHI,
-    "event_transition_matrix": SQL_EVENT_TRANSITION_MATRIX,
-    "key_skew_profile": SQL_KEY_SKEW_PROFILE,
-    "purchase_attribution": SQL_PURCHASE_ATTRIBUTION,
-    "brand_pagerank": sql_brand_pagerank(),
-    "events_value_outliers": SQL_EVENTS_VALUE_OUTLIERS,
-    # user_reach_sketch: intentionally no oracle (Datasketches HLL
-    # estimates are sketch-implementation-defined) -> rows-only +
-    # pytest bounds; reach_hll_relational is its oracle-backed
-    # register-level certification twin (md5 HLL, value-for-value)
-    "reach_hll_relational": SQL_REACH_HLL_RELATIONAL,
-    "brand_cooccurrence_top": SQL_BRAND_COOCCURRENCE_TOP,
-    "order_backlog_daily": SQL_ORDER_BACKLOG_DAILY,
-    "user_retention_cohorts": SQL_USER_RETENTION_COHORTS,
-    "price_percentiles": SQL_PRICE_PERCENTILES,
-    "price_percentiles_approx": SQL_PRICE_PERCENTILES_APPROX,
-    "revenue_grouping_sets": SQL_REVENUE_GROUPING_SETS,
-    "events_band_join": SQL_EVENTS_BAND_JOIN,
-    "late_shipment_orders": SQL_LATE_SHIPMENT_ORDERS,
-    "brand_small_quantity_revenue": SQL_BRAND_SMALL_QUANTITY_REVENUE,
-    "daily_activity": SQL_DAILY_ACTIVITY,
-    "customer_recent_spend": SQL_CUSTOMER_RECENT_SPEND,
-    "top_unshipped_orders": SQL_TOP_UNSHIPPED_ORDERS,
-    "order_date_math": SQL_ORDER_DATE_MATH,
-    "token_array_ops": SQL_TOKEN_ARRAY_OPS,
-    "orders_profile": SQL_ORDERS_PROFILE,
-    "events_window_fn": SQL_EVENTS_WINDOW_FN,
-    "asia_nation_revenue": SQL_ASIA_NATION_REVENUE,
-    "embedding_top_pairs": SQL_EMBEDDING_TOP_PAIRS,
-    "embedding_top_pairs_lsh": sql_embedding_top_pairs_lsh(),
-    "embedding_neardup_lsh": sql_embedding_neardup_lsh(),
-    "part_kcore_profile": sql_part_kcore_profile(),
-    "rolling_reach_hll": SQL_ROLLING_REACH_HLL,
-}
+QUERIES = (
+    ("part_kcore_profile", q_part_kcore_profile, sql_part_kcore_profile()),
+    ("watermark_late_events_fixed", q_watermark_late_events_fixed,
+     SQL_WATERMARK_LATE_EVENTS_FIXED),
+    ("copurchase_link_prediction", q_copurchase_link_prediction,
+     SQL_COPURCHASE_LINK_PREDICTION),
+    ("rolling_reach_hll", q_rolling_reach_hll, SQL_ROLLING_REACH_HLL),
+    ("brand_random_walks", q_brand_random_walks, sql_brand_random_walks()),
+    ("join_size_estimate", q_join_size_estimate, SQL_JOIN_SIZE_ESTIMATE),
+    ("temporal_split_leakage", q_temporal_split_leakage,
+     SQL_TEMPORAL_SPLIT_LEAKAGE),
+    ("rolling_distinct_users", q_rolling_distinct_users,
+     SQL_ROLLING_DISTINCT_USERS),
+    ("gap_fill_interpolate", q_gap_fill_interpolate, SQL_GAP_FILL_INTERPOLATE),
+    ("nation_revenue_trend", q_nation_revenue_trend, SQL_NATION_REVENUE_TREND),
+    ("ewma_monthly_revenue", q_ewma_monthly_revenue, SQL_EWMA_MONTHLY_REVENUE),
+    ("segment_spend_gini", q_segment_spend_gini, SQL_SEGMENT_SPEND_GINI),
+    ("brand_triangles", q_brand_triangles, SQL_BRAND_TRIANGLES),
+    ("brand_supplier_hhi", q_brand_supplier_hhi, SQL_BRAND_SUPPLIER_HHI),
+    ("event_transition_matrix", q_event_transition_matrix,
+     SQL_EVENT_TRANSITION_MATRIX),
+    ("key_skew_profile", q_key_skew_profile, SQL_KEY_SKEW_PROFILE),
+    ("purchase_attribution", q_purchase_attribution, SQL_PURCHASE_ATTRIBUTION),
+    ("brand_pagerank", q_brand_pagerank, sql_brand_pagerank()),
+    ("events_value_outliers", q_events_value_outliers,
+     SQL_EVENTS_VALUE_OUTLIERS),
+    # no oracle: Datasketches HLL estimates are sketch-implementation-
+    # defined -> rows-only + pytest bounds; reach_hll_relational is its
+    # oracle-backed register-level twin (md5 HLL, value-for-value)
+    ("user_reach_sketch", q_user_reach_sketch, None),
+    ("reach_hll_relational", q_reach_hll_relational, SQL_REACH_HLL_RELATIONAL),
+    ("brand_cooccurrence_top", q_brand_cooccurrence_top,
+     SQL_BRAND_COOCCURRENCE_TOP),
+    ("order_backlog_daily", q_order_backlog_daily, SQL_ORDER_BACKLOG_DAILY),
+    ("user_retention_cohorts", q_user_retention_cohorts,
+     SQL_USER_RETENTION_COHORTS),
+    ("price_percentiles", q_price_percentiles, SQL_PRICE_PERCENTILES),
+    ("price_percentiles_approx", q_price_percentiles_approx,
+     SQL_PRICE_PERCENTILES_APPROX),
+    ("revenue_grouping_sets", q_revenue_grouping_sets,
+     SQL_REVENUE_GROUPING_SETS),
+    ("events_band_join", q_events_band_join, SQL_EVENTS_BAND_JOIN),
+    ("late_shipment_orders", q_late_shipment_orders, SQL_LATE_SHIPMENT_ORDERS),
+    ("brand_small_quantity_revenue", q_brand_small_quantity_revenue,
+     SQL_BRAND_SMALL_QUANTITY_REVENUE),
+    ("daily_activity", q_daily_activity, SQL_DAILY_ACTIVITY),
+    ("customer_recent_spend", q_customer_recent_spend,
+     SQL_CUSTOMER_RECENT_SPEND),
+    ("top_unshipped_orders", q_top_unshipped_orders, SQL_TOP_UNSHIPPED_ORDERS),
+    ("order_date_math", q_order_date_math, SQL_ORDER_DATE_MATH),
+    ("token_array_ops", q_token_array_ops, SQL_TOKEN_ARRAY_OPS),
+    ("orders_profile", q_orders_profile, SQL_ORDERS_PROFILE),
+    ("events_window_fn", q_events_window_fn, SQL_EVENTS_WINDOW_FN),
+    ("asia_nation_revenue", q_asia_nation_revenue, SQL_ASIA_NATION_REVENUE),
+    ("embedding_top_pairs", q_embedding_top_pairs, SQL_EMBEDDING_TOP_PAIRS),
+    ("embedding_top_pairs_lsh", q_embedding_top_pairs_lsh,
+     sql_embedding_top_pairs_lsh()),
+    ("embedding_neardup_lsh", q_embedding_neardup_lsh,
+     sql_embedding_neardup_lsh()),
+)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)

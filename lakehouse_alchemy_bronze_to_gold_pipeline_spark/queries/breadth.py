@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .core import _dec_sum
-from .data import load
+from .data import load, registry
 
 
 # ------------------------------------- ranking / navigation windows
@@ -1079,48 +1079,35 @@ ORDER BY key_digit
 """
 
 
-SPARK_QUERIES = {
-    "conversion_latency": q_conversion_latency,
-    "rfm_segmentation": q_rfm_segmentation,
-    "quantile_binning": q_quantile_binning,
-    "snapshot_diff_orders": q_snapshot_diff_orders,
-    "customer_entity_resolution": q_customer_entity_resolution,
-    "scd2_customer_history": q_scd2_customer_history,
-    "order_rank_functions": q_order_rank_functions,
-    "price_histogram": q_price_histogram,
-    "lineitem_moments": q_lineitem_moments,
-    "user_activity_streaks": q_user_activity_streaks,
-    "lineitem_hash_sample": q_lineitem_hash_sample,
-    "orders_stratified_sample": q_orders_stratified_sample,
-    "customer_string_funcs": q_customer_string_funcs,
-    "signup_purchase_funnel": q_signup_purchase_funnel,
-    "event_date_spine": q_event_date_spine,
-    "order_metrics_melt": q_order_metrics_melt,
-    "important_part_value": q_important_part_value,
-    "customer_order_distribution": q_customer_order_distribution,
-    "supplier_part_breadth": q_supplier_part_breadth,
-    "dormant_wealth_report": q_dormant_wealth_report,
-}
-
-ORACLE_SQL = {
-    "conversion_latency": SQL_CONVERSION_LATENCY,
-    "rfm_segmentation": SQL_RFM_SEGMENTATION,
-    "quantile_binning": SQL_QUANTILE_BINNING,
-    "snapshot_diff_orders": SQL_SNAPSHOT_DIFF_ORDERS,
-    "customer_entity_resolution": SQL_CUSTOMER_ENTITY_RESOLUTION,
-    "scd2_customer_history": SQL_SCD2_CUSTOMER_HISTORY,
-    "order_rank_functions": SQL_ORDER_RANK_FUNCTIONS,
-    "price_histogram": SQL_PRICE_HISTOGRAM,
-    "lineitem_moments": SQL_LINEITEM_MOMENTS,
-    "user_activity_streaks": SQL_USER_ACTIVITY_STREAKS,
-    "lineitem_hash_sample": SQL_LINEITEM_HASH_SAMPLE,
-    "orders_stratified_sample": SQL_ORDERS_STRATIFIED_SAMPLE,
-    "customer_string_funcs": SQL_CUSTOMER_STRING_FUNCS,
-    "signup_purchase_funnel": SQL_SIGNUP_PURCHASE_FUNNEL,
-    "event_date_spine": SQL_EVENT_DATE_SPINE,
-    "order_metrics_melt": SQL_ORDER_METRICS_MELT,
-    "important_part_value": SQL_IMPORTANT_PART_VALUE,
-    "customer_order_distribution": SQL_CUSTOMER_ORDER_DISTRIBUTION,
-    "supplier_part_breadth": SQL_SUPPLIER_PART_BREADTH,
-    "dormant_wealth_report": SQL_DORMANT_WEALTH_REPORT,
-}
+QUERIES = (
+    ("conversion_latency", q_conversion_latency, SQL_CONVERSION_LATENCY),
+    ("rfm_segmentation", q_rfm_segmentation, SQL_RFM_SEGMENTATION),
+    ("quantile_binning", q_quantile_binning, SQL_QUANTILE_BINNING),
+    ("snapshot_diff_orders", q_snapshot_diff_orders, SQL_SNAPSHOT_DIFF_ORDERS),
+    ("customer_entity_resolution", q_customer_entity_resolution,
+     SQL_CUSTOMER_ENTITY_RESOLUTION),
+    ("scd2_customer_history", q_scd2_customer_history,
+     SQL_SCD2_CUSTOMER_HISTORY),
+    ("order_rank_functions", q_order_rank_functions, SQL_ORDER_RANK_FUNCTIONS),
+    ("price_histogram", q_price_histogram, SQL_PRICE_HISTOGRAM),
+    ("lineitem_moments", q_lineitem_moments, SQL_LINEITEM_MOMENTS),
+    ("user_activity_streaks", q_user_activity_streaks,
+     SQL_USER_ACTIVITY_STREAKS),
+    ("lineitem_hash_sample", q_lineitem_hash_sample, SQL_LINEITEM_HASH_SAMPLE),
+    ("orders_stratified_sample", q_orders_stratified_sample,
+     SQL_ORDERS_STRATIFIED_SAMPLE),
+    ("customer_string_funcs", q_customer_string_funcs,
+     SQL_CUSTOMER_STRING_FUNCS),
+    ("signup_purchase_funnel", q_signup_purchase_funnel,
+     SQL_SIGNUP_PURCHASE_FUNNEL),
+    ("event_date_spine", q_event_date_spine, SQL_EVENT_DATE_SPINE),
+    ("order_metrics_melt", q_order_metrics_melt, SQL_ORDER_METRICS_MELT),
+    ("important_part_value", q_important_part_value, SQL_IMPORTANT_PART_VALUE),
+    ("customer_order_distribution", q_customer_order_distribution,
+     SQL_CUSTOMER_ORDER_DISTRIBUTION),
+    ("supplier_part_breadth", q_supplier_part_breadth,
+     SQL_SUPPLIER_PART_BREADTH),
+    ("dormant_wealth_report", q_dormant_wealth_report,
+     SQL_DORMANT_WEALTH_REPORT),
+)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)

@@ -27,7 +27,7 @@ from ..operators.quality import (
 )
 from ..operators.sessionize import sessionize, session_stats
 from ..operators.star import DimSpec, build_fact
-from .data import load
+from .data import load, registry
 
 
 def _dec_sum(col, scale: int = 2, out: str | None = None):
@@ -682,49 +682,6 @@ SELECT DISTINCT o_custkey AS customer_id FROM orders WHERE o_totalprice > 400000
 """
 
 
-SPARK_QUERIES = {
-    "fact_sales": q_fact_sales,
-    "dim_customer": q_dim_customer,
-    "dim_part": q_dim_part,
-    "dq_violation_counts": q_dq_violation_counts,
-    "dq_failing_rows": q_dq_failing_rows,
-    "orphan_orders": q_orphan_orders,
-    "orders_with_big_items": q_orders_with_big_items,
-    "pricing_summary": q_pricing_summary,
-    "top_customers_per_segment": q_top_customers_per_segment,
-    "revenue_rollup": q_revenue_rollup,
-    "events_hourly": q_events_hourly,
-    "events_json_kv": q_events_json_kv,
-    "props_variant_stats": q_props_variant_stats,
-    "pipe_syntax_flag_stats": q_pipe_syntax_flag_stats,
-    "sessionize_events": q_sessionize_events,
-    "session_conversion_daily": q_session_conversion_daily,
-    "dedup_events_keep_latest": q_dedup_events_keep_latest,
-    "set_ops_customers": q_set_ops_customers,
-}
-
-ORACLE_SQL = {
-    "fact_sales": SQL_FACT_SALES,
-    "dim_customer": SQL_DIM_CUSTOMER,
-    "dim_part": SQL_DIM_PART,
-    "dq_violation_counts": SQL_DQ_VIOLATION_COUNTS,
-    "dq_failing_rows": SQL_DQ_FAILING_ROWS,
-    "orphan_orders": SQL_ORPHAN_ORDERS,
-    "orders_with_big_items": SQL_ORDERS_WITH_BIG_ITEMS,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "top_customers_per_segment": SQL_TOP_CUSTOMERS_PER_SEGMENT,
-    "revenue_rollup": SQL_REVENUE_ROLLUP,
-    "events_hourly": SQL_EVENTS_HOURLY,
-    "events_json_kv": SQL_EVENTS_JSON_KV,
-    "props_variant_stats": SQL_PROPS_VARIANT_STATS,
-    "pipe_syntax_flag_stats": SQL_PIPE_SYNTAX_FLAG_STATS,
-    "sessionize_events": SQL_SESSIONIZE_EVENTS,
-    "session_conversion_daily": SQL_SESSION_CONVERSION_DAILY,
-    "dedup_events_keep_latest": SQL_DEDUP_EVENTS_KEEP_LATEST,
-    "set_ops_customers": SQL_SET_OPS_CUSTOMERS,
-}
-
-
 # ----------------------------------------------------- batch 2: windows,
 # multi-dim aggs, as-of join
 
@@ -932,24 +889,37 @@ QUALIFY row_number() OVER (PARTITION BY order_key
 """
 
 
-SPARK_QUERIES.update(
-    {
-        "customer_running_spend": q_customer_running_spend,
-        "order_priority_cube": q_order_priority_cube,
-        "returnflag_pivot": q_returnflag_pivot,
-        "segment_distinct_customers": q_segment_distinct_customers,
-        "asof_latest_order": q_asof_latest_order,
-        "scd1_upsert": q_scd1_upsert,
-    }
+QUERIES = (
+    ("fact_sales", q_fact_sales, SQL_FACT_SALES),
+    ("dim_customer", q_dim_customer, SQL_DIM_CUSTOMER),
+    ("dim_part", q_dim_part, SQL_DIM_PART),
+    ("dq_violation_counts", q_dq_violation_counts, SQL_DQ_VIOLATION_COUNTS),
+    ("dq_failing_rows", q_dq_failing_rows, SQL_DQ_FAILING_ROWS),
+    ("orphan_orders", q_orphan_orders, SQL_ORPHAN_ORDERS),
+    ("orders_with_big_items", q_orders_with_big_items,
+     SQL_ORDERS_WITH_BIG_ITEMS),
+    ("pricing_summary", q_pricing_summary, SQL_PRICING_SUMMARY),
+    ("top_customers_per_segment", q_top_customers_per_segment,
+     SQL_TOP_CUSTOMERS_PER_SEGMENT),
+    ("revenue_rollup", q_revenue_rollup, SQL_REVENUE_ROLLUP),
+    ("events_hourly", q_events_hourly, SQL_EVENTS_HOURLY),
+    ("events_json_kv", q_events_json_kv, SQL_EVENTS_JSON_KV),
+    ("props_variant_stats", q_props_variant_stats, SQL_PROPS_VARIANT_STATS),
+    ("pipe_syntax_flag_stats", q_pipe_syntax_flag_stats,
+     SQL_PIPE_SYNTAX_FLAG_STATS),
+    ("sessionize_events", q_sessionize_events, SQL_SESSIONIZE_EVENTS),
+    ("session_conversion_daily", q_session_conversion_daily,
+     SQL_SESSION_CONVERSION_DAILY),
+    ("dedup_events_keep_latest", q_dedup_events_keep_latest,
+     SQL_DEDUP_EVENTS_KEEP_LATEST),
+    ("set_ops_customers", q_set_ops_customers, SQL_SET_OPS_CUSTOMERS),
+    ("customer_running_spend", q_customer_running_spend,
+     SQL_CUSTOMER_RUNNING_SPEND),
+    ("order_priority_cube", q_order_priority_cube, SQL_ORDER_PRIORITY_CUBE),
+    ("returnflag_pivot", q_returnflag_pivot, SQL_RETURNFLAG_PIVOT),
+    ("segment_distinct_customers", q_segment_distinct_customers,
+     SQL_SEGMENT_DISTINCT_CUSTOMERS),
+    ("asof_latest_order", q_asof_latest_order, SQL_ASOF_LATEST_ORDER),
+    ("scd1_upsert", q_scd1_upsert, SQL_SCD1_UPSERT),
 )
-
-ORACLE_SQL.update(
-    {
-        "customer_running_spend": SQL_CUSTOMER_RUNNING_SPEND,
-        "order_priority_cube": SQL_ORDER_PRIORITY_CUBE,
-        "returnflag_pivot": SQL_RETURNFLAG_PIVOT,
-        "segment_distinct_customers": SQL_SEGMENT_DISTINCT_CUSTOMERS,
-        "asof_latest_order": SQL_ASOF_LATEST_ORDER,
-        "scd1_upsert": SQL_SCD1_UPSERT,
-    }
-)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)

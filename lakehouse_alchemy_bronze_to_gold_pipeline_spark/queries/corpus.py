@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-from .data import load
+from .data import load, registry
 
 #: context window (tokens) for sequence packing
 PACK_CTX = 512
@@ -811,24 +811,18 @@ GROUP BY lang, source
 """
 
 
-SPARK_QUERIES = {
-    "corpus_train_val_split": q_corpus_train_val_split,
-    "doc_weighted_sample": q_doc_weighted_sample,
-    "doc_pack_chunks": q_doc_pack_chunks,
-    "domain_mix_sample": q_domain_mix_sample,
-    "doc_repetition_filter": q_doc_repetition_filter,
-    "filter_attrition_report": q_filter_attrition_report,
-    "embedding_dim_stats": q_embedding_dim_stats,
-    "preference_pair_dedup": q_preference_pair_dedup,
-}
-
-ORACLE_SQL = {
-    "corpus_train_val_split": SQL_CORPUS_TRAIN_VAL_SPLIT,
-    "doc_weighted_sample": SQL_DOC_WEIGHTED_SAMPLE,
-    "doc_pack_chunks": SQL_DOC_PACK_CHUNKS,
-    "domain_mix_sample": SQL_DOMAIN_MIX_SAMPLE,
-    "doc_repetition_filter": SQL_DOC_REPETITION_FILTER,
-    "filter_attrition_report": SQL_FILTER_ATTRITION_REPORT,
-    "embedding_dim_stats": SQL_EMBEDDING_DIM_STATS,
-    "preference_pair_dedup": SQL_PREFERENCE_PAIR_DEDUP,
-}
+QUERIES = (
+    ("corpus_train_val_split", q_corpus_train_val_split,
+     SQL_CORPUS_TRAIN_VAL_SPLIT),
+    ("doc_weighted_sample", q_doc_weighted_sample, SQL_DOC_WEIGHTED_SAMPLE),
+    ("doc_pack_chunks", q_doc_pack_chunks, SQL_DOC_PACK_CHUNKS),
+    ("domain_mix_sample", q_domain_mix_sample, SQL_DOMAIN_MIX_SAMPLE),
+    ("doc_repetition_filter", q_doc_repetition_filter,
+     SQL_DOC_REPETITION_FILTER),
+    ("filter_attrition_report", q_filter_attrition_report,
+     SQL_FILTER_ATTRITION_REPORT),
+    ("embedding_dim_stats", q_embedding_dim_stats, SQL_EMBEDDING_DIM_STATS),
+    ("preference_pair_dedup", q_preference_pair_dedup,
+     SQL_PREFERENCE_PAIR_DEDUP),
+)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)

@@ -1,4 +1,5 @@
-"""Test-table loaders for the driver's synthetic parquet tables."""
+"""Test-table loaders for the driver's synthetic parquet tables, and
+the registration helper every query module ends with."""
 
 from __future__ import annotations
 
@@ -69,7 +70,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 def spread_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition a scan to the session's default
-    parallelism BEFORE a CPU-heavy per-row projection (r12, guide
+    parallelism BEFORE a CPU-heavy per-row projection (guide
     §2.5 "input skew": the bench tables ship as ONE parquet row group
     each, so every scan is a single task and any tokenise/md5/explode
     work fused onto it runs on one core of N).  The exchange moves
@@ -79,7 +80,7 @@ def spread_scan(df: DataFrame) -> DataFrame:
     measured a win (see OPTIMIZATION_r12.md), never in ``load``
     itself.
 
-    r13 (VERDICT item 8): gated on the plan's OBSERVED scan
+    Gated on the plan's OBSERVED scan
     parallelism — at 100 TB a many-file table already scans wide and
     the extra full-data round-robin exchange of raw text is pure
     cost.  When the input resolves to >= defaultParallelism
@@ -137,3 +138,13 @@ def _load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             )
         )
     return _layout(spark.read.parquet(path))
+
+
+def registry(rows) -> tuple[dict, dict]:
+    """A module's ``SPARK_QUERIES`` and ``ORACLE_SQL`` from its one
+    table of ``(name, builder, oracle SQL or None)`` rows; the row
+    order is the registry order."""
+    return (
+        {name: build for name, build, _ in rows},
+        {name: sql for name, _, sql in rows if sql is not None},
+    )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .core import _dec_sum
-from .data import load
+from .data import load, registry
 
 
 def _ntz(lit: str) -> F.Column:
@@ -708,28 +708,23 @@ ORDER BY n_parts DESC, supplier
 """
 
 
-SPARK_QUERIES = {
-    "min_cost_supplier": q_min_cost_supplier,
-    "nation_volume_shipping": q_nation_volume_shipping,
-    "nation_market_share": q_nation_market_share,
-    "product_profit_by_nation": q_product_profit_by_nation,
-    "returned_revenue_customers": q_returned_revenue_customers,
-    "shipping_delay_buckets": q_shipping_delay_buckets,
-    "promo_revenue_share": q_promo_revenue_share,
-    "large_order_customers": q_large_order_customers,
-    "bracket_disjunction_revenue": q_bracket_disjunction_revenue,
-    "excess_share_suppliers": q_excess_share_suppliers,
-}
-
-ORACLE_SQL = {
-    "min_cost_supplier": SQL_MIN_COST_SUPPLIER,
-    "nation_volume_shipping": SQL_NATION_VOLUME_SHIPPING,
-    "nation_market_share": SQL_NATION_MARKET_SHARE,
-    "product_profit_by_nation": SQL_PRODUCT_PROFIT_BY_NATION,
-    "returned_revenue_customers": SQL_RETURNED_REVENUE_CUSTOMERS,
-    "shipping_delay_buckets": SQL_SHIPPING_DELAY_BUCKETS,
-    "promo_revenue_share": SQL_PROMO_REVENUE_SHARE,
-    "large_order_customers": SQL_LARGE_ORDER_CUSTOMERS,
-    "bracket_disjunction_revenue": SQL_BRACKET_DISJUNCTION_REVENUE,
-    "excess_share_suppliers": SQL_EXCESS_SHARE_SUPPLIERS,
-}
+QUERIES = (
+    ("min_cost_supplier", q_min_cost_supplier, SQL_MIN_COST_SUPPLIER),
+    ("nation_volume_shipping", q_nation_volume_shipping,
+     SQL_NATION_VOLUME_SHIPPING),
+    ("nation_market_share", q_nation_market_share, SQL_NATION_MARKET_SHARE),
+    ("product_profit_by_nation", q_product_profit_by_nation,
+     SQL_PRODUCT_PROFIT_BY_NATION),
+    ("returned_revenue_customers", q_returned_revenue_customers,
+     SQL_RETURNED_REVENUE_CUSTOMERS),
+    ("shipping_delay_buckets", q_shipping_delay_buckets,
+     SQL_SHIPPING_DELAY_BUCKETS),
+    ("promo_revenue_share", q_promo_revenue_share, SQL_PROMO_REVENUE_SHARE),
+    ("large_order_customers", q_large_order_customers,
+     SQL_LARGE_ORDER_CUSTOMERS),
+    ("bracket_disjunction_revenue", q_bracket_disjunction_revenue,
+     SQL_BRACKET_DISJUNCTION_REVENUE),
+    ("excess_share_suppliers", q_excess_share_suppliers,
+     SQL_EXCESS_SHARE_SUPPLIERS),
+)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.window import const_bucket
 from ..operators.sketch import qdigest_compress, qdigest_intervals
 from ..sources.tables import local_table
-from .data import load
+from .data import load, registry
 
 _QD_BITS = 14
 _QD_U = 1 << _QD_BITS
@@ -450,12 +450,10 @@ ORDER BY rf, q_pct
 """
 
 
-SPARK_QUERIES = {
-    "quantile_digest_accuracy": q_quantile_digest_accuracy,
-    "quantile_digest_grouped": q_quantile_digest_grouped,
-}
-
-ORACLE_SQL = {
-    "quantile_digest_accuracy": SQL_QUANTILE_DIGEST_ACCURACY,
-    "quantile_digest_grouped": SQL_QUANTILE_DIGEST_GROUPED,
-}
+QUERIES = (
+    ("quantile_digest_accuracy", q_quantile_digest_accuracy,
+     SQL_QUANTILE_DIGEST_ACCURACY),
+    ("quantile_digest_grouped", q_quantile_digest_grouped,
+     SQL_QUANTILE_DIGEST_GROUPED),
+)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)

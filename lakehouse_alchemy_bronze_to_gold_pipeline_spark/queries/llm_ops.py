@@ -24,7 +24,7 @@ from ..operators.multimodal import attach_binary_payload, extract_features
 from ..operators.simhash import simhash
 from ..operators.similarity import knn_join, lsh_topk, topk_bruteforce
 from ..sources.tables import local_table
-from .data import load, spread_scan
+from .data import load, registry, spread_scan
 
 #: fixed query text for n-gram similarity scoring
 QUERY_TEXT = "spark query join filter group data"
@@ -460,9 +460,9 @@ def q_minhash_accuracy(spark: SparkSession, sf: str) -> DataFrame:
     predicate are engine-agnostic."""
     from ..operators.minhash import minhash_accuracy_md5
 
-    # r12: spread the single-row-group scan before the heavy per-row
-    # work (see queries/data.py:spread_scan; A/B-measured win).
-    # r13 (r12 ADVICE): filter FIRST — spreading before the ~50% md5
+    # spread the single-row-group scan before the heavy per-row
+    # work (see queries/data.py:spread_scan; A/B-measured win), but
+    # filter FIRST — spreading before the ~50% md5
     # sample predicate exchanged the full relation and then discarded
     # half of it; the filter is row-local, so the order is
     # value-identical and the exchange moves half the bytes.
@@ -481,8 +481,8 @@ _INC_MAX_BUCKET = 200
 
 
 def q_incremental_neardup_fixed(spark: SparkSession, sf: str) -> DataFrame:
-    """The STREAMING near-dup gate certified at rest (r11 verdict
-    task 2, the ``ivf_stream_topk_fixed`` decomposition pattern): the
+    """The STREAMING near-dup gate certified at rest (the
+    ``ivf_stream_topk_fixed`` decomposition pattern): the
     corpus arrives as two doc_id-parity batches, each pushed through
     the PURE micro-batch gate
     ``streaming.incremental_dedup.gate_batch_sigs`` — the exact
@@ -879,7 +879,7 @@ def q_ivf_stream_topk_fixed(spark: SparkSession, sf: str) -> DataFrame:
     /checkpoint/replay-guard machinery around the same two stages is
     pinned by tests/test_ivf_stream.py.
 
-    r13 (r12-VERDICT item 6): the assign stage runs ONCE over the
+    The assign stage runs ONCE over the
     full corpus instead of once per batch.  ``ivf_assign`` is a
     row-local projection and the two xxhash parity batches partition
     the corpus exactly, so ``assign(b1) UNION assign(b2)`` and
@@ -1334,7 +1334,7 @@ def _doc_terms(spark: SparkSession, sf: str):
     persist, Spark's lazy evaluation re-scans and re-tokenizes the
     corpus once per consumer, tripling the heaviest pass (verified in
     tests/test_plans.py: exactly one parquet scan of documents)."""
-    # r12: spread the single-row-group scan before the heavy per-row
+    # spread the single-row-group scan before the heavy per-row
     # work (see queries/data.py:spread_scan; A/B-measured win)
     d = spread_scan(load(spark, sf, "documents"))
     toks = d.select(
@@ -1950,7 +1950,7 @@ def q_crossdoc_span_coverage(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_plans.py).  Then ONE groupBy over the gram dimension
     and one join back — the TF-IDF two-shuffle shape, corpus-sized
     dimensions never broadcast or collected."""
-    # r12: spread the single-row-group scan before the heavy per-row
+    # spread the single-row-group scan before the heavy per-row
     # work (see queries/data.py:spread_scan; A/B-measured win)
     d = spread_scan(load(spark, sf, "documents"))
     g = (
@@ -2120,7 +2120,7 @@ def q_fd_whitening_handoff(spark: SparkSession, sf: str) -> DataFrame:
     )
     b1 = feats.filter(F.xxhash64("vec_id") % 2 == 0)
     b2 = feats.filter(F.xxhash64("vec_id") % 2 != 0)
-    # r12: ONE collect for both batches' partials — union preserves
+    # ONE collect for both batches' partials — union preserves
     # branch partition order, so the row list (and therefore the
     # fd_merge fold order and every float downstream) is exactly the
     # former two-collect concatenation, for one driver round-trip
@@ -2189,28 +2189,19 @@ def q_fd_whitening_handoff(spark: SparkSession, sf: str) -> DataFrame:
     return local_table(spark, rows, schema)
 
 
-def q_embedding_covariance_stats(spark: SparkSession, sf: str) -> DataFrame:
-    """Covariance structure of the embedding space — the whitening /
-    PCA-readiness diagnostic (high off-diagonal mass means dimensions
-    are correlated and a whitening transform would help downstream
-    ANN and clustering).  Computes the full d×d population covariance
-    matrix distributively, then reduces it to one summary row: total
-    variance (trace), Frobenius norm, and off-diagonal concentration.
+def _covariance_readout(dims: DataFrame) -> DataFrame:
+    """Covariance structure of a ``(vec_id, i, x)`` relation (one row
+    per vector component, ``x`` double), reduced to one summary row:
+    total variance (trace), Frobenius norm, and off-diagonal
+    concentration.
 
-    Scale: one posexplode to the (vec_id, i, x) relation (n·d rows),
-    persisted; the pair sums come from a SELF-JOIN co-partitioned on
-    vec_id — ONE shuffle feeds both sides — and the (i, j) groupBy
-    partial-aggregates map-side, so the exchange after the join
-    carries at most |partitions|·d² summary rows, independent of n.
-    Per-dimension means broadcast (d rows).  Nothing is collected."""
-    e = load(spark, sf, "embeddings")
-    dims = (
-        e.select(
-            "vec_id", F.posexplode("embedding").alias("i", "x")
-        )
-        .withColumn("x", F.col("x").cast("double"))
-        .persist()
-    )
+    Scale: ``dims`` is persisted; the pair sums come from a SELF-JOIN
+    co-partitioned on vec_id — ONE shuffle feeds both sides — and the
+    (i, j) groupBy partial-aggregates map-side, so the exchange after
+    the join carries at most |partitions|·d² summary rows,
+    independent of n.  Per-dimension means broadcast (d rows).
+    Nothing is collected."""
+    dims = dims.persist()
     means = dims.groupBy("i").agg(
         F.avg("x").alias("mean_i"), F.count("*").alias("n")
     )
@@ -2242,13 +2233,28 @@ def q_embedding_covariance_stats(spark: SparkSession, sf: str) -> DataFrame:
         F.broadcast(means.agg(F.max("n").cast("bigint").alias("n_vectors")))
     ).agg(
         F.first("n_vectors").alias("n_vectors"),
-        (F.countDistinct("i")).cast("bigint").alias("dims"),
+        F.countDistinct("i").cast("bigint").alias("dims"),
         F.round(F.sum(F.when(F.col("i") == F.col("j"), F.col("c"))), 6)
         .alias("trace"),
         F.round(F.sqrt(F.sum(F.col("c") * F.col("c"))), 6)
         .alias("frobenius"),
         F.round(F.max(offdiag), 6).alias("max_abs_offdiag"),
         F.round(F.avg(offdiag), 6).alias("avg_abs_offdiag"),
+    )
+
+
+def q_embedding_covariance_stats(spark: SparkSession, sf: str) -> DataFrame:
+    """Covariance structure of the embedding space — the whitening /
+    PCA-readiness diagnostic (high off-diagonal mass means dimensions
+    are correlated and a whitening transform would help downstream
+    ANN and clustering): the full d×d population covariance matrix,
+    computed distributively over one posexplode to the (vec_id, i, x)
+    relation (n·d rows), reduced by :func:`_covariance_readout`."""
+    e = load(spark, sf, "embeddings")
+    return _covariance_readout(
+        e.select(
+            "vec_id", F.posexplode("embedding").alias("i", "x")
+        ).withColumn("x", F.col("x").cast("double"))
     )
 
 
@@ -2281,20 +2287,13 @@ FROM cov
 """
 
 
-def q_embedding_kmeans_profile(spark: SparkSession, sf: str) -> DataFrame:
-    """Corpus cartography via full-data spherical k-means
-    (``operators.kmeans``): train k=8 centroids distributively
-    (assignment is a narrow argmax pass per iteration; the update
-    reduce returns only k×(d+1) numbers to the driver), then profile
-    each cluster — size and mean/min cosine of members to their
-    centroid (cohesion).  Iterative => no SQL oracle; determinism,
-    planted-blob purity and cohesion floors are pytest-pinned
-    (tests/test_kmeans.py)."""
+def _kmeans_profile(e: DataFrame, centroids) -> DataFrame:
+    """Assign every embedding to its nearest centroid (narrow Arrow
+    argmax) and profile each cluster in one groupBy: size and
+    mean/min cosine of members to their centroid (cohesion)."""
     from ..functions.vectors import as_double_array, cosine, literal_vector
-    from ..operators.kmeans import kmeans_assign, kmeans_fit
+    from ..operators.kmeans import kmeans_assign
 
-    e = load(spark, sf, "embeddings")
-    centroids = kmeans_fit(e, "embedding", "vec_id", k=8, iters=4)
     assigned = kmeans_assign(e, centroids)
     sim = cosine(
         as_double_array("embedding"),
@@ -2312,6 +2311,23 @@ def q_embedding_kmeans_profile(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.min("cos_to_centroid"), 4).alias("min_cohesion"),
         )
         .orderBy("cluster")
+    )
+
+
+def q_embedding_kmeans_profile(spark: SparkSession, sf: str) -> DataFrame:
+    """Corpus cartography via full-data spherical k-means
+    (``operators.kmeans``): train k=8 centroids distributively
+    (assignment is a narrow argmax pass per iteration; the update
+    reduce returns only k×(d+1) numbers to the driver), then profile
+    each cluster — size and mean/min cosine of members to their
+    centroid (cohesion).  Iterative => no SQL oracle; determinism,
+    planted-blob purity and cohesion floors are pytest-pinned
+    (tests/test_kmeans.py)."""
+    from ..operators.kmeans import kmeans_fit
+
+    e = load(spark, sf, "embeddings")
+    return _kmeans_profile(
+        e, kmeans_fit(e, "embedding", "vec_id", k=8, iters=4)
     )
 
 
@@ -2332,31 +2348,10 @@ def _kmeans_fixed_centroids():
 
 def q_embedding_kmeans_profile_fixed(spark: SparkSession, sf: str) -> DataFrame:
     """Cluster cartography over FIXED pretrained centroids — the
-    oracle-backed twin of ``embedding_kmeans_profile``: same narrow
-    argmax assign (Arrow matmul) + same one-groupBy cohesion
+    oracle-backed twin of ``embedding_kmeans_profile``: the same
     profile, minus the iterative training that has no SQL form."""
-    from ..functions.vectors import as_double_array, cosine, literal_vector
-    from ..operators.kmeans import kmeans_assign
-
-    e = load(spark, sf, "embeddings")
-    centroids = _kmeans_fixed_centroids()
-    assigned = kmeans_assign(e, centroids)
-    sim = cosine(
-        as_double_array("embedding"),
-        F.element_at(
-            F.array(*[literal_vector(c) for c in centroids]),
-            (F.col("cluster") + 1).cast("int"),
-        ),
-    )
-    return (
-        assigned.withColumn("cos_to_centroid", sim)
-        .groupBy("cluster")
-        .agg(
-            F.count("*").cast("bigint").alias("n_vectors"),
-            F.round(F.avg("cos_to_centroid"), 4).alias("avg_cohesion"),
-            F.round(F.min("cos_to_centroid"), 4).alias("min_cohesion"),
-        )
-        .orderBy("cluster")
+    return _kmeans_profile(
+        load(spark, sf, "embeddings"), _kmeans_fixed_centroids()
     )
 
 
@@ -2417,7 +2412,7 @@ def q_doc_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     score join shuffles on the (w1, w2) term dimension — corpus-
     sized, deliberately NOT broadcast.  Scalar totals broadcast by
     construction."""
-    # r12: spread the single-row-group scan before the heavy per-row
+    # spread the single-row-group scan before the heavy per-row
     # work (see queries/data.py:spread_scan; A/B-measured win)
     d = spread_scan(load(spark, sf, "documents"))
     toks = d.select(
@@ -2511,6 +2506,17 @@ def _pq_fixed_codebooks():
     return rng.standard_normal((8, 16, 8))
 
 
+def _pq_queries(emb: DataFrame) -> list:
+    """The 5 query vectors (``vec_id < 5``) the PQ readouts score, as
+    ``(vec_id, embedding)`` pairs collected to the driver."""
+    return [
+        (r["vec_id"], r["embedding"])
+        for r in emb.filter(F.col("vec_id") < 5)
+        .select("vec_id", "embedding")
+        .collect()
+    ]
+
+
 def q_embedding_pq_topk_fixed(spark: SparkSession, sf: str) -> DataFrame:
     """Product-quantization ANN over FIXED codebooks: encode the
     corpus to 8 codes/vector (Arrow argmin), score 5 queries by
@@ -2519,13 +2525,7 @@ def q_embedding_pq_topk_fixed(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.pq import pq_topk
 
     emb = load(spark, sf, "embeddings")
-    queries = [
-        (r["vec_id"], r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 5)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    return pq_topk(emb, queries, _pq_fixed_codebooks(), k=5)
+    return pq_topk(emb, _pq_queries(emb), _pq_fixed_codebooks(), k=5)
 
 
 def q_pq_stream_topk_fixed(spark: SparkSession, sf: str) -> DataFrame:
@@ -2542,12 +2542,7 @@ def q_pq_stream_topk_fixed(spark: SparkSession, sf: str) -> DataFrame:
 
     books = _pq_fixed_codebooks()
     emb = load(spark, sf, "embeddings")
-    queries = [
-        (r["vec_id"], r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 5)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
+    queries = _pq_queries(emb)
     b1 = emb.filter(F.xxhash64("vec_id") % 2 == 0)
     b2 = emb.filter(F.xxhash64("vec_id") % 2 != 0)
     codes = pq_encode(b1, books, "embedding", "pq_codes").unionByName(
@@ -2630,13 +2625,7 @@ def q_embedding_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     emb = load(spark, sf, "embeddings")
     books = pq_train(emb, m=8, k=16, iters=8, seed=42, dim=64)
-    queries = [
-        (r["vec_id"], r["embedding"])
-        for r in emb.filter(F.col("vec_id") < 5)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    return pq_topk(emb, queries, books, k=5)
+    return pq_topk(emb, _pq_queries(emb), books, k=5)
 
 
 def q_source_weighted_median_quality(spark: SparkSession, sf: str) -> DataFrame:
@@ -2748,7 +2737,7 @@ def q_source_dup_matrix(spark: SparkSession, sf: str) -> DataFrame:
     most |sources|² rows."""
     from ..operators.minhash import minhash_near_duplicates_md5
 
-    # r12: spread the single-row-group scan before the heavy per-row
+    # spread the single-row-group scan before the heavy per-row
     # work (see queries/data.py:spread_scan; A/B-measured win)
     d = spread_scan(load(spark, sf, "documents"))
     pairs = minhash_near_duplicates_md5(d, "doc_id", "text", threshold=0.4)
@@ -3087,7 +3076,7 @@ def q_media_triage_report(spark: SparkSession, sf: str) -> DataFrame:
     by round-trip pytest fixtures instead."""
     from ..operators.multimodal import media_probe, synthesize_media_containers
 
-    # r12: project to the two columns the synth kernel reads BEFORE
+    # project to the two columns the synth kernel reads BEFORE
     # the exchange and the opaque mapInPandas (guide §4.1 — Spark
     # cannot see which columns the Python function touches, so
     # without the select every documents column is shuffled and
@@ -3119,7 +3108,7 @@ def q_ngram_novelty(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale: one explode to (gram, doc) + one term-dim groupBy for
     first-arrival + a join back — the TF-IDF/span-coverage shape."""
-    # r12: spread the single-row-group scan before the heavy per-row
+    # spread the single-row-group scan before the heavy per-row
     # work (see queries/data.py:spread_scan; A/B-measured win)
     d = spread_scan(load(spark, sf, "documents"))
     grams = TX.word_shingles(TX.nonempty_tokens("text"), 5)
@@ -3245,7 +3234,7 @@ def q_ann_recall_report(spark: SparkSession, sf: str) -> DataFrame:
     queries, corpus-side scan); each index runs its own documented
     scale path; the compare is a tiny join on (query, neighbor).
 
-    BENCH_EXCLUDEd (r6 verdict task 2a): the exact ground truth
+    BENCH_EXCLUDEd: the exact ground truth
     dominates the runtime and is never the plan at 100 TB — the four
     index paths are benched as their own registry entries, and the
     recall READOUT itself is value-certified by the deterministic
@@ -3793,7 +3782,7 @@ LIMIT 50
 """
 
 
-# ---------------------------------------- r6 oracle-backed twins
+# ------------------------------------------- oracle-backed twins
 
 
 def q_mg_heavy_hitters_fixed(spark: SparkSession, sf: str) -> DataFrame:
@@ -4089,7 +4078,7 @@ def q_simhash_accuracy(spark: SparkSession, sf: str) -> DataFrame:
     d = load(spark, sf, "documents").filter(
         F.md5(F.col("doc_id").cast("string").cast("binary")) < "80"
     )
-    # r13 (r12-VERDICT item 10): persist the fingerprint relation —
+    # persist the fingerprint relation —
     # unpersisted, its subtree (tokenize + per-token md5 + 64-bit
     # fold, the query's most expensive expression) was inlined FOUR
     # times into the final plan (both sides of the chunk self-join,
@@ -4280,13 +4269,11 @@ def q_embedding_whitening_fixed(spark: SparkSession, sf: str) -> DataFrame:
     dims through ``operators.whiten.whiten`` (the real Arrow matmul
     path), then measure the whitened covariance RELATIONALLY (the
     ``embedding_covariance_stats`` shape) and emit the structure
-    readout.  Unlike ``embedding_whitening`` (moments fitted on the
-    data; eigh has no SQL form), every number here is reproducible in
-    SQL because the whitening matrix is a literal.
-
-    Scale: whiten is a narrow per-row pass; the covariance self-join
-    is co-partitioned on vec_id (one shuffle) and the (i,j) groupBy
-    partial-aggregates to <=|parts|*d^2 rows before the exchange."""
+    readout (:func:`_covariance_readout`).  Unlike
+    ``embedding_whitening`` (moments fitted on the data; eigh has no
+    SQL form), every number here is reproducible in SQL because the
+    whitening matrix is a literal.  Whiten is a narrow per-row
+    pass."""
     from ..functions.vectors import as_double_array
     from ..operators.whiten import whiten, zca_matrix
 
@@ -4297,48 +4284,8 @@ def q_embedding_whitening_fixed(spark: SparkSession, sf: str) -> DataFrame:
         F.slice(as_double_array("embedding"), 1, _WF_D).alias("emb16"),
     )
     white = whiten(e, mu, w, vec_col="emb16", out_col="whitened")
-    dims = (
-        white.select(
-            "vec_id", F.posexplode("whitened").alias("i", "x")
-        ).persist()
-    )
-    means = dims.groupBy("i").agg(
-        F.avg("x").alias("mean_i"), F.count("*").alias("n")
-    )
-    b = dims.select(
-        F.col("vec_id"), F.col("i").alias("j"), F.col("x").alias("y")
-    )
-    pairs = (
-        dims.join(b, "vec_id")
-        .groupBy("i", "j")
-        .agg(F.sum(F.col("x") * F.col("y")).alias("sxy"),
-             F.count("*").alias("n"))
-    )
-    mi = means.select("i", "mean_i")
-    mj = means.select(
-        F.col("i").alias("j"), F.col("mean_i").alias("mean_j")
-    )
-    covm = (
-        pairs.join(F.broadcast(mi), "i")
-        .join(F.broadcast(mj), "j")
-        .select(
-            "i", "j",
-            (F.col("sxy") / F.col("n")
-             - F.col("mean_i") * F.col("mean_j")).alias("c"),
-        )
-    )
-    offdiag = F.when(F.col("i") != F.col("j"), F.abs("c"))
-    return covm.crossJoin(
-        F.broadcast(means.agg(F.max("n").cast("bigint").alias("n_vectors")))
-    ).agg(
-        F.first("n_vectors").alias("n_vectors"),
-        F.countDistinct("i").cast("bigint").alias("dims"),
-        F.round(F.sum(F.when(F.col("i") == F.col("j"), F.col("c"))), 6)
-        .alias("trace"),
-        F.round(F.sqrt(F.sum(F.col("c") * F.col("c"))), 6)
-        .alias("frobenius"),
-        F.round(F.max(offdiag), 6).alias("max_abs_offdiag"),
-        F.round(F.avg(offdiag), 6).alias("avg_abs_offdiag"),
+    return _covariance_readout(
+        white.select("vec_id", F.posexplode("whitened").alias("i", "x"))
     )
 
 
@@ -4454,7 +4401,7 @@ def q_matryoshka_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
     # left OUTER join is unsupported (Spark drops it with a
     # HintErrorLogger warning and falls back to a sort-merge join of
     # a 5-row spine).  Hinting the small RIGHT side instead keeps the
-    # join shuffle-free (r12).
+    # join shuffle-free.
     spine = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id")
     )
@@ -4670,7 +4617,7 @@ def q_dsir_importance_report(spark: SparkSession, sf: str) -> DataFrame:
     over the per-doc score relation.
 
     The scan is repartitioned to the default parallelism BEFORE the
-    feature explode (r12, guide §2.5 input skew): the corpus arrives
+    feature explode (guide §2.5 input skew): the corpus arrives
     as one row group, so the ~2M-feature md5 projection would
     otherwise run inside the single scan task; one tiny exchange of
     the raw text spreads the hashing across every core (measured
@@ -4803,141 +4750,102 @@ FROM scored CROSS JOIN thr
 """
 
 
-SPARK_QUERIES = {
-    "feature_hash_embed": q_feature_hash_embed,
-    "event_sequence_prep": q_event_sequence_prep,
-    "dsir_importance_report": q_dsir_importance_report,
-    "label_noise_scan": q_label_noise_scan,
-    "context_budget_report": q_context_budget_report,
-    "bpe_train_report": q_bpe_train_report,
-    "ann_recall_report": q_ann_recall_report,
-    "ann_recall_exact_fixed": q_ann_recall_exact_fixed,
-    "ngram_novelty": q_ngram_novelty,
-    "bpe_merge_candidates": q_bpe_merge_candidates,
-    "media_triage_report": q_media_triage_report,
-    "embedding_whitening": q_embedding_whitening,
-    "hard_negative_mining": q_hard_negative_mining,
-    "image_phash_dedup": q_image_phash_dedup,
-    "text_token_stats": q_text_token_stats,
-    "lang_id_confusion": q_lang_id_confusion,
-    "doc_fingerprint": q_doc_fingerprint,
-    "dedup_documents_exact": q_dedup_documents_exact,
-    "doc_quality_score": q_doc_quality_score,
-    "token_count_bpe": q_token_count_bpe,
-    "embedding_neardup": q_embedding_neardup,
-    "ngram_jaccard_query": q_ngram_jaccard_query,
-    "embedding_topk": q_embedding_topk,
-    "knn_join": q_knn_join,
-    "minhash_neardup": q_minhash_neardup,
-    "minhash_neardup_md5": q_minhash_neardup_md5,
-    "incremental_neardup_fixed": q_incremental_neardup_fixed,
-    "minhash_accuracy": q_minhash_accuracy,
-    "pmi_collocations": q_pmi_collocations,
-    "semantic_dedup_fixed": q_semantic_dedup_fixed,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_keep_canonical": q_dedup_keep_canonical,
-    "simhash_fingerprints": q_simhash_fingerprints,
-    "simhash_bits_md5": q_simhash_bits_md5,
-    "embedding_lsh_topk": q_embedding_lsh_topk,
-    "embedding_ivf_topk": q_embedding_ivf_topk,
-    "embedding_ivf_topk_fixed": q_embedding_ivf_topk_fixed,
-    "ivf_stream_topk_fixed": q_ivf_stream_topk_fixed,
-    "multimodal_frames": q_multimodal_frames,
-    "multimodal_features": q_multimodal_features,
-    "multimodal_image_features": q_multimodal_image_features,
-    "multimodal_audio_features": q_multimodal_audio_features,
-    "training_corpus_prep": q_training_corpus_prep,
-    "doc_chunking": q_doc_chunking,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "bm25_search": q_bm25_search,
-    "vocab_top_terms": q_vocab_top_terms,
-    "doc_classifier_score": q_doc_classifier_score,
-    "eval_contamination": q_eval_contamination,
-    "embedding_quantize_int8": q_embedding_quantize_int8,
-    "terms_heavy_hitters": q_terms_heavy_hitters,
-    "pii_redaction_report": q_pii_redaction_report,
-    "doc_unigram_logprob": q_doc_unigram_logprob,
-    "doc_bigram_logprob": q_doc_bigram_logprob,
-    "multimodal_codec_mix": q_multimodal_codec_mix,
-    "crossdoc_span_coverage": q_crossdoc_span_coverage,
-    "embedding_covariance_stats": q_embedding_covariance_stats,
-    "embedding_fd_profile": q_embedding_fd_profile,
-    "fd_whitening_handoff": q_fd_whitening_handoff,
-    "embedding_kmeans_profile": q_embedding_kmeans_profile,
-    "embedding_kmeans_profile_fixed": q_embedding_kmeans_profile_fixed,
-    "embedding_pq_topk": q_embedding_pq_topk,
-    "embedding_pq_topk_fixed": q_embedding_pq_topk_fixed,
-    "pq_stream_topk_fixed": q_pq_stream_topk_fixed,
-    "source_weighted_median_quality": q_source_weighted_median_quality,
-    "source_dup_matrix": q_source_dup_matrix,
-    "mg_heavy_hitters_fixed": q_mg_heavy_hitters_fixed,
-    "mg_stream_topk_fixed": q_mg_stream_topk_fixed,
-    "simhash_accuracy": q_simhash_accuracy,
-    "embedding_whitening_fixed": q_embedding_whitening_fixed,
-    "matryoshka_overlap_report": q_matryoshka_overlap_report,
-    "perplexity_bucket_report": q_perplexity_bucket_report,
-}
-
-ORACLE_SQL = {
-    "text_token_stats": SQL_TEXT_TOKEN_STATS,
-    "lang_id_confusion": SQL_LANG_ID_CONFUSION,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "dedup_documents_exact": SQL_DEDUP_DOCUMENTS_EXACT,
-    "doc_quality_score": SQL_DOC_QUALITY_SCORE,
-    "token_count_bpe": SQL_TOKEN_COUNT_BPE,
-    "training_corpus_prep": SQL_TRAINING_CORPUS_PREP,
-    "doc_chunking": SQL_DOC_CHUNKING,
-    "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
-    "bm25_search": SQL_BM25_SEARCH,
-    "vocab_top_terms": SQL_VOCAB_TOP_TERMS,
-    "doc_classifier_score": SQL_DOC_CLASSIFIER_SCORE,
-    "eval_contamination": SQL_EVAL_CONTAMINATION,
-    "embedding_quantize_int8": SQL_EMBEDDING_QUANTIZE_INT8,
-    "embedding_neardup": SQL_EMBEDDING_NEARDUP,
-    "ngram_jaccard_query": SQL_NGRAM_JACCARD_QUERY,
-    "embedding_topk": SQL_EMBEDDING_TOPK,
-    "knn_join": SQL_KNN_JOIN,
-    "minhash_neardup_md5": SQL_MINHASH_NEARDUP_MD5,
-    "incremental_neardup_fixed": SQL_INCREMENTAL_NEARDUP_FIXED,
-    "minhash_accuracy": SQL_MINHASH_ACCURACY,
-    "pmi_collocations": SQL_PMI_COLLOCATIONS,
-    "semantic_dedup_fixed": sql_semantic_dedup_fixed(),
-    "hard_negative_mining": sql_hard_negative_mining(),
-    "ngram_novelty": SQL_NGRAM_NOVELTY,
-    "feature_hash_embed": sql_feature_hash_embed(),
-    "event_sequence_prep": SQL_EVENT_SEQUENCE_PREP,
-    "label_noise_scan": sql_label_noise_scan(),
-    "context_budget_report": SQL_CONTEXT_BUDGET_REPORT,
-    "bpe_merge_candidates": SQL_BPE_MERGE_CANDIDATES,
-    "dedup_clusters": SQL_DEDUP_CLUSTERS,
-    "dedup_keep_canonical": SQL_DEDUP_KEEP_CANONICAL,
-    "simhash_bits_md5": SQL_SIMHASH_BITS_MD5,
-    "pii_redaction_report": SQL_PII_REDACTION_REPORT,
-    "doc_unigram_logprob": SQL_DOC_UNIGRAM_LOGPROB,
-    "doc_bigram_logprob": SQL_DOC_BIGRAM_LOGPROB,
-    "crossdoc_span_coverage": SQL_CROSSDOC_SPAN_COVERAGE,
-    "dsir_importance_report": SQL_DSIR_IMPORTANCE_REPORT,
-    "embedding_covariance_stats": SQL_EMBEDDING_COVARIANCE_STATS,
-    "source_dup_matrix": SQL_SOURCE_DUP_MATRIX,
-    "embedding_lsh_topk": sql_embedding_lsh_topk(),
-    "embedding_ivf_topk_fixed": sql_embedding_ivf_topk_fixed(),
+#: a None oracle marks a probabilistic or pandas-UDF path: the driver
+#: checks rows only, and tests/ verify it against ground truth
+QUERIES = (
+    ("feature_hash_embed", q_feature_hash_embed, sql_feature_hash_embed()),
+    ("event_sequence_prep", q_event_sequence_prep, SQL_EVENT_SEQUENCE_PREP),
+    ("dsir_importance_report", q_dsir_importance_report,
+     SQL_DSIR_IMPORTANCE_REPORT),
+    ("label_noise_scan", q_label_noise_scan, sql_label_noise_scan()),
+    ("context_budget_report", q_context_budget_report,
+     SQL_CONTEXT_BUDGET_REPORT),
+    ("bpe_train_report", q_bpe_train_report, None),
+    ("ann_recall_report", q_ann_recall_report, None),
+    ("ann_recall_exact_fixed", q_ann_recall_exact_fixed,
+     sql_ann_recall_exact_fixed()),
+    ("ngram_novelty", q_ngram_novelty, SQL_NGRAM_NOVELTY),
+    ("bpe_merge_candidates", q_bpe_merge_candidates, SQL_BPE_MERGE_CANDIDATES),
+    ("media_triage_report", q_media_triage_report, None),
+    ("embedding_whitening", q_embedding_whitening, None),
+    ("hard_negative_mining", q_hard_negative_mining,
+     sql_hard_negative_mining()),
+    ("image_phash_dedup", q_image_phash_dedup, None),
+    ("text_token_stats", q_text_token_stats, SQL_TEXT_TOKEN_STATS),
+    ("lang_id_confusion", q_lang_id_confusion, SQL_LANG_ID_CONFUSION),
+    ("doc_fingerprint", q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+    ("dedup_documents_exact", q_dedup_documents_exact,
+     SQL_DEDUP_DOCUMENTS_EXACT),
+    ("doc_quality_score", q_doc_quality_score, SQL_DOC_QUALITY_SCORE),
+    ("token_count_bpe", q_token_count_bpe, SQL_TOKEN_COUNT_BPE),
+    ("embedding_neardup", q_embedding_neardup, SQL_EMBEDDING_NEARDUP),
+    ("ngram_jaccard_query", q_ngram_jaccard_query, SQL_NGRAM_JACCARD_QUERY),
+    ("embedding_topk", q_embedding_topk, SQL_EMBEDDING_TOPK),
+    ("knn_join", q_knn_join, SQL_KNN_JOIN),
+    ("minhash_neardup", q_minhash_neardup, None),
+    ("minhash_neardup_md5", q_minhash_neardup_md5, SQL_MINHASH_NEARDUP_MD5),
+    ("incremental_neardup_fixed", q_incremental_neardup_fixed,
+     SQL_INCREMENTAL_NEARDUP_FIXED),
+    ("minhash_accuracy", q_minhash_accuracy, SQL_MINHASH_ACCURACY),
+    ("pmi_collocations", q_pmi_collocations, SQL_PMI_COLLOCATIONS),
+    ("semantic_dedup_fixed", q_semantic_dedup_fixed,
+     sql_semantic_dedup_fixed()),
+    ("dedup_clusters", q_dedup_clusters, SQL_DEDUP_CLUSTERS),
+    ("dedup_keep_canonical", q_dedup_keep_canonical, SQL_DEDUP_KEEP_CANONICAL),
+    ("simhash_fingerprints", q_simhash_fingerprints, None),
+    ("simhash_bits_md5", q_simhash_bits_md5, SQL_SIMHASH_BITS_MD5),
+    ("embedding_lsh_topk", q_embedding_lsh_topk, sql_embedding_lsh_topk()),
+    ("embedding_ivf_topk", q_embedding_ivf_topk, None),
+    ("embedding_ivf_topk_fixed", q_embedding_ivf_topk_fixed,
+     sql_embedding_ivf_topk_fixed()),
     # incremental build == one-shot build: the same SQL twin pins it
-    "ivf_stream_topk_fixed": sql_embedding_ivf_topk_fixed(),
-    "ann_recall_exact_fixed": sql_ann_recall_exact_fixed(),
-    "embedding_kmeans_profile_fixed": sql_embedding_kmeans_profile_fixed(),
-    "embedding_pq_topk_fixed": sql_embedding_pq_topk_fixed(),
+    ("ivf_stream_topk_fixed", q_ivf_stream_topk_fixed,
+     sql_embedding_ivf_topk_fixed()),
+    ("multimodal_frames", q_multimodal_frames, None),
+    ("multimodal_features", q_multimodal_features, None),
+    ("multimodal_image_features", q_multimodal_image_features, None),
+    ("multimodal_audio_features", q_multimodal_audio_features, None),
+    ("training_corpus_prep", q_training_corpus_prep, SQL_TRAINING_CORPUS_PREP),
+    ("doc_chunking", q_doc_chunking, SQL_DOC_CHUNKING),
+    ("tfidf_top_terms", q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
+    ("bm25_search", q_bm25_search, SQL_BM25_SEARCH),
+    ("vocab_top_terms", q_vocab_top_terms, SQL_VOCAB_TOP_TERMS),
+    ("doc_classifier_score", q_doc_classifier_score, SQL_DOC_CLASSIFIER_SCORE),
+    ("eval_contamination", q_eval_contamination, SQL_EVAL_CONTAMINATION),
+    ("embedding_quantize_int8", q_embedding_quantize_int8,
+     SQL_EMBEDDING_QUANTIZE_INT8),
+    ("terms_heavy_hitters", q_terms_heavy_hitters, None),
+    ("pii_redaction_report", q_pii_redaction_report, SQL_PII_REDACTION_REPORT),
+    ("doc_unigram_logprob", q_doc_unigram_logprob, SQL_DOC_UNIGRAM_LOGPROB),
+    ("doc_bigram_logprob", q_doc_bigram_logprob, SQL_DOC_BIGRAM_LOGPROB),
+    ("multimodal_codec_mix", q_multimodal_codec_mix, None),
+    ("crossdoc_span_coverage", q_crossdoc_span_coverage,
+     SQL_CROSSDOC_SPAN_COVERAGE),
+    ("embedding_covariance_stats", q_embedding_covariance_stats,
+     SQL_EMBEDDING_COVARIANCE_STATS),
+    ("embedding_fd_profile", q_embedding_fd_profile, None),
+    ("fd_whitening_handoff", q_fd_whitening_handoff, None),
+    ("embedding_kmeans_profile", q_embedding_kmeans_profile, None),
+    ("embedding_kmeans_profile_fixed", q_embedding_kmeans_profile_fixed,
+     sql_embedding_kmeans_profile_fixed()),
+    ("embedding_pq_topk", q_embedding_pq_topk, None),
+    ("embedding_pq_topk_fixed", q_embedding_pq_topk_fixed,
+     sql_embedding_pq_topk_fixed()),
     # incremental encode == one-shot encode: the same SQL twin pins it
-    "pq_stream_topk_fixed": sql_embedding_pq_topk_fixed(),
-    "source_weighted_median_quality": SQL_SOURCE_WEIGHTED_MEDIAN_QUALITY,
-    "mg_heavy_hitters_fixed": SQL_MG_HEAVY_HITTERS_FIXED,
-    "mg_stream_topk_fixed": SQL_MG_STREAM_TOPK_FIXED,
-    "simhash_accuracy": SQL_SIMHASH_ACCURACY,
-    "embedding_whitening_fixed": sql_embedding_whitening_fixed(),
-    "matryoshka_overlap_report": sql_matryoshka_overlap_report(),
-    "perplexity_bucket_report": SQL_PERPLEXITY_BUCKET_REPORT,
-    # minhash_neardup / simhash_fingerprints / multimodal_* /
-    # terms_heavy_hitters / embedding_ivf_topk / embedding_kmeans_
-    # profile: intentionally no oracle (probabilistic or pandas-UDF
-    # paths) -> driver rows-only check; see tests/ for the
-    # ground-truth verification.
-}
+    ("pq_stream_topk_fixed", q_pq_stream_topk_fixed,
+     sql_embedding_pq_topk_fixed()),
+    ("source_weighted_median_quality", q_source_weighted_median_quality,
+     SQL_SOURCE_WEIGHTED_MEDIAN_QUALITY),
+    ("source_dup_matrix", q_source_dup_matrix, SQL_SOURCE_DUP_MATRIX),
+    ("mg_heavy_hitters_fixed", q_mg_heavy_hitters_fixed,
+     SQL_MG_HEAVY_HITTERS_FIXED),
+    ("mg_stream_topk_fixed", q_mg_stream_topk_fixed, SQL_MG_STREAM_TOPK_FIXED),
+    ("simhash_accuracy", q_simhash_accuracy, SQL_SIMHASH_ACCURACY),
+    ("embedding_whitening_fixed", q_embedding_whitening_fixed,
+     sql_embedding_whitening_fixed()),
+    ("matryoshka_overlap_report", q_matryoshka_overlap_report,
+     sql_matryoshka_overlap_report()),
+    ("perplexity_bucket_report", q_perplexity_bucket_report,
+     SQL_PERPLEXITY_BUCKET_REPORT),
+)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.window import const_bucket
-from .data import load
+from .data import load, registry
 
 # ----------------------------------------------------- drift report
 
@@ -345,14 +345,9 @@ ORDER BY digit
 """
 
 
-SPARK_QUERIES = {
-    "feature_drift_report": q_feature_drift_report,
-    "revenue_anomaly_mad": q_revenue_anomaly_mad,
-    "benford_digit_audit": q_benford_digit_audit,
-}
-
-ORACLE_SQL = {
-    "feature_drift_report": SQL_FEATURE_DRIFT_REPORT,
-    "revenue_anomaly_mad": SQL_REVENUE_ANOMALY_MAD,
-    "benford_digit_audit": SQL_BENFORD_DIGIT_AUDIT,
-}
+QUERIES = (
+    ("feature_drift_report", q_feature_drift_report, SQL_FEATURE_DRIFT_REPORT),
+    ("revenue_anomaly_mad", q_revenue_anomaly_mad, SQL_REVENUE_ANOMALY_MAD),
+    ("benford_digit_audit", q_benford_digit_audit, SQL_BENFORD_DIGIT_AUDIT),
+)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)

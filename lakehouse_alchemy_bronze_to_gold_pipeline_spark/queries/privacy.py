@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dp
-from .data import load
+from .data import load, registry
 
 #: per-customer contribution bound, cents ($4M ~ p90 of per-customer
 #: lifetime spend at every tested SF: clipping is demonstrably ACTIVE
@@ -41,7 +41,7 @@ def q_dp_revenue_release(spark: SparkSession, sf: str) -> DataFrame:
     it from a second budget slice.
 
     The non-private status is machine-visible, not just
-    docstring-visible (r9 ADVICE): every column that would break a
+    docstring-visible: every column that would break a
     real release — exact sums, exact counts, and the noise values
     themselves (subtractable) — carries an ``audit_`` prefix, and the
     in-row ``mechanism='deterministic-audit'`` marker states that the
@@ -176,7 +176,7 @@ _HIST_WIDTH, _HIST_NBINS = 30_000, 20
 def q_dp_histogram_release(spark: SparkSession, sf: str) -> DataFrame:
     """(0.5)-DP order-total histogram over the ``price_histogram``
     shape, built on the generic :func:`dp.release` operator — its
-    first oracle-backed registry coverage (r9 verdict task 8).
+    first oracle-backed registry coverage.
 
     Two DP-histogram subtleties done right and visible in-row:
 
@@ -262,12 +262,8 @@ ORDER BY bucket
 """
 
 
-SPARK_QUERIES = {
-    "dp_revenue_release": q_dp_revenue_release,
-    "dp_histogram_release": q_dp_histogram_release,
-}
-
-ORACLE_SQL = {
-    "dp_revenue_release": SQL_DP_REVENUE_RELEASE,
-    "dp_histogram_release": SQL_DP_HISTOGRAM_RELEASE,
-}
+QUERIES = (
+    ("dp_revenue_release", q_dp_revenue_release, SQL_DP_REVENUE_RELEASE),
+    ("dp_histogram_release", q_dp_histogram_release, SQL_DP_HISTOGRAM_RELEASE),
+)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)

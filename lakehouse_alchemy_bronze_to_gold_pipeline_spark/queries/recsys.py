@@ -10,14 +10,14 @@ proof that the distributed half-step operator computes alternating
 least squares, and the in-row per-iteration loss exhibits the
 monotone descent the float path (als_train) is pytest-pinned to.
 
-``als_rank2_fixed`` (r11) extends the certification to rank 2: the
+``als_rank2_fixed`` extends the certification to rank 2: the
 same unrolled-iteration idiom, but each half step solves the 2x2
 ridge normal equations by Cramer's rule in exact BIGINT arithmetic
 with an explicit engine-portable floor division and a box projection
 onto [1, F2_MAX] (operators/als.py:rank2_half_step_int) — the first
-driver-certified rank>1 coverage of the ALS family (r10 verdict
-task 4; before it only the rank-1 path had a CORRECTNESS row and the
-float rank-k path was pinned in-test by numpy replication).
+driver-certified rank>1 coverage of the ALS family (before it only
+the rank-1 path had a CORRECTNESS row and the float rank-k path was
+pinned in-test by numpy replication).
 
 Fixed-point overflow budget (all-positive BIGINT lattice, S = 100):
 ratings q <= 100 (LEAST-capped), and the half step's output is
@@ -43,7 +43,7 @@ from ..operators.als import (
     rank1_half_step_int,
     rank2_half_step_int,
 )
-from .data import load
+from .data import load, registry
 
 #: per-(customer, part) rating cap — bounds every overflow term and
 #: tames super-buyers, the same damping role as copurchase's degree cap
@@ -85,7 +85,7 @@ def _fixed_run(
     consume the one materialization, and checkpoint blocks are
     reclaimed by the ContextCleaner when the query's DataFrames go
     out of scope — a bare persist() would leak cached blocks for the
-    session (the r9-ADVICE als_train leak, fixed there with
+    session (the als_train leak, fixed there with
     unpersist-in-finally; a registry query has no post-collect hook,
     so eager checkpoint is the leak-free form)."""
     r = _ratings(spark, sf).localCheckpoint()
@@ -117,7 +117,7 @@ def _fixed_run(
     )
     # factor-table row counts, once per side (cheap: the tables are
     # localCheckpointed |entities|-row RDDs; the key set never changes
-    # across iterations).  They feed the broadcast gate (r10 ADVICE):
+    # across iterations).  They feed the broadcast gate:
     # under BROADCAST_FACTOR_ROWS_MAX the half steps and the fused
     # loss scan broadcast as before; past it they degrade to shuffle
     # joins instead of erroring.
@@ -156,7 +156,7 @@ def q_als_rank1_fixed(spark: SparkSession, sf: str) -> DataFrame:
     # join would re-shuffle r; with them the scan has ZERO shuffles
     # and the three residual sums reduce in a single aggregate),
     # checkpointed because three one-row reads would otherwise each
-    # replay the scan.  The hints are count-gated (r10 ADVICE): an
+    # replay the scan.  The hints are count-gated: an
     # oversize factor side shuffle-joins instead of OOMing.
     joined = r
     for it, (u, v) in enumerate(hist, start=1):
@@ -223,9 +223,7 @@ def q_als_recommend_fixed(spark: SparkSession, sf: str) -> DataFrame:
     the scored relation is |customers| x 64 — linear in customers,
     never the |C| x |P| cross product — and already-purchased pairs
     leave by anti-join.  Total order everywhere (factor desc, key
-    asc), so the result is layout- and engine-exact.
-
-    Registered and driver-certified with als_rank1_fixed in r10."""
+    asc), so the result is layout- and engine-exact."""
     r, hist, _n_c, _n_p = _fixed_run(spark, sf)
     u, v = hist[-1]
     cand = v.orderBy(F.col("v").desc(), "p").limit(_N_CAND)
@@ -537,7 +535,7 @@ def q_als_float_rank2_readout(spark: SparkSession, sf: str) -> DataFrame:
     """The PRODUCTION float rank-k ALS path (operators/als.py:
     als_train — md5 init, Arrow-batched sorted-order k x k ridge
     solves, per-iteration loss) certified by a tolerance-documented
-    readout (r11 verdict task 3): two full rank-2 iterations over the
+    readout: two full rank-2 iterations over the
     sales ratings, released as one row per iteration carrying the
     loss rounded to WHOLE units plus the final factor tables' sizes
     and component sums rounded to TENS (em1).
@@ -693,16 +691,11 @@ ORDER BY iter
 """
 
 
-SPARK_QUERIES = {
-    "als_rank1_fixed": q_als_rank1_fixed,
-    "als_recommend_fixed": q_als_recommend_fixed,
-    "als_rank2_fixed": q_als_rank2_fixed,
-    "als_float_rank2_readout": q_als_float_rank2_readout,
-}
-
-ORACLE_SQL = {
-    "als_rank1_fixed": SQL_ALS_RANK1_FIXED,
-    "als_recommend_fixed": SQL_ALS_RECOMMEND_FIXED,
-    "als_rank2_fixed": SQL_ALS_RANK2_FIXED,
-    "als_float_rank2_readout": SQL_ALS_FLOAT_RANK2_READOUT,
-}
+QUERIES = (
+    ("als_rank1_fixed", q_als_rank1_fixed, SQL_ALS_RANK1_FIXED),
+    ("als_recommend_fixed", q_als_recommend_fixed, SQL_ALS_RECOMMEND_FIXED),
+    ("als_rank2_fixed", q_als_rank2_fixed, SQL_ALS_RANK2_FIXED),
+    ("als_float_rank2_readout", q_als_float_rank2_readout,
+     SQL_ALS_FLOAT_RANK2_READOUT),
+)
+SPARK_QUERIES, ORACLE_SQL = registry(QUERIES)
