@@ -4252,7 +4252,10 @@ def _wf_fixed_moments():
     integer formulas — the `_fixed` pattern's 'pretrained model'
     stand-in: both engines see the exact same doubles, so the ZCA
     matrix derived from them (numpy eigh, computed once per process)
-    is plan-constant and embeddable in the oracle as literals."""
+    is plan-constant and embeddable in the oracle as literals.  The
+    matrix's last bits follow the BLAS kernel numpy's OpenBLAS picks
+    for the host CPU; within one process they are the same on both
+    sides, which is all the oracle comparison needs."""
     import numpy as np
 
     j = np.arange(_WF_D)

@@ -1,9 +1,36 @@
 from __future__ import annotations
 
 import os
+import platform
 import sys
 
 import pytest
+
+#: The OpenBLAS kernel numpy runs under for the whole suite.  numpy's
+#: bundled OpenBLAS is built with DYNAMIC_ARCH and picks its BLAS/LAPACK
+#: kernel from the host CPU, so the last bits of driver-side numpy
+#: results (k-means and IVF centroids, the fixed ZCA matrix) that the
+#: registry golden pins as plan or oracle-SQL literals follow the CPU.
+#: PRESCOTT is the baseline SSE3 kernel every x86-64 CPU runs, and the
+#: committed golden was captured under it.  OpenBLAS reads the variable
+#: only when it loads, so it is set here, before anything imports
+#: numpy; the Spark JVM and its Python workers inherit it.
+#: ``tools/capture_plans.py`` sets the same literal before its imports.
+OPENBLAS_CORETYPE = "PRESCOTT"
+
+if platform.machine() in ("x86_64", "AMD64"):
+    if (
+        "numpy" in sys.modules
+        and os.environ.get("OPENBLAS_CORETYPE") != OPENBLAS_CORETYPE
+    ):
+        raise pytest.UsageError(
+            f"numpy was imported before tests/conftest.py could set "
+            f"OPENBLAS_CORETYPE={OPENBLAS_CORETYPE}: the pin would be "
+            f"ignored and the registry golden would drift.  Set "
+            f"OPENBLAS_CORETYPE={OPENBLAS_CORETYPE} in the environment, "
+            f"or keep numpy out of whatever loads before this conftest."
+        )
+    os.environ["OPENBLAS_CORETYPE"] = OPENBLAS_CORETYPE
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 

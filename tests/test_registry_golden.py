@@ -8,7 +8,15 @@ plan keeps this test green; together with the DuckDB oracle sweep
 behaviour-neutral.  A drift fails with the names of the queries that
 moved.  Regenerate the golden with ``python tools/capture_plans.py``
 only for a change that means to move plans, and give the reason in
-CHANGES.md."""
+CHANGES.md.
+
+The golden's float literals come from the generic OpenBLAS kernel
+that ``conftest.py`` pins (``OPENBLAS_CORETYPE``) for the whole suite:
+numpy's OpenBLAS otherwise picks its kernel from the host CPU, and the
+last bits of driver-side numpy results follow it.  Four entries carry
+such literals: the plans of ``embedding_kmeans_profile``,
+``embedding_ivf_topk`` and ``ann_recall_report`` (centroids) and the
+oracle SQL of ``embedding_whitening_fixed`` (the ZCA matrix)."""
 
 from __future__ import annotations
 

@@ -24,7 +24,16 @@ from __future__ import annotations
 import importlib.util
 import json
 import os
+import platform
 import sys
+
+# Pin numpy's OpenBLAS kernel before anything loads numpy: the golden's
+# float literals follow the kernel.  The value is defined, with its
+# reason, as OPENBLAS_CORETYPE in tests/conftest.py, which this tool
+# loads only after the package has imported numpy, so the literal is
+# repeated here.
+if platform.machine() in ("x86_64", "AMD64"):
+    os.environ["OPENBLAS_CORETYPE"] = "PRESCOTT"
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
