@@ -1,4 +1,5 @@
-"""Text-analysis column functions for LLM-data pipelines.
+"""Text-analysis column functions for LLM-data pipelines, in both
+engines' forms.
 
 Whitespace tokenization, token statistics, quality scoring, language
 identification, and document fingerprinting — every function is a
@@ -6,6 +7,12 @@ identification, and document fingerprinting — every function is a
 aggregate / md5), fully codegen'd; there is deliberately no UDF here.
 These run as narrow per-row transforms: at 100 TB they cost one scan,
 no shuffle.
+
+Each text rule a DuckDB oracle reproduces also has its DuckDB form
+here, next to the Spark original it mirrors (``tokens_sql``,
+``nonempty_tokens_sql``, ``STOPWORDS_SQL``, ``BPE_ISH_PATTERN_SQL``,
+``fingerprint_sql``, ``lang_id_sql``), so an oracle builds its text
+rules from these and never from a hand copy.
 """
 
 from __future__ import annotations
@@ -18,6 +25,15 @@ from pyspark.sql import functions as F
 #: Small english stopword list used by quality scoring / lang-id.
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
+#: DuckDB form of ``STOPWORDS``: a SQL ``IN`` list.
+STOPWORDS_SQL = "(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
+
+#: Java's ``\s`` (the class Spark's regex functions match), spelled out
+#: for DuckDB: RE2's ``\s`` lacks U+000B, so ``'a\x0bb'`` would stay
+#: one token there while Spark splits it in two.
+_WS_CLASS_SQL = r" \t\n\x0B\f\r"
+_WHITESPACE_SQL = f"[{_WS_CLASS_SQL}]+"
+
 
 def tokens(text: Column | str, lowercase: bool = False) -> Column:
     """Whitespace tokens of trimmed text (empty-safe)."""
@@ -27,13 +43,20 @@ def tokens(text: Column | str, lowercase: bool = False) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
+def tokens_sql(text: str = "text", lowercase: bool = False) -> str:
+    """DuckDB form of :func:`tokens` over the SQL expression ``text``."""
+    c = f"lower({text})" if lowercase else text
+    return f"string_split_regex(trim({c}), '{_WHITESPACE_SQL}')"
+
+
 def token_count(text: Column | str) -> Column:
     return F.size(tokens(text)).cast("bigint")
 
 
 #: GPT-2-style pretokenizer shape: contraction suffixes, space-prefixed
 #: letter runs, digit runs, punctuation runs.  ASCII classes so the
-#: pattern is engine-portable (Java regex and RE2 agree on it).
+#: pattern is engine-portable, once its ``\s`` is spelled out for RE2
+#: (``BPE_ISH_PATTERN_SQL``).
 BPE_ISH_PATTERN = (
     r"'(?:s|t|re|ve|m|ll|d)| ?[a-zA-Z]+| ?[0-9]+| ?[^\sa-zA-Z0-9]+"
 )
@@ -48,10 +71,22 @@ def bpe_ish_tokens(text: Column | str) -> Column:
     return F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), F.lit(0))
 
 
+#: DuckDB form of ``BPE_ISH_PATTERN``: Java's ``\s`` spelled out and
+#: single quotes doubled for a SQL string literal.
+BPE_ISH_PATTERN_SQL = BPE_ISH_PATTERN.replace(r"\s", _WS_CLASS_SQL).replace(
+    "'", "''"
+)
+
+
 def nonempty_tokens(text: Column | str, lowercase: bool = True) -> Column:
     """Tokens with empty strings removed (split('') yields [''] —
     hash-based operators must not fingerprint the empty token)."""
     return F.filter(tokens(text, lowercase), lambda t: t != "")
+
+
+def nonempty_tokens_sql(text: str = "text", lowercase: bool = True) -> str:
+    """DuckDB form of :func:`nonempty_tokens`."""
+    return f"list_filter({tokens_sql(text, lowercase)}, x -> x != '')"
 
 
 def token_length_sum(toks: Column) -> Column:
@@ -83,6 +118,17 @@ def fingerprint(text: Column | str) -> Column:
     return F.md5(normalize_text(text).cast("binary"))
 
 
+def fingerprint_sql(text: str = "text") -> str:
+    """DuckDB form of :func:`fingerprint`."""
+    c = f"regexp_replace(lower({text}), '[^a-z0-9{_WS_CLASS_SQL}]', '', 'g')"
+    return f"md5(trim(regexp_replace({c}, '{_WHITESPACE_SQL}', ' ', 'g')))"
+
+
+#: ``lang_id``'s marker words per language, in CASE order
+_LANG_MARKERS = (("en", "the", "and"), ("de", "der", "und"),
+                 ("es", "el", "la"), ("fr", "le", "et"))
+
+
 def lang_id(text: Column | str) -> Column:
     """Deterministic marker-word language heuristic.
 
@@ -92,13 +138,23 @@ def lang_id(text: Column | str) -> Column:
     scored variant."""
     c = F.col(text) if isinstance(text, str) else text
     padded = F.concat(F.lit(" "), F.lower(c), F.lit(" "))
-    return (
-        F.when(padded.contains(" the ") | padded.contains(" and "), F.lit("en"))
-        .when(padded.contains(" der ") | padded.contains(" und "), F.lit("de"))
-        .when(padded.contains(" el ") | padded.contains(" la "), F.lit("es"))
-        .when(padded.contains(" le ") | padded.contains(" et "), F.lit("fr"))
-        .otherwise(F.lit("unknown"))
+    out = F  # F.when opens the chain, Column.when extends it
+    for lang, a, b in _LANG_MARKERS:
+        out = out.when(
+            padded.contains(f" {a} ") | padded.contains(f" {b} "), F.lit(lang)
+        )
+    return out.otherwise(F.lit("unknown"))
+
+
+def lang_id_sql(text: str = "text") -> str:
+    """DuckDB form of :func:`lang_id`."""
+    padded = f"' ' || lower({text}) || ' '"
+    whens = "\n".join(
+        f"  WHEN contains({padded}, ' {a} ') OR contains({padded}, ' {b} ')"
+        f" THEN '{lang}'"
+        for lang, a, b in _LANG_MARKERS
     )
+    return f"CASE\n{whens}\n  ELSE 'unknown'\nEND"
 
 
 def word_shingles(toks: Column, n: int = 3) -> Column:

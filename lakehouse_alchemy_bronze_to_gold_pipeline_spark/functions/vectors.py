@@ -43,10 +43,25 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def cosine_sql(a: str, b: str) -> str:
+    """DuckDB form of :func:`cosine` over two ``DOUBLE[]`` expressions."""
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}), x -> x[1] * x[2]))"
+        f"\n         / (sqrt(list_sum(list_transform({a}, x -> x * x)))"
+        f"\n            * sqrt(list_sum(list_transform({b}, x -> x * x))))"
+    )
+
+
 def literal_vector(values) -> Column:
     """A query vector as an inline array literal (broadcast by value —
     the right shape for one-vs-corpus scoring)."""
     return F.array(*[F.lit(float(v)) for v in values])
+
+
+def vector_sql(values) -> str:
+    """DuckDB form of :func:`literal_vector`: a list literal of float64
+    reprs, which round-trip exactly."""
+    return "[" + ", ".join(repr(float(v)) for v in values) + "]"
 
 
 def cosine_arrow(a: Column, b: Column) -> Column:

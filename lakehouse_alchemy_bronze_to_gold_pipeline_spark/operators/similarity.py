@@ -31,6 +31,7 @@ from ..functions.vectors import (
     cosine,
     cosine_arrow,
     literal_vector,
+    vector_sql,
 )
 
 
@@ -207,8 +208,8 @@ def band_signatures_udf(planes: np.ndarray):
     microseconds and keeps the plan a single narrow node.  Output is
     bit-identical to the expression form up to float accumulation
     order, whose sign-flip probability at |dot| ~ N(0, dim) is
-    negligible (~1e-14/dot) — the DuckDB oracle reproduces the same
-    procedure (see queries.analytics._sql_lsh_pairs).
+    negligible (~1e-14/dot) — the DuckDB oracles reproduce the same
+    procedure (``band_signatures_sql``).
     """
     n_bands, n_bits, _ = planes.shape
     flat_t = planes.reshape(n_bands * n_bits, -1).T.copy()  # (dim, B*b)
@@ -224,6 +225,25 @@ def band_signatures_udf(planes: np.ndarray):
         return pd.Series(list(s))
 
     return sigs
+
+
+def band_signatures_sql(planes: np.ndarray) -> str:
+    """DuckDB form of ``band_signatures_udf`` over a relation
+    ``v(vec_id, v)``: one ``(vec_id, v, band, sig)`` SELECT per band,
+    the sign bits as CASE sums over the planes as list literals,
+    joined by UNION ALL."""
+    bands = []
+    for b, band in enumerate(planes):
+        sig = "\n     + ".join(
+            f"(CASE WHEN list_dot_product(v, {vector_sql(plane)}) >= 0 "
+            f"THEN {1 << i} ELSE 0 END)"
+            for i, plane in enumerate(band)
+        )
+        bands.append(
+            f"SELECT vec_id, v, {b} AS band,\n"
+            f"  CAST({sig} AS BIGINT) AS sig\nFROM v"
+        )
+    return "\nUNION ALL\n".join(bands)
 
 
 def lsh_pairs(

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import text as TX
+from ..functions.vectors import cosine_sql
 from .data import load, registry, spread_scan
 
 # ---------------------------------------------------------------------
@@ -280,9 +282,7 @@ def q_zipf_fit_report(spark: SparkSession, sf: str) -> DataFrame:
 SQL_ZIPF_FIT_REPORT = f"""
 WITH terms AS (
   SELECT t AS term
-  FROM documents,
-       UNNEST(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                          x -> x != '')) AS u(t)
+  FROM documents, UNNEST({TX.nonempty_tokens_sql()}) AS u(t)
 ), counts AS (
   SELECT term, COUNT(*) AS c FROM terms GROUP BY term
 ), top AS (
@@ -358,14 +358,11 @@ def q_tokenizer_fertility(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_tokenizer_fertility() -> str:
-    from .llm_ops import TX_BPE_PATTERN_SQL
-
     return f"""
 WITH per_doc AS (
   SELECT lang,
-         len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x != ''))::BIGINT AS words,
-         len(regexp_extract_all(text, '{TX_BPE_PATTERN_SQL}'))::BIGINT
+         len({TX.nonempty_tokens_sql()})::BIGINT AS words,
+         len(regexp_extract_all(text, '{TX.BPE_ISH_PATTERN_SQL}'))::BIGINT
            AS bpe,
          length(text)::BIGINT AS chars
   FROM documents
@@ -433,10 +430,7 @@ WITH q AS (
   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_HUB_SAMPLE}
 ), scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-         list_sum(list_transform(list_zip(e.embedding::DOUBLE[], q.qv),
-                                 x -> x[1] * x[2]))
-         / (sqrt(list_sum(list_transform(e.embedding::DOUBLE[], x -> x * x)))
-            * sqrt(list_sum(list_transform(q.qv, x -> x * x)))) AS cos_raw
+         {cosine_sql("e.embedding::DOUBLE[]", "q.qv")} AS cos_raw
   FROM embeddings e CROSS JOIN q
 ), ranked AS (
   SELECT query_id, neighbor_id,
@@ -2001,8 +1995,7 @@ def q_cms_bigram_accuracy(spark: SparkSession, sf: str) -> DataFrame:
 
 SQL_CMS_BIGRAM_ACCURACY = f"""
 WITH toks AS (
-  SELECT list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
+  SELECT {TX.nonempty_tokens_sql()} AS t
   FROM documents
 ), bigrams AS (
   SELECT bg AS bigram

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
+from ..functions import text as TX
 from ..functions.window import const_bucket
 from ..operators.rangejoin import band_join
 from ..sources.tables import local_table
@@ -486,28 +487,13 @@ def _sql_lsh_pairs(tail: str) -> str:
     plain SQL; ``tail`` appends the query-specific filter/order.
     Same construction as the md5 MinHash oracle: determinism makes
     approximate operators value-checkable."""
-    from ..operators.similarity import band_hyperplanes
+    from ..operators.similarity import band_hyperplanes, band_signatures_sql
 
     p = _LSH_PAIRS
     planes = band_hyperplanes(p["dim"], p["n_bands"], p["n_bits"], p["seed"])
-    bands = []
-    for b in range(p["n_bands"]):
-        bits = []
-        for i in range(p["n_bits"]):
-            lits = ", ".join(repr(float(x)) for x in planes[b][i])
-            bits.append(
-                f"(CASE WHEN list_dot_product(v, [{lits}]) >= 0 "
-                f"THEN {1 << i} ELSE 0 END)"
-            )
-        sig = "\n     + ".join(bits)
-        bands.append(
-            f"SELECT vec_id, {b} AS band,\n"
-            f"  CAST({sig} AS BIGINT) AS sig\nFROM v"
-        )
-    union = "\nUNION ALL\n".join(bands)
     return f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-sigs AS ({union}),
+sigs AS ({band_signatures_sql(planes)}),
 capped AS (
   SELECT vec_id, band, sig FROM sigs
   QUALIFY COUNT(*) OVER (PARTITION BY band, sig) <= {p["max_bucket"]}
@@ -588,12 +574,7 @@ def q_token_array_ops(spark: SparkSession, sf: str) -> DataFrame:
     """Array-function coverage over document tokens: distinct size,
     sorted prefix, membership, existence predicate."""
     d = load(spark, sf, "documents")
-    toks = F.array_distinct(
-        F.filter(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-            lambda t: t != "",
-        )
-    )
+    toks = F.array_distinct(TX.nonempty_tokens("text"))
     return d.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_distinct_tokens"),
@@ -605,12 +586,9 @@ def q_token_array_ops(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_TOKEN_ARRAY_OPS = """
+SQL_TOKEN_ARRAY_OPS = f"""
 WITH t AS (
-  SELECT doc_id,
-         list_distinct(list_filter(
-           string_split_regex(trim(lower(text)), '\\s+'), x -> x != ''))
-           AS toks
+  SELECT doc_id, list_distinct({TX.nonempty_tokens_sql()}) AS toks
   FROM documents
 )
 SELECT doc_id,

@@ -102,7 +102,7 @@ SQL_DOC_PACK_CHUNKS = f"""
 WITH t AS (
   SELECT source, doc_id,
          doc_id // {PACK_SHARD} AS shard,
-         CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
+         CAST(len({TX.tokens_sql()}) AS BIGINT)
            AS n_toks
   FROM documents
 ), c AS (
@@ -214,7 +214,7 @@ def q_domain_mix_sample(spark: SparkSession, sf: str) -> DataFrame:
 SQL_DOMAIN_MIX_SAMPLE = f"""
 WITH d AS (
   SELECT source, doc_id,
-         CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
+         CAST(len({TX.tokens_sql()}) AS BIGINT)
            AS n_toks,
          substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS hx
   FROM documents
@@ -342,7 +342,7 @@ def q_doc_repetition_filter(spark: SparkSession, sf: str) -> DataFrame:
 
 SQL_DOC_REPETITION_FILTER = f"""
 WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+  SELECT doc_id, {TX.tokens_sql()} AS w
   FROM documents
 ), s AS (
   SELECT doc_id,
@@ -436,9 +436,9 @@ def q_filter_attrition_report(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_FILTER_ATTRITION_REPORT = """
+SQL_FILTER_ATTRITION_REPORT = f"""
 WITH t AS (
-  SELECT string_split_regex(trim(text), '\\s+') AS w FROM documents
+  SELECT {TX.tokens_sql()} AS w FROM documents
 ), f AS (
   SELECT CASE WHEN len(w) >= 25 THEN 1 ELSE 0 END AS f1,
          CASE WHEN CAST(list_sum(list_transform(w, x -> length(x)))
@@ -446,8 +446,7 @@ WITH t AS (
               THEN 1 ELSE 0 END AS f2,
          CASE WHEN CAST(len(list_distinct(w)) AS DOUBLE) / len(w) >= 0.45
               THEN 1 ELSE 0 END AS f3,
-         CASE WHEN len(list_filter(w,
-                x -> x IN ('the', 'a', 'of', 'and', 'to', 'in'))) >= 1
+         CASE WHEN len(list_filter(w, x -> x IN {TX.STOPWORDS_SQL})) >= 1
               THEN 1 ELSE 0 END AS f4
   FROM t
 ), c AS (
@@ -555,7 +554,7 @@ def q_corpus_train_val_split(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_CORPUS_TRAIN_VAL_SPLIT = """
+SQL_CORPUS_TRAIN_VAL_SPLIT = f"""
 WITH t AS (
   SELECT source,
          CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
@@ -563,7 +562,7 @@ WITH t AS (
               WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
                    < 'f3333333' THEN 'val'
               ELSE 'test' END AS split,
-         CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
+         CAST(len({TX.tokens_sql()}) AS BIGINT)
            AS n_toks
   FROM documents
 )
@@ -757,10 +756,8 @@ def q_preference_pair_dedup(spark: SparkSession, sf: str) -> DataFrame:
 SQL_PREFERENCE_PAIR_DEDUP = f"""
 WITH toks AS (
   SELECT doc_id, lang, source, n_chars,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t,
-         md5(trim(regexp_replace(regexp_replace(lower(text),
-               '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS fp
+         {TX.nonempty_tokens_sql()} AS t,
+         {TX.fingerprint_sql()} AS fp
   FROM documents
 ), sh AS (
   SELECT doc_id, lang, source, n_chars, fp,

@@ -12,23 +12,25 @@ against exact ground truth instead.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-
-#: BPE pattern with SQL-escaped single quotes
-TX_BPE_PATTERN_SQL = TX.BPE_ISH_PATTERN.replace("'", "''")
+from ..functions.vectors import cosine_sql, vector_sql
 from ..operators.minhash import minhash_near_duplicates
 from ..operators.multimodal import attach_binary_payload, extract_features
 from ..operators.simhash import simhash
-from ..operators.similarity import knn_join, lsh_topk, topk_bruteforce
+from ..operators.similarity import (
+    band_hyperplanes,
+    band_signatures_sql,
+    knn_join,
+    topk_bruteforce,
+)
 from ..sources.tables import local_table
 from .data import load, registry, spread_scan
 
 #: fixed query text for n-gram similarity scoring
 QUERY_TEXT = "spark query join filter group data"
-STOPWORD_SQL = "('the', 'a', 'of', 'and', 'to', 'in')"
 
 
 # ------------------------------------------------------ text analysis
@@ -66,19 +68,19 @@ SQL_TEXT_TOKEN_STATS = f"""
 WITH t AS (
   SELECT doc_id,
          CAST(length(text) AS BIGINT) AS n_chars,
-         string_split_regex(trim(text), '\\s+') AS toks
+         {TX.tokens_sql()} AS toks
   FROM documents
 )
 SELECT doc_id, n_chars,
        CAST(len(toks) AS BIGINT) AS n_tokens,
        CAST(list_sum(list_transform(toks, x -> length(x))) AS BIGINT)
          AS sum_token_len,
-       CAST(len(list_filter(toks, x -> x IN {STOPWORD_SQL})) AS BIGINT)
+       CAST(len(list_filter(toks, x -> x IN {TX.STOPWORDS_SQL})) AS BIGINT)
          AS n_stopwords,
        ROUND(CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE)
              / len(toks), 4) AS avg_token_len,
-       ROUND(CAST(len(list_filter(toks, x -> x IN {STOPWORD_SQL})) AS DOUBLE)
-             / len(toks), 4) AS stopword_ratio
+       ROUND(CAST(len(list_filter(toks, x -> x IN {TX.STOPWORDS_SQL}))
+                  AS DOUBLE) / len(toks), 4) AS stopword_ratio
 FROM t
 """
 
@@ -94,20 +96,9 @@ def q_lang_id_confusion(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_LANG_ID_CONFUSION = """
+SQL_LANG_ID_CONFUSION = f"""
 WITH pred AS (
-  SELECT lang,
-         CASE
-           WHEN contains(' ' || lower(text) || ' ', ' the ')
-                OR contains(' ' || lower(text) || ' ', ' and ') THEN 'en'
-           WHEN contains(' ' || lower(text) || ' ', ' der ')
-                OR contains(' ' || lower(text) || ' ', ' und ') THEN 'de'
-           WHEN contains(' ' || lower(text) || ' ', ' el ')
-                OR contains(' ' || lower(text) || ' ', ' la ') THEN 'es'
-           WHEN contains(' ' || lower(text) || ' ', ' le ')
-                OR contains(' ' || lower(text) || ' ', ' et ') THEN 'fr'
-           ELSE 'unknown'
-         END AS predicted_lang
+  SELECT lang, {TX.lang_id_sql()} AS predicted_lang
   FROM documents
 )
 SELECT lang, predicted_lang, COUNT(*) AS n_docs
@@ -121,10 +112,8 @@ def q_doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     return d.select("doc_id", TX.fingerprint("text").alias("fingerprint"))
 
 
-SQL_DOC_FINGERPRINT = """
-SELECT doc_id,
-       md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),
-                               '\\s+', ' ', 'g'))) AS fingerprint
+SQL_DOC_FINGERPRINT = f"""
+SELECT doc_id, {TX.fingerprint_sql()} AS fingerprint
 FROM documents
 """
 
@@ -168,7 +157,7 @@ def q_ngram_jaccard_query(spark: SparkSession, sf: str) -> DataFrame:
 SQL_NGRAM_JACCARD_QUERY = f"""
 WITH t AS (
   SELECT doc_id,
-         list_distinct(string_split_regex(trim(lower(text)), '\\s+')) AS toks,
+         list_distinct({TX.tokens_sql(lowercase=True)}) AS toks,
          string_split('{QUERY_TEXT}', ' ') AS q
   FROM documents
 )
@@ -200,24 +189,21 @@ def q_token_count_bpe(spark: SparkSession, sf: str) -> DataFrame:
 
 SQL_TOKEN_COUNT_BPE = f"""
 SELECT doc_id,
-       CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-         AS n_ws_tokens,
+       CAST(len({TX.tokens_sql()}) AS BIGINT) AS n_ws_tokens,
        CAST(len(regexp_extract_all(text,
-         '{TX_BPE_PATTERN_SQL}')) AS BIGINT) AS n_bpe_tokens,
+         '{TX.BPE_ISH_PATTERN_SQL}')) AS BIGINT) AS n_bpe_tokens,
        ROUND(CAST(length(text) AS DOUBLE)
              / GREATEST(CAST(len(regexp_extract_all(text,
-                 '{TX_BPE_PATTERN_SQL}')) AS DOUBLE), 1.0), 4)
+                 '{TX.BPE_ISH_PATTERN_SQL}')) AS DOUBLE), 1.0), 4)
          AS chars_per_token
 FROM documents
 """
 
 
-def q_doc_quality_score(spark: SparkSession, sf: str) -> DataFrame:
-    """Composite quality score (length, stopword presence, alphabetic
-    ratio) + bucket — the filter stage of a training-data pipeline,
-    zero UDFs, one narrow pass."""
-    d = load(spark, sf, "documents")
-    toks = TX.nonempty_tokens("text")
+def _quality_score(toks: Column) -> Column:
+    """Composite quality score of a document from its nonempty
+    lowercase tokens ``toks``: length, stopword presence and
+    alphabetic ratio, rounded to 4 dp."""
     n_tokens = F.size(toks).cast("double")
     stop_ratio = TX.stopword_count(toks).cast("double") / F.greatest(
         n_tokens, F.lit(1.0)
@@ -225,12 +211,43 @@ def q_doc_quality_score(spark: SparkSession, sf: str) -> DataFrame:
     alpha_ratio = F.length(
         F.regexp_replace("text", "[^a-zA-Z]", "")
     ).cast("double") / F.greatest(F.length("text").cast("double"), F.lit(1.0))
-    score = F.round(
+    return F.round(
         0.4 * F.least(n_tokens / 100.0, F.lit(1.0))
         + 0.3 * F.least(stop_ratio * 5.0, F.lit(1.0))
         + 0.3 * alpha_ratio,
         4,
     )
+
+
+def _quality_sql(keep: str) -> str:
+    """DuckDB form of :func:`_quality_score`: CTE ``t`` holds the
+    ``keep`` columns and the score's inputs per document, CTE ``s``
+    adds ``quality_score``."""
+    return f"""t AS (
+  SELECT {keep},
+         CAST(len({TX.nonempty_tokens_sql()}) AS DOUBLE) AS n_tokens,
+         CAST(len(list_filter({TX.nonempty_tokens_sql()},
+                              x -> x IN {TX.STOPWORDS_SQL})) AS DOUBLE)
+           AS n_stop,
+         CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
+           AS n_alpha,
+         CAST(length(text) AS DOUBLE) AS n_chars
+  FROM documents
+), s AS (
+  SELECT *,
+         ROUND(0.4 * LEAST(n_tokens / 100.0, 1.0)
+               + 0.3 * LEAST(n_stop / GREATEST(n_tokens, 1.0) * 5.0, 1.0)
+               + 0.3 * n_alpha / GREATEST(n_chars, 1.0), 4) AS quality_score
+  FROM t
+)"""
+
+
+def q_doc_quality_score(spark: SparkSession, sf: str) -> DataFrame:
+    """Composite quality score (length, stopword presence, alphabetic
+    ratio) + bucket — the filter stage of a training-data pipeline,
+    zero UDFs, one narrow pass."""
+    d = load(spark, sf, "documents")
+    score = _quality_score(TX.nonempty_tokens("text"))
     return d.select(
         "doc_id",
         score.alias("quality_score"),
@@ -242,24 +259,7 @@ def q_doc_quality_score(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_DOC_QUALITY_SCORE = f"""
-WITH t AS (
-  SELECT doc_id,
-         CAST(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              x -> x != '')) AS DOUBLE) AS n_tokens,
-         CAST(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              x -> x IN {STOPWORD_SQL})) AS DOUBLE)
-           AS n_stop,
-         CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
-           AS n_alpha,
-         CAST(length(text) AS DOUBLE) AS n_chars
-  FROM documents
-), s AS (
-  SELECT doc_id,
-         ROUND(0.4 * LEAST(n_tokens / 100.0, 1.0)
-               + 0.3 * LEAST(n_stop / GREATEST(n_tokens, 1.0) * 5.0, 1.0)
-               + 0.3 * n_alpha / GREATEST(n_chars, 1.0), 4) AS quality_score
-  FROM t
-)
+WITH {_quality_sql("doc_id")}
 SELECT doc_id, quality_score,
        CASE WHEN quality_score >= 0.7 THEN 'high'
             WHEN quality_score >= 0.4 THEN 'medium'
@@ -271,6 +271,49 @@ FROM s
 # ------------------------------------------------- similarity search
 
 
+#: the oracles' view of the corpus as DOUBLE[] vectors
+_V_SQL = (
+    "v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
+)
+
+
+def _ranked_sql(scored: str) -> str:
+    """``scored``'s (query_id, neighbor_id, cos_raw) rows with their
+    per-query rank ``rnk``: cosine at 12 dp descending, ties by
+    neighbor_id."""
+    return f"""
+  SELECT query_id, neighbor_id, cos_raw,
+         ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY ROUND(cos_raw, 12) DESC, neighbor_id) AS rnk
+  FROM {scored}
+"""
+
+
+def _top5_sql(ranked: str) -> str:
+    """The top-5 readout of a :func:`_ranked_sql` CTE."""
+    return f"""
+SELECT query_id, neighbor_id,
+       ROUND(cos_raw, 6) AS cosine_sim,
+       CAST(rnk AS BIGINT) AS "rank"
+FROM {ranked}
+WHERE rnk <= 5
+"""
+
+
+def _exact_probe_sql(n_queries: int) -> str:
+    """DuckDB form of ``knn_join`` for the queries ``vec_id <
+    n_queries``: CTEs q, exact_scored (cosine to every vector) and
+    exact_ranked, over ``v``."""
+    return f"""q AS (SELECT vec_id AS query_id, v AS qv FROM v
+      WHERE vec_id < {n_queries}),
+exact_scored AS (
+  SELECT q.query_id, e.vec_id AS neighbor_id,
+         {cosine_sql("e.v", "q.qv")} AS cos_raw
+  FROM v e CROSS JOIN q
+),
+exact_ranked AS ({_ranked_sql("exact_scored")})"""
+
+
 def q_embedding_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Exact one-vs-corpus cosine top-20 (brute-force baseline)."""
     emb = load(spark, sf, "embeddings")
@@ -278,15 +321,12 @@ def q_embedding_topk(spark: SparkSession, sf: str) -> DataFrame:
     return topk_bruteforce(emb, qrow[0], k=20)
 
 
-SQL_EMBEDDING_TOPK = """
+SQL_EMBEDDING_TOPK = f"""
 WITH q AS (
   SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
 ), scored AS (
   SELECT vec_id,
-         list_sum(list_transform(list_zip(embedding::DOUBLE[], qv),
-                                 x -> x[1] * x[2]))
-         / (sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x)))
-            * sqrt(list_sum(list_transform(qv, x -> x * x)))) AS cos_raw
+         {cosine_sql("embedding::DOUBLE[]", "qv")} AS cos_raw
   FROM embeddings, q
 )
 SELECT vec_id, ROUND(cos_raw, 6) AS cosine_sim
@@ -323,25 +363,9 @@ def q_knn_join(spark: SparkSession, sf: str) -> DataFrame:
     return knn_join(queries, emb, k=5)
 
 
-SQL_KNN_JOIN = """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-  FROM embeddings WHERE vec_id < 5
-), scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         list_sum(list_transform(list_zip(e.embedding::DOUBLE[], q.qv),
-                                 x -> x[1] * x[2]))
-         / (sqrt(list_sum(list_transform(e.embedding::DOUBLE[], x -> x * x)))
-            * sqrt(list_sum(list_transform(q.qv, x -> x * x)))) AS cos_raw
-  FROM embeddings e CROSS JOIN q
+SQL_KNN_JOIN = (
+    f"WITH {_V_SQL},\n{_exact_probe_sql(5)}{_top5_sql('exact_ranked')}"
 )
-SELECT query_id, neighbor_id, ROUND(cos_raw, 6) AS cosine_sim,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY ROUND(cos_raw, 12) DESC, neighbor_id) AS BIGINT)
-         AS rank
-FROM scored
-QUALIFY rank <= 5
-"""
 
 
 # ------------------------------- oracle-free (rows-only) scale paths
@@ -371,17 +395,15 @@ def q_minhash_neardup_md5(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _minhash_md5_oracle_sql(
-    n_hashes: int = 64, n_bands: int = 16, max_bucket: int = 200,
-    tail: str = "SELECT id_a, id_b, jaccard FROM scored"
-    " WHERE jaccard >= 0.4",
-) -> str:
+def _minhash_md5_ctes_sql(n_hashes: int = 64, n_bands: int = 16) -> str:
+    """DuckDB form of the md5 Carter-Wegman MinHash stages: CTEs toks,
+    sh (distinct word-bigram shingles), hsh (one md5 digest per
+    shingle), sigt (``n_hashes`` minhashes per document) and band (one
+    bucket key per band), keyed by ``doc_id`` and its parity ``par``
+    (the batch split of ``incremental_neardup_fixed``)."""
     band_rows = n_hashes // n_bands
-    return f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
+    return f"""toks AS (
+  SELECT doc_id, {TX.nonempty_tokens_sql()} AS t
   FROM documents
 ), sh AS (
   SELECT doc_id,
@@ -395,7 +417,7 @@ WITH toks AS (
                 % 2147483647) AS hx
   FROM sh WHERE len(shingles) > 0
 ), sigt AS (
-  SELECT doc_id, shingles,
+  SELECT doc_id, doc_id % 2 AS par, shingles,
          list_transform(range(0, {n_hashes}),
            i -> list_min(list_transform(hx,
                   x -> (((1103515245 * (i + 1) + 12345) % 2147483647) * x
@@ -403,13 +425,22 @@ WITH toks AS (
                        % 2147483647))) AS sig
   FROM hsh
 ), band AS (
-  SELECT doc_id,
+  SELECT doc_id, par,
          b::VARCHAR || ':' ||
            array_to_string(list_slice(sig, b*{band_rows}+1,
                                       b*{band_rows}+{band_rows}), ',')
            AS bucket
   FROM sigt CROSS JOIN UNNEST(range(0, {n_bands})) AS u(b)
-), ok_buckets AS (
+)"""
+
+
+def _minhash_md5_oracle_sql(
+    n_hashes: int = 64, n_bands: int = 16, max_bucket: int = 200,
+    tail: str = "SELECT id_a, id_b, jaccard FROM scored"
+    " WHERE jaccard >= 0.4",
+) -> str:
+    return f"""
+WITH {_minhash_md5_ctes_sql(n_hashes, n_bands)}, ok_buckets AS (
   SELECT bucket FROM band GROUP BY 1
   HAVING COUNT(*) >= 2 AND COUNT(*) <= {max_bucket}
 ), cand AS (
@@ -584,46 +615,14 @@ dup{tag} AS (
 
 def _inc_neardup_oracle_sql(n_hashes: int = 64, n_bands: int = 16) -> str:
     """DuckDB twin of ``q_incremental_neardup_fixed``: the shared md5
-    Carter-Wegman signature/band CTEs (the ``_minhash_md5_oracle_sql``
-    family), then both incremental passes replayed exactly — batch-1
+    Carter-Wegman signature/band CTEs (``_minhash_md5_ctes_sql``),
+    then both incremental passes replayed exactly — batch-1
     within-batch gate; batch-2 within-batch gate; batch-2 survivors
     probing batch-1 SURVIVORS' buckets (width-capped over the stored
     side, mirroring the Window cap in ``gate_batch_sigs``) with exact
     Jaccard against stored shingles; first-writer-wins."""
-    band_rows = n_hashes // n_bands
     return f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, len(t)),
-                                      i -> t[i] || ' ' || t[i+1])) AS shingles
-  FROM toks
-), hsh AS (
-  SELECT doc_id, shingles,
-         list_transform(shingles,
-           s -> CAST(('0x' || substr(md5(s), 1, 13)) AS BIGINT)
-                % 2147483647) AS hx
-  FROM sh WHERE len(shingles) > 0
-), sigt AS (
-  SELECT doc_id, doc_id % 2 AS par, shingles,
-         list_transform(range(0, {n_hashes}),
-           i -> list_min(list_transform(hx,
-                  x -> (((1103515245 * (i + 1) + 12345) % 2147483647) * x
-                        + (69069 * (i + 1) + 1) % 2147483647)
-                       % 2147483647))) AS sig
-  FROM hsh
-), band AS (
-  SELECT doc_id, par,
-         b::VARCHAR || ':' ||
-           array_to_string(list_slice(sig, b*{band_rows}+1,
-                                      b*{band_rows}+{band_rows}), ',')
-           AS bucket
-  FROM sigt CROSS JOIN UNNEST(range(0, {n_bands})) AS u(b)
-),
+WITH {_minhash_md5_ctes_sql(n_hashes, n_bands)},
 {_inc_within_sql(0, '1')},
 f1 AS (
   SELECT s.* FROM sigt s WHERE par = 0
@@ -671,28 +670,24 @@ ORDER BY doc_id
 SQL_INCREMENTAL_NEARDUP_FIXED = _inc_neardup_oracle_sql()
 
 
-def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
-    """Duplicate GROUPS from near-dup PAIRS: MinHash md5 pairs reduced
-    by alternating large-star/small-star connected components
-    (``operators.components``, O(log n) shuffle rounds) to
-    (doc_id, cluster_id = min doc_id of the duplicate group) — the
-    keep-one-canonical-document step of corpus dedup.  Oracle: DuckDB
-    reproduces the pairs value-for-value (md5 hash family) and labels
-    components with a recursive min-reachability CTE."""
+def _neardup_clusters(d: DataFrame) -> DataFrame:
+    """``(id, component)`` of the md5 MinHash near-dup pairs of ``d``:
+    alternating large-star/small-star connected components
+    (``operators.components``, O(log n) shuffle rounds), component =
+    min doc_id of the duplicate group."""
     from ..operators.components import connected_components
     from ..operators.minhash import minhash_near_duplicates_md5
 
-    d = load(spark, sf, "documents")
     pairs = minhash_near_duplicates_md5(
         d, "doc_id", "text", threshold=0.4, shingle_n=2
     )
-    return connected_components(pairs, "id_a", "id_b").select(
-        F.col("id").alias("doc_id"),
-        F.col("component").alias("cluster_id"),
-    )
+    return connected_components(pairs, "id_a", "id_b")
 
 
-SQL_DEDUP_CLUSTERS = f"""
+#: DuckDB form of :func:`_neardup_clusters`: the md5 MinHash pairs
+#: (value-for-value), components labelled by a recursive
+#: min-reachability CTE ``clusters(doc_id, cluster_id)``
+_NEARDUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE pairs AS (
   SELECT id_a, id_b FROM ({_minhash_md5_oracle_sql()}) base
 ), edges AS (
@@ -703,9 +698,24 @@ WITH RECURSIVE pairs AS (
   SELECT u, u FROM edges
   UNION
   SELECT e.v, w.comp FROM walk w JOIN edges e ON e.u = w.id
+), clusters AS (
+  SELECT id AS doc_id, MIN(comp) AS cluster_id FROM walk GROUP BY id
+)"""
+
+
+def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
+    """Duplicate GROUPS from near-dup PAIRS (:func:`_neardup_clusters`)
+    as (doc_id, cluster_id) — the keep-one-canonical-document step of
+    corpus dedup."""
+    return _neardup_clusters(load(spark, sf, "documents")).select(
+        F.col("id").alias("doc_id"),
+        F.col("component").alias("cluster_id"),
+    )
+
+
+SQL_DEDUP_CLUSTERS = (
+    _NEARDUP_CLUSTERS_SQL + "\nSELECT doc_id, cluster_id FROM clusters\n"
 )
-SELECT id AS doc_id, MIN(comp) AS cluster_id FROM walk GROUP BY id
-"""
 
 
 def q_simhash_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
@@ -723,27 +733,35 @@ def q_simhash_bits_md5(spark: SparkSession, sf: str) -> DataFrame:
     return simhash_bits_md5(d, "doc_id", "text")
 
 
-SQL_SIMHASH_BITS_MD5 = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
+def _simhash_bits_sql(where: str = "") -> str:
+    """DuckDB form of ``operators.simhash.simhash_bits_md5`` over
+    ``documents`` (filtered by ``where``): CTEs toks, th and bits, the
+    64-char md5 sign-fold fingerprint of every nonempty document."""
+    return f"""toks AS (
+  SELECT doc_id, {TX.nonempty_tokens_sql()} AS t
+  FROM documents{where}
 ), th AS (
   SELECT doc_id, list_transform(t, tok -> md5(tok)) AS hs
   FROM toks WHERE len(t) > 0
-)
-SELECT doc_id,
-       array_to_string(
-         list_transform(range(0, 64), i ->
-           CASE WHEN list_sum(list_transform(hs, h ->
-                  CASE WHEN contains(
-                         (['89abcdef', '4567cdef', '2367abef', '13579bdf'])[i % 4 + 1],
-                         substr(h, CAST(i // 4 AS INT) + 1, 1))
-                       THEN 1 ELSE -1 END)) > 0
-                THEN '1' ELSE '0' END),
-         '') AS bits
-FROM th
+), bits AS (
+  SELECT doc_id,
+         array_to_string(
+           list_transform(range(0, 64), i ->
+             CASE WHEN list_sum(list_transform(hs, h ->
+                    CASE WHEN contains(
+                           (['89abcdef', '4567cdef', '2367abef',
+                             '13579bdf'])[i % 4 + 1],
+                           substr(h, CAST(i // 4 AS INT) + 1, 1))
+                         THEN 1 ELSE -1 END)) > 0
+                  THEN '1' ELSE '0' END),
+           '') AS bits
+  FROM th
+)"""
+
+
+SQL_SIMHASH_BITS_MD5 = f"""
+WITH {_simhash_bits_sql()}
+SELECT doc_id, bits FROM bits
 """
 
 
@@ -765,69 +783,34 @@ def q_embedding_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     return lsh_topk_banded(emb, queries, k=5, **_LSH_TOPK)
 
 
-def _lsh_sigs_union_sql() -> str:
-    """The ``sigs`` CTE body shared by the LSH oracles: per-band
-    sign-bit signatures as CASE sums over the seeded hyperplane
-    literals (one SELECT per band, UNION ALL)."""
-    from ..operators.similarity import band_hyperplanes
-
+def _lsh_probe_sql(n_queries: int) -> str:
+    """DuckDB form of ``lsh_topk_banded`` at ``_LSH_TOPK`` for the
+    queries ``vec_id < n_queries``: CTEs sigs (per-band sign-bit
+    signatures), cand (OR-of-bands candidates, DISTINCT on the pair),
+    lsh_scored (exact cosine rerank) and lsh_ranked, over ``v``."""
     p = _LSH_TOPK
     planes = band_hyperplanes(p["dim"], p["n_bands"], p["n_bits"], p["seed"])
-    bands = []
-    for b in range(p["n_bands"]):
-        bits = []
-        for i in range(p["n_bits"]):
-            lits = ", ".join(repr(float(x)) for x in planes[b][i])
-            bits.append(
-                f"(CASE WHEN list_dot_product(v, [{lits}]) >= 0 "
-                f"THEN {1 << i} ELSE 0 END)"
-            )
-        sig = "\n     + ".join(bits)
-        bands.append(
-            f"SELECT vec_id, v, {b} AS band,\n"
-            f"  CAST({sig} AS BIGINT) AS sig\nFROM v"
-        )
-    return "\nUNION ALL\n".join(bands)
-
-
-def sql_embedding_lsh_topk() -> str:
-    """DuckDB twin of the BANDED probe: per-band sign-bit signatures
-    as CASE sums over the seeded hyperplane literals, OR-of-bands
-    candidate join (DISTINCT on the pair), exact cosine rerank +
-    row_number cut.  Same construction as
-    ``analytics._sql_lsh_pairs``; determinism makes the approximate
-    operator value-checkable."""
-    union = _lsh_sigs_union_sql()
-    return f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-sigs AS ({union}),
+    return f"""sigs AS ({band_signatures_sql(planes)}),
 cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
   FROM sigs q
   JOIN sigs c ON q.band = c.band AND q.sig = c.sig
-  WHERE q.vec_id < 5
+  WHERE q.vec_id < {n_queries}
 ),
-scored AS (
+lsh_scored AS (
   SELECT cand.query_id, cand.neighbor_id,
-         list_sum(list_transform(list_zip(q.v, c.v), x -> x[1] * x[2]))
-         / (sqrt(list_sum(list_transform(q.v, x -> x * x)))
-            * sqrt(list_sum(list_transform(c.v, x -> x * x)))) AS cos_raw
+         {cosine_sql("q.v", "c.v")} AS cos_raw
   FROM cand
   JOIN v q ON q.vec_id = cand.query_id
   JOIN v c ON c.vec_id = cand.neighbor_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_raw,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(cos_raw, 12) DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id,
-       ROUND(cos_raw, 6) AS cosine_sim,
-       CAST(rnk AS BIGINT) AS "rank"
-FROM ranked
-WHERE rnk <= 5
-"""
+lsh_ranked AS ({_ranked_sql("lsh_scored")})"""
+
+
+def sql_embedding_lsh_topk() -> str:
+    """DuckDB twin of the BANDED probe (:func:`_lsh_probe_sql`);
+    determinism makes the approximate operator value-checkable."""
+    return f"WITH {_V_SQL},\n{_lsh_probe_sql(5)}{_top5_sql('lsh_ranked')}"
 
 
 def q_embedding_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -902,28 +885,20 @@ def q_ivf_stream_topk_fixed(spark: SparkSession, sf: str) -> DataFrame:
     return ivf_probe(lists, queries, cents, k=5, n_probe=4)
 
 
-def _ivf_cents_values_sql() -> str:
-    """The fixed-centroid VALUES rows shared by the fixed-IVF
-    oracles: one ``(list_id, [64 double literals])`` row per head."""
-    cents = _ivf_fixed_centroids()
-    return ",\n  ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}])"
-        for i, c in enumerate(cents)
-    )
+def _values_rows_sql(cents) -> str:
+    """VALUES rows ``(i, [vector literal])``, one per fixed centroid."""
+    return ",\n  ".join(f"({i}, {vector_sql(c)})" for i, c in enumerate(cents))
 
 
-def sql_embedding_ivf_topk_fixed() -> str:
-    """DuckDB twin of ``q_embedding_ivf_topk_fixed``: the fixed
-    centroids as list literals, nearest-list assignment and n_probe=4
-    probing as ROW_NUMBER over the vector×centroid dot products
-    (ties by larger list_id, matching the reversed array_sort in
-    ``operators.ivf._nearest_lists``), exact cosine rerank with the
-    fold formula that hash-matches at 6 dp in SQL_EMBEDDING_TOPK."""
-    rows = _ivf_cents_values_sql()
-    return f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-cents(list_id, cv) AS (VALUES
-  {rows}
+def _ivf_probe_sql(n_queries: int) -> str:
+    """DuckDB form of ``ivf_topk`` over the fixed list heads
+    (n_probe=4) for the queries ``vec_id < n_queries``: CTEs cents,
+    dots, assigned (nearest list), probes (the 4 nearest lists; ties by
+    larger list_id, matching the reversed array_sort in
+    ``operators.ivf._nearest_lists``), ivf_scored (exact cosine rerank)
+    and ivf_ranked, over ``v``."""
+    return f"""cents(list_id, cv) AS (VALUES
+  {_values_rows_sql(_ivf_fixed_centroids())}
 ),
 dots AS (
   SELECT v.vec_id, v.v, c.list_id,
@@ -937,29 +912,22 @@ assigned AS (
 ),
 probes AS (
   SELECT vec_id AS query_id, v AS qv, list_id FROM dots
-  WHERE vec_id < 5
+  WHERE vec_id < {n_queries}
   QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
                              ORDER BY dot DESC, list_id DESC) <= 4
 ),
-scored AS (
+ivf_scored AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         list_sum(list_transform(list_zip(p.qv, a.v), x -> x[1] * x[2]))
-         / (sqrt(list_sum(list_transform(p.qv, x -> x * x)))
-            * sqrt(list_sum(list_transform(a.v, x -> x * x)))) AS cos_raw
+         {cosine_sql("p.qv", "a.v")} AS cos_raw
   FROM probes p JOIN assigned a ON p.list_id = a.list_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_raw,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(cos_raw, 12) DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id,
-       ROUND(cos_raw, 6) AS cosine_sim,
-       CAST(rnk AS BIGINT) AS "rank"
-FROM ranked
-WHERE rnk <= 5
-"""
+ivf_ranked AS ({_ranked_sql("ivf_scored")})"""
+
+
+def sql_embedding_ivf_topk_fixed() -> str:
+    """DuckDB twin of ``q_embedding_ivf_topk_fixed``
+    (:func:`_ivf_probe_sql`)."""
+    return f"WITH {_V_SQL},\n{_ivf_probe_sql(5)}{_top5_sql('ivf_ranked')}"
 
 
 def q_training_corpus_prep(spark: SparkSession, sf: str) -> DataFrame:
@@ -982,20 +950,7 @@ def q_training_corpus_prep(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load(spark, sf, "documents")
-    toks = TX.nonempty_tokens("text")
-    n_tokens = F.size(toks).cast("double")
-    stop_ratio = TX.stopword_count(toks).cast("double") / F.greatest(
-        n_tokens, F.lit(1.0)
-    )
-    alpha_ratio = F.length(
-        F.regexp_replace("text", "[^a-zA-Z]", "")
-    ).cast("double") / F.greatest(F.length("text").cast("double"), F.lit(1.0))
-    score = F.round(
-        0.4 * F.least(n_tokens / 100.0, F.lit(1.0))
-        + 0.3 * F.least(stop_ratio * 5.0, F.lit(1.0))
-        + 0.3 * alpha_ratio,
-        4,
-    )
+    score = _quality_score(TX.nonempty_tokens("text"))
     gated = (
         d.filter(TX.lang_id("text") == "en")
         .select(
@@ -1027,30 +982,9 @@ def q_training_corpus_prep(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_TRAINING_CORPUS_PREP = f"""
-WITH t AS (
-  SELECT doc_id, text,
-         CAST(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              x -> x != '')) AS DOUBLE) AS n_tokens,
-         CAST(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              x -> x IN {STOPWORD_SQL})) AS DOUBLE)
-           AS n_stop,
-         CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
-           AS n_alpha,
-         CAST(length(text) AS DOUBLE) AS n_chars
-  FROM documents
-  WHERE contains(' ' || lower(text) || ' ', ' the ')
-     OR contains(' ' || lower(text) || ' ', ' and ')
-), s AS (
-  SELECT doc_id, text,
-         ROUND(0.4 * LEAST(n_tokens / 100.0, 1.0)
-               + 0.3 * LEAST(n_stop / GREATEST(n_tokens, 1.0) * 5.0, 1.0)
-               + 0.3 * n_alpha / GREATEST(n_chars, 1.0), 4) AS quality_score
-  FROM t
-), gated AS (
-  SELECT doc_id, text, quality_score,
-         md5(trim(regexp_replace(regexp_replace(lower(text),
-               '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS fp
-  FROM s WHERE quality_score >= 0.4
+WITH {_quality_sql("doc_id, text")}, gated AS (
+  SELECT doc_id, text, quality_score, {TX.fingerprint_sql()} AS fp
+  FROM s WHERE {TX.lang_id_sql()} = 'en' AND quality_score >= 0.4
 ), deduped AS (
   SELECT doc_id, text, quality_score FROM gated
   QUALIFY row_number() OVER (PARTITION BY fp ORDER BY doc_id) = 1
@@ -1058,7 +992,7 @@ WITH t AS (
 SELECT CASE WHEN quality_score >= 0.7 THEN 'high' ELSE 'medium' END
          AS quality_bucket,
        COUNT(*) AS n_docs,
-       CAST(SUM(len(regexp_extract_all(text, '{TX_BPE_PATTERN_SQL}')))
+       CAST(SUM(len(regexp_extract_all(text, '{TX.BPE_ISH_PATTERN_SQL}')))
             AS BIGINT) AS total_bpe_tokens,
        ROUND(CAST(SUM(CAST(quality_score AS DECIMAL(18,4))) AS DOUBLE)
              / COUNT(*), 4) AS mean_quality
@@ -1104,11 +1038,9 @@ def q_doc_chunking(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_DOC_CHUNKING = """
+SQL_DOC_CHUNKING = f"""
 WITH t AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\\s+'),
-                     x -> x != '') AS toks
+  SELECT doc_id, {TX.nonempty_tokens_sql(lowercase=False)} AS toks
   FROM documents
 ), nonempty AS (
   SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0
@@ -1154,11 +1086,10 @@ def q_eval_contamination(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_EVAL_CONTAMINATION = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
+#: the distinct md5-hashed word 5-grams of each document: CTEs toks
+#: and grams(doc_id, gram)
+_GRAMS5_SQL = f"""toks AS (
+  SELECT doc_id, {TX.nonempty_tokens_sql()} AS t
   FROM documents
 ), grams AS (
   SELECT doc_id,
@@ -1166,7 +1097,11 @@ WITH toks AS (
                i -> array_to_string(list_slice(t, i, i + 4), ' ')))))
            AS gram
   FROM toks
-), ev AS (
+)"""
+
+
+SQL_EVAL_CONTAMINATION = f"""
+WITH {_GRAMS5_SQL}, ev AS (
   SELECT DISTINCT gram FROM grams WHERE doc_id % 10 = 7
 )
 SELECT doc_id, COUNT(*) AS n_shared
@@ -1259,15 +1194,10 @@ def q_dedup_keep_canonical(spark: SparkSession, sf: str) -> DataFrame:
     (cluster members whose doc_id != cluster min) and account for
     what survived — the last step of pairs → clusters → pruned
     corpus.  The drop-list is a LEFT ANTI join against the (tiny)
-    cluster relation; the corpus never shuffles."""
-    from ..operators.components import connected_components
-    from ..operators.minhash import minhash_near_duplicates_md5
-
+    cluster relation (:func:`_neardup_clusters`); the corpus never
+    shuffles."""
     d = load(spark, sf, "documents")
-    pairs = minhash_near_duplicates_md5(
-        d, "doc_id", "text", threshold=0.4, shingle_n=2
-    )
-    clusters = connected_components(pairs, "id_a", "id_b")
+    clusters = _neardup_clusters(d)
     drop = clusters.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias("doc_id")
     )
@@ -1280,20 +1210,7 @@ def q_dedup_keep_canonical(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_DEDUP_KEEP_CANONICAL = f"""
-WITH RECURSIVE pairs AS (
-  SELECT id_a, id_b FROM ({_minhash_md5_oracle_sql()}) base
-), edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-), walk(id, comp) AS (
-  SELECT u, u FROM edges
-  UNION
-  SELECT e.v, w.comp FROM walk w JOIN edges e ON e.u = w.id
-), clusters AS (
-  SELECT id AS doc_id, MIN(comp) AS cluster_id FROM walk GROUP BY id
-), kept AS (
+SQL_DEDUP_KEEP_CANONICAL = _NEARDUP_CLUSTERS_SQL + """, kept AS (
   SELECT d.* FROM documents d
   WHERE d.doc_id NOT IN
     (SELECT doc_id FROM clusters WHERE doc_id != cluster_id)
@@ -1354,6 +1271,20 @@ def _doc_terms(spark: SparkSession, sf: str):
     return tf, lens
 
 
+#: DuckDB form of :func:`_doc_terms`'s ``tf``: CTEs toks, nonempty
+#: (documents with a token) and tf(doc_id, term, tf)
+_DOC_TERMS_SQL = f"""toks AS (
+  SELECT doc_id, {TX.nonempty_tokens_sql()} AS t
+  FROM documents
+), nonempty AS (
+  SELECT doc_id, t FROM toks WHERE len(t) > 0
+), tf AS (
+  SELECT doc_id, u.term, COUNT(*) AS tf
+  FROM nonempty, UNNEST(t) AS u(term)
+  GROUP BY 1, 2
+)"""
+
+
 def q_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (smooth idf =
     ln((N+1)/(df+1))) — the keyword-extraction / feature-weighting
@@ -1394,19 +1325,8 @@ def q_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_TFIDF_TOP_TERMS = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), nonempty AS (
-  SELECT doc_id, t FROM toks WHERE len(t) > 0
-), tf AS (
-  SELECT doc_id, u.term, COUNT(*) AS tf
-  FROM nonempty, UNNEST(t) AS u(term)
-  GROUP BY 1, 2
-), dfreq AS (
+SQL_TFIDF_TOP_TERMS = f"""
+WITH {_DOC_TERMS_SQL}, dfreq AS (
   SELECT term, COUNT(*) AS df FROM tf GROUP BY 1
 ), n AS (
   SELECT COUNT(*) AS n_docs FROM nonempty
@@ -1462,19 +1382,8 @@ def q_bm25_search(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_BM25_SEARCH = f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), nonempty AS (
-  SELECT doc_id, t FROM toks WHERE len(t) > 0
-), lens AS (
+WITH {_DOC_TERMS_SQL}, lens AS (
   SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM nonempty
-), tf AS (
-  SELECT doc_id, u.term, COUNT(*) AS tf
-  FROM nonempty, UNNEST(t) AS u(term)
-  GROUP BY 1, 2
 ), qtf AS (
   SELECT * FROM tf
   WHERE term IN ({", ".join("'" + t + "'" for t in QUERY_TEXT.split())})
@@ -1556,18 +1465,7 @@ def q_doc_classifier_score(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_DOC_CLASSIFIER_SCORE = f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), nonempty AS (
-  SELECT doc_id, t FROM toks WHERE len(t) > 0
-), tf AS (
-  SELECT doc_id, u.term, COUNT(*) AS tf
-  FROM nonempty, UNNEST(t) AS u(term)
-  GROUP BY 1, 2
-), lens AS (
+WITH {_DOC_TERMS_SQL}, lens AS (
   SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1
 ), dfreq AS (
   SELECT term, COUNT(*) AS df FROM tf GROUP BY 1
@@ -1623,19 +1521,8 @@ def q_vocab_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_VOCAB_TOP_TERMS = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), nonempty AS (
-  SELECT doc_id, t FROM toks WHERE len(t) > 0
-), tf AS (
-  SELECT doc_id, u.term, COUNT(*) AS tf
-  FROM nonempty, UNNEST(t) AS u(term)
-  GROUP BY 1, 2
-), counts AS (
+SQL_VOCAB_TOP_TERMS = f"""
+WITH {_DOC_TERMS_SQL}, counts AS (
   SELECT term, SUM(tf) AS n, COUNT(*) AS n_docs
   FROM tf GROUP BY 1 HAVING SUM(tf) >= 5
   ORDER BY n DESC, term LIMIT 500
@@ -1849,6 +1736,46 @@ GROUP BY source
 """
 
 
+def _unigram_scores(tf: DataFrame, score) -> DataFrame:
+    """Per document of the ``(doc_id, term, tf)`` relation: ``n_toks``
+    and ``score(lp)``, where ``lp`` is its mean token log-probability
+    under the corpus unigram LM (term count / total tokens)."""
+    term_freq = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
+    total = term_freq.agg(F.sum("cnt").cast("double").alias("total"))
+    lp = (
+        F.sum(F.col("tf") * F.log(F.col("cnt"))) / F.sum("tf")
+        - F.log(F.first("total"))
+    )
+    return (
+        tf.join(term_freq, "term")
+        .crossJoin(F.broadcast(total))
+        .groupBy("doc_id")
+        .agg(F.sum("tf").cast("bigint").alias("n_toks"), score(lp))
+    )
+
+
+#: DuckDB form of the corpus unigram LM: CTEs freq(term, cnt) and
+#: tot(total), over ``tf``
+_UNIGRAM_LM_SQL = """freq AS (
+  SELECT term, SUM(tf) AS cnt FROM tf GROUP BY 1
+), tot AS (
+  SELECT CAST(SUM(cnt) AS DOUBLE) AS total FROM freq
+)"""
+
+
+def _unigram_scored_sql(score) -> str:
+    """DuckDB form of :func:`_unigram_scores`: CTEs freq, tot and
+    ``scored`` of ``n_toks`` and ``score(lp)``, over ``tf``."""
+    lp = "SUM(tf * ln(cnt)) / SUM(tf) - ln(ANY_VALUE(total))"
+    return f"""{_UNIGRAM_LM_SQL}, scored AS (
+  SELECT doc_id,
+         CAST(SUM(tf) AS BIGINT) AS n_toks,
+         {score(lp)}
+  FROM tf JOIN freq USING (term) CROSS JOIN tot
+  GROUP BY doc_id
+)"""
+
+
 def q_doc_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     """Unigram language-model scoring — the CCNet/Gopher-style
     "perplexity filter": train a unigram LM on the corpus itself
@@ -1864,25 +1791,12 @@ def q_doc_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     row per doc, ~1e9 rows at 100 TB — a cheap exact percentile next
     to the corpus itself)."""
     tf, lens = _doc_terms(spark, sf)
-    term_freq = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
-    total = term_freq.agg(F.sum("cnt").cast("double").alias("total"))
     # persisted: the decile threshold and the final flag projection
     # both consume the doc-grain scores — without it the LM join +
     # aggregation over the (cached) term relation runs twice
-    scored = (
-        tf.join(term_freq, "term")
-        .crossJoin(F.broadcast(total))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").cast("bigint").alias("n_toks"),
-            (
-                F.sum(F.col("tf") * F.log(F.col("cnt")))
-                / F.sum("tf")
-                - F.log(F.first("total"))
-            ).alias("avg_logprob"),
-        )
-        .persist()
-    )
+    scored = _unigram_scores(
+        tf, lambda lp: lp.alias("avg_logprob")
+    ).persist()
     thr = scored.agg(
         F.expr("percentile(avg_logprob, 0.1)").alias("p10")
     )
@@ -1899,30 +1813,9 @@ def q_doc_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_DOC_UNIGRAM_LOGPROB = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), nonempty AS (
-  SELECT doc_id, t FROM toks WHERE len(t) > 0
-), tf AS (
-  SELECT doc_id, u.term, COUNT(*) AS tf
-  FROM nonempty, UNNEST(t) AS u(term)
-  GROUP BY 1, 2
-), freq AS (
-  SELECT term, SUM(tf) AS cnt FROM tf GROUP BY 1
-), tot AS (
-  SELECT CAST(SUM(cnt) AS DOUBLE) AS total FROM freq
-), scored AS (
-  SELECT doc_id,
-         CAST(SUM(tf) AS BIGINT) AS n_toks,
-         SUM(tf * ln(cnt)) / SUM(tf) - ln(ANY_VALUE(total))
-           AS avg_logprob
-  FROM tf JOIN freq USING (term) CROSS JOIN tot
-  GROUP BY doc_id
-), thr AS (
+SQL_DOC_UNIGRAM_LOGPROB = f"""
+WITH {_DOC_TERMS_SQL},
+{_unigram_scored_sql(lambda lp: f"{lp} AS avg_logprob")}, thr AS (
   SELECT quantile_cont(avg_logprob, 0.1) AS p10 FROM scored
 )
 SELECT doc_id, n_toks,
@@ -1977,18 +1870,9 @@ def q_crossdoc_span_coverage(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_CROSSDOC_SPAN_COVERAGE = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), g AS (
-  SELECT DISTINCT doc_id,
-         md5(array_to_string(t[u.i : u.i + 4], ' ')) AS hx
-  FROM toks, UNNEST(range(1, len(t) - 3)) AS u(i)
-), gd AS (
-  SELECT hx, COUNT(*) AS df FROM g GROUP BY 1
+SQL_CROSSDOC_SPAN_COVERAGE = f"""
+WITH {_GRAMS5_SQL}, gd AS (
+  SELECT gram, COUNT(*) AS df FROM grams GROUP BY 1
 )
 SELECT doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_grams,
@@ -1998,7 +1882,7 @@ SELECT doc_id,
              / CAST(COUNT(*) AS DOUBLE), 6) AS shared_frac,
        (SUM(CASE WHEN df > 1 THEN 1 ELSE 0 END)
         / CAST(COUNT(*) AS DOUBLE)) > 0.3 AS flag_span_dup
-FROM g JOIN gd USING (hx)
+FROM grams JOIN gd USING (gram)
 GROUP BY doc_id
 """
 
@@ -2243,27 +2127,11 @@ def _covariance_readout(dims: DataFrame) -> DataFrame:
     )
 
 
-def q_embedding_covariance_stats(spark: SparkSession, sf: str) -> DataFrame:
-    """Covariance structure of the embedding space — the whitening /
-    PCA-readiness diagnostic (high off-diagonal mass means dimensions
-    are correlated and a whitening transform would help downstream
-    ANN and clustering): the full d×d population covariance matrix,
-    computed distributively over one posexplode to the (vec_id, i, x)
-    relation (n·d rows), reduced by :func:`_covariance_readout`."""
-    e = load(spark, sf, "embeddings")
-    return _covariance_readout(
-        e.select(
-            "vec_id", F.posexplode("embedding").alias("i", "x")
-        ).withColumn("x", F.col("x").cast("double"))
-    )
-
-
-SQL_EMBEDDING_COVARIANCE_STATS = """
-WITH dims AS (
-  SELECT vec_id, u.i AS i,
-         CAST(embedding[u.i] AS DOUBLE) AS x
-  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(i)
-), means AS (
+def _covariance_readout_sql(dims: str) -> str:
+    """DuckDB form of :func:`_covariance_readout`; ``dims`` is the WITH
+    list up to and including the CTE ``dims(vec_id, i, x)``."""
+    return f"""
+WITH {dims}, means AS (
   SELECT i, AVG(x) AS mean_i, COUNT(*) AS n FROM dims GROUP BY 1
 ), pairs AS (
   SELECT a.i AS i, b.i AS j, SUM(a.x * b.x) AS sxy, COUNT(*) AS n
@@ -2285,6 +2153,28 @@ SELECT CAST((SELECT MAX(n) FROM means) AS BIGINT) AS n_vectors,
          AS avg_abs_offdiag
 FROM cov
 """
+
+
+def q_embedding_covariance_stats(spark: SparkSession, sf: str) -> DataFrame:
+    """Covariance structure of the embedding space — the whitening /
+    PCA-readiness diagnostic (high off-diagonal mass means dimensions
+    are correlated and a whitening transform would help downstream
+    ANN and clustering): the full d×d population covariance matrix,
+    computed distributively over one posexplode to the (vec_id, i, x)
+    relation (n·d rows), reduced by :func:`_covariance_readout`."""
+    e = load(spark, sf, "embeddings")
+    return _covariance_readout(
+        e.select(
+            "vec_id", F.posexplode("embedding").alias("i", "x")
+        ).withColumn("x", F.col("x").cast("double"))
+    )
+
+
+SQL_EMBEDDING_COVARIANCE_STATS = _covariance_readout_sql("""dims AS (
+  SELECT vec_id, u.i AS i,
+         CAST(embedding[u.i] AS DOUBLE) AS x
+  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(i)
+)""")
 
 
 def _kmeans_profile(e: DataFrame, centroids) -> DataFrame:
@@ -2346,6 +2236,31 @@ def _kmeans_fixed_centroids():
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
+def _kmeans_fixed_sql() -> str:
+    """DuckDB form of the assignment to ``_kmeans_fixed_centroids``:
+    CTEs v (with label), cents, assigned (nearest centroid by dot
+    product, ties by SMALLER cluster id as np.argmax's first-max rule)
+    and unitv (members scaled to unit length)."""
+    return f"""v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+           FROM embeddings),
+cents(cluster, cv) AS (VALUES
+  {_values_rows_sql(_kmeans_fixed_centroids())}
+),
+assigned AS (
+  SELECT v.vec_id, v.label, v.v, c.cluster, c.cv
+  FROM v CROSS JOIN cents c
+  QUALIFY ROW_NUMBER() OVER (PARTITION BY v.vec_id
+                             ORDER BY list_dot_product(v.v, c.cv) DESC,
+                                      c.cluster ASC) = 1
+),
+unitv AS (
+  SELECT vec_id, label, cluster,
+         list_transform(v, x -> x / sqrt(list_sum(
+             list_transform(v, y -> y * y)))) AS u
+  FROM assigned
+)"""
+
+
 def q_embedding_kmeans_profile_fixed(spark: SparkSession, sf: str) -> DataFrame:
     """Cluster cartography over FIXED pretrained centroids — the
     oracle-backed twin of ``embedding_kmeans_profile``: the same
@@ -2356,32 +2271,14 @@ def q_embedding_kmeans_profile_fixed(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sql_embedding_kmeans_profile_fixed() -> str:
-    """DuckDB twin: fixed centroids as list literals, nearest-
-    centroid assignment as ROW_NUMBER over the dot products (ties by
-    SMALLER cluster id, matching np.argmax's first-max rule), cosine
-    cohesion with the fold formula of SQL_EMBEDDING_TOPK."""
-    cents = _kmeans_fixed_centroids()
-    rows = ",\n  ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}])"
-        for i, c in enumerate(cents)
-    )
+    """DuckDB twin: the fixed-centroid assignment
+    (:func:`_kmeans_fixed_sql`), cosine cohesion with the fold formula
+    of SQL_EMBEDDING_TOPK."""
     return f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-cents(cluster, cv) AS (VALUES
-  {rows}
-),
-assigned AS (
-  SELECT v.vec_id, v.v, c.cluster, c.cv
-  FROM v CROSS JOIN cents c
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                             ORDER BY list_dot_product(v.v, c.cv) DESC,
-                                      c.cluster ASC) = 1
-),
+WITH {_kmeans_fixed_sql()},
 scored AS (
   SELECT CAST(cluster AS BIGINT) AS cluster,
-         list_sum(list_transform(list_zip(v, cv), x -> x[1] * x[2]))
-         / (sqrt(list_sum(list_transform(v, x -> x * x)))
-            * sqrt(list_sum(list_transform(cv, x -> x * x)))) AS cos
+         {cosine_sql("v", "cv")} AS cos
   FROM assigned
 )
 SELECT cluster,
@@ -2455,19 +2352,7 @@ def q_doc_bigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_DOC_BIGRAM_LOGPROB = f"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), uni_src AS (
-  SELECT doc_id, t FROM toks WHERE len(t) > 0
-), uni AS (
-  SELECT u.term, COUNT(*) AS cnt
-  FROM uni_src, UNNEST(t) AS u(term) GROUP BY 1
-), tot AS (
-  SELECT CAST(SUM(cnt) AS DOUBLE) AS total FROM uni
-), pos AS (
+WITH {_DOC_TERMS_SQL}, {_UNIGRAM_LM_SQL}, pos AS (
   SELECT doc_id, unnest(t) AS term, generate_subscripts(t, 1) AS ord
   FROM toks WHERE len(t) >= 2
 ), dbg AS (
@@ -2487,7 +2372,7 @@ SELECT doc_id,
 FROM dbg
   JOIN bg USING (w1, w2)
   JOIN ctx USING (w1)
-  JOIN uni ON uni.term = dbg.w2
+  JOIN freq ON freq.term = dbg.w2
   CROSS JOIN tot
 GROUP BY doc_id
 """
@@ -2562,7 +2447,7 @@ def sql_embedding_pq_topk_fixed() -> str:
     cbs = _pq_fixed_codebooks()
     m, k, sub = cbs.shape
     rows = ",\n  ".join(
-        f"({s}, {j}, [{', '.join(repr(float(x)) for x in cbs[s, j])}])"
+        f"({s}, {j}, {vector_sql(cbs[s, j])})"
         for s in range(m)
         for j in range(k)
     )
@@ -2644,19 +2529,7 @@ def q_source_weighted_median_quality(spark: SparkSession, sf: str) -> DataFrame:
 
     d = load(spark, sf, "documents")
     toks = TX.nonempty_tokens("text")
-    n_tokens = F.size(toks).cast("double")
-    stop_ratio = TX.stopword_count(toks).cast("double") / F.greatest(
-        n_tokens, F.lit(1.0)
-    )
-    alpha_ratio = F.length(
-        F.regexp_replace("text", "[^a-zA-Z]", "")
-    ).cast("double") / F.greatest(F.length("text").cast("double"), F.lit(1.0))
-    score = F.round(
-        0.4 * F.least(n_tokens / 100.0, F.lit(1.0))
-        + 0.3 * F.least(stop_ratio * 5.0, F.lit(1.0))
-        + 0.3 * alpha_ratio,
-        4,
-    )
+    score = _quality_score(toks)
     scored = d.select(
         "doc_id",
         "source",
@@ -2685,26 +2558,8 @@ def q_source_weighted_median_quality(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_SOURCE_WEIGHTED_MEDIAN_QUALITY = f"""
-WITH t AS (
-  SELECT doc_id, source,
-         CAST(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              x -> x != '')) AS DOUBLE) AS n_tokens,
-         CAST(len(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              x -> x IN {STOPWORD_SQL})) AS DOUBLE)
-           AS n_stop,
-         CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
-           AS n_alpha,
-         CAST(length(text) AS DOUBLE) AS n_chars
-  FROM documents
-), s AS (
-  SELECT doc_id, source,
-         ROUND(0.4 * LEAST(n_tokens / 100.0, 1.0)
-               + 0.3 * LEAST(n_stop / GREATEST(n_tokens, 1.0) * 5.0, 1.0)
-               + 0.3 * n_alpha / GREATEST(n_chars, 1.0), 4) AS quality_score,
-         CAST(n_tokens AS BIGINT) AS n_tokens
-  FROM t
-), c AS (
-  SELECT source, quality_score, n_tokens,
+WITH {_quality_sql("doc_id, source")}, c AS (
+  SELECT source, quality_score,
          SUM(n_tokens) OVER (PARTITION BY source
                              ORDER BY quality_score, doc_id
                              ROWS BETWEEN UNBOUNDED PRECEDING
@@ -2828,10 +2683,9 @@ def q_pmi_collocations(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_PMI_COLLOCATIONS = """
+SQL_PMI_COLLOCATIONS = f"""
 WITH toks AS (
-  SELECT list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
+  SELECT {TX.nonempty_tokens_sql()} AS t
   FROM documents
 ), toks2 AS (
   SELECT t FROM toks WHERE len(t) >= 2
@@ -2881,29 +2735,8 @@ def q_semantic_dedup_fixed(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sql_semantic_dedup_fixed() -> str:
-    cents = _kmeans_fixed_centroids()
-    rows = ",\n  ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}])"
-        for i, c in enumerate(cents)
-    )
     return f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-cents(cluster, cv) AS (VALUES
-  {rows}
-),
-assigned AS (
-  SELECT v.vec_id, v.v, c.cluster
-  FROM v CROSS JOIN cents c
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                             ORDER BY list_dot_product(v.v, c.cv) DESC,
-                                      c.cluster ASC) = 1
-),
-unitv AS (
-  SELECT vec_id, cluster,
-         list_transform(v, x -> x / sqrt(list_sum(
-             list_transform(v, y -> y * y)))) AS u
-  FROM assigned
-)
+WITH {_kmeans_fixed_sql()}
 SELECT CAST(a.cluster AS BIGINT) AS cluster,
        a.vec_id AS id_a, b.vec_id AS id_b,
        ROUND(list_dot_product(a.u, b.u), 4) AS cosine_sim
@@ -2973,30 +2806,8 @@ def q_hard_negative_mining(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sql_hard_negative_mining() -> str:
-    cents = _kmeans_fixed_centroids()
-    rows = ",\n  ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}])"
-        for i, c in enumerate(cents)
-    )
     return f"""
-WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-           FROM embeddings),
-cents(cluster, cv) AS (VALUES
-  {rows}
-),
-assigned AS (
-  SELECT v.vec_id, v.label, v.v, c.cluster
-  FROM v CROSS JOIN cents c
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                             ORDER BY list_dot_product(v.v, c.cv) DESC,
-                                      c.cluster ASC) = 1
-),
-unitv AS (
-  SELECT vec_id, label, cluster,
-         list_transform(v, x -> x / sqrt(list_sum(
-             list_transform(v, y -> y * y)))) AS u
-  FROM assigned
-),
+WITH {_kmeans_fixed_sql()},
 pairs AS (
   SELECT a.vec_id AS anchor_id, a.cluster,
          b.vec_id AS cand_id, b.label = a.label AS same_label,
@@ -3143,20 +2954,9 @@ def q_ngram_novelty(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_NGRAM_NOVELTY = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), g AS (
-  SELECT doc_id,
-         md5(unnest(list_distinct(list_transform(range(1, len(t) - 3),
-               i -> array_to_string(list_slice(t, i, i + 4), ' ')))))
-           AS gram
-  FROM toks
-), first AS (
-  SELECT gram, MIN(doc_id) AS first_doc FROM g GROUP BY 1
+SQL_NGRAM_NOVELTY = f"""
+WITH {_GRAMS5_SQL}, first AS (
+  SELECT gram, MIN(doc_id) AS first_doc FROM grams GROUP BY 1
 )
 SELECT g.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_grams,
@@ -3164,7 +2964,7 @@ SELECT g.doc_id,
             AS BIGINT) AS n_new,
        ROUND(SUM(CASE WHEN first_doc = g.doc_id THEN 1 ELSE 0 END)
              / CAST(COUNT(*) AS DOUBLE), 6) AS novelty
-FROM g JOIN first USING (gram)
+FROM grams g JOIN first USING (gram)
 GROUP BY g.doc_id
 ORDER BY g.doc_id
 """
@@ -3200,15 +3000,10 @@ def q_bpe_merge_candidates(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_BPE_MERGE_CANDIDATES = """
+SQL_BPE_MERGE_CANDIDATES = f"""
 WITH words AS (
   SELECT w, COUNT(*) AS cnt
-  FROM (
-    SELECT unnest(list_filter(
-             string_split_regex(trim(lower(text)), '\\s+'),
-             x -> x != '')) AS w
-    FROM documents
-  )
+  FROM (SELECT unnest({TX.nonempty_tokens_sql()}) AS w FROM documents)
   GROUP BY 1
 ), pairs AS (
   SELECT substr(w, i, 1) AS a, substr(w, i + 1, 1) AS b, cnt
@@ -3345,104 +3140,32 @@ def q_ann_recall_exact_fixed(spark: SparkSession, sf: str) -> DataFrame:
 
 def sql_ann_recall_exact_fixed() -> str:
     """DuckDB twin of ``q_ann_recall_exact_fixed``: exact top-5 per
-    query (the SQL_KNN_JOIN construction at 20 queries), the fixed-IVF
-    probe/rerank (``sql_embedding_ivf_topk_fixed`` construction) and
-    the banded-LSH probe (``sql_embedding_lsh_topk`` construction),
-    then the integer recall readout per method."""
-    cents_rows = _ivf_cents_values_sql()
-    sigs_union = _lsh_sigs_union_sql()
+    query (the SQL_KNN_JOIN probe at 20 queries), the fixed-IVF
+    and banded-LSH probes of ``sql_embedding_ivf_topk_fixed`` and
+    ``sql_embedding_lsh_topk``, then the integer recall readout per
+    method."""
     return f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS qv FROM v WHERE vec_id < 20),
-exact_scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         list_sum(list_transform(list_zip(e.v, q.qv), x -> x[1] * x[2]))
-         / (sqrt(list_sum(list_transform(e.v, x -> x * x)))
-            * sqrt(list_sum(list_transform(q.qv, x -> x * x)))) AS cos_raw
-  FROM v e CROSS JOIN q
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM exact_scored
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                             ORDER BY ROUND(cos_raw, 12) DESC,
-                                      neighbor_id) <= 5
-),
-cents(list_id, cv) AS (VALUES
-  {cents_rows}
-),
-dots AS (
-  SELECT v.vec_id, v.v, c.list_id,
-         list_dot_product(v.v, c.cv) AS dot
-  FROM v CROSS JOIN cents c
-),
-assigned AS (
-  SELECT vec_id, v, list_id FROM dots
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-                             ORDER BY dot DESC, list_id DESC) = 1
-),
-probes AS (
-  SELECT vec_id AS query_id, v AS qv, list_id FROM dots
-  WHERE vec_id < 20
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-                             ORDER BY dot DESC, list_id DESC) <= 4
-),
-ivf_scored AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         list_sum(list_transform(list_zip(p.qv, a.v), x -> x[1] * x[2]))
-         / (sqrt(list_sum(list_transform(p.qv, x -> x * x)))
-            * sqrt(list_sum(list_transform(a.v, x -> x * x)))) AS cos_raw
-  FROM probes p JOIN assigned a ON p.list_id = a.list_id
-),
-ivf AS (
-  SELECT query_id, neighbor_id FROM ivf_scored
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                             ORDER BY ROUND(cos_raw, 12) DESC,
-                                      neighbor_id) <= 5
-),
-sigs AS ({sigs_union}),
-cand AS (
-  SELECT DISTINCT s.vec_id AS query_id, c.vec_id AS neighbor_id
-  FROM sigs s
-  JOIN sigs c ON s.band = c.band AND s.sig = c.sig
-  WHERE s.vec_id < 20
-),
-lsh_scored AS (
-  SELECT cand.query_id, cand.neighbor_id,
-         list_sum(list_transform(list_zip(qq.v, cc.v), x -> x[1] * x[2]))
-         / (sqrt(list_sum(list_transform(qq.v, x -> x * x)))
-            * sqrt(list_sum(list_transform(cc.v, x -> x * x)))) AS cos_raw
-  FROM cand
-  JOIN v qq ON qq.vec_id = cand.query_id
-  JOIN v cc ON cc.vec_id = cand.neighbor_id
-),
-lsh AS (
-  SELECT query_id, neighbor_id FROM lsh_scored
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                             ORDER BY ROUND(cos_raw, 12) DESC,
-                                      neighbor_id) <= 5
-),
+WITH {_V_SQL},
+{_exact_probe_sql(20)},
+{_ivf_probe_sql(20)},
+{_lsh_probe_sql(20)},
 base AS (
   SELECT CAST(COUNT(DISTINCT query_id) AS BIGINT) AS n_queries,
          CAST(COUNT(*) AS BIGINT) AS n_expected
-  FROM exact
+  FROM exact_ranked WHERE rnk <= 5
 ),
-ivf_hits AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_hits
-  FROM exact JOIN ivf USING (query_id, neighbor_id)
-),
-lsh_hits AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_hits
-  FROM exact JOIN lsh USING (query_id, neighbor_id)
+hits AS (
+  SELECT 'ivf_fixed' AS method, CAST(COUNT(*) AS BIGINT) AS n_hits
+  FROM exact_ranked e JOIN ivf_ranked a USING (query_id, neighbor_id)
+  WHERE e.rnk <= 5 AND a.rnk <= 5
+  UNION ALL
+  SELECT 'lsh', CAST(COUNT(*) AS BIGINT)
+  FROM exact_ranked e JOIN lsh_ranked a USING (query_id, neighbor_id)
+  WHERE e.rnk <= 5 AND a.rnk <= 5
 )
 SELECT method, n_queries, n_hits, n_expected,
        CAST((1000000 * n_hits) // n_expected AS BIGINT) AS recall_ppm
-FROM (
-  SELECT 'ivf_fixed' AS method, b.n_queries, h.n_hits, b.n_expected
-  FROM base b, ivf_hits h
-  UNION ALL
-  SELECT 'lsh' AS method, b.n_queries, h.n_hits, b.n_expected
-  FROM base b, lsh_hits h
-)
+FROM base, hits
 ORDER BY method
 """
 
@@ -3566,30 +3289,8 @@ def q_label_noise_scan(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def sql_label_noise_scan() -> str:
-    cents = _kmeans_fixed_centroids()
-    rows = ",\n  ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}])"
-        for i, c in enumerate(cents)
-    )
     return f"""
-WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-           FROM embeddings),
-cents(cluster, cv) AS (VALUES
-  {rows}
-),
-assigned AS (
-  SELECT v.vec_id, v.label, v.v, c.cluster
-  FROM v CROSS JOIN cents c
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                             ORDER BY list_dot_product(v.v, c.cv) DESC,
-                                      c.cluster ASC) = 1
-),
-unitv AS (
-  SELECT vec_id, label, cluster,
-         list_transform(v, x -> x / sqrt(list_sum(
-             list_transform(v, y -> y * y)))) AS u
-  FROM assigned
-),
+WITH {_kmeans_fixed_sql()},
 nn AS (
   SELECT a.vec_id, a.label,
          b.label = a.label AS agree,
@@ -3632,9 +3333,9 @@ def q_context_budget_report(spark: SparkSession, sf: str) -> DataFrame:
     return out.orderBy("ctx")
 
 
-SQL_CONTEXT_BUDGET_REPORT = """
+SQL_CONTEXT_BUDGET_REPORT = f"""
 WITH toks AS (
-  SELECT len(string_split_regex(trim(text), '\\s+')) AS n
+  SELECT len({TX.tokens_sql()}) AS n
   FROM documents
 ), ctxs AS (SELECT unnest([64, 128, 256]) AS ctx)
 SELECT CAST(ctx AS BIGINT) AS ctx,
@@ -3745,9 +3446,7 @@ def sql_feature_hash_embed() -> str:
     q = QUERY_TEXT.replace("'", "''")
     return f"""
 WITH docs AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
+  SELECT doc_id, {TX.nonempty_tokens_sql()} AS t
   FROM documents
 ), base AS (
   SELECT doc_id, t FROM docs WHERE len(t) > 0
@@ -3785,6 +3484,87 @@ LIMIT 50
 # ------------------------------------------- oracle-backed twins
 
 
+#: Misra-Gries twins: counters kept per bucket, terms reported
+_MG_CAP, _MG_TOPK = 64, 20
+
+#: a document's md5 bucket (8 buckets), Spark and DuckDB forms
+_MG_BUCKET = (
+    "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 13),"
+    " 16, 10) AS BIGINT) % 8"
+)
+_MG_BUCKET_SQL = (
+    "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))"
+    " AS BIGINT) % 8"
+)
+
+
+def _mg_bound_report(
+    merged: DataFrame, cnt: DataFrame, debt: DataFrame
+) -> DataFrame:
+    """The Misra-Gries bound readout: merged counters ``(term, est)``
+    against the exact counts summed from ``cnt`` and the decrement
+    debt ``max_debt``, certifying ``est <= true <= est + max_debt``;
+    the top ``_MG_TOPK`` terms by estimate."""
+    exact = cnt.groupBy("term").agg(F.sum("cnt").alias("true_cnt"))
+    return (
+        merged.join(exact, "term")
+        .crossJoin(F.broadcast(debt))
+        .select(
+            "term",
+            F.col("est").cast("bigint").alias("est"),
+            F.col("true_cnt").cast("bigint").alias("true_cnt"),
+            (F.col("true_cnt") - F.col("est"))
+            .cast("bigint")
+            .alias("underest"),
+            "max_debt",
+            (
+                (F.col("est") <= F.col("true_cnt"))
+                & (F.col("true_cnt") - F.col("est") <= F.col("max_debt"))
+            ).alias("bound_ok"),
+        )
+        .orderBy(F.desc("est"), "term")
+        .limit(_MG_TOPK)
+    )
+
+
+def _mg_compress_sql(tag: str, src: str) -> str:
+    """DuckDB form of the batch-MG compress of ``src``'s
+    ``(bucket, term, est)`` counters: per bucket, subtract the
+    (cap+1)-th largest value and keep what stays positive.  CTEs
+    r{tag} (ranked), thr{tag} (the per-bucket threshold) and
+    s{tag} (the kept counters)."""
+    return f"""r{tag} AS (
+  SELECT bucket, term, est,
+         row_number() OVER (PARTITION BY bucket
+                            ORDER BY est DESC, term) AS rk
+  FROM {src}
+), thr{tag} AS (
+  SELECT bucket, est AS thr FROM r{tag} WHERE rk = {_MG_CAP + 1}
+), s{tag} AS (
+  SELECT r.bucket, r.term, r.est - COALESCE(t.thr, 0) AS est
+  FROM r{tag} r LEFT JOIN thr{tag} t USING (bucket)
+  WHERE r.est - COALESCE(t.thr, 0) > 0
+)"""
+
+
+#: DuckDB form of :func:`_mg_bound_report`, closing a WITH list that
+#: holds CTEs cnt, merged(term, est) and debt(max_debt)
+_MG_REPORT_SQL = f""", exact AS (
+  SELECT term, SUM(cnt) AS true_cnt FROM cnt GROUP BY 1
+)
+SELECT m.term,
+       CAST(m.est AS BIGINT) AS est,
+       CAST(e.true_cnt AS BIGINT) AS true_cnt,
+       CAST(e.true_cnt - m.est AS BIGINT) AS underest,
+       d.max_debt,
+       (m.est <= e.true_cnt
+        AND e.true_cnt - m.est <= d.max_debt) AS bound_ok
+FROM merged m JOIN exact e USING (term) CROSS JOIN debt d
+ORDER BY est DESC, term
+LIMIT {_MG_TOPK}
+"""
+
+
 def q_mg_heavy_hitters_fixed(spark: SparkSession, sf: str) -> DataFrame:
     """Misra-Gries MERGE-stage certification over a FIXED partition
     layout: terms are routed to 8 deterministic md5 buckets, each
@@ -3799,15 +3579,12 @@ def q_mg_heavy_hitters_fixed(spark: SparkSession, sf: str) -> DataFrame:
     compress/merge algebra where every step is engine-agnostic."""
     from pyspark.sql import Window
 
-    cap, topk = 64, 20
+    cap = _MG_CAP
     d = load(spark, sf, "documents")
     # bucket hashed ONCE per document (projection order: hash, then
     # explode), not once per exploded token row
     terms = d.select(
-        F.expr(
-            "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 13),"
-            " 16, 10) AS BIGINT) % 8"
-        ).alias("bucket"),
+        F.expr(_MG_BUCKET).alias("bucket"),
         TX.nonempty_tokens("text").alias("toks"),
     ).select("bucket", F.explode("toks").alias("term"))
     cnt = terms.groupBy("bucket", "term").agg(
@@ -3828,69 +3605,25 @@ def q_mg_heavy_hitters_fixed(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("est") > 0)
     )
     merged = summ.groupBy("term").agg(F.sum("est").alias("est"))
-    exact = cnt.groupBy("term").agg(F.sum("cnt").alias("true_cnt"))
     debt = thr.agg(
         F.coalesce(F.sum("thr"), F.lit(0)).cast("bigint").alias("max_debt")
     )
-    return (
-        merged.join(exact, "term")
-        .crossJoin(F.broadcast(debt))
-        .select(
-            "term",
-            F.col("est").cast("bigint").alias("est"),
-            F.col("true_cnt").cast("bigint").alias("true_cnt"),
-            (F.col("true_cnt") - F.col("est")).cast("bigint").alias("underest"),
-            "max_debt",
-            (
-                (F.col("est") <= F.col("true_cnt"))
-                & (F.col("true_cnt") - F.col("est") <= F.col("max_debt"))
-            ).alias("bound_ok"),
-        )
-        .orderBy(F.desc("est"), "term")
-        .limit(topk)
-    )
+    return _mg_bound_report(merged, cnt, debt)
 
 
-SQL_MG_HEAVY_HITTERS_FIXED = """
+SQL_MG_HEAVY_HITTERS_FIXED = f"""
 WITH toks AS (
-  SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))
-              AS BIGINT) % 8 AS bucket,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
+  SELECT {_MG_BUCKET_SQL} AS bucket, {TX.nonempty_tokens_sql()} AS t
   FROM documents
-), terms AS (
-  SELECT bucket, u.term FROM toks, UNNEST(t) AS u(term)
 ), cnt AS (
-  SELECT bucket, term, COUNT(*) AS cnt FROM terms GROUP BY 1, 2
-), ranked AS (
-  SELECT bucket, term, cnt,
-         row_number() OVER (PARTITION BY bucket
-                            ORDER BY cnt DESC, term) AS rk
-  FROM cnt
-), thr AS (
-  SELECT bucket, cnt AS thr FROM ranked WHERE rk = 65
-), summ AS (
-  SELECT r.term, r.cnt - COALESCE(t.thr, 0) AS est
-  FROM ranked r LEFT JOIN thr t USING (bucket)
-  WHERE r.cnt - COALESCE(t.thr, 0) > 0
-), merged AS (
-  SELECT term, SUM(est) AS est FROM summ GROUP BY 1
-), exact AS (
-  SELECT term, SUM(cnt) AS true_cnt FROM cnt GROUP BY 1
+  SELECT bucket, u.term, COUNT(*) AS cnt
+  FROM toks, UNNEST(t) AS u(term) GROUP BY 1, 2
+), {_mg_compress_sql("1", "(SELECT bucket, term, cnt AS est FROM cnt)")},
+merged AS (
+  SELECT term, SUM(est) AS est FROM s1 GROUP BY 1
 ), debt AS (
-  SELECT CAST(COALESCE(SUM(thr), 0) AS BIGINT) AS max_debt FROM thr
-)
-SELECT m.term,
-       CAST(m.est AS BIGINT) AS est,
-       CAST(e.true_cnt AS BIGINT) AS true_cnt,
-       CAST(e.true_cnt - m.est AS BIGINT) AS underest,
-       d.max_debt,
-       (m.est <= e.true_cnt
-        AND e.true_cnt - m.est <= d.max_debt) AS bound_ok
-FROM merged m JOIN exact e USING (term) CROSS JOIN debt d
-ORDER BY est DESC, term
-LIMIT 20
-"""
+  SELECT CAST(COALESCE(SUM(thr), 0) AS BIGINT) AS max_debt FROM thr1
+){_MG_REPORT_SQL}"""
 
 
 def q_mg_stream_topk_fixed(spark: SparkSession, sf: str) -> DataFrame:
@@ -3915,17 +3648,14 @@ def q_mg_stream_topk_fixed(spark: SparkSession, sf: str) -> DataFrame:
     maintenance path."""
     from pyspark.sql import Window
 
-    cap, topk = 64, 20
+    cap = _MG_CAP
     d = load(spark, sf, "documents")
     terms = d.select(
         F.expr(
             "CAST(conv(substring(md5(concat('b:', "
             "CAST(doc_id AS STRING))), 1, 13), 16, 10) AS BIGINT) % 2"
         ).alias("b"),
-        F.expr(
-            "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 13),"
-            " 16, 10) AS BIGINT) % 8"
-        ).alias("bucket"),
+        F.expr(_MG_BUCKET).alias("bucket"),
         TX.nonempty_tokens("text").alias("toks"),
     ).select("b", "bucket", F.explode("toks").alias("term"))
     cnt = terms.groupBy("b", "bucket", "term").agg(
@@ -3966,7 +3696,6 @@ def q_mg_stream_topk_fixed(spark: SparkSession, sf: str) -> DataFrame:
     )
     s2, thr2 = compress(folded)
     merged = s2.groupBy("term").agg(F.sum("est").alias("est"))
-    exact = cnt.groupBy("term").agg(F.sum("cnt").alias("true_cnt"))
     debt = (
         thr1.select("thr")
         .unionByName(thr2.select("thr"))
@@ -3976,88 +3705,34 @@ def q_mg_stream_topk_fixed(spark: SparkSession, sf: str) -> DataFrame:
             .alias("max_debt")
         )
     )
-    return (
-        merged.join(exact, "term")
-        .crossJoin(F.broadcast(debt))
-        .select(
-            "term",
-            F.col("est").cast("bigint").alias("est"),
-            F.col("true_cnt").cast("bigint").alias("true_cnt"),
-            (F.col("true_cnt") - F.col("est"))
-            .cast("bigint")
-            .alias("underest"),
-            "max_debt",
-            (
-                (F.col("est") <= F.col("true_cnt"))
-                & (F.col("true_cnt") - F.col("est") <= F.col("max_debt"))
-            ).alias("bound_ok"),
-        )
-        .orderBy(F.desc("est"), "term")
-        .limit(topk)
-    )
+    return _mg_bound_report(merged, cnt, debt)
 
 
-SQL_MG_STREAM_TOPK_FIXED = """
+SQL_MG_STREAM_TOPK_FIXED = f"""
 WITH toks AS (
   SELECT CAST(('0x' || substr(md5('b:' || CAST(doc_id AS VARCHAR)), 1, 13))
               AS BIGINT) % 2 AS b,
-         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13))
-              AS BIGINT) % 8 AS bucket,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
+         {_MG_BUCKET_SQL} AS bucket, {TX.nonempty_tokens_sql()} AS t
   FROM documents
-), terms AS (
-  SELECT b, bucket, u.term FROM toks, UNNEST(t) AS u(term)
 ), cnt AS (
-  SELECT b, bucket, term, COUNT(*) AS cnt FROM terms GROUP BY 1, 2, 3
-), r1 AS (
-  SELECT bucket, term, cnt AS est,
-         row_number() OVER (PARTITION BY bucket
-                            ORDER BY cnt DESC, term) AS rk
-  FROM cnt WHERE b = 0
-), thr1 AS (
-  SELECT bucket, est AS thr FROM r1 WHERE rk = 65
-), s1 AS (
-  SELECT r.bucket, r.term, r.est - COALESCE(t.thr, 0) AS est
-  FROM r1 r LEFT JOIN thr1 t USING (bucket)
-  WHERE r.est - COALESCE(t.thr, 0) > 0
-), folded AS (
+  SELECT b, bucket, u.term, COUNT(*) AS cnt
+  FROM toks, UNNEST(t) AS u(term) GROUP BY 1, 2, 3
+), {_mg_compress_sql(
+    "1", "(SELECT bucket, term, cnt AS est FROM cnt WHERE b = 0)")},
+folded AS (
   SELECT bucket, term, SUM(est) AS est FROM (
     SELECT bucket, term, est FROM s1
     UNION ALL
     SELECT bucket, term, cnt AS est FROM cnt WHERE b = 1
   ) GROUP BY 1, 2
-), r2 AS (
-  SELECT bucket, term, est,
-         row_number() OVER (PARTITION BY bucket
-                            ORDER BY est DESC, term) AS rk
-  FROM folded
-), thr2 AS (
-  SELECT bucket, est AS thr FROM r2 WHERE rk = 65
-), s2 AS (
-  SELECT r.bucket, r.term, r.est - COALESCE(t.thr, 0) AS est
-  FROM r2 r LEFT JOIN thr2 t USING (bucket)
-  WHERE r.est - COALESCE(t.thr, 0) > 0
-), merged AS (
+), {_mg_compress_sql("2", "folded")},
+merged AS (
   SELECT term, SUM(est) AS est FROM s2 GROUP BY 1
-), exact AS (
-  SELECT term, SUM(cnt) AS true_cnt FROM cnt GROUP BY 1
 ), debt AS (
   SELECT CAST(COALESCE(SUM(thr), 0) AS BIGINT) AS max_debt FROM (
     SELECT thr FROM thr1 UNION ALL SELECT thr FROM thr2
   )
-)
-SELECT m.term,
-       CAST(m.est AS BIGINT) AS est,
-       CAST(e.true_cnt AS BIGINT) AS true_cnt,
-       CAST(e.true_cnt - m.est AS BIGINT) AS underest,
-       d.max_debt,
-       (m.est <= e.true_cnt
-        AND e.true_cnt - m.est <= d.max_debt) AS bound_ok
-FROM merged m JOIN exact e USING (term) CROSS JOIN debt d
-ORDER BY est DESC, term
-LIMIT 20
-"""
+){_MG_REPORT_SQL}"""
 
 
 def q_simhash_accuracy(spark: SparkSession, sf: str) -> DataFrame:
@@ -4173,30 +3848,9 @@ def q_simhash_accuracy(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-SQL_SIMHASH_ACCURACY = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-  WHERE md5(CAST(doc_id AS VARCHAR)) < '80'
-), th AS (
-  SELECT doc_id, list_transform(t, tok -> md5(tok)) AS hs
-  FROM toks WHERE len(t) > 0
-), bits AS (
-  SELECT doc_id,
-         array_to_string(
-           list_transform(range(0, 64), i ->
-             CASE WHEN list_sum(list_transform(hs, h ->
-                    CASE WHEN contains(
-                           (['89abcdef', '4567cdef', '2367abef',
-                             '13579bdf'])[i % 4 + 1],
-                           substr(h, CAST(i // 4 AS INT) + 1, 1))
-                         THEN 1 ELSE -1 END)) > 0
-                  THEN '1' ELSE '0' END),
-           '') AS bits
-  FROM th
-), chunks AS (
+SQL_SIMHASH_ACCURACY = f"""
+WITH {_simhash_bits_sql(" WHERE md5(CAST(doc_id AS VARCHAR)) < '80'")},
+chunks AS (
   SELECT doc_id, bits, u.i AS chunk_idx,
          substr(bits, CAST(u.i * 16 + 1 AS INT), 16) AS chunk_val
   FROM bits, UNNEST(range(0, 4)) AS u(i)
@@ -4300,13 +3954,9 @@ def sql_embedding_whitening_fixed() -> str:
 
     mu, cov = _wf_fixed_moments()
     w = zca_matrix(cov)
-    wlit = ", ".join(
-        "[" + ", ".join(repr(float(x)) for x in row) + "]" for row in w
-    )
-    mulit = ", ".join(repr(float(x)) for x in mu)
-    return f"""
-WITH wmat AS (
-  SELECT [{wlit}] AS w, [{mulit}] AS mu
+    wlit = ", ".join(vector_sql(row) for row in w)
+    return _covariance_readout_sql(f"""wmat AS (
+  SELECT [{wlit}] AS w, {vector_sql(mu)} AS mu
 ), white AS (
   SELECT vec_id,
          list_transform(range(1, {_WF_D + 1}), i ->
@@ -4316,28 +3966,7 @@ WITH wmat AS (
 ), dims AS (
   SELECT vec_id, u.i AS i, v[u.i] AS x
   FROM white, UNNEST(range(1, {_WF_D + 1})) AS u(i)
-), means AS (
-  SELECT i, AVG(x) AS mean_i, COUNT(*) AS n FROM dims GROUP BY 1
-), pairs AS (
-  SELECT a.i AS i, b.i AS j, SUM(a.x * b.x) AS sxy, COUNT(*) AS n
-  FROM dims a JOIN dims b USING (vec_id)
-  GROUP BY 1, 2
-), cov AS (
-  SELECT p.i, p.j, p.sxy / p.n - mi.mean_i * mj.mean_i AS c
-  FROM pairs p
-  JOIN means mi ON p.i = mi.i
-  JOIN means mj ON p.j = mj.i
-)
-SELECT CAST((SELECT MAX(n) FROM means) AS BIGINT) AS n_vectors,
-       CAST(COUNT(DISTINCT i) AS BIGINT) AS dims,
-       ROUND(SUM(CASE WHEN i = j THEN c END), 6) AS trace,
-       ROUND(sqrt(SUM(c * c)), 6) AS frobenius,
-       ROUND(MAX(CASE WHEN i != j THEN abs(c) END), 6)
-         AS max_abs_offdiag,
-       ROUND(AVG(CASE WHEN i != j THEN abs(c) END), 6)
-         AS avg_abs_offdiag
-FROM cov
-"""
+)""")
 
 
 def q_matryoshka_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
@@ -4438,19 +4067,11 @@ def q_matryoshka_overlap_report(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sql_matryoshka_scored(width: int) -> str:
+    cos = cosine_sql(f"list_slice(q.embedding::DOUBLE[], 1, {width})",
+                     f"list_slice(c.embedding::DOUBLE[], 1, {width})")
     return f"""
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         list_sum(list_transform(
-             list_zip(list_slice(q.embedding::DOUBLE[], 1, {width}),
-                      list_slice(c.embedding::DOUBLE[], 1, {width})),
-             x -> x[1] * x[2]))
-         / (sqrt(list_sum(list_transform(
-               list_slice(q.embedding::DOUBLE[], 1, {width}),
-               x -> x * x)))
-            * sqrt(list_sum(list_transform(
-               list_slice(c.embedding::DOUBLE[], 1, {width}),
-               x -> x * x))))
-           AS cos_raw
+         {cos} AS cos_raw
   FROM embeddings q, embeddings c
   WHERE q.vec_id < 5 AND c.vec_id != q.vec_id
 """
@@ -4505,20 +4126,8 @@ def q_perplexity_bucket_report(spark: SparkSession, sf: str) -> DataFrame:
     relation never single-partitions; thresholds AND scores compare
     on the 6-decimal grid so the cut is engine-exact."""
     tf, _lens = _doc_terms(spark, sf)
-    term_freq = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
-    total = term_freq.agg(F.sum("cnt").cast("double").alias("total"))
-    scored = (
-        tf.join(term_freq, "term")
-        .crossJoin(F.broadcast(total))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").cast("bigint").alias("n_toks"),
-            F.round(
-                F.sum(F.col("tf") * F.log(F.col("cnt"))) / F.sum("tf")
-                - F.log(F.first("total")),
-                6,
-            ).alias("score"),
-        )
+    scored = _unigram_scores(
+        tf, lambda lp: F.round(lp, 6).alias("score")
     )
     qs = scored.agg(
         F.round(F.expr("percentile(score, 0.25)"), 6).alias("q1"),
@@ -4544,30 +4153,10 @@ def q_perplexity_bucket_report(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_PERPLEXITY_BUCKET_REPORT = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), nonempty AS (
-  SELECT doc_id, t FROM toks WHERE len(t) > 0
-), tf AS (
-  SELECT doc_id, u.term, COUNT(*) AS tf
-  FROM nonempty, UNNEST(t) AS u(term)
-  GROUP BY 1, 2
-), freq AS (
-  SELECT term, SUM(tf) AS cnt FROM tf GROUP BY 1
-), tot AS (
-  SELECT CAST(SUM(cnt) AS DOUBLE) AS total FROM freq
-), scored AS (
-  SELECT doc_id,
-         CAST(SUM(tf) AS BIGINT) AS n_toks,
-         ROUND(SUM(tf * ln(cnt)) / SUM(tf) - ln(ANY_VALUE(total)), 6)
-           AS score
-  FROM tf JOIN freq USING (term) CROSS JOIN tot
-  GROUP BY doc_id
-), qs AS (
+SQL_PERPLEXITY_BUCKET_REPORT = f"""
+WITH {_DOC_TERMS_SQL},
+{_unigram_scored_sql(lambda lp: f"ROUND({lp}, 6) AS score")},
+qs AS (
   SELECT ROUND(quantile_cont(score, 0.25), 6) AS q1,
          ROUND(quantile_cont(score, 0.50), 6) AS q2,
          ROUND(quantile_cont(score, 0.75), 6) AS q3
@@ -4708,9 +4297,7 @@ def q_dsir_importance_report(spark: SparkSession, sf: str) -> DataFrame:
 
 SQL_DSIR_IMPORTANCE_REPORT = f"""
 WITH toks AS (
-  SELECT doc_id, lang,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
+  SELECT doc_id, lang, {TX.nonempty_tokens_sql()} AS t
   FROM documents
 ), uni AS (
   SELECT DISTINCT doc_id, lang, u.f

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketch import cms_cells
@@ -129,16 +129,24 @@ def merge_kmv_batch(
     )
 
 
+def _kmv_estimate(k: int) -> Column:
+    """Distinct count of a KMV sketch from its ``n_min`` kept hashes
+    and the largest of them, ``h_k``: exact if it holds < k hashes,
+    else (k-1)/u_k with u_k = (h_k+1)/2^52 (52-bit hashes)."""
+    return F.when(
+        F.col("n_min") < k, F.col("n_min").cast("double")
+    ).otherwise((k - 1) * 4503599627370496.0 / (F.col("h_k") + 1))
+
+
 def kmv_estimates(summary: DataFrame, k: int = 64) -> DataFrame:
-    """(grp, est_distinct) from a KMV summary table: exact count if
-    a group holds < k hashes, else (k-1)/u_k."""
+    """(grp, est_distinct) from a KMV summary table
+    (:func:`_kmv_estimate`)."""
     agg = summary.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n_min"), F.max("h").alias("h_k")
     )
-    est = F.when(
-        F.col("n_min") < k, F.col("n_min").cast("double")
-    ).otherwise((k - 1) * 4503599627370496.0 / (F.col("h_k") + 1))
-    return agg.select("grp", F.round(est, 4).alias("est_distinct"))
+    return agg.select(
+        "grp", F.round(_kmv_estimate(k), 4).alias("est_distinct")
+    )
 
 
 def kmv_overlap(summary: DataFrame, k: int = 64) -> DataFrame:
@@ -204,9 +212,7 @@ def kmv_overlap(summary: DataFrame, k: int = 64) -> DataFrame:
             F.sum(F.col("in_a") * F.col("in_b")).alias("n_both"),
         )
     )
-    u_est = F.when(
-        F.col("n_min") < k, F.col("n_min").cast("double")
-    ).otherwise((k - 1) * 4503599627370496.0 / (F.col("h_k") + 1))
+    u_est = _kmv_estimate(k)
     j_est = F.col("n_both").cast("double") / F.col("n_min").cast("double")
     return kk.select(
         "grp_a",
@@ -294,15 +300,6 @@ def merge_hll_batch(
     )
 
 
-def hll_reach(summary: DataFrame) -> DataFrame:
-    """(grp, zero_registers, harmonic_den_scaled, hll_raw_estimate)
-    from a stored register table — delegates to the shared exact-
-    integer estimator (``operators.sketch.hll_estimate``)."""
-    from ..operators.sketch import hll_estimate
-
-    return hll_estimate(summary)
-
-
 def streaming_hll(
     stream: DataFrame,
     table: DeltaLogTable,
@@ -315,7 +312,8 @@ def streaming_hll(
     sketch rollup next to CMS (cell SUM) and KMV (k-min), with the
     tightest state of the three (16 rows per group) and an exact
     merge.  Each source file counts exactly once across runs and
-    restarts; ``hll_reach`` reads the estimate at any time."""
+    restarts; ``operators.sketch.hll_estimate`` reads the
+    estimate at any time."""
     return foreach_batch(stream, checkpoint, partial(
         merge_hll_batch, table=table, group_col=group_col,
         item_col=item_col,

@@ -6,6 +6,11 @@ exact operators — the check the DuckDB oracle can't express."""
 
 from __future__ import annotations
 
+import ast
+import re
+from pathlib import Path
+
+import duckdb
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -128,6 +133,105 @@ def test_word_shingles_and_jaccard(spark):
     ).collect()[0]
     assert sorted(out.sh2) == ["a b", "b c", "c d"]
     assert abs(out.j - 1 / 3) < 1e-12
+
+
+#: whitespace edge cases: Java's ``\s`` (Spark) includes U+000B where
+#: RE2's (DuckDB) does not; neither engine splits on NBSP or U+2003
+TOKENIZER_CASES = [
+    "", "   ", "\ta b", "  The  QUICK fox ", "a\x0bb", "a\x0cb\r\nc",
+    "a\u00a0b", "a\u2003b",
+]
+
+
+def _both_engines(spark, spark_cols, sql_cols):
+    """Each case's values under the Spark columns and, in the same
+    order, under the DuckDB expressions over a ``text`` column."""
+    df = spark.createDataFrame(
+        list(enumerate(TOKENIZER_CASES)), "i int, text string"
+    )
+    rows = df.select("i", *spark_cols).orderBy("i").collect()
+    got_spark = [tuple(r)[1:] for r in rows]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, text VARCHAR)")
+    con.executemany(
+        "INSERT INTO t VALUES (?, ?)", list(enumerate(TOKENIZER_CASES))
+    )
+    got_duckdb = [
+        r[1:] for r in con.execute(
+            f"SELECT i, {', '.join(sql_cols)} FROM t ORDER BY i"
+        ).fetchall()
+    ]
+    return got_spark, got_duckdb
+
+
+@pytest.mark.parametrize("lowercase", [False, True])
+def test_duckdb_tokenizer_matches_spark(spark, lowercase):
+    """``tokens_sql``/``nonempty_tokens_sql`` split exactly where
+    Spark's ``tokens``/``nonempty_tokens`` do, U+000B included."""
+    got_spark, got_duckdb = _both_engines(
+        spark,
+        [TX.tokens("text", lowercase), TX.nonempty_tokens("text", lowercase)],
+        [TX.tokens_sql("text", lowercase),
+         TX.nonempty_tokens_sql("text", lowercase)],
+    )
+    assert [tuple(map(list, r)) for r in got_spark] == got_duckdb
+    assert got_duckdb[4] == (["a", "b"], ["a", "b"])  # U+000B splits
+
+
+def test_duckdb_text_rules_match_spark(spark):
+    """The other text rules an oracle reproduces agree on the same
+    cases: BPE-ish token count, fingerprint, language id, stopwords."""
+    got_spark, got_duckdb = _both_engines(
+        spark,
+        [F.size(TX.bpe_ish_tokens("text")), TX.fingerprint("text"),
+         TX.lang_id("text"), TX.stopword_count(TX.nonempty_tokens("text"))],
+        [f"len(regexp_extract_all(text, '{TX.BPE_ISH_PATTERN_SQL}'))",
+         TX.fingerprint_sql(), TX.lang_id_sql(),
+         f"len(list_filter({TX.nonempty_tokens_sql()},"
+         f" x -> x IN {TX.STOPWORDS_SQL}))"],
+    )
+    assert got_spark == got_duckdb
+    assert got_duckdb[3][2:] == ("en", 1)
+
+
+def _non_docstring_strings(tree: ast.AST) -> list[str]:
+    """Every string literal in ``tree`` (f-string parts included)
+    except docstrings."""
+    docs = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                          ast.AsyncFunctionDef))
+        and n.body and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    return [
+        n.value for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        and id(n) not in docs
+    ]
+
+
+def test_text_rules_are_written_once():
+    """In package code, the DuckDB tokenizer (``string_split_regex``)
+    and the stopword literals appear only in ``functions/text.py``:
+    every oracle builds them from the forms there (docstrings do not
+    count)."""
+    pkg = Path(TX.__file__).resolve().parent.parent
+    stopwords_sql = re.compile(r"'the',\s*'a',\s*'of'")
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        strings = _non_docstring_strings(tree)
+        tuples = [
+            tuple(e.value for e in n.elts)
+            for n in ast.walk(tree) if isinstance(n, (ast.Tuple, ast.List))
+            and n.elts and all(isinstance(e, ast.Constant) for e in n.elts)
+        ]
+        if (any("string_split_regex" in v or stopwords_sql.search(v)
+                for v in strings) or TX.STOPWORDS in tuples):
+            sites.append(path.relative_to(pkg).as_posix())
+    assert sites == ["functions/text.py"]
 
 
 def test_multimodal_roundtrip_and_stub_gate(spark):

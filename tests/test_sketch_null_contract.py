@@ -28,11 +28,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.sketch import (
+    hll_estimate,
+)
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
     DeltaLogTable,
 )
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.sketch_rollup import (
-    hll_reach,
     kmv_estimates,
     merge_cms_batch,
     merge_hll_batch,
@@ -91,7 +93,7 @@ FAMILIES = {
     "hll": dict(
         merge=lambda b, t, **ids: merge_hll_batch(b, t, "grp", "item",
                                                   **ids),
-        readout=lambda t: hll_reach(t.read()),
+        readout=lambda t: hll_estimate(t.read()),
     ),
     "qdigest": dict(
         merge=lambda b, t, **ids: merge_qdigest_batch(

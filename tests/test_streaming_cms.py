@@ -269,10 +269,10 @@ def test_streaming_hll_registers_equal_batch_union(spark, tmp_path):
     from pyspark.sql.types import LongType
 
     from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.sketch import (
+        hll_estimate,
         hll_registers,
     )
     from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.sketch_rollup import (
-        hll_reach,
         streaming_hll,
     )
 
@@ -325,7 +325,7 @@ def test_streaming_hll_registers_equal_batch_union(spark, tmp_path):
     # estimates from the maintained table land inside the 3-sigma
     # envelope (1.04/sqrt(16) per sigma) of the true distincts
     est = {r["grp"]: r["hll_raw_estimate"]
-           for r in hll_reach(regs.read()).collect()}
+           for r in hll_estimate(regs.read()).collect()}
     true = {"a": 400, "b": 9}
     for g, t in true.items():
         assert abs(est[g] - t) / t < 0.78, (g, est[g], t)
