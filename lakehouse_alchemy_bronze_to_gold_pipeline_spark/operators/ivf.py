@@ -24,10 +24,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double_array, cosine, literal_vector
+from .similarity import cosine_topk
 
 
 def _kmeans(sample: np.ndarray, n_lists: int, iters: int, seed: int) -> np.ndarray:
@@ -234,16 +235,4 @@ def ivf_probe(
     scored = q.join(assigned, "list_id").withColumn(
         "cos_raw", cosine(F.col("qv"), F.col("cv"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("cos_raw", 12).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return cosine_topk(scored, k)

@@ -22,6 +22,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.deltalog import DeltaLogTable
 from ..sources.tables import TableIO
 
 
@@ -101,25 +102,26 @@ def upsert_keep_latest(
 
 def streaming_upsert(
     stream: DataFrame,
-    io: TableIO,
-    table: str,
+    table: DeltaLogTable,
     keys: Sequence[str],
     order_col: str,
     checkpoint: str,
 ):
-    """Streaming SCD-1 sink: each micro-batch merges into ``table``
-    via ``foreachBatch`` + ``upsert_keep_latest`` — the idiomatic way
-    to get MERGE semantics out of Structured Streaming (a plain
-    append sink would accumulate stale versions).  Exactly-once comes
-    from the checkpoint: a replayed batch re-merges idempotently
-    (last-writer-wins on the same rows)."""
+    """Streaming SCD-1 sink: each micro-batch, collapsed to its latest
+    row per key, folds into ``table``'s snapshot with
+    ``merge_keep_latest`` — the idiomatic way to get MERGE semantics
+    out of Structured Streaming (a plain append sink would accumulate
+    stale versions).  The fold commits with the stream's ``txn``, so a
+    batch replayed after a crash is skipped."""
     from ..streaming.sink import foreach_batch
 
-    spark = stream.sparkSession
-
-    def merge_batch(batch: DataFrame, **_ids) -> None:
-        # dedup within the batch first so MERGE sees one row per key
+    def merge_batch(batch: DataFrame, app_id: str, batch_id: int) -> None:
         one = collapse_keep_latest(batch, keys, order_col)
-        upsert_keep_latest(spark, io, table, one, keys, order_col)
+        table.write_batch_exactly_once(
+            lambda snap: one if snap is None
+            else merge_keep_latest(snap, one, keys, order_col),
+            app_id,
+            batch_id,
+        )
 
     return foreach_batch(stream, checkpoint, merge_batch)

@@ -35,6 +35,30 @@ from ..functions.vectors import (
 )
 
 
+def cosine_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The k best neighbors per query of a scored (query_id,
+    neighbor_id, cos_raw) relation, as (query_id, neighbor_id,
+    cosine_sim, rank) — the readout every exact-rerank top-k shares."""
+    # rank on cosine ROUNDED to 12 decimals: the two engines sum the
+    # dot product in different orders (numpy pairwise vs sequential),
+    # so unrounded near-ties can differ at ~1e-16 and flip a rank
+    # cross-engine; at 12 decimals the order is identical in both and
+    # neighbor_id stays the deterministic tiebreak
+    w = Window.partitionBy("query_id").orderBy(
+        F.round("cos_raw", 12).desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round("cos_raw", 6).alias("cosine_sim"),
+            "rank",
+        )
+    )
+
+
 def topk_bruteforce(
     corpus: DataFrame,
     query_vec,
@@ -96,24 +120,7 @@ def knn_join(
     scored = q.crossJoin(c).withColumn(
         "cos_raw", cosine_arrow(F.col("qv"), F.col("cv"))
     )
-    # rank on cosine ROUNDED to 12 decimals: the two engines sum the
-    # dot product in different orders (numpy pairwise vs sequential),
-    # so unrounded near-ties can differ at ~1e-16 and flip a rank
-    # cross-engine; at 12 decimals the order is identical in both and
-    # neighbor_id stays the deterministic tiebreak
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("cos_raw", 12).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return cosine_topk(scored, k)
 
 
 def cosine_pairs(
@@ -368,24 +375,7 @@ def lsh_topk(
     scored = q.join(c, "sig").withColumn(
         "cos_raw", cosine(F.col("qv"), F.col("cv"))
     )
-    # rank on cosine ROUNDED to 12 decimals: the two engines sum the
-    # dot product in different orders (numpy pairwise vs sequential),
-    # so unrounded near-ties can differ at ~1e-16 and flip a rank
-    # cross-engine; at 12 decimals the order is identical in both and
-    # neighbor_id stays the deterministic tiebreak
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("cos_raw", 12).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return cosine_topk(scored, k)
 
 
 def cluster_blocked_pairs(
@@ -627,21 +617,4 @@ def lsh_topk_banded(
     scored = cand.withColumn(
         "cos_raw", cosine(F.col("qv"), F.col("cv"))
     )
-    # rank on cosine ROUNDED to 12 decimals: the two engines sum the
-    # dot product in different orders (numpy pairwise vs sequential),
-    # so unrounded near-ties can differ at ~1e-16 and flip a rank
-    # cross-engine; at 12 decimals the order is identical in both and
-    # neighbor_id stays the deterministic tiebreak
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("cos_raw", 12).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return cosine_topk(scored, k)

@@ -540,6 +540,24 @@ class DeltaLogTable:
         none) — the protocol's idempotent-writer bookkeeping."""
         return self._txn_watermarks().get(app_id, -1)
 
+    def read_before(self, app_id: str, batch_id: int) -> DataFrame | None:
+        """The snapshot batch ``batch_id`` of writer ``app_id`` builds
+        on: the version before the commit carrying that ``txn`` when
+        one landed (a replay), else the latest; ``None`` when that is
+        before the first commit.  A sink that commits several tables
+        under one txn reads each this way, so a replay recomputes what
+        the first run computed."""
+        landed = next((
+            v for v in self.versions() for a in self._actions(v)
+            if a.get("txn", {}).get("appId") == app_id
+            and a["txn"]["version"] == batch_id
+        ), None)
+        if landed is not None:
+            return self.read(landed - 1) if landed else None
+        if self.versions() or self._checkpoints():
+            return self.read()
+        return None
+
     def write_batch_exactly_once(
         self,
         data: DataFrame | Callable[[DataFrame | None], DataFrame],

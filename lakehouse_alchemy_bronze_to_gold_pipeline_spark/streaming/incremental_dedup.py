@@ -4,23 +4,29 @@ The batch MinHash operator answers "which pairs in THIS corpus are
 near-dups"; a training-data pipeline needs the incremental question:
 "is this NEW document a near-dup of ANYTHING seen so far".  Holding
 the whole corpus in streaming state is impossible at 100 TB, so the
-accumulated knowledge lives in two ordinary tables:
+accumulated knowledge lives in two ``DeltaLogTable``s:
 
-- ``{name}_sigs``:    (id, shingles)            — verify-side lookup
-- ``{name}_buckets``: the LSH index — (id, band_idx, band_hash) for
+- the sigs table:    (id, shingles)            — verify-side lookup
+- the buckets table: the LSH index — (id, band_idx, band_hash) for
   the xxhash family, (id, bucket) for the md5 oracle family
 
 Per micro-batch (``foreachBatch``):
 
 1. signature + bucket the batch docs (the batch-operator expressions);
-2. replay guard: drop ids already in ``{name}_sigs`` (a checkpoint
-   replay re-presents rows whose state was already committed);
+2. read both state tables as they stood before this batch
+   (``DeltaLogTable.read_before``) and drop ids already in the sigs
+   table (an id re-delivered in a later batch was decided already);
 3. within-batch dedup: verified pairs among new docs, smaller id wins;
 4. cross-corpus dedup: new buckets equi-join the PERSISTED bucket
    table on the bucket key — the index prunes the corpus to
    colliding docs only — then exact-Jaccard verify against the stored
    shingles; any match drops the new doc (first-writer-wins);
-5. append survivors to the output + both state tables.
+5. commit the survivors to the sigs table, the buckets table and the
+   output, each under the stream's ``txn``.
+
+Exactly once across a crash inside a batch: the replay reads the same
+pre-batch state, so it recomputes the same survivors, and each of the
+three tables skips the commit that already landed.
 
 Steps 3-4 are the PURE batch-gate core :func:`gate_batch_sigs` —
 state in, survivors out, no table IO — which is also what the
@@ -50,7 +56,7 @@ from ..operators.minhash import (
     minhash_signatures,
     pairs_from_buckets,
 )
-from ..sources.tables import TableIO
+from ..sources.deltalog import DeltaLogTable
 from .sink import foreach_batch
 
 #: Broadcast ceiling for a gate's dropped-id relation, in rows (one
@@ -191,7 +197,8 @@ def gate_batch_sigs(
 
 
 class IncrementalNearDupFilter:
-    """First-writer-wins near-dup gate over an append-only doc stream.
+    """First-writer-wins near-dup gate over an append-only doc stream,
+    its state in ``sig_table`` and ``bucket_table``.
 
     ``family`` picks the hash family: ``"xxhash"`` (default — the
     engine-internal fast path) or ``"md5"`` (the cross-engine
@@ -201,8 +208,8 @@ class IncrementalNearDupFilter:
 
     def __init__(
         self,
-        io: TableIO,
-        name: str,
+        sig_table: DeltaLogTable,
+        bucket_table: DeltaLogTable,
         id_col: str = "doc_id",
         text_col: str = "text",
         threshold: float = 0.5,
@@ -214,8 +221,8 @@ class IncrementalNearDupFilter:
     ):
         if family not in ("xxhash", "md5"):
             raise ValueError(f"unknown hash family {family!r}")
-        self.io = io
-        self.name = name
+        self.sig_table = sig_table
+        self.bucket_table = bucket_table
         self.id_col = id_col
         self.text_col = text_col
         self.threshold = threshold
@@ -225,14 +232,6 @@ class IncrementalNearDupFilter:
         self.band_rows = n_hashes // n_bands
         self.max_bucket = max_bucket
         self.family = family
-
-    @property
-    def sig_table(self) -> str:
-        return f"{self.name}_sigs"
-
-    @property
-    def bucket_table(self) -> str:
-        return f"{self.name}_buckets"
 
     @property
     def bucket_keys(self) -> list[str]:
@@ -258,28 +257,30 @@ class IncrementalNearDupFilter:
         return band_buckets(sigs, self.id_col, self.n_bands, self.band_rows)
 
     # ------------------------------------------------------ batch core
-    def dedup_batch(self, batch: DataFrame) -> DataFrame:
+    def dedup_batch(
+        self, batch: DataFrame, *, app_id: str, batch_id: int
+    ) -> DataFrame:
         """Return the batch rows that survive the near-dup gate, and
-        fold the survivors into the persisted state tables."""
-        spark = batch.sparkSession
+        commit the survivors to both state tables as batch
+        ``batch_id`` of writer ``app_id`` (a table that already holds
+        that commit skips it)."""
         idc = self.id_col
+        state_sigs = self.sig_table.read_before(app_id, batch_id)
+        state_buckets = self.bucket_table.read_before(app_id, batch_id)
 
         cached = []  # batch-lifetime persists, released before return
         sigs = self.signatures(batch).persist()
         cached.append(sigs)
-        has_state = spark.catalog.tableExists(self.sig_table)
-        if has_state:
-            # replay guard: a checkpoint replay re-presents committed ids
-            seen = self.io.read(self.sig_table).select(idc)
+        if state_sigs is not None:
+            # an id re-delivered in a later batch was decided already
+            seen = state_sigs.select(idc)
             sigs = sigs.join(seen, idc, "left_anti").persist()
             cached.append(sigs)
 
         fresh = gate_batch_sigs(
             sigs,
-            self.io.read(self.sig_table).select(idc, "shingles")
-            if has_state
-            else None,
-            self.io.read(self.bucket_table) if has_state else None,
+            None if state_sigs is None else state_sigs.select(idc, "shingles"),
+            state_buckets,
             id_col=idc,
             threshold=self.threshold,
             max_bucket=self.max_bucket,
@@ -287,62 +288,31 @@ class IncrementalNearDupFilter:
             keys=self.bucket_keys,
             cached=cached,
         )
-
-        # ---- fold survivors into state.  MATERIALIZE first: the
-        # survivor lineage READS the state tables (replay guard,
-        # bucket probe, shingle lookup), so appending and then lazily
-        # re-evaluating would see the batch's own rows and drop them
-        # as self-duplicates.  localCheckpoint cuts the lineage at the
-        # computed result (persist() alone only caches best-effort).
+        # computed once: the two state commits and the caller's output
+        # commit all read the survivors, and the gate is the batch's
+        # heaviest plan
         fresh = fresh.localCheckpoint(eager=True)
-        # survivors materialize BEFORE the state appends touch the
-        # tables their lineage reads (and stay materialized — the
-        # caller's append must not re-evaluate against mutated state)
-        survivors = batch.join(fresh.select(idc), idc, "left_semi")
-        survivors = survivors.localCheckpoint(eager=True)
-        self.io.write_append(fresh.select(idc, "shingles"), self.sig_table)
-        self.io.write_append(self.buckets(fresh), self.bucket_table)
-        self._refresh(self.sig_table)
-        self._refresh(self.bucket_table)
-        # everything downstream reads the two localCheckpoints; the
-        # intermediate caches would otherwise pin executor storage for
-        # the stream's lifetime (one leak per micro-batch)
         for df in cached:
             df.unpersist()
-        return survivors
-
-    def _refresh(self, table: str) -> None:
-        """Invalidate the OWNING session's cached file listing.
-
-        ``foreachBatch`` hands the batch a CLONED session; appends
-        through it do not invalidate the parent session's relation
-        cache, so a caller that read these tables before the batch
-        would keep seeing the stale listing.  Refresh through the
-        session ``TableIO`` was built with (the one callers read on).
-        """
-        try:
-            self.io.spark.catalog.refreshTable(table)
-        except Exception:
-            pass  # table may not exist yet on first batch
+        self.sig_table.write_batch_exactly_once(
+            fresh.select(idc, "shingles"), app_id, batch_id
+        )
+        self.bucket_table.write_batch_exactly_once(
+            self.buckets(fresh), app_id, batch_id
+        )
+        return batch.join(fresh.select(idc), idc, "left_semi")
 
     # ------------------------------------------------------- streaming
-    def sink(self, stream: DataFrame, out_table: str, checkpoint: str):
-        """foreachBatch writer: gate each micro-batch, append the
-        survivors.  A batch replayed after a clean failure (nothing
-        appended) re-runs in full, and a replay of an id already in
-        ``_sigs`` is dropped by the id anti-join.
+    def sink(self, stream: DataFrame, out: DeltaLogTable, checkpoint: str):
+        """foreachBatch writer: gate each micro-batch and append the
+        survivors to ``out``, exactly once across a crash anywhere in
+        the batch (see the module docstring)."""
 
-        NOT exactly-once across a crash inside a batch: the three
-        appends (``_sigs``, ``_buckets``, ``out_table``) are separate
-        commits.  A crash after the ``_sigs`` append and before the
-        output append loses that batch's survivors — on replay the
-        anti-join drops every id of the batch — and a crash before
-        the ``_buckets`` append loses their buckets, so later near
-        duplicates of them pass the gate."""
-
-        def run(batch: DataFrame, **_ids) -> None:
-            survivors = self.dedup_batch(batch)
-            self.io.write_append(survivors, out_table)
-            self._refresh(out_table)
+        def run(batch: DataFrame, *, app_id: str, batch_id: int) -> None:
+            out.write_batch_exactly_once(
+                self.dedup_batch(batch, app_id=app_id, batch_id=batch_id),
+                app_id,
+                batch_id,
+            )
 
         return foreach_batch(stream, checkpoint, run)

@@ -8,10 +8,11 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-    TableIO,
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+    DeltaLogTable,
 )
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.incremental_dedup import (
     IncrementalNearDupFilter,
@@ -35,23 +36,23 @@ def _write(dirpath, name, rows):
             f.write(json.dumps(r) + "\n")
 
 
-def _run(spark, gate, src, cp, out_table):
+def _tables(spark, root, *names):
+    return [DeltaLogTable(spark, str(root / n)) for n in names]
+
+
+def _ids(table):
+    return sorted(r.doc_id for r in table.read().collect())
+
+
+def _run(spark, gate, src, cp, out):
     stream = spark.readStream.schema(SCHEMA).json(src)
-    q = gate.sink(stream, out_table, cp).start()
+    q = gate.sink(stream, out, cp).start()
     q.awaitTermination(120)
 
 
 def test_incremental_neardup_across_runs(spark, tmp_path):
-    import shutil
-
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in ("incq_dd_sigs", "incq_dd_buckets", "incq_dd_out"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
-    gate = IncrementalNearDupFilter(io, "incq_dd", threshold=0.5)
+    sigs, buckets, out = _tables(spark, tmp_path, "sigs", "buckets", "out")
+    gate = IncrementalNearDupFilter(sigs, buckets, threshold=0.5)
     src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
 
     # run 1: A, B distinct; C is a near-dup of A (same batch) -> drop C
@@ -60,10 +61,8 @@ def test_incremental_neardup_across_runs(spark, tmp_path):
         {"doc_id": 2, "text": OTHER},
         {"doc_id": 3, "text": BASE.replace("lazy", "sleepy")},
     ])
-    _run(spark, gate, src, cp, "incq_dd_out")
-    assert sorted(
-        r.doc_id for r in spark.read.table("incq_dd_out").collect()
-    ) == [1, 2]
+    _run(spark, gate, src, cp, out)
+    assert _ids(out) == [1, 2]
 
     # run 2: D dups A from the PREVIOUS run -> dropped via the
     # persisted index; E is new -> kept
@@ -71,38 +70,29 @@ def test_incremental_neardup_across_runs(spark, tmp_path):
         {"doc_id": 4, "text": BASE.replace("quick", "swift")},
         {"doc_id": 5, "text": "unrelated fresh content about parquet files"},
     ])
-    _run(spark, gate, src, cp, "incq_dd_out")
-    assert sorted(
-        r.doc_id for r in spark.read.table("incq_dd_out").collect()
-    ) == [1, 2, 5]
+    _run(spark, gate, src, cp, out)
+    assert _ids(out) == [1, 2, 5]
 
     # replayed/already-seen ids are ignored (exactly-once guard)
     _write(src, "b3.json", [
         {"doc_id": 5, "text": "unrelated fresh content about parquet files"},
         {"doc_id": 6, "text": OTHER.replace("different", "distinct")},
     ])
-    _run(spark, gate, src, cp, "incq_dd_out")
-    got = sorted(r.doc_id for r in spark.read.table("incq_dd_out").collect())
-    assert got == [1, 2, 5]  # 5 replay-guarded, 6 near-dups OTHER (doc 2)
+    _run(spark, gate, src, cp, out)
+    assert _ids(out) == [1, 2, 5]  # 5 already stored, 6 near-dups OTHER (doc 2)
 
     # state tables carry exactly the survivors
-    assert sorted(
-        r.doc_id for r in spark.read.table("incq_dd_sigs").collect()
-    ) == [1, 2, 5]
-    for t in ("incq_dd_sigs", "incq_dd_buckets", "incq_dd_out"):
-        spark.sql(f"DROP TABLE {t}")
+    assert _ids(sigs) == [1, 2, 5]
 
 
-def test_md5_gate_two_runs_equal_registry_fixed(spark):
+def test_md5_gate_two_runs_equal_registry_fixed(spark, tmp_path):
     """The r12 certification claim, pinned from the STREAMING side:
     running the real ``IncrementalNearDupFilter`` (md5 family) over
     the documents corpus as two doc_id-parity micro-batches — state
-    tables, replay guard, TableIO appends and all — admits EXACTLY
+    tables, id anti-join, exactly-once commits and all — admits EXACTLY
     the docs the oracle-backed ``incremental_neardup_fixed`` registry
     query computes at rest.  The registry entry's DuckDB hash match
     therefore certifies the decisions this wrapper commits."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from lakehouse_alchemy_bronze_to_gold_pipeline_spark.queries import (
@@ -113,19 +103,17 @@ def test_md5_gate_two_runs_equal_registry_fixed(spark):
     )
 
     sf = "/root/testdata/sf0.001"
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in ("incq_md5_sigs", "incq_md5_buckets"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    io = TableIO(spark, fmt="parquet")
     gate = IncrementalNearDupFilter(
-        io, "incq_md5", threshold=0.4, family="md5"
+        *_tables(spark, tmp_path, "sigs", "buckets"), threshold=0.4,
+        family="md5",
     )
     d = load(spark, sf, "documents")
-    s1 = gate.dedup_batch(d.filter(F.col("doc_id") % 2 == 0))
-    s2 = gate.dedup_batch(d.filter(F.col("doc_id") % 2 != 0))
+    s1 = gate.dedup_batch(
+        d.filter(F.col("doc_id") % 2 == 0), app_id="md5", batch_id=0
+    )
+    s2 = gate.dedup_batch(
+        d.filter(F.col("doc_id") % 2 != 0), app_id="md5", batch_id=1
+    )
     got = {
         1: sorted(r.doc_id for r in s1.select("doc_id").collect()),
         2: sorted(r.doc_id for r in s2.select("doc_id").collect()),
@@ -154,5 +142,56 @@ def test_md5_gate_two_runs_equal_registry_fixed(spark):
     }
     got = {b: [i for i in ids if i in sigful] for b, ids in got.items()}
     assert got == want
-    for t in ("incq_md5_sigs", "incq_md5_buckets"):
-        spark.sql(f"DROP TABLE {t}")
+
+
+class _CrashOnce(DeltaLogTable):
+    """An output table whose first commit raises: a crash after the
+    state tables committed the batch and before the output did."""
+
+    crashed = False
+
+    def write_batch_exactly_once(self, *args, **kwargs):
+        if not self.crashed:
+            self.crashed = True
+            raise RuntimeError("crash before the output commit")
+        return super().write_batch_exactly_once(*args, **kwargs)
+
+
+def test_crash_before_the_output_commit_replays_exactly_once(
+    spark, tmp_path
+):
+    """The restarted stream re-runs the crashed batch against the state
+    as it stood before it, so it admits the same survivors; every table
+    then equals a clean run's, version for version."""
+    from pyspark.errors import StreamingQueryException
+
+    batches = [
+        [{"doc_id": 1, "text": BASE}, {"doc_id": 2, "text": OTHER},
+         {"doc_id": 3, "text": BASE.replace("lazy", "sleepy")}],
+        [{"doc_id": 4, "text": BASE.replace("quick", "swift")},
+         {"doc_id": 5, "text": "unrelated fresh content about parquet"}],
+    ]
+
+    def stream_both(root, out_cls):
+        tables = _tables(spark, root, "sigs", "buckets")
+        out = out_cls(spark, str(root / "out"))
+        gate = IncrementalNearDupFilter(*tables, threshold=0.5)
+        src, cp = str(root / "src"), str(root / "cp")
+        _write(src, "b1.json", batches[0])
+        if out_cls is _CrashOnce:
+            with pytest.raises(StreamingQueryException):
+                _run(spark, gate, src, cp, out)
+            assert [t.versions() for t in (*tables, out)] == [[0], [0], []]
+        _run(spark, gate, src, cp, out)
+        _write(src, "b2.json", batches[1])
+        _run(spark, gate, src, cp, out)
+        return [
+            (t.versions(), sorted(repr(tuple(r)) for r in t.read().collect()))
+            for t in (*tables, out)
+        ]
+
+    clean = stream_both(tmp_path / "clean", DeltaLogTable)
+    assert _ids(DeltaLogTable(spark, str(tmp_path / "clean" / "out"))) == [
+        1, 2, 5
+    ]
+    assert stream_both(tmp_path / "crash", _CrashOnce) == clean

@@ -7,7 +7,6 @@ ids must not double-fold."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -22,8 +21,8 @@ from pyspark.sql.types import (
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.ivf import (
     ivf_topk,
 )
-from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-    TableIO,
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+    DeltaLogTable,
 )
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.ivf_maintain import (
     IncrementalIVFIndex,
@@ -49,20 +48,10 @@ def _rows(df):
     )
 
 
-def _drop(spark, *tables):
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in tables:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-
-
 def test_incremental_ivf_matches_batch_build(spark, tmp_path):
-    _drop(spark, "ivf_inc_lists")
-    io = TableIO(spark, fmt="parquet")
+    lists = DeltaLogTable(spark, str(tmp_path / "lists"))
     cents = _centroids()
-    idx = IncrementalIVFIndex(io, "ivf_inc", cents)
+    idx = IncrementalIVFIndex(lists, cents)
 
     emb = (
         spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
@@ -88,13 +77,13 @@ def test_incremental_ivf_matches_batch_build(spark, tmp_path):
         q.awaitTermination(120)
 
     run()
-    n1 = io.read("ivf_inc_lists").count()
+    n1 = lists.read().count()
     assert n1 == b1.count()
 
     b2.write.parquet(os.path.join(src, "p2"))
     run()  # checkpoint: p1 not re-folded
 
-    stored = io.read("ivf_inc_lists")
+    stored = lists.read()
     assert stored.count() == emb.count()
     # ids fold exactly once
     assert stored.select("neighbor_id").distinct().count() == emb.count()
@@ -105,20 +94,19 @@ def test_incremental_ivf_matches_batch_build(spark, tmp_path):
     assert got == want
     assert len(got) == 25  # 5 queries x 5
 
-    # replay guard: re-presenting already-folded rows is a no-op
-    idx.append_batch(b1)
-    assert io.read("ivf_inc_lists").count() == emb.count()
+    # re-presenting already-folded rows in a new batch is a no-op
+    idx.append_batch(b1, app_id="late", batch_id=0)
+    assert lists.read().count() == emb.count()
     assert _rows(idx.topk(queries, k=5, n_probe=4)) == want
 
     # genuinely new vectors DO fold in and become findable
     nv = spark.createDataFrame(
         [(900001, [float(x) for x in cents[3]])], SCHEMA
     )
-    idx.append_batch(nv)
-    assert io.read("ivf_inc_lists").count() == emb.count() + 1
+    idx.append_batch(nv, app_id="late", batch_id=1)
+    assert lists.read().count() == emb.count() + 1
     hits = idx.topk(nv, k=1, n_probe=1).collect()
     assert hits[0].neighbor_id == 900001  # finds itself (cos=1)
-    _drop(spark, "ivf_inc_lists")
 
 
 # ------------------------------------------------------------ property
@@ -191,11 +179,10 @@ def test_incremental_pq_matches_batch_build(spark, tmp_path):
         IncrementalPQIndex,
     )
 
-    _drop(spark, "pq_inc_codes")
-    io = TableIO(spark, fmt="parquet")
+    codes = DeltaLogTable(spark, str(tmp_path / "codes"))
     rng = np.random.default_rng(23)
     books = rng.standard_normal((8, 16, 8))
-    idx = IncrementalPQIndex(io, "pq_inc", books)
+    idx = IncrementalPQIndex(codes, books)
 
     emb = (
         spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
@@ -226,7 +213,7 @@ def test_incremental_pq_matches_batch_build(spark, tmp_path):
     b2.write.parquet(os.path.join(src, "p2"))
     run()  # checkpoint: p1 not re-encoded
 
-    stored = io.read("pq_inc_codes")
+    stored = codes.read()
     assert stored.count() == emb.count()
 
     def rows(df):
@@ -239,8 +226,7 @@ def test_incremental_pq_matches_batch_build(spark, tmp_path):
     want = rows(pq_topk(emb, queries, books, k=5))
     assert got == want and len(got) == 20
 
-    # replay guard: no double-encode
-    idx.append_batch(b1)
-    assert io.read("pq_inc_codes").count() == emb.count()
+    # a re-presented batch does not double-encode
+    idx.append_batch(b1, app_id="late", batch_id=0)
+    assert codes.read().count() == emb.count()
     assert rows(idx.topk(queries, k=5)) == want
-    _drop(spark, "pq_inc_codes")

@@ -22,8 +22,12 @@ import os
 import random
 from pathlib import Path
 
+import numpy as np
 import pytest
 
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.merge import (
+    streaming_upsert,
+)
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.quality import (
     null_pk_rule,
     positive_rule,
@@ -37,6 +41,13 @@ from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming import (
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.fd_maintain import (
     IncrementalFDSketch,
 )
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.incremental_dedup import (
+    IncrementalNearDupFilter,
+)
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.ivf_maintain import (
+    IncrementalIVFIndex,
+    IncrementalPQIndex,
+)
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming.rollup import (
     continuous_aggregate,
 )
@@ -47,8 +58,17 @@ PKG = Path(__file__).resolve().parent.parent / (
 
 SCHEMA = (
     "grp string, item string, bucket bigint, amt double, "
-    "ts timestamp, value double, embedding array<double>"
+    "ts timestamp, value double, embedding array<double>, id bigint, "
+    "text string"
 )
+
+# near-duplicate texts: one word of a few base sentences replaced
+BASES = [
+    "the quick brown fox jumps over the lazy dog near the old river",
+    "spark sql engines shuffle rows between executors at every stage",
+    "each delta log entry commits one table version as a json file",
+]
+WORDS = ["red", "slow", "big", "one", "new", "odd"]
 
 # sink name -> (table names, start(stream, tables, checkpoint))
 SINKS = {
@@ -71,14 +91,28 @@ SINKS = {
     "continuous_aggregate": (["t"], lambda s, t, cp: continuous_aggregate(
         s, t[0], ts_col="ts", window="15 minutes",
         watermark="30 minutes", checkpoint=cp)),
+    "ivf": (["t"], lambda s, t, cp: IncrementalIVFIndex(
+        t[0], np.random.default_rng(7).standard_normal((3, 4)),
+        id_col="id").writer(s, cp)),
+    "pq": (["t"], lambda s, t, cp: IncrementalPQIndex(
+        t[0], np.random.default_rng(7).standard_normal((2, 4, 2)),
+        id_col="id").writer(s, cp)),
+    "neardup": (["sigs", "buckets", "out"], lambda s, t, cp:
+                IncrementalNearDupFilter(
+                    t[0], t[1], id_col="id").sink(s, t[2], cp)),
+    "upsert": (["t"], lambda s, t, cp: streaming_upsert(
+        s, t[0], ["grp"], "id", cp)),
 }
 
 
 def _write_batch(src: str, name: str, seed: int, n: int) -> None:
     rng = random.Random(seed)
+    text_rng = random.Random(-seed)
     os.makedirs(src, exist_ok=True)
     with open(os.path.join(src, name), "w") as fh:
-        for _ in range(n):
+        for i in range(n):
+            words = text_rng.choice(BASES).split()
+            words[text_rng.randrange(len(words))] = text_rng.choice(WORDS)
             fh.write(json.dumps({
                 "grp": rng.choice(["a", "b"]),
                 "item": rng.choice([None, "x", "y", "z", "w", "v"]),
@@ -87,6 +121,8 @@ def _write_batch(src: str, name: str, seed: int, n: int) -> None:
                 "ts": f"2024-01-01 10:{rng.randint(0, 29):02d}:00",
                 "value": float(rng.randint(1, 9)),
                 "embedding": [rng.random() for _ in range(4)],
+                "id": seed * 1000 + i,
+                "text": " ".join(words),
             }) + "\n")
 
 
@@ -162,7 +198,8 @@ def test_one_foreach_batch_call_in_the_package():
 @pytest.mark.parametrize(
     "module",
     ["streaming/sketch_rollup.py", "streaming/fd_maintain.py",
-     "streaming/rollup.py"],
+     "streaming/rollup.py", "streaming/ivf_maintain.py",
+     "streaming/incremental_dedup.py"],
 )
 def test_moved_sinks_keep_no_guard_of_their_own(module):
     """The sinks on the log use no catalog table and no replay guard

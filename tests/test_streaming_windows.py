@@ -189,14 +189,12 @@ def test_streaming_upsert_scd1(spark, tmp_path):
     from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.merge import (
         streaming_upsert,
     )
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-        TableIO,
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+        DeltaLogTable,
     )
 
     src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
-    io = TableIO(spark, fmt="parquet")
-    table = "scd1_stream_tbl"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    table = DeltaLogTable(spark, str(tmp_path / "scd1"))
 
     _write(src, "a.json", [
         {"user_id": "u1", "ts": "2024-01-01 10:00:00", "value": 1.0},
@@ -204,8 +202,8 @@ def test_streaming_upsert_scd1(spark, tmp_path):
         {"user_id": "u2", "ts": "2024-01-01 10:00:00", "value": 5.0},
     ])
     stream = spark.readStream.schema(SCHEMA).json(src)
-    streaming_upsert(stream, io, table, ["user_id"], "ts", cp).start().awaitTermination()
-    got = {r.user_id: r.value for r in spark.read.table(table).collect()}
+    streaming_upsert(stream, table, ["user_id"], "ts", cp).start().awaitTermination()
+    got = {r.user_id: r.value for r in table.read().collect()}
     assert got == {"u1": 2.0, "u2": 5.0}  # in-batch dedup kept latest
 
     _write(src, "b.json", [
@@ -214,10 +212,9 @@ def test_streaming_upsert_scd1(spark, tmp_path):
         {"user_id": "u1", "ts": "2024-01-01 09:00:00", "value": 0.5},   # stale -> loses
     ])
     stream = spark.readStream.schema(SCHEMA).json(src)
-    streaming_upsert(stream, io, table, ["user_id"], "ts", cp).start().awaitTermination()
-    got = {r.user_id: r.value for r in spark.read.table(table).collect()}
+    streaming_upsert(stream, table, ["user_id"], "ts", cp).start().awaitTermination()
+    got = {r.user_id: r.value for r in table.read().collect()}
     assert got == {"u1": 2.0, "u2": 7.0, "u3": 9.0}
-    spark.sql(f"DROP TABLE {table}")
 
 
 def test_continuous_aggregate_incremental_rollup(spark, tmp_path):
