@@ -1,13 +1,13 @@
 """Keyed snapshot diff — the change-data-capture primitive computed
 from two table states (what Delta's Change Data Feed emits
 incrementally, derived here relationally for plain-parquet tables;
-complements ``merge.upsert_keep_latest`` which APPLIES changes, this
+complements ``DeltaLogTable.upsert`` which APPLIES changes, this
 DETECTS them).
 
 Shape: ONE full outer join on the key columns; change class falls out
 of null-side analysis plus a column-list comparison for updates.  At
 100 TB both snapshots shuffle once on the keys — bucket both tables
-on the keys (``TableIO.write_bucketed``) and the join goes
+on the keys (Spark's ``bucketBy`` writer) and the join goes
 shuffle-free.
 """
 

@@ -1,39 +1,38 @@
 """SCD-1 upsert (SURVEY 4.3-L6: the reference rebuilds dims by full
 overwrite; a keyed MERGE is the incremental-correct form).
 
-With delta-spark present this issues a real ``MERGE INTO`` (matched ->
-update, not matched -> insert).  The portable fallback is the
-classic rewrite formulation::
+The engine has ONE upsert, last-writer-wins on ``order_col``::
 
-    target ∪ updates  →  row_number() over (partition by keys
-                                            order by order_col desc)
-                      →  keep rank 1  →  overwrite
+    updates  →  one row per key (highest order_col)
+             →  target ∪ updates  →  row_number() over (partition by
+                keys order by order_col desc)  →  keep rank 1
 
-which is exactly what MERGE computes for last-writer-wins, expressed
-as one shuffle on the merge keys.  At 100 TB the fallback rewrites
-the whole table (Delta's MERGE rewrites only touched files) — that
-asymmetry is the reason the engine prefers delta when installed.
+which is what ``MERGE INTO ... WHEN MATCHED AND s.v >= t.v THEN
+UPDATE ... WHEN NOT MATCHED THEN INSERT`` computes, expressed as one
+shuffle on the merge keys.  ``keep_latest_fold`` packages it as a
+fold over a table's snapshot: ``DeltaLogTable.upsert`` commits it in
+batch and ``streaming_upsert`` commits it once per micro-batch, both
+as one overwrite on the Delta log.  Like a MERGE without deletion
+vectors, each upsert rewrites the whole table.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.deltalog import DeltaLogTable
-from ..sources.tables import TableIO
 
 
 def collapse_keep_latest(
     df: DataFrame, keys: Sequence[str], order_col: str
 ) -> DataFrame:
-    """One row per key: the highest-``order_col`` row wins.  This is
-    the shared pre-dedup both MERGE entry points run on their update
-    set, so the documented contract ("any number of update rows per
-    key") holds on every branch — Delta's MERGE errors on multiple
-    source matches per target row."""
+    """One row per key: the highest-``order_col`` row wins.  The
+    upsert runs it on its update set first, so the contract "any
+    number of update rows per key" holds (Delta's MERGE errors on
+    multiple source matches per target row)."""
     w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -66,37 +65,15 @@ def merge_keep_latest(
     )
 
 
-def upsert_keep_latest(
-    spark: SparkSession,
-    io: TableIO,
-    table: str,
-    updates: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-) -> None:
-    """Last-writer-wins upsert of ``updates`` into ``table`` keyed by
-    ``keys``; ``order_col`` (descending) decides the winner among the
-    existing row and any number of update rows per key."""
-    if not spark.catalog.tableExists(table):
-        io.write_overwrite(updates, table)
-        return
-
-    if io.fmt == "delta":
-        one = collapse_keep_latest(updates, keys, order_col)
-        one.createOrReplaceTempView("__merge_updates")
-        on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        spark.sql(
-            f"""
-            MERGE INTO {table} t USING __merge_updates s ON {on}
-            WHEN MATCHED AND s.{order_col} >= t.{order_col}
-              THEN UPDATE SET *
-            WHEN NOT MATCHED THEN INSERT *
-            """
-        )
-        return
-
-    io.rewrite(
-        table, lambda snap: merge_keep_latest(snap, updates, keys, order_col)
+def keep_latest_fold(
+    updates: DataFrame, keys: Sequence[str], order_col: str
+) -> Callable[[DataFrame | None], DataFrame]:
+    """The SCD-1 upsert of ``updates`` as a fold over a table's
+    snapshot: ``updates`` collapsed to one row per key, then merged
+    keep-latest into the snapshot (or alone when there is none)."""
+    one = collapse_keep_latest(updates, keys, order_col)
+    return lambda snap: one if snap is None else merge_keep_latest(
+        snap, one, keys, order_col
     )
 
 
@@ -116,12 +93,8 @@ def streaming_upsert(
     from ..streaming.sink import foreach_batch
 
     def merge_batch(batch: DataFrame, app_id: str, batch_id: int) -> None:
-        one = collapse_keep_latest(batch, keys, order_col)
         table.write_batch_exactly_once(
-            lambda snap: one if snap is None
-            else merge_keep_latest(snap, one, keys, order_col),
-            app_id,
-            batch_id,
+            keep_latest_fold(batch, keys, order_col), app_id, batch_id
         )
 
     return foreach_batch(stream, checkpoint, merge_batch)

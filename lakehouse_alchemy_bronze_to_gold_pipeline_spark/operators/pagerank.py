@@ -8,8 +8,11 @@ Execution model (one bounded pass per iteration, the classic Spark
 formulation):
 
 - edges normalize ONCE into per-source contribution fractions
-  (``weight / Σ out-weights``) and are persisted — the static side
-  of every iteration;
+  (``weight / Σ out-weights``) and are ``localCheckpoint``ed — the
+  static side of every iteration, held in the block manager only
+  while the returned frame's lineage references it (a ``persist``
+  would stay cached for the session, and each cached relation's
+  executed adaptive plan would print inside the caller's plan);
 - each iteration is ONE equi-join of the rank relation to the edge
   relation on src (co-partitioned by the shuffle, reused across
   iterations) and ONE groupBy(dst) sum — partial aggregation
@@ -71,16 +74,16 @@ def pagerank(
     frac = (
         e.join(out, "src")
         .select("src", "dst", (F.col("w") / F.col("wout")).alias("frac"))
-        .persist()
+        .localCheckpoint()
     )
-    # nodes derive from the PERSISTED frac relation (frac preserves
+    # nodes derive from the CHECKPOINTED frac relation (frac preserves
     # every (src, dst) of e), so the expensive upstream edge build
     # materializes once instead of once per setup action
     nodes = (
         frac.select(F.col("src").alias("node"))
         .union(frac.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     n = nodes.count()
     if n == 0:
@@ -101,12 +104,11 @@ def pagerank(
             F.col("node").alias("dst"),
             F.lit(0.0).alias("frac"),
         )
-    ).persist()
+    ).localCheckpoint(eager=False)
     # count-gated broadcast of the STATIC side (r12, guide §3.1): the
-    # persisted frac relation is already materialized by the
-    # nodes.count() above, so the count is a cheap cached-scan action
-    # taken ONCE — not per iteration.  Under the ceiling the whole
-    # no-dangling loop plans as ONE BroadcastExchange (reused by every
+    # checkpointed frac relation is already materialized, so the count
+    # is a cheap scan of its blocks, taken ONCE — not per iteration.
+    # Under the ceiling the whole no-dangling loop plans as ONE BroadcastExchange (reused by every
     # iteration's BroadcastHashJoin) + one groupBy exchange per
     # iteration; the join arithmetic and therefore the ranks are
     # unchanged (same rows, same per-row products — only the sum's

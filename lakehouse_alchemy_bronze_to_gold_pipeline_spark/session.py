@@ -2,9 +2,10 @@
 
 The reference assumes a Databricks runtime with Delta + Unity Catalog
 pre-wired (``/root/reference/.../bronze_ingestion.py:26-28``).  We build
-an OSS session instead: Delta extensions are enabled only when the
-``delta-spark`` package is importable; otherwise every sink falls back
-to parquet (see ``sources.tables``).
+a plain OSS session instead, with no Delta extension: the medallion's
+catalog tables are parquet (``sources.tables.TableIO``), and tables
+that need history, compaction or an upsert live on the Delta log the
+engine reads and writes itself (``sources.deltalog``).
 
 Scale posture: these defaults are tuned so the *same* code runs on
 ``local[N]`` for tests and on a multi-executor cluster unchanged —
@@ -18,20 +19,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-try:  # delta-spark is optional; the engine runs pure-parquet without it
-    from delta import configure_spark_with_delta_pip  # type: ignore
-
-    _HAS_DELTA = True
-except Exception:  # pragma: no cover - depends on environment
-    configure_spark_with_delta_pip = None
-    _HAS_DELTA = False
-
-
-def has_delta() -> bool:
-    """True when delta-spark is importable in this environment."""
-    return _HAS_DELTA
-
 
 def get_spark(
     app_name: str = "lakehouse_alchemy_spark",
@@ -67,16 +54,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
-    if _HAS_DELTA:
-        builder = (
-            builder.config(
-                "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-            ).config(
-                "spark.sql.catalog.spark_catalog",
-                "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-            )
-        )
-        builder = configure_spark_with_delta_pip(builder)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

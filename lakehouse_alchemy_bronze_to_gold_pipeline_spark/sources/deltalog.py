@@ -2,10 +2,10 @@
 JSON, no delta-spark dependency).
 
 The reference writes every table as Delta (`bronze_ingestion.py:83`,
-`gold_transformation.py:79-85,150-160`); in this environment the
-delta-spark package is absent, so `TableIO` falls back to plain
-parquet catalog tables, which keep no history.  This module is the
-engine's one table layer with history and file skipping: the Delta
+`gold_transformation.py:79-85,150-160`).  The engine runs no
+delta-spark: the medallion's catalog tables are plain parquet
+(`TableIO`), which keep no history.  This module is the engine's one
+table layer with history, maintenance and file skipping: the Delta
 *protocol* is a public, documented format (an ordered
 `_delta_log/%020d.json` of `metaData` / `add` / `remove` actions
 over immutable parquet files — delta.io PROTOCOL.md), and reading or
@@ -26,11 +26,15 @@ What this gives the engine:
   wrote.  Optimistic concurrency is the protocol's put-if-absent on
   the next log name — a concurrent writer loses the create race and
   must retry.
-- History and file skipping on the same log: ``restore`` (RESTORE,
-  metadata only), ``changes`` (a change feed by snapshot diff),
-  ``forget_keys`` (erasure that also drops the history holding the
-  keys), ``vacuum``, ``optimize`` (OPTIMIZE ZORDER BY) and
-  ``pruned_read`` (data skipping on ``add.stats`` min/max).
+- History, maintenance and file skipping on the same log:
+  ``restore`` (RESTORE, metadata only), ``changes`` (a change feed by
+  snapshot diff), ``forget_keys`` (erasure that also drops the history
+  holding the keys), ``vacuum``, ``optimize`` (OPTIMIZE ZORDER BY, the
+  engine's one compaction), ``upsert`` (the engine's one SCD-1 MERGE)
+  and ``pruned_read`` (data skipping on ``add.stats`` min/max).
+- One log replay per commit: a commit reads the snapshot once, and
+  the ``txn`` watermarks that guard a streaming commit come out of
+  the same replay.
 
 Deliberate scope cuts (each raises, never guesses): checkpoint
 parquet files are NOT required for correctness (the JSON log is
@@ -57,7 +61,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import local_table, rebalance_partitions
+from .tables import cluster, local_table, rebalance_partitions
 
 #: reader features this implementation understands (protocol v1/v2
 #: tables, plus v3 tables that only list these features)
@@ -138,6 +142,18 @@ class DeltaLogTable:
             and f.split(".")[0].isdigit()
         )
 
+    def _listing(self) -> tuple[list[int], list[int], int]:
+        """JSON versions, checkpoint versions and the latest version
+        (-1 when there is no log).  A truncated-head log (JSON entries
+        dropped after a checkpoint) still has a latest version: the
+        checkpoint's."""
+        vs, cps = self.versions(), self._checkpoints()
+        return vs, cps, max(vs[-1:] + cps[-1:], default=-1)
+
+    def _snapshot(self) -> dict | None:
+        """The latest snapshot, or None when the table has no log."""
+        return self._replay(None) if self._listing()[2] >= 0 else None
+
     def _checkpoint_actions(self, version: int) -> list[dict]:
         """Actions stored in a checkpoint parquet (one action per
         row, exactly one non-null action column — the protocol's
@@ -156,17 +172,15 @@ class DeltaLogTable:
 
     def _replay(self, version: int | None) -> dict:
         """Fold the log up to ``version``: live files, metadata,
-        protocol.  Starts from the newest checkpoint <= version when
-        one exists (O(|files| + |tail|) instead of O(|log|) — the
-        metadata-scale path for long-lived tables), else from JSON
-        version 0."""
-        vs = self.versions()
-        cps = self._checkpoints()
-        if not vs and not cps:
+        protocol and the highest ``txn.version`` per appId.  Starts
+        from the newest checkpoint <= version when one exists
+        (O(|files| + |tail|) instead of O(|log|) — the metadata-scale
+        path for long-lived tables), else from JSON version 0."""
+        vs, cps, latest = self._listing()
+        if latest < 0:
             raise FileNotFoundError(
                 f"no Delta log at {self._log} (not a Delta table?)"
             )
-        latest = max(vs[-1] if vs else -1, cps[-1] if cps else -1)
         if version is None:
             version = latest
         start_cp = max(
@@ -196,6 +210,7 @@ class DeltaLogTable:
                 f"checkpoints {cps})"
             )
         live: dict[str, dict] = {}
+        txns: dict[str, int] = {}
         meta: dict | None = None
         proto: dict | None = None
         action_stream = []
@@ -224,9 +239,13 @@ class DeltaLogTable:
                     live[a["add"]["path"]] = a["add"]
                 elif "remove" in a:
                     live.pop(a["remove"]["path"], None)
+                elif "txn" in a:
+                    app, n = a["txn"]["appId"], int(a["txn"]["version"])
+                    txns[app] = max(txns.get(app, -1), n)
         if meta is None:
             raise ValueError("log contains no metaData action")
-        return {"files": live, "meta": meta, "version": version}
+        return {"files": live, "meta": meta, "version": version,
+                "txns": txns}
 
     # --------------------------------------------------------- read
     def read(self, version: int | None = None) -> DataFrame:
@@ -372,7 +391,8 @@ class DeltaLogTable:
         them, and ``vacuum`` deletes every data file the new version
         does not reference."""
         v = self._fold(
-            lambda snap: snap.filter(~F.col(key_col).isin(list(keys)))
+            lambda snap: snap.filter(~F.col(key_col).isin(list(keys))),
+            self._replay(None),
         )
         self.checkpoint()
         for old in self.versions():
@@ -385,18 +405,20 @@ class DeltaLogTable:
                 ))
         return {"version": v, **self.vacuum(keep_versions=1)}
 
-    def upsert(self, updates: DataFrame, keys: list[str]) -> int:
-        """MERGE INTO (matched -> update whole row, unmatched ->
-        insert) as a keyed rewrite + one overwrite commit — the
-        reference's SCD-1 pattern on the protocol path (updates
-        collapsed keep-latest happens upstream in
-        ``operators/merge.py``; here the last duplicate key wins via
-        anti-join semantics).  Row-level MERGE without deletion
-        vectors IS a rewrite; the prior version still time-travels.
-        The first upsert into a table with no log creates it."""
+    def upsert(
+        self, updates: DataFrame, keys: list[str], order_col: str
+    ) -> int:
+        """SCD-1 MERGE INTO (matched -> update whole row when the
+        update's ``order_col`` is not older, unmatched -> insert) as
+        one overwrite commit of ``operators.merge.keep_latest_fold``:
+        any number of update rows per key, the highest ``order_col``
+        wins.  Row-level MERGE without deletion vectors IS a rewrite;
+        the prior version still time-travels.  The first upsert into
+        a table with no log creates it."""
+        from ..operators.merge import keep_latest_fold
+
         return self._fold(
-            lambda snap: updates if snap is None
-            else snap.join(updates, keys, "left_anti").unionByName(updates)
+            keep_latest_fold(updates, keys, order_col), self._snapshot()
         )
 
     def vacuum(self, keep_versions: int = 1) -> dict:
@@ -408,9 +430,7 @@ class DeltaLogTable:
         the retained snapshots' union, never from age."""
         if keep_versions < 1:
             raise ValueError("keep_versions must be >= 1")
-        vs = self.versions()
-        cps = self._checkpoints()
-        latest = max(vs[-1] if vs else -1, cps[-1] if cps else -1)
+        vs, cps, latest = self._listing()
         if latest < 0:
             raise FileNotFoundError(f"no Delta log at {self._log}")
         horizon = latest - keep_versions + 1
@@ -437,37 +457,31 @@ class DeltaLogTable:
         self,
         n_files: int = 1,
         zorder_by: list[str] | None = None,
+        equidepth: bool = False,
     ) -> int:
         """OPTIMIZE [ZORDER BY]: rewrite the current snapshot into
-        ``n_files`` files — Morton-clustered on ``zorder_by`` when
-        given (`operators/zorder.py`), plain coalesce otherwise — and
-        commit remove(old)+add(new) with ``dataChange: false`` (the
-        protocol's bin-compaction marker: the TABLE's rows are
-        unchanged, only their layout).  Old files stay on disk for
-        time travel; footer stats on the new clustered files make
-        ``pruned_read`` envelopes tight.  The reference runs this as
-        ``OPTIMIZE ... ZORDER BY (customer_id, product_id)``
-        (gold_transformation.py:85,160)."""
+        ``n_files`` files — laid out by ``tables.cluster`` on
+        ``zorder_by`` when given (range-sorted on one key, Z-ordered
+        on several, with equi-depth bit buckets when ``equidepth``),
+        plain coalesce otherwise — and commit remove(old)+add(new)
+        with ``dataChange: false`` (the protocol's bin-compaction
+        marker: the TABLE's rows are unchanged, only their layout).
+        Old files stay on disk for time travel; footer stats on the
+        new clustered files make ``pruned_read`` envelopes tight.  The
+        reference runs this as ``OPTIMIZE ... ZORDER BY (customer_id,
+        product_id)`` (gold_transformation.py:85,160)."""
         snap = self._replay(None)
-        df = self.read()
-        part_cols = snap["meta"].get("partitionColumns") or []
-        if part_cols:
+        if snap["meta"].get("partitionColumns"):
             raise NotImplementedError(
                 "optimize on partitioned tables (per-partition bins) "
                 "is out of scope; compact partitions individually"
             )
-        if zorder_by:
-            from ..operators.zorder import zorder_key
-
-            keyed, key = zorder_key(df, list(zorder_by))
-            df = (
-                keyed.repartitionByRange(n_files, key)
-                .sortWithinPartitions(key)
-                .drop(key)
-            )
-        else:
-            df = df.coalesce(n_files)
-        return self.write(df, "overwrite", _data_change=False)
+        df = self._scan(snap)
+        df = (
+            cluster(df, list(zorder_by), n_files, equidepth)
+            if zorder_by else df.coalesce(n_files)
+        )
+        return self._write(df, "overwrite", None, snap, data_change=False)
 
     def checkpoint(self) -> int:
         """Write a checkpoint parquet of the CURRENT snapshot (one
@@ -481,7 +495,6 @@ class DeltaLogTable:
 
         snap = self._replay(None)
         v = snap["version"]
-        txns = self._txn_watermarks()
 
         def _nz(obj):
             # parquet cannot store an EMPTY struct; {} fields (an
@@ -497,7 +510,8 @@ class DeltaLogTable:
             {"metaData": _nz(snap["meta"])},
         ]
         rows.extend(
-            {"txn": {"appId": k, "version": n}} for k, n in sorted(txns.items())
+            {"txn": {"appId": k, "version": n}}
+            for k, n in sorted(snap["txns"].items())
         )
         rows.extend(
             {"add": _nz(add)} for _p, add in sorted(snap["files"].items())
@@ -513,32 +527,11 @@ class DeltaLogTable:
         return v
 
     # ---------------------------------------------- streaming write
-    def _txn_watermarks(self) -> dict[str, int]:
-        """Highest ``txn.version`` per appId: the newest checkpoint's
-        watermarks plus the JSON tail after it, so the answer survives
-        JSON log truncation."""
-        cps = self._checkpoints()
-        streams = []
-        if cps:
-            streams.append(self._checkpoint_actions(cps[-1]))
-            tail = [v for v in self.versions() if v > cps[-1]]
-        else:
-            tail = self.versions()
-        streams.extend(self._actions(v) for v in tail)
-        out: dict[str, int] = {}
-        for actions in streams:
-            for a in actions:
-                txn = a.get("txn")
-                if txn:
-                    out[txn["appId"]] = max(
-                        out.get(txn["appId"], -1), int(txn["version"])
-                    )
-        return out
-
     def last_txn_version(self, app_id: str) -> int:
         """Highest ``txn.version`` committed for ``app_id`` (-1 if
         none) — the protocol's idempotent-writer bookkeeping."""
-        return self._txn_watermarks().get(app_id, -1)
+        snap = self._snapshot()
+        return snap["txns"].get(app_id, -1) if snap else -1
 
     def read_before(self, app_id: str, batch_id: int) -> DataFrame | None:
         """The snapshot batch ``batch_id`` of writer ``app_id`` builds
@@ -554,9 +547,7 @@ class DeltaLogTable:
         ), None)
         if landed is not None:
             return self.read(landed - 1) if landed else None
-        if self.versions() or self._checkpoints():
-            return self.read()
-        return None
+        return self.read() if self._listing()[2] >= 0 else None
 
     def write_batch_exactly_once(
         self,
@@ -577,31 +568,33 @@ class DeltaLogTable:
         ``fn(None)`` on a table with no commit yet).
         ``streaming.sink.foreach_batch`` supplies both ids (the
         checkpoint path and Spark's batch id)."""
-        if batch_id <= self.last_txn_version(app_id):
+        snap = self._snapshot()
+        if snap and batch_id <= snap["txns"].get(app_id, -1):
             return None
         txn = {"appId": app_id, "version": int(batch_id)}
         if callable(data):
-            return self._fold(data, txn)
-        return self.write(data, "append", partition_by=partition_by, _txn=txn)
+            return self._fold(data, snap, txn)
+        return self._write(data, "append", partition_by, snap, txn)
 
     def _fold(
         self,
         fn: Callable[[DataFrame | None], DataFrame],
+        snap: dict | None,
         txn: dict | None = None,
     ) -> int:
-        """Commit ``fn(current snapshot)`` as an overwrite that keeps
-        the table's partitioning (``fn(None)`` when there is no log
-        yet).  ``fn`` may read the snapshot it replaces: an overwrite
-        only tombstones the old files, which stay on disk, so no tmp
-        copy is needed."""
-        if not self.versions() and not self._checkpoints():
-            return self.write(fn(None), "overwrite", _txn=txn)
-        snap = self._replay(None)
-        return self.write(
+        """Commit ``fn(snap)`` as an overwrite that keeps the table's
+        partitioning (``fn(None)`` when there is no log yet).  ``fn``
+        may read the snapshot it replaces: an overwrite only
+        tombstones the old files, which stay on disk, so no tmp copy
+        is needed."""
+        if snap is None:
+            return self._write(fn(None), "overwrite", None, None, txn)
+        return self._write(
             fn(self._scan(snap)),
             "overwrite",
-            partition_by=snap["meta"].get("partitionColumns"),
-            _txn=txn,
+            snap["meta"].get("partitionColumns"),
+            snap,
+            txn,
         )
 
     # -------------------------------------------------------- write
@@ -610,20 +603,27 @@ class DeltaLogTable:
         df: DataFrame,
         mode: str = "append",
         partition_by: list[str] | None = None,
-        _txn: dict | None = None,
-        _data_change: bool = True,
     ) -> int:
         """Commit ``df`` as one Delta transaction; returns the new
         version.  ``overwrite`` logs ``remove`` tombstones for every
         previously-live file (the protocol's overwrite semantics —
         data files are immutable and stay on disk for time travel)."""
+        return self._write(df, mode, partition_by, self._snapshot())
+
+    def _write(
+        self,
+        df: DataFrame,
+        mode: str,
+        partition_by: list[str] | None,
+        prev: dict | None,
+        txn: dict | None = None,
+        data_change: bool = True,
+    ) -> int:
+        """``write`` on top of ``prev``, the latest snapshot its
+        caller replayed (None: no log yet), with an optional ``txn``
+        action in the same commit."""
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-        vs = self.versions()
-        cps = self._checkpoints()
-        # a truncated-head log (JSON entries vacuumed after a
-        # checkpoint) still has a current version — the checkpoint's
-        latest = max(vs[-1] if vs else -1, cps[-1] if cps else -1)
 
         def fields(schema_json: str) -> set[tuple[str, str]]:
             return {
@@ -634,8 +634,7 @@ class DeltaLogTable:
             }
 
         schema_changed = False
-        if latest >= 0:
-            prev = self._replay(None)
+        if prev is not None:
             prev_part = prev["meta"].get("partitionColumns") or []
             prev_fields = fields(prev["meta"]["schemaString"])
             new_fields = fields(df.schema.json())
@@ -694,7 +693,7 @@ class DeltaLogTable:
                             "partitionValues": part_values,
                             "size": os.path.getsize(dst),
                             "modificationTime": int(time.time() * 1000),
-                            "dataChange": _data_change,
+                            "dataChange": data_change,
                             "stats": _footer_stats(dst),
                         }
                     }
@@ -705,7 +704,7 @@ class DeltaLogTable:
 
         # 2. actions
         actions: list[dict] = []
-        next_v = latest + 1
+        next_v = prev["version"] + 1 if prev else 0
         if next_v == 0:
             actions.append(
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
@@ -744,17 +743,17 @@ class DeltaLogTable:
                         "remove": {
                             "path": p,
                             "deletionTimestamp": ts,
-                            "dataChange": _data_change,
+                            "dataChange": data_change,
                         }
                     }
                 )
-        if _txn is not None:
-            actions.append({"txn": {**_txn, "lastUpdated":
+        if txn is not None:
+            actions.append({"txn": {**txn, "lastUpdated":
                                     int(time.time() * 1000)}})
         actions.extend(adds)
         return self._commit(
             next_v,
-            "WRITE" if _data_change else "OPTIMIZE",
+            "WRITE" if data_change else "OPTIMIZE",
             {"mode": mode.upper()},
             actions,
         )

@@ -1,10 +1,14 @@
-"""Table read/write with managed-format fallback (SURVEY S4-S9, S12).
+"""Catalog table I/O for the medallion, plus the layout helpers every
+table writer shares (SURVEY S4-S9).
 
 Every reference sink is ``format("delta")`` (``bronze_ingestion.py:86``
-etc.).  delta-spark is optional in this environment, so ``TableIO``
-picks ``delta`` when available and falls back to ``parquet`` tables in
-the session catalog otherwise.  All call-sites go through this class —
-no raw ``format("delta")`` strings anywhere else in the engine.
+etc.).  Here the medallion's tables are parquet tables in the session
+catalog, written and streamed through ``TableIO``'s five calls; a
+table that needs history, compaction (``OPTIMIZE ... ZORDER BY``) or
+an SCD-1 upsert lives on the Delta log instead
+(``sources.deltalog.DeltaLogTable``), where an overwrite can read the
+files it replaces.  ``saveAsTable`` and ``toTable`` appear nowhere
+else in the engine.
 
 Scale notes baked in here:
 
@@ -17,19 +21,12 @@ Scale notes baked in here:
   per (task, value).  Without native Hadoop IO the local file system
   forks ``chmod`` for every file and partition directory it creates,
   so the file count is the cost of a partitioned write.
-- ``compact()`` is the OSS fallback for ``OPTIMIZE ... ZORDER BY``
+- ``cluster`` is the one layout step behind ``OPTIMIZE ... ZORDER BY``
   (``gold_transformation.py:85,160``): ``repartitionByRange`` on the
-  cluster keys + sortWithinPartitions gives the same data-skipping
-  locality (min/max pruning on sorted parquet row groups) without
-  Delta-only commands.  The layout step itself is ``cluster``, which a
-  writer can also apply before a table's first write and skip the
-  rewrite entirely.
-- ``rewrite()`` is the one way a catalog table is replaced by a
-  function of its own contents (compaction and the SCD-1 merge
-  fallback): a parquet table cannot overwrite itself, so the snapshot
-  goes through a tmp table first.  Streaming state tables live on the
-  Delta log instead (``DeltaLogTable.write_batch_exactly_once``),
-  where an overwrite can read the files it replaces.
+  cluster keys + sortWithinPartitions gives the data-skipping
+  locality (min/max pruning on sorted parquet row groups).  A writer
+  applies it before a table's first write (the medallion's clustered
+  dims); ``DeltaLogTable.optimize`` applies it to a snapshot.
 - ``local_table()`` is how the engine builds a constant relation:
   typed literals in the JVM, never a Python list handed to
   ``createDataFrame`` (that forks Python workers to scan it).
@@ -37,16 +34,9 @@ Scale notes baked in here:
 
 from __future__ import annotations
 
-import os
-import shutil
-from typing import Callable
-from urllib.parse import urlparse
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType, _parse_datatype_string
-
-from ..session import has_delta
 
 
 def rebalance_partitions(
@@ -125,18 +115,11 @@ def local_table(
     )
 
 
-def rewrite_tmp(table: str) -> str:
-    """Name of the tmp table ``TableIO.rewrite`` snapshots ``table``
-    into (same database, so it lands next to the table)."""
-    return f"{table}__rewrite_tmp"
-
-
 class TableIO:
-    """Format-agnostic batch/streaming table I/O."""
+    """Batch/streaming I/O on parquet tables in the session catalog."""
 
-    def __init__(self, spark: SparkSession, fmt: str | None = None):
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.fmt = fmt or ("delta" if has_delta() else "parquet")
 
     # ---------------------------------------------------------- batch
     def read(self, table: str) -> DataFrame:
@@ -149,7 +132,7 @@ class TableIO:
         """Batch append sink (SURVEY S9 — the DQ issue log pattern)."""
         writer = (
             rebalance_partitions(df, partition_by)
-            .write.format(self.fmt)
+            .write.format("parquet")
             .mode("append")
         )
         if partition_by:
@@ -162,7 +145,7 @@ class TableIO:
         """Batch overwrite with schema evolution (SURVEY S8)."""
         writer = (
             rebalance_partitions(df, partition_by)
-            .write.format(self.fmt)
+            .write.format("parquet")
             .mode("overwrite")
             .option("overwriteSchema", "true")
         )
@@ -174,15 +157,12 @@ class TableIO:
     def read_stream(self, table: str) -> DataFrame:
         """Streaming table source (SURVEY S4).
 
-        Incremental tailing of a managed table.  With delta this is the
-        reference's ``readStream.format("delta").table(t)``
-        (``silver_transformation.py:78``); parquet tables do not
-        support incremental streaming reads, so the fallback streams
-        the table's files (exactly-once via the file-source log).
+        Incremental tailing of a managed table, the reference's
+        ``readStream.format("delta").table(t)``
+        (``silver_transformation.py:78``): a parquet table supports no
+        incremental streaming read, so this streams the table's files
+        (exactly-once via the file-source log).
         """
-        if self.fmt == "delta":
-            return self.spark.readStream.table(table)
-        # parquet fallback: stream the table directory as a file source
         location = self._table_location(table)
         schema = self.spark.read.table(table).schema
         return (
@@ -207,7 +187,7 @@ class TableIO:
         """
         writer = (
             rebalance_partitions(df, partition_by)
-            .writeStream.format(self.fmt)
+            .writeStream.format("parquet")
             .outputMode("append")
             .option("checkpointLocation", checkpoint)
         )
@@ -216,94 +196,6 @@ class TableIO:
         if available_now:
             writer = writer.trigger(availableNow=True)
         return writer.toTable(table)
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        buckets: int,
-        bucket_cols: list[str],
-        sort_cols: list[str] | None = None,
-    ) -> None:
-        """Bucketed (hash-clustered) table write — the co-location
-        primitive: two tables bucketed on the same keys with the same
-        bucket count join WITHOUT a shuffle (each task reads matching
-        bucket files from both sides).  At 100 TB this converts the
-        recurring fact ⋈ fact shuffle into a one-time write-side
-        cost.  Bucket count is fixed at write time: pick it for the
-        TARGET cluster's parallelism, not the writer's."""
-        writer = (
-            df.write.format(self.fmt)
-            .mode("overwrite")
-            .bucketBy(buckets, *bucket_cols)
-        )
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.saveAsTable(table)
-
-    # ---------------------------------------------------- maintenance
-    def compact(
-        self,
-        table: str,
-        cluster_by: list[str],
-        n_files: int | None = None,
-        equidepth: bool = False,
-    ) -> None:
-        """``OPTIMIZE t ZORDER BY (cols)`` (SURVEY S12) or fallback.
-
-        Delta path issues the real command.  Parquet path ``rewrite``s
-        the table through ``cluster`` (range key for one column,
-        Z-order key for several).  A table about to be written anyway
-        should be written through ``cluster`` instead: that skips the
-        snapshot copy and the second full write.
-        """
-        if self.fmt == "delta":
-            cols = ", ".join(cluster_by)
-            self.spark.sql(f"OPTIMIZE {table} ZORDER BY ({cols})")
-            return
-        self.rewrite(
-            table, lambda snap: cluster(snap, cluster_by, n_files, equidepth)
-        )
-
-    def rewrite(
-        self, table: str, fn: Callable[[DataFrame], DataFrame]
-    ) -> None:
-        """Replace catalog ``table`` with ``fn(snapshot)``.
-
-        A table cannot overwrite itself while a plan still reads it, so
-        the current contents are copied into ``rewrite_tmp(table)``
-        first, ``fn`` runs over that copy, and its result is written
-        to ``table`` as the FINAL write: a clustered layout survives
-        only then (copying a clustered tmp into the table re-packs the
-        ranged files by SIZE, interleaving key ranges).  The tmp table
-        is dropped afterwards.
-
-        A tmp location orphaned by a crashed run is cleared first
-        (``saveAsTable`` refuses a managed path that already exists).
-        ``table`` is refreshed in this session and in the session of
-        ``fn``'s frame: inside ``foreachBatch`` that is the micro-batch
-        clone, whose relation cache keeps stale file lists otherwise.
-        """
-        tmp = rewrite_tmp(table)
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        shutil.rmtree(self._default_location(tmp), ignore_errors=True)
-        self.read(table).write.format(self.fmt).mode(
-            "overwrite"
-        ).saveAsTable(tmp)
-        out = fn(self.read(tmp))
-        self.write_overwrite(out, table)
-        self.spark.sql(f"DROP TABLE {tmp}")
-        for session in (self.spark, out.sparkSession):
-            session.catalog.refreshTable(table)
-
-    def _default_location(self, table: str) -> str:
-        """Managed location of ``table`` (``<database dir>/<name>``),
-        whether or not the table exists."""
-        db, _, name = table.rpartition(".")
-        loc = self.spark.catalog.getDatabase(
-            db or self.spark.catalog.currentDatabase()
-        ).locationUri
-        return os.path.join(urlparse(loc).path, name.lower())
 
     def _table_location(self, table: str) -> str:
         # collect() hands back the command's local result rows with no

@@ -1,21 +1,17 @@
 """Source-format breadth: CSV/TSV ingest (batch + streaming with
-frozen schema) and ORC managed tables through TableIO."""
+frozen schema)."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.csv_source import (
     infer_csv_schema,
     read_csv_batch,
     read_csv_stream,
-)
-from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-    TableIO,
 )
 
 
@@ -91,26 +87,3 @@ def test_csv_streaming_frozen_schema_incremental(spark, tmp_path):
     _write_csv(src, "b.csv", ["k,v", "3,three"])
     got2 = {r.k: r.v_up for r in run()}
     assert got2 == {3: "THREE"}
-
-
-def test_orc_table_roundtrip(spark):
-    io = TableIO(spark, fmt="orc")
-    t = "orc_probe"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-    base = spark.createDataFrame([Row(k=1, v="a"), Row(k=2, v="b")])
-    io.write_overwrite(base, t)
-    io.write_append(spark.createDataFrame([Row(k=3, v="c")]), t)
-    assert sorted((r.k, r.v) for r in io.read(t).collect()) == [
-        (1, "a"),
-        (2, "b"),
-        (3, "c"),
-    ]
-    # format actually is ORC on disk, not silently parquet
-    fmt = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {t}")
-        .filter(F.col("col_name") == "Provider")
-        .collect()[0]
-        .data_type
-    )
-    assert fmt.lower() == "orc"
-    spark.sql(f"DROP TABLE {t}")

@@ -304,17 +304,15 @@ def test_optimize_zorder_compacts_and_prunes(spark, tmp_path):
 
 def test_upsert_merge_semantics(spark, tmp_path):
     t = DeltaLogTable(spark, str(tmp_path / "up"))
+    schema = "id bigint, val string, ver bigint"
     t.write(
-        spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "id bigint, val string"
-        ),
+        spark.createDataFrame([(1, "a", 1), (2, "b", 1), (3, "c", 1)], schema),
         "append",
     )
     v = t.upsert(
-        spark.createDataFrame(
-            [(2, "B2"), (4, "d")], "id bigint, val string"
-        ),
+        spark.createDataFrame([(2, "B2", 2), (4, "d", 1)], schema),
         keys=["id"],
+        order_col="ver",
     )
     got = {(r["id"], r["val"]) for r in t.read().collect()}
     assert got == {(1, "a"), (2, "B2"), (3, "c"), (4, "d")}
@@ -497,11 +495,12 @@ def test_delta_inspect_tool_smoke(spark, tmp_path):
     assert "live files:" in out.stdout
 
 
-def _partitioned_bigint_table(spark, path):
-    """6 rows partitioned by a ``bigint`` column ``p`` (3 values)."""
+def _partitioned_bigint_table(spark, path, *extra):
+    """6 rows partitioned by a ``bigint`` column ``p`` (3 values),
+    plus the ``extra`` column expressions."""
     t = DeltaLogTable(spark, path)
     t.write(
-        spark.range(6).selectExpr("id", "id % 3 AS p"),
+        spark.range(6).selectExpr("id", "id % 3 AS p", *extra),
         "append",
         partition_by=["p"],
     )
@@ -531,13 +530,20 @@ def test_upsert_and_forget_keep_partitioning(spark, tmp_path):
     """Both read-modify-overwrites rewrite a partitioned table as a
     partitioned table: the log's partitionColumns, every live add's
     partitionValues and the file layout stay in agreement."""
-    t = _partitioned_bigint_table(spark, str(tmp_path / "pk"))
+    t = _partitioned_bigint_table(
+        spark, str(tmp_path / "pk"), "CAST(0 AS BIGINT) AS ver"
+    )
     t.upsert(
-        spark.createDataFrame([(1, 1), (7, 1)], "id bigint, p bigint"),
+        spark.createDataFrame(
+            [(1, 1, 1), (7, 1, 1)], "id bigint, p bigint, ver bigint"
+        ),
         keys=["id"],
+        order_col="ver",
     )
     _assert_partitioned_by_p(t)
-    assert dict(t.read().dtypes) == {"id": "bigint", "p": "bigint"}
+    assert dict(t.read().dtypes) == {
+        "id": "bigint", "p": "bigint", "ver": "bigint"
+    }
     assert sorted((r.id, r.p) for r in t.read().collect()) == [
         (i, i % 3) for i in range(6)
     ] + [(7, 1)]
@@ -574,3 +580,31 @@ def test_partitioned_read_keeps_the_logged_column_order(spark, tmp_path):
     t.write(spark.range(0).selectExpr("id AS p", "id"), "overwrite",
             partition_by=["p"])
     assert t.read().columns == ["p", "id"]
+
+
+def test_one_log_replay_per_guarded_commit(spark, tmp_path, monkeypatch):
+    """A guarded commit replays the log once: the replay guard, the
+    fold's snapshot and the commit's base version come from one pass
+    that opens each of the table's k JSON entries once."""
+    t = DeltaLogTable(spark, str(tmp_path / "replay"))
+    k = 4
+    for i in range(k):
+        t.write(spark.range(i, i + 1), "append")
+    opened = []
+    real = DeltaLogTable._actions
+
+    def counted(self, version):
+        opened.append(version)
+        return real(self, version)
+
+    monkeypatch.setattr(DeltaLogTable, "_actions", counted)
+    fold = lambda snap: snap.unionByName(spark.range(9, 10))  # noqa: E731
+    assert t.write_batch_exactly_once(fold, "app", 0) == k
+    assert sorted(opened) == list(range(k))
+    opened.clear()
+    assert t.write_batch_exactly_once(spark.range(5, 6), "app", 1) == k + 1
+    assert sorted(opened) == list(range(k + 1))
+    opened.clear()
+    assert t.write_batch_exactly_once(fold, "app", 1) is None
+    assert sorted(opened) == list(range(k + 2))
+    assert _ids(t.read()) == [0, 1, 2, 3, 5, 9]

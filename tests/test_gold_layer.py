@@ -7,7 +7,7 @@ file count and rescans bounded:
 - the fact sink writes one parquet file per date per micro-batch (per
   call in batch), however many tasks the input spans;
 - a clustered dim is written clustered in its one write — no snapshot
-  copy through a ``rewrite_tmp`` table, no second rewrite;
+  copy, no second rewrite;
 - Bronze infers an entity's schema once, when its table is created;
   later calls reuse the table's ``payload`` struct.
 """
@@ -31,9 +31,6 @@ from pyspark.sql.types import (
 )
 
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.catalog import Lakehouse
-from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-    rewrite_tmp,
-)
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming import (
     pipeline as pipeline_mod,
 )
@@ -148,7 +145,6 @@ def test_clustered_dim_is_one_write_with_disjoint_ranges(
         spark.conf.set(key, prior)
 
     assert saved == [table]
-    assert not spark.catalog.tableExists(rewrite_tmp(table))
     out = spark.read.table(table)
     assert out.count() == 4000
     ranges = sorted(

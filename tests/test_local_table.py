@@ -85,7 +85,7 @@ def test_local_table_matches_create_dataframe(spark, rows, schema):
 def test_parquet_read_stream_runs_no_job(spark):
     """Resolving the table directory for the parquet streaming
     fallback is catalog metadata: no Spark job may run for it."""
-    io = TableIO(spark, fmt="parquet")
+    io = TableIO(spark)
     table = "read_stream_probe"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     io.write_overwrite(spark.range(3), table)

@@ -317,26 +317,20 @@ def test_approx_percentile_within_tolerance(spark):
 
 
 # ------------------------------------------------- SCD-1 merge contract
-def test_upsert_duplicate_update_keys_parquet_branch(spark):
+def test_upsert_duplicate_update_keys_land_once(spark, tmp_path):
     """The documented contract — 'any number of update rows per key' —
-    exercised through the parquet fallback branch of
-    ``upsert_keep_latest`` (test_delta_paths.py runs the same scenario
-    through the delta MERGE branch when delta-spark is present).  Both
-    branches share ``collapse_keep_latest`` as the pre-dedup."""
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.merge import (
-        upsert_keep_latest,
-    )
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-        TableIO,
+    through ``DeltaLogTable.upsert``, the engine's one SCD-1 upsert: a
+    key duplicated in one update batch lands once, its highest ``ver``
+    winning, and an update older than the stored row is a no-op."""
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+        DeltaLogTable,
     )
 
-    io = TableIO(spark, fmt="parquet")
-    t = "parquet_merge_probe"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
+    t = DeltaLogTable(spark, str(tmp_path / "merge_probe"))
     base = spark.createDataFrame(
         [Row(pk=1, val="old", ver=1), Row(pk=2, val="keep", ver=5)]
     )
-    upsert_keep_latest(spark, io, t, base, ["pk"], "ver")
+    t.upsert(base, ["pk"], "ver")
     updates = spark.createDataFrame(
         [
             Row(pk=1, val="mid", ver=2),
@@ -345,10 +339,9 @@ def test_upsert_duplicate_update_keys_parquet_branch(spark):
             Row(pk=3, val="ins", ver=1),
         ]
     )
-    upsert_keep_latest(spark, io, t, updates, ["pk"], "ver")
-    got = {r.pk: (r.val, r.ver) for r in io.read(t).collect()}
-    assert got == {1: ("new", 3), 2: ("keep", 5), 3: ("ins", 1)}
-    spark.sql(f"DROP TABLE {t}")
+    t.upsert(updates, ["pk"], "ver")
+    got = sorted((r.pk, r.val, r.ver) for r in t.read().collect())
+    assert got == [(1, "new", 3), (2, "keep", 5), (3, "ins", 1)]
 
 
 # ------------------------------------------------- snapshot diff (CDC)

@@ -205,20 +205,16 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     that removes the recurring fact-fact shuffle at scale."""
     from pyspark.sql import Row
 
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-        TableIO,
-    )
-
     import os
 
     ta, tb = f"bkt_a_{os.getpid()}", f"bkt_b_{os.getpid()}"
-    io = TableIO(spark, fmt="parquet")
     a = spark.createDataFrame([Row(k=i, va=i * 2) for i in range(1000)])
     b = spark.createDataFrame([Row(k=i, vb=i * 3) for i in range(1000)])
-    spark.sql(f"DROP TABLE IF EXISTS {ta}")
-    spark.sql(f"DROP TABLE IF EXISTS {tb}")
-    io.write_bucketed(a, ta, 4, ["k"], sort_cols=["k"])
-    io.write_bucketed(b, tb, 4, ["k"], sort_cols=["k"])
+    for df, t in ((a, ta), (b, tb)):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        df.write.format("parquet").mode("overwrite").bucketBy(
+            4, "k"
+        ).sortBy("k").saveAsTable(t)
 
     # tiny test tables would auto-broadcast, which hides the property
     # under test: with broadcast off, the join must still need NO

@@ -105,30 +105,43 @@ def test_word_shingles_matches_naive(spark, words, n):
     assert got == expected
 
 
-def test_upsert_keep_latest_parquet_fallback(spark, tmp_path):
-    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.merge import (
-        upsert_keep_latest,
+#: (key, version) rows, unique per list, so every key has ONE latest
+#: row per list and the expected winner is well defined
+versioned_rows = st.lists(
+    st.tuples(key_strategy, st.integers(min_value=0, max_value=3)),
+    max_size=6,
+    unique=True,
+)
+
+
+@settings(**SETTINGS)
+@given(base=versioned_rows, updates=versioned_rows)
+def test_upsert_keeps_the_latest_row_per_key(
+    spark, tmp_path_factory, base, updates
+):
+    """``DeltaLogTable.upsert`` vs a dict model: per key, the row with
+    the highest ``ver`` among the stored row and every update row
+    survives, an update winning a tie with the stored row."""
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+        DeltaLogTable,
     )
     from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
-        TableIO,
+        local_table,
     )
 
-    io = TableIO(spark, fmt="parquet")
-    table = "upsert_test_tbl"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    base = spark.createDataFrame(
-        [Row(pk=1, v="a", ver=1), Row(pk=2, v="b", ver=1)]
-    )
-    upsert_keep_latest(spark, io, table, base, ["pk"], "ver")
-    upd = spark.createDataFrame(
-        [Row(pk=2, v="b2", ver=2),   # newer -> wins
-         Row(pk=3, v="c", ver=1),    # new key -> insert
-         Row(pk=1, v="a_stale", ver=0)]  # older -> loses
-    )
-    upsert_keep_latest(spark, io, table, upd, ["pk"], "ver")
-    got = {r.pk: (r.v, r.ver) for r in spark.read.table(table).collect()}
-    assert got == {1: ("a", 1), 2: ("b2", 2), 3: ("c", 1)}
-    spark.sql(f"DROP TABLE {table}")
+    schema = "pk bigint, val string, ver bigint"
+    t = DeltaLogTable(spark, str(tmp_path_factory.mktemp("upsert")))
+    model: dict[int, tuple[int, int, str]] = {}
+    for tag, rows in (("b", base), ("u", updates)):
+        batch = [(k, f"{tag}{i}", v) for i, (k, v) in enumerate(rows)]
+        t.upsert(local_table(spark, batch, schema), ["pk"], "ver")
+        for k, val, v in batch:
+            # the flag breaks a stored-vs-update tie for the update
+            cand = (v, tag == "u", val)
+            if k not in model or cand > model[k]:
+                model[k] = cand
+    got = sorted((r.pk, r.val, r.ver) for r in t.read().collect())
+    assert got == sorted((k, val, v) for k, (v, _, val) in model.items())
 
 
 # -------------------------------------------- image codec properties

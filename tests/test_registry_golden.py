@@ -34,14 +34,6 @@ GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "registry.json")
 #: details differ between two fresh sessions while the tree does not.
 TREE_ONLY = frozenset({"orders_profile", "temporal_split_leakage"})
 
-#: plan not pinned (null in the golden).  The builder caches its
-#: PageRank iterations, so the formatted plan prints each cached
-#: relation's executed adaptive plan, and there AQE picks a join's
-#: broadcast side from whichever of two concurrent query stages
-#: finishes first: two of six builds in three fresh sessions planned
-#: ``BuildLeft`` where the others planned ``BuildRight``.
-PLAN_UNPINNED = frozenset({"brand_pagerank"})
-
 
 def registry_entries(registry_plans) -> dict:
     """``name -> {module, oracle_sha1, plan}`` in registry order."""
@@ -64,7 +56,7 @@ def registry_entries(registry_plans) -> dict:
         out[name] = {
             "module": module_of[name],
             "oracle_sha1": sql and hashlib.sha1(sql.encode()).hexdigest(),
-            "plan": None if name in PLAN_UNPINNED else fingerprint(plan),
+            "plan": fingerprint(plan),
         }
     return out
 
