@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.deltalog import DeltaLogTable
@@ -32,13 +32,25 @@ def collapse_keep_latest(
     """One row per key: the highest-``order_col`` row wins.  The
     upsert runs it on its update set first, so the contract "any
     number of update rows per key" holds (Delta's MERGE errors on
-    multiple source matches per target row)."""
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
+    multiple source matches per target row).  Rows tied on
+    ``order_col`` fall to the greatest in a total order over the
+    remaining columns, so the winner does not follow the batch's
+    input order or partitioning."""
+    rest = [c for c in df.columns if c not in (*keys, order_col)]
+    w = Window.partitionBy(*keys).orderBy(
+        F.col(order_col).desc(), *[_orderable(df, c).desc() for c in rest]
+    )
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def _orderable(df: DataFrame, col: str) -> Column:
+    # maps and variants have no ordering; their JSON text does
+    t = df.schema[col].dataType.simpleString()
+    return F.to_json(col) if "map<" in t or "variant" in t else F.col(col)
 
 
 def merge_keep_latest(
@@ -51,7 +63,10 @@ def merge_keep_latest(
     ``target ∪ updates``, the one with the highest ``order_col``
     (updates win ties against existing rows).  ONE shuffle on the
     merge keys — this is the relational core of SCD-1 MERGE, usable
-    standalone and oracle-checkable (`QUALIFY row_number() = 1`)."""
+    standalone and oracle-checkable (`QUALIFY row_number() = 1`).
+    ``updates`` should hold one row per key (``keep_latest_fold``
+    collapses them first): two update rows tied on ``order_col`` keep
+    whichever comes first."""
     merged = target.withColumn("__upd", F.lit(0)).unionByName(
         updates.withColumn("__upd", F.lit(1))
     )

@@ -79,9 +79,11 @@ def build_fact(
 
     Mirrors ``gold_transformation.py:92-147`` with the L2 fix: when
     ``partition_date_source`` is set, a ``to_date`` derived column is
-    added for the sink's ``partitionBy`` — bounded partition count
-    (one per day), unlike the reference's per-distinct-timestamp
-    layout.
+    added for the sink's ``partition_by`` — at most one directory per
+    day, unlike the reference's per-distinct-timestamp layout, and
+    none when the fact is too small for a day to fill a file: the
+    sink then range-partitions on the date instead
+    (``sources.tables.TableIO._layout``).
     """
     out = fact
     for cond in validity:  # filter BEFORE join -> pushed into the scan

@@ -3,10 +3,12 @@ the registration helper every query module ends with."""
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -115,7 +117,7 @@ def _load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{table}.parquet")
     if table == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         ts_type = dict(df.dtypes)["ts"]
         if ts_type == "bigint":  # TIMESTAMP(NANOS) via nanosAsLong
             ts_us = F.expr("ts DIV 1000")
@@ -137,7 +139,99 @@ def _load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
                 "props",
             )
         )
-    return _layout(spark.read.parquet(path))
+    return _layout(_read_parquet(spark, path))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema Spark would infer
+    handed over up front: inference reads the footer in a Spark job,
+    one per table per query build; ``_footer_schema`` reads it on the
+    driver, once per file version."""
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    schema = _footer_schema(path, nanos)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _footer_schema(path: str, nanos_as_long: bool) -> T.StructType | None:
+    """The schema Spark infers for the parquet file ``path`` (for a
+    directory, its first part file, as Spark reads with mergeSchema
+    off), read from the footer with pyarrow.  None where Spark's
+    inference could differ: a partitioned directory, summary files,
+    INT96 timestamps or a type outside ``_spark_type``'s map."""
+    if os.path.isdir(path):
+        names = sorted(os.listdir(path))
+        if any(n in ("_metadata", "_common_metadata")
+               or os.path.isdir(os.path.join(path, n)) for n in names):
+            return None
+        parts = [n for n in names if not n.startswith(("_", "."))]
+        if not parts:
+            return None
+        path = os.path.join(path, parts[0])
+    st = os.stat(path)
+    return _file_schema(path, st.st_mtime_ns, st.st_size, nanos_as_long)
+
+
+@functools.lru_cache(maxsize=256)
+def _file_schema(
+    path: str, mtime_ns: int, size: int, nanos_as_long: bool
+) -> T.StructType | None:
+    # keyed on the file's mtime and size too: a rewritten file is
+    # read again
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path)
+    arrow = meta.schema.to_arrow_schema()
+    types = [_spark_type(f.type, nanos_as_long) for f in arrow]
+    int96 = any(
+        meta.schema.column(i).physical_type == "INT96"
+        for i in range(meta.num_columns)
+    )
+    if int96 or None in types:
+        return None
+    return T.StructType(
+        [T.StructField(f.name, t) for f, t in zip(arrow, types)]
+    )
+
+
+def _spark_type(t, nanos_as_long: bool) -> T.DataType | None:
+    """Spark's (nullable) type for an arrow type read from a parquet
+    footer, None when unmapped."""
+    import pyarrow as pa
+
+    simple = {
+        pa.bool_(): T.BooleanType(), pa.int8(): T.ByteType(),
+        pa.int16(): T.ShortType(), pa.int32(): T.IntegerType(),
+        pa.int64(): T.LongType(), pa.float32(): T.FloatType(),
+        pa.float64(): T.DoubleType(), pa.string(): T.StringType(),
+        pa.binary(): T.BinaryType(), pa.date32(): T.DateType(),
+    }
+    if t in simple:
+        return simple[t]
+    if pa.types.is_decimal(t):
+        return T.DecimalType(t.precision, t.scale)
+    if pa.types.is_timestamp(t):
+        if t.unit == "ns":
+            # TIMESTAMP(NANOS) reads only as bigint, under nanosAsLong
+            return T.LongType() if nanos_as_long else None
+        if t.unit == "us":
+            return T.TimestampType() if t.tz else T.TimestampNTZType()
+        return None
+    if pa.types.is_list(t):
+        elem = _spark_type(t.value_type, nanos_as_long)
+        return None if elem is None else T.ArrayType(elem)
+    if pa.types.is_struct(t):
+        kids = [_spark_type(f.type, nanos_as_long) for f in t]
+        if None in kids:
+            return None
+        return T.StructType(
+            [T.StructField(f.name, k) for f, k in zip(t, kids)]
+        )
+    if pa.types.is_map(t):
+        k = _spark_type(t.key_type, nanos_as_long)
+        v = _spark_type(t.item_type, nanos_as_long)
+        return None if k is None or v is None else T.MapType(k, v)
+    return None
 
 
 def registry(rows) -> tuple[dict, dict]:

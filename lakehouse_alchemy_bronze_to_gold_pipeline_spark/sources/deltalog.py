@@ -61,7 +61,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import cluster, local_table, rebalance_partitions
+from .tables import cluster, local_table
 
 #: reader features this implementation understands (protocol v1/v2
 #: tables, plus v3 tables that only list these features)
@@ -539,15 +539,22 @@ class DeltaLogTable:
         one landed (a replay), else the latest; ``None`` when that is
         before the first commit.  A sink that commits several tables
         under one txn reads each this way, so a replay recomputes what
-        the first run computed."""
+        the first run computed.  One log replay decides: only a batch
+        at or below the snapshot's ``txn`` watermark scans the log for
+        its landing version."""
+        snap = self._snapshot()
+        if snap is None:
+            return None
+        if batch_id > snap["txns"].get(app_id, -1):
+            return self._scan(snap)
         landed = next((
             v for v in self.versions() for a in self._actions(v)
             if a.get("txn", {}).get("appId") == app_id
             and a["txn"]["version"] == batch_id
         ), None)
-        if landed is not None:
-            return self.read(landed - 1) if landed else None
-        return self.read() if self._listing()[2] >= 0 else None
+        if landed is None:
+            return self._scan(snap)
+        return self.read(landed - 1) if landed else None
 
     def write_batch_exactly_once(
         self,
@@ -660,10 +667,13 @@ class DeltaLogTable:
         # table root under fresh UUID names (Delta file names are
         # opaque; uniqueness is what matters)
         stage = os.path.join(self.path, f"_stage_{uuid.uuid4().hex}")
-        writer = rebalance_partitions(df, partition_by).write.mode("overwrite")
+        # one file per partition value per commit, not one per (task,
+        # value)
         if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(stage)
+            df = df.hint("rebalance", *partition_by)
+        df.write.mode("overwrite").partitionBy(*(partition_by or [])).parquet(
+            stage
+        )
         adds = []
         for dirpath, _dirs, files in os.walk(stage):
             for f in files:

@@ -16,11 +16,23 @@ Scale notes baked in here:
   timestamp: ``partitionBy("order_timestamp")`` in the reference
   (``gold_transformation.py:157``) creates one directory per distinct
   timestamp string — pathological at scale (SURVEY 4.3-L2).
-- Every partitioned write goes through ``rebalance_partitions``: one
-  file per partition value per write (or micro-batch) instead of one
-  per (task, value).  Without native Hadoop IO the local file system
-  forks ``chmod`` for every file and partition directory it creates,
-  so the file count is the cost of a partitioned write.
+- Every ``TableIO`` write sizes its files by bytes, not by date
+  (``TableIO._layout``).  Without native Hadoop IO the local file
+  system forks ``chmod`` for every file and partition directory it
+  creates, so the file count is the cost of a write.  A table that
+  exists keeps its own partition columns.  A new table gets one
+  directory per ``partition_by`` value only when a job-free upper
+  bound on the write's bytes reaches one target file
+  (``spark.sql.files.maxPartitionBytes``); below it no value can fill
+  a file, so the table is written unpartitioned and range-partitioned
+  on ``partition_by``: at most ``spark.sql.shuffle.partitions`` files
+  per write (or micro-batch), each holding a disjoint range of the
+  column, which parquet min/max pruning skips like a directory.  A
+  partitioned write is rebalanced to one file per value per write
+  instead of one per (task, value).  The limit: a new table over the
+  bound whose values are each still far below a file keeps the
+  directory layout; sizing those needs per-file stats a reader can
+  prune on (the Delta log's ``add.stats``).
 - ``cluster`` is the one layout step behind ``OPTIMIZE ... ZORDER BY``
   (``gold_transformation.py:85,160``): ``repartitionByRange`` on the
   cluster keys + sortWithinPartitions gives the data-skipping
@@ -37,20 +49,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType, _parse_datatype_string
-
-
-def rebalance_partitions(
-    df: DataFrame, partition_by: list[str] | None
-) -> DataFrame:
-    """Route each partition value of ``df`` to one task before a
-    ``partitionBy`` write, so the write makes one file per value
-    instead of one per (task, value).  ``REBALANCE`` rather than
-    ``repartition``: in batch, AQE may still split a skewed value over
-    several tasks or coalesce small ones; a streaming micro-batch gets
-    a plain hash exchange.  No-op for an unpartitioned write."""
-    if not partition_by:
-        return df
-    return df.hint("rebalance", *partition_by)
 
 
 def cluster(
@@ -115,6 +113,45 @@ def local_table(
     )
 
 
+def _target_file_bytes(spark: SparkSession) -> int:
+    """One target file: ``spark.sql.files.maxPartitionBytes``, the
+    split a scan reads as one task."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return int(conf.filesMaxPartitionBytes())
+
+
+def _bytes_bound(df: DataFrame) -> float:
+    """A job-free upper bound on the bytes ``df`` holds: the
+    optimizer's ``sizeInBytes`` for a batch plan (a join's is the
+    product of its inputs'), and for a streaming plan the on-disk size
+    of its file sources, listed through the Hadoop file system (all of
+    a source's files bound any one micro-batch).  A streaming source
+    that is not a path (a socket, a rate or a Python source with no
+    ``path``) bounds nothing: ``inf``."""
+    qe = df._jdf.queryExecution()
+    if not df.isStreaming:
+        return int(qe.optimizedPlan().stats().sizeInBytes())
+    jss = df.sparkSession._jsparkSession
+    jvm = df.sparkSession._jvm
+    conf = jss.sessionState().newHadoopConf()
+    total = 0
+    leaves = qe.analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if not leaf.isStreaming():
+            continue
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            return float("inf")
+        path = leaf.dataSource().options().get("path")
+        if not path.isDefined():
+            return float("inf")
+        glob = jvm.org.apache.hadoop.fs.Path(path.get())
+        fs = glob.getFileSystem(conf)
+        for st in fs.globStatus(glob) or []:
+            total += fs.getContentSummary(st.getPath()).getLength()
+    return total
+
+
 class TableIO:
     """Batch/streaming I/O on parquet tables in the session catalog."""
 
@@ -130,28 +167,19 @@ class TableIO:
         self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> None:
         """Batch append sink (SURVEY S9 — the DQ issue log pattern)."""
-        writer = (
-            rebalance_partitions(df, partition_by)
-            .write.format("parquet")
-            .mode("append")
-        )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.saveAsTable(table)
+        df, parts = self._layout(df, table, partition_by)
+        df.write.format("parquet").mode("append").partitionBy(
+            *parts
+        ).saveAsTable(table)
 
     def write_overwrite(
         self, df: DataFrame, table: str, partition_by: list[str] | None = None
     ) -> None:
         """Batch overwrite with schema evolution (SURVEY S8)."""
-        writer = (
-            rebalance_partitions(df, partition_by)
-            .write.format("parquet")
-            .mode("overwrite")
-            .option("overwriteSchema", "true")
-        )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.saveAsTable(table)
+        df, parts = self._layout(df, table, partition_by)
+        df.write.format("parquet").mode("overwrite").option(
+            "overwriteSchema", "true"
+        ).partitionBy(*parts).saveAsTable(table)
 
     # ------------------------------------------------------ streaming
     def read_stream(self, table: str) -> DataFrame:
@@ -185,17 +213,53 @@ class TableIO:
         splits a large backlog into multiple micro-batches instead of
         one unbounded batch.
         """
+        df, parts = self._layout(df, table, partition_by)
         writer = (
-            rebalance_partitions(df, partition_by)
-            .writeStream.format("parquet")
+            df.writeStream.format("parquet")
             .outputMode("append")
             .option("checkpointLocation", checkpoint)
+            .partitionBy(*parts)
         )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
         if available_now:
             writer = writer.trigger(availableNow=True)
         return writer.toTable(table)
+
+    # --------------------------------------------------------- layout
+    def _layout(
+        self, df: DataFrame, table: str, partition_by: list[str] | None
+    ) -> tuple[DataFrame, list[str]]:
+        """The frame to write and the partition columns to write it
+        under, sized by bytes (module docstring).  A table that exists
+        keeps its partition columns; a new one is partitioned on
+        ``partition_by`` only when ``_bytes_bound(df)`` reaches one
+        target file.  Unpartitioned, ``df`` is range-partitioned on
+        ``partition_by`` (and, in batch, sorted within files, as
+        ``cluster`` does; a stream cannot sort).  Runs no Spark job."""
+        if self.spark.catalog.tableExists(table):
+            parts = self._partition_columns(table)
+        elif partition_by and _bytes_bound(df) >= _target_file_bytes(
+            self.spark
+        ):
+            parts = list(partition_by)
+        else:
+            parts = []
+        if parts:
+            return df.hint("rebalance", *parts), parts
+        if not partition_by:
+            return df, []
+        if df.isStreaming:
+            return df.repartitionByRange(*partition_by), []
+        return cluster(df, list(partition_by)), []
+
+    def _partition_columns(self, table: str) -> list[str]:
+        # the session catalog's metadata, where spark.catalog.listColumns
+        # would run two jobs to hand it back
+        jss = self.spark._jsparkSession
+        ident = jss.sessionState().sqlParser().parseTableIdentifier(table)
+        cols = jss.sessionState().catalog().getTableMetadata(
+            ident
+        ).partitionColumnNames()
+        return [cols.apply(i) for i in range(cols.size())]
 
     def _table_location(self, table: str) -> str:
         # collect() hands back the command's local result rows with no
@@ -205,3 +269,4 @@ class TableIO:
             if row["col_name"] == "Location":
                 return row["data_type"]
         raise ValueError(f"cannot resolve location of table {table!r}")
+

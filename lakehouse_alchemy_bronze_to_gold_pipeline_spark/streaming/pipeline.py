@@ -153,8 +153,14 @@ class MedallionPipeline:
         checkpoint_name: str | None = None,
     ) -> str:
         """Fact sink: streaming append when the input is streaming,
-        batch append otherwise; partitioned by derived date (L2), one
-        file per date per micro-batch (or batch)."""
+        batch append otherwise, on ``partition_by`` (a derived date,
+        L2) sized by bytes (``TableIO._layout``): a new fact too small
+        for a date to fill a file is written unpartitioned and
+        range-partitioned on the date, at most shuffle-partitions
+        files per micro-batch (or batch); a larger or already
+        partitioned one gets one directory per date and one file per
+        date per micro-batch.  A large new fact whose dates are each
+        still small keeps the directories."""
         table = self.lh.table("gold", table_name)
         if fact_df.isStreaming:
             q = self.io.write_stream(

@@ -608,3 +608,10 @@ def test_one_log_replay_per_guarded_commit(spark, tmp_path, monkeypatch):
     assert t.write_batch_exactly_once(fold, "app", 1) is None
     assert sorted(opened) == list(range(k + 2))
     assert _ids(t.read()) == [0, 1, 2, 3, 5, 9]
+    # a batch that has not landed reads the latest snapshot off one
+    # replay; only a replayed batch scans for its landing version
+    opened.clear()
+    assert _ids(t.read_before("app", 2)) == [0, 1, 2, 3, 5, 9]
+    assert sorted(opened) == list(range(k + 2))
+    opened.clear()
+    assert _ids(t.read_before("app", 1)) == [0, 1, 2, 3, 9]

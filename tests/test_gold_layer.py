@@ -1,11 +1,16 @@
 """Gold-layer write layout and Bronze schema freezing in
 ``MedallionPipeline``.
 
-Pins the three properties of the medallion write path that keep its
-file count and rescans bounded:
+Pins the properties of the medallion write path that keep its file
+count and rescans bounded:
 
-- the fact sink writes one parquet file per date per micro-batch (per
-  call in batch), however many tasks the input spans;
+- the fact sink sizes its files by bytes: a new fact too small for
+  any date to fill a file (``spark.sql.files.maxPartitionBytes``) is
+  written unpartitioned, range-partitioned on the date, at most
+  shuffle-partitions files per micro-batch (per call in batch) with
+  disjoint date ranges; a larger one, or a table already partitioned,
+  gets one directory per date and one file per date per micro-batch,
+  however many tasks the input spans;
 - a clustered dim is written clustered in its one write — no snapshot
   copy, no second rewrite;
 - Bronze infers an entity's schema once, when its table is created;
@@ -14,6 +19,7 @@ file count and rescans bounded:
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import json
 import os
@@ -31,6 +37,9 @@ from pyspark.sql.types import (
 )
 
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.catalog import Lakehouse
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
+    local_table,
+)
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming import (
     pipeline as pipeline_mod,
 )
@@ -81,39 +90,154 @@ def _files_per_date(pipe, table: str) -> Counter:
     )
 
 
-@pytest.mark.parametrize("streaming", [True, False])
-def test_fact_writes_one_file_per_date_per_batch(
-    spark, lakehouse, tmp_path, streaming
-):
-    src = str(tmp_path / "lines")
-    pipe = MedallionPipeline(spark, lakehouse, [])
-    dim = spark.createDataFrame(
-        [(p, f"cat{p % 2}") for p in range(5)], "product_id long, category string"
-    )
+def _data_files(pipe, table: str) -> set[str]:
+    loc = pipe.io._table_location(table).removeprefix("file:")
+    return {
+        os.path.relpath(os.path.join(d, f), loc)
+        for d, _, names in os.walk(loc)
+        for f in names
+        if f.endswith(".parquet")
+    }
 
-    def run_batch():
-        if streaming:
-            lines = spark.readStream.schema(LINES).parquet(src)
-        else:
-            lines = spark.read.schema(LINES).parquet(src)
-        fact = lines.join(F.broadcast(dim), "product_id").withColumn(
+
+class _FactRun:
+    """The medallion's fact sink over landed line files: streaming
+    (one micro-batch per call over the new files) or batch (one call
+    over only the new files)."""
+
+    def __init__(self, spark, lakehouse, tmp_path, streaming):
+        self.spark, self.streaming = spark, streaming
+        self.src = str(tmp_path / "lines")
+        self.pipe = MedallionPipeline(spark, lakehouse, [])
+        # literal rows, so a batch plan's size estimate is their bytes
+        self.dim = local_table(
+            spark, [(p, f"cat{p % 2}") for p in range(5)],
+            "product_id long, category string",
+        )
+        self.batches = 0
+
+    def land(self):
+        """Land the next batch of lines; the fact frame over them."""
+        if self.batches and not self.streaming:
+            shutil.rmtree(self.src)
+        _land_lines(self.spark, self.src, first_id=1000 * self.batches)
+        self.batches += 1
+        reader = self.spark.readStream if self.streaming else self.spark.read
+        lines = reader.schema(LINES).parquet(self.src)
+        return lines.join(F.broadcast(self.dim), "product_id").withColumn(
             "order_date", F.to_date("ts")
         )
-        return pipe.build_gold_fact(fact, "fact_lines", partition_by=["order_date"])
 
-    _land_lines(spark, src, first_id=0)
-    table = run_batch()
-    want = {f"order_date={d}": 1 for d in DATES}
-    assert _files_per_date(pipe, table) == want
+    def __call__(self) -> str:
+        return self.pipe.build_gold_fact(
+            self.land(), "fact_lines", partition_by=["order_date"]
+        )
 
-    # a second micro-batch (in batch, a second call over only the new
-    # files) adds exactly one more file per date
-    if not streaming:
-        shutil.rmtree(src)
-    _land_lines(spark, src, first_id=1000)
-    run_batch()
-    assert _files_per_date(pipe, table) == {k: 2 for k in want}
+
+@contextlib.contextmanager
+def _conf(spark, key: str, value: str):
+    prior = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prior)
+
+
+#: far below one landed file, so any fact write reaches one target file
+TINY_FILE = ("spark.sql.files.maxPartitionBytes", "256")
+
+
+@pytest.mark.parametrize("streaming", [True, False])
+def test_small_fact_is_unpartitioned_with_disjoint_date_ranges(
+    spark, lakehouse, tmp_path, streaming
+):
+    run = _FactRun(spark, lakehouse, tmp_path, streaming)
+    n_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    seen: set[str] = set()
+    for _ in range(2):
+        table = run()
+        assert run.pipe.io._partition_columns(table) == []
+        files = _data_files(run.pipe, table)
+        new, seen = files - seen, files
+        assert 1 <= len(new) <= n_files
+        assert all(os.sep not in f for f in new)
+        ranges = sorted(
+            (r.lo, r.hi)
+            for r in spark.read.table(table)
+            .groupBy(F.input_file_name().alias("f"))
+            .agg(F.min("order_date").alias("lo"),
+                 F.max("order_date").alias("hi"))
+            .collect()
+            if os.path.basename(r.f) in new
+        )
+        assert len(ranges) == len(new)
+        for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+            assert hi < lo
+
+    out = spark.read.table(table)
+    assert out.count() == 240
+    every = out.collect()
+    for d in DATES:
+        got = sorted(r.line_id for r in out.filter(F.col("order_date") == d)
+                     .collect())
+        assert got == sorted(r.line_id for r in every if r.order_date == d)
+        assert len(got) == 80
+
+
+@pytest.mark.parametrize("streaming", [True, False])
+def test_fact_over_one_file_writes_one_file_per_date_per_batch(
+    spark, lakehouse, tmp_path, streaming
+):
+    run = _FactRun(spark, lakehouse, tmp_path, streaming)
+    with _conf(spark, *TINY_FILE):
+        table = run()
+        want = {f"order_date={d}": 1 for d in DATES}
+        assert _files_per_date(run.pipe, table) == want
+        # a second micro-batch (in batch, a second call over only the
+        # new files) adds exactly one more file per date
+        run()
+    assert _files_per_date(run.pipe, table) == {k: 2 for k in want}
     assert spark.read.table(table).count() == 240
+
+
+@pytest.mark.parametrize("streaming", [True, False])
+def test_partitioned_fact_keeps_its_directories_on_append(
+    spark, lakehouse, tmp_path, streaming
+):
+    run = _FactRun(spark, lakehouse, tmp_path, streaming)
+    with _conf(spark, *TINY_FILE):
+        table = run()
+    # the second write alone is far below one target file
+    run()
+    assert run.pipe.io._partition_columns(table) == ["order_date"]
+    assert _files_per_date(run.pipe, table) == {
+        f"order_date={d}": 2 for d in DATES
+    }
+    assert all(
+        f.startswith("order_date=") for f in _data_files(run.pipe, table)
+    )
+    assert spark.read.table(table).count() == 240
+
+
+@pytest.mark.parametrize("streaming", [True, False])
+def test_layout_runs_no_job(spark, lakehouse, tmp_path, streaming):
+    """Sizing the write (the byte bound of a new table, the catalog's
+    partition columns of an existing one) is metadata only."""
+    run = _FactRun(spark, lakehouse, tmp_path, streaming)
+    fact = run.land()
+    table = lakehouse.table("gold", "fact_lines")
+    sc = spark.sparkContext
+    group = "layout_probe_jobs"
+    for _ in range(2):
+        sc.setJobGroup(group, "layout")
+        try:
+            _, parts = run.pipe.io._layout(fact, table, ["order_date"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert parts == []
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        run()  # the second pass sizes an existing table
 
 
 def test_clustered_dim_is_one_write_with_disjoint_ranges(

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -342,6 +343,33 @@ def test_upsert_duplicate_update_keys_land_once(spark, tmp_path):
     t.upsert(updates, ["pk"], "ver")
     got = sorted((r.pk, r.val, r.ver) for r in t.read().collect())
     assert got == [(1, "new", 3), (2, "keep", 5), (3, "ins", 1)]
+
+
+@pytest.mark.parametrize("n_parts", [1, 2])
+def test_upsert_ties_on_order_col_pick_one_winner(spark, tmp_path, n_parts):
+    """Two update rows for one key with the same ``ver`` keep the same
+    row whatever their input order or partitioning (a map column, which
+    Spark cannot sort, rides along)."""
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.deltalog import (
+        DeltaLogTable,
+    )
+
+    schema = "pk long, val string, ver long, tags map<string, int>"
+    rows = [(1, "a", 5, {"t": 1}), (1, "b", 5, {"t": 2}), (2, "c", 1, {})]
+    got = set()
+    for i, order in enumerate((rows, rows[::-1])):
+        t = DeltaLogTable(spark, str(tmp_path / f"tie{i}"))
+        t.upsert(spark.createDataFrame([(1, "old", 5, {})], schema),
+                 ["pk"], "ver")
+        updates = spark.createDataFrame(order, schema).coalesce(1)
+        if n_parts > 1:
+            updates = updates.repartition(n_parts)
+        t.upsert(updates, ["pk"], "ver")
+        got.add(tuple(sorted(
+            (r.pk, r.val, r.ver, tuple(r.tags.items()))
+            for r in t.read().collect()
+        )))
+    assert got == {((1, "b", 5, (("t", 2),)), (2, "c", 1, ()))}
 
 
 # ------------------------------------------------- snapshot diff (CDC)
