@@ -8,12 +8,16 @@ The reference hard-codes per-entity rule dicts and runs one eager
 expression that is **true for BAD rows** (matching the reference's
 filter-the-failures convention).  The engine then:
 
-- computes ALL rule counts in ONE aggregation pass
-  (``sum(when(pred, 1))`` per rule — single scan, map-side partial
-  aggregation, one tiny shuffle) — the L8 fix;
-- captures failing rows per rule and unions them **by name**
-  (``unionByName`` with ``allowMissingColumns`` — the L5 fix for the
-  reference's fragile positional ``union``);
+- tags each row ONCE with the array of rules it violates
+  (``violated_rules``); the failing rows are that array's explode, one
+  scan whatever the rule count, with named columns throughout — the L5
+  fix for the reference's per-rule filters and fragile positional
+  ``union``;
+- counts every rule during the audit write itself: ``apply`` attaches
+  the counters to the frame it hands the sink as an ``observe`` metric
+  set, so the counts cost no scan or job of their own — the L8 fix.
+  ``violation_counts`` computes the same counts as one aggregation for
+  a caller with no write to ride on;
 - appends the tagged failures to an audit table (S9 pattern).
 
 Referential-integrity checks (J3, ``gold_layer_data_quality_checks.py:
@@ -28,7 +32,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: Email regex, verbatim from ``silver_layer_data_quality_checks.py:100``.
@@ -106,24 +110,37 @@ def orphan_rule(
 # -------------------------------------------------------------- engine
 
 
+def _violated_rules(rules: Sequence[QualityRule]) -> Column:
+    """Each row's array of the rules it violates, in rule order: one
+    ``when(pred, name)`` per rule with the nulls filtered out, so a
+    predicate that is NULL (or false) tags nothing."""
+    return F.array_compact(
+        F.array(*[F.when(r.predicate, F.lit(r.name)) for r in rules])
+    )
+
+
 class QualityEngine:
     """Run a rule set over an entity DataFrame."""
 
     def __init__(self, rules: Sequence[QualityRule]):
         self.rules = list(rules)
 
-    def violation_counts(self, df: DataFrame) -> DataFrame:
-        """ALL rule counts in one scan (L8 fix).
-
-        One row per rule: (rule, n_violations).  Conditional-sum
-        aggregation is map-side combinable, so this is a single job
-        with a one-row-per-partition shuffle regardless of rule count.
-        """
-        aggs = [
-            F.sum(F.when(r.predicate, F.lit(1)).otherwise(F.lit(0))).alias(r.name)
+    def _counters(self) -> list[Column]:
+        # count of a when() is 0, not NULL, over an empty input
+        return [
+            F.count(F.when(r.predicate, F.lit(1))).alias(r.name)
             for r in self.rules
         ]
-        wide = df.agg(*aggs)
+
+    def violation_counts(self, df: DataFrame) -> DataFrame:
+        """ALL rule counts in one scan (L8 fix), for a caller with no
+        write to ride on (``apply`` counts during its audit write).
+
+        One row per rule: (rule, n_violations).  Conditional counts
+        are map-side combinable, so this is a single job with a
+        one-row-per-partition shuffle regardless of rule count.
+        """
+        wide = df.agg(*self._counters())
         # unpivot to (rule, n_violations) — stack is a narrow op
         pairs = ", ".join(f"'{r.name}', `{r.name}`" for r in self.rules)
         return wide.selectExpr(
@@ -131,54 +148,44 @@ class QualityEngine:
         )
 
     def failing_rows(self, df: DataFrame, entity: str) -> DataFrame:
-        """Per-rule failing rows, tagged and unioned BY NAME (L5 fix),
-        stamped with entity + check_ts like the reference's audit table
+        """One row per (row, violated rule), from ONE scan of ``df``:
+        the explode of each row's ``violated_rules`` array, named
+        columns throughout (L5 fix), stamped with entity + check_ts
+        like the reference's audit table
         (``silver_layer_data_quality_checks.py:162-174``)."""
-        parts = [
-            df.filter(r.predicate).withColumn("rule", F.lit(r.name))
-            for r in self.rules
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out.withColumn("entity", F.lit(entity)).withColumn(
-            "check_ts", F.current_timestamp()
+        return (
+            df.withColumn("rule", F.explode(_violated_rules(self.rules)))
+            .withColumn("entity", F.lit(entity))
+            .withColumn("check_ts", F.current_timestamp())
         )
 
     def apply(
-        self,
-        df: DataFrame,
-        entity: str,
-        sink: Callable[[DataFrame], None] | None = None,
+        self, df: DataFrame, entity: str, sink: Callable[[DataFrame], None]
     ) -> DataFrame:
-        """Counts + optional audit-sink append; returns the counts DF."""
-        counts = self.violation_counts(df)
-        if sink is not None:
-            sink(self.failing_rows(df, entity))
-        return counts
+        """Hand ``df``'s failing rows to ``sink`` (the audit write) and
+        return the rule counts, counted DURING that write: the counters
+        ride ``df`` as an ``observe`` metric set, so counting costs no
+        scan of its own.  The result is a ``VALUES`` table of ``(rule
+        string, n_violations bigint)``, a ``LocalRelation``, so
+        collecting it runs no job.
 
-    def observed(self, df: DataFrame, name: str = "dq"):
-        """In-flight DQ metrics: attach the rule counters to ``df`` as
-        an ``observe`` metric set — counts are accumulated DURING the
-        next action on the returned frame (the production write), so
-        quality monitoring costs ZERO extra scans.  At 100 TB that is
-        the difference between monitoring and a second pass over the
-        table.
-
-        Returns ``(df_with_metrics, observation)``; read
-        ``observation.get`` AFTER an action completes.  Counters are
-        plain conditional sums — the same numbers
-        ``violation_counts`` computes with its own job."""
-        from pyspark.sql import Observation
-
-        obs = Observation(name)
-        aggs = [
-            F.sum(F.when(r.predicate, F.lit(1)).otherwise(F.lit(0)))
-            .cast("bigint")
-            .alias(r.name)
-            for r in self.rules
-        ]
-        return df.observe(obs, *aggs), obs
+        ``sink`` must run exactly ONE full action on the frame it gets
+        (a write).  A second action would count the rows twice, a
+        partial one (``isEmpty()``, ``limit``) counts a partial scan,
+        and a sink that runs none leaves ``Observation.get`` blocking.
+        ``failing_rows`` adds no shuffle, so with a sink that adds
+        none either the observation runs in the action's result stage,
+        where Spark applies each task's counters exactly once."""
+        obs = Observation()
+        sink(self.failing_rows(df.observe(obs, *self._counters()), entity))
+        got, args, rows = obs.get, {}, []
+        for i, r in enumerate(self.rules):
+            args[f"r{i}"], args[f"n{i}"] = r.name, got[r.name]
+            rows.append(f"(:r{i}, CAST(:n{i} AS BIGINT))")
+        return df.sparkSession.sql(
+            f"SELECT * FROM VALUES {', '.join(rows)} AS t(rule, n_violations)",
+            args=args,
+        )
 
 
 def expectations_gate(
@@ -195,12 +202,11 @@ def expectations_gate(
     action consumes the passed side — no extra eager count job).
 
     The reference's platform (Databricks) expresses this as
-    ``@dlt.expect_or_drop`` etc.; this is the OSS Spark form.  One
-    predicate disjunction per side — both outputs are narrow filters
-    over the same scan, no shuffle; the quarantine side carries a
-    ``violated_rules`` array so one row failing several rules stays
-    ONE quarantined row (unlike ``failing_rows``' per-rule audit
-    grain).
+    ``@dlt.expect_or_drop`` etc.; this is the OSS Spark form.  Both
+    sides test the same ``violated_rules`` array — narrow filters over
+    the same scan, no shuffle; the quarantine side carries the array,
+    so one row failing several rules stays ONE quarantined row
+    (unlike ``failing_rows``' per-rule audit grain).
     """
     if on_violation not in ("drop", "warn", "fail"):
         raise ValueError(
@@ -209,31 +215,21 @@ def expectations_gate(
     rules = list(rules)
     if not rules:
         raise ValueError("rules must be non-empty")
-    tags = F.filter(
-        F.array(
-            *[
-                F.when(r.predicate, F.lit(r.name)).otherwise(F.lit(None))
-                for r in rules
-            ]
-        ),
-        lambda t: t.isNotNull(),
-    )
+    tags = _violated_rules(rules)
+    any_bad = F.size(tags) > 0
     bad = df.withColumn("violated_rules", tags).filter(
         F.size("violated_rules") > 0
     )
-    any_bad = rules[0].predicate
-    for r in rules[1:]:
-        any_bad = any_bad | r.predicate
     if on_violation == "warn":
         return df, bad
     if on_violation == "drop":
-        return df.filter(~F.coalesce(any_bad, F.lit(False))), bad
+        return df.filter(~any_bad), bad
     # fail: poison the passed side lazily — the guard lives in a
     # FILTER predicate (a dropped column would be pruned away and the
     # raise_error dead-code-eliminated), so it fires inside whatever
     # action consumes the frame, on the first violating row
     guard = F.when(
-        F.coalesce(any_bad, F.lit(False)),
+        any_bad,
         F.raise_error(
             F.concat(
                 F.lit("expectation violated: "),

@@ -178,30 +178,28 @@ def _customer_rules():
 
 def q_dq_violation_counts(spark: SparkSession, sf: str) -> DataFrame:
     """Single-pass violation counting (L8 fix): every rule's count in
-    one aggregation job."""
+    one aggregation job, 0 (not NULL) over an empty table."""
     c = load(spark, sf, "customer")
     return QualityEngine(_customer_rules()).violation_counts(c)
 
 
 SQL_DQ_VIOLATION_COUNTS = """
 SELECT 'null_pk[c_custkey]' AS rule,
-       CAST(SUM(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_violations
+       COUNT(CASE WHEN c_custkey IS NULL THEN 1 END) AS n_violations
 FROM customer
 UNION ALL
 SELECT 'whitespace[c_name]',
-       CAST(SUM(CASE WHEN length(c_name) <> length(trim(c_name))
-                     THEN 1 ELSE 0 END) AS BIGINT)
+       COUNT(CASE WHEN length(c_name) <> length(trim(c_name)) THEN 1 END)
 FROM customer
 UNION ALL
 SELECT 'positive[c_acctbal]',
-       CAST(SUM(CASE WHEN c_acctbal <= 0 THEN 1 ELSE 0 END) AS BIGINT)
+       COUNT(CASE WHEN c_acctbal <= 0 THEN 1 END)
 FROM customer
 """
 
 
 def q_dq_failing_rows(spark: SparkSession, sf: str) -> DataFrame:
-    """Failing-row capture, unioned BY NAME and entity-tagged (L5 fix;
+    """Failing-row capture from one scan, entity-tagged (L5 fix;
     silver_layer_data_quality_checks.py:162-174)."""
     c = load(spark, sf, "customer")
     rows = QualityEngine(_customer_rules()).failing_rows(c, "customer")

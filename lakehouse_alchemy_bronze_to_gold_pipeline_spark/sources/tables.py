@@ -121,32 +121,37 @@ def _target_file_bytes(spark: SparkSession) -> int:
 
 
 def _bytes_bound(df: DataFrame) -> float:
-    """A job-free upper bound on the bytes ``df`` holds: the
-    optimizer's ``sizeInBytes`` for a batch plan (a join's is the
-    product of its inputs'), and for a streaming plan the on-disk size
-    of its file sources, listed through the Hadoop file system (all of
-    a source's files bound any one micro-batch).  A streaming source
-    that is not a path (a socket, a rate or a Python source with no
-    ``path``) bounds nothing: ``inf``."""
-    qe = df._jdf.queryExecution()
-    if not df.isStreaming:
-        return int(qe.optimizedPlan().stats().sizeInBytes())
+    """A job-free bound on the bytes ``df`` holds: the sum of its
+    plan's leaf sizes, the bytes it reads, in batch and streaming
+    alike.  Not the optimizer's ``sizeInBytes``: a join's is the
+    product of its inputs', so a small fact with two dims would bound
+    at gigabytes.  A static leaf counts its relation's
+    ``stats().sizeInBytes``; a streaming file source counts the
+    on-disk size of its path, listed through the Hadoop file system
+    (all of a source's files bound any one micro-batch).  A leaf with
+    no size (a streaming source that is not a path, or a ``LogicalRDD``
+    at Spark's default estimate) bounds nothing: ``inf``."""
     jss = df.sparkSession._jsparkSession
-    jvm = df.sparkSession._jvm
-    conf = jss.sessionState().newHadoopConf()
+    unknown = jss.sessionState().conf().defaultSizeInBytes()
+    hadoop_conf = None
     total = 0
-    leaves = qe.analyzed().collectLeaves().iterator()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
     while leaves.hasNext():
         leaf = leaves.next()
         if not leaf.isStreaming():
+            size = int(leaf.stats().sizeInBytes())
+            if size >= unknown:
+                return float("inf")
+            total += size
             continue
         if leaf.getClass().getSimpleName() != "StreamingRelation":
             return float("inf")
         path = leaf.dataSource().options().get("path")
         if not path.isDefined():
             return float("inf")
-        glob = jvm.org.apache.hadoop.fs.Path(path.get())
-        fs = glob.getFileSystem(conf)
+        hadoop_conf = hadoop_conf or jss.sessionState().newHadoopConf()
+        glob = df.sparkSession._jvm.org.apache.hadoop.fs.Path(path.get())
+        fs = glob.getFileSystem(hadoop_conf)
         for st in fs.globStatus(glob) or []:
             total += fs.getContentSummary(st.getPath()).getLength()
     return total

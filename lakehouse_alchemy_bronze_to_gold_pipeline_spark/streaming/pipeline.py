@@ -178,7 +178,8 @@ class MedallionPipeline:
 
     # ----------------------------------------------------------- quality
     def run_quality(self, name: str, layer: str = "silver") -> DataFrame:
-        """Single-pass rule counts + failing-row audit append.
+        """Failing-row audit append, with the rule counts observed
+        during that one write (``QualityEngine.apply``).
 
         Every entity appends to the one ``quality_issues`` table, so
         its rows have a fixed schema ``(entity, rule, check_ts,
@@ -188,17 +189,15 @@ class MedallionPipeline:
         if not e.quality_rules:
             raise ValueError(f"no quality rules configured for {name!r}")
         df = self.io.read(self.lh.table(layer, name))
-        engine = QualityEngine(list(e.quality_rules))
-        issues_table = self.lh.table("quality", "quality_issues")
         record = F.to_json(F.struct(*df.columns)).alias("record")
-
-        def sink(rows: DataFrame) -> None:
-            self.io.write_append(
+        return QualityEngine(e.quality_rules).apply(
+            df,
+            name,
+            lambda rows: self.io.write_append(
                 rows.select("entity", "rule", "check_ts", record),
-                issues_table,
-            )
-
-        return engine.apply(df, name, sink=sink)
+                self.lh.table("quality", "quality_issues"),
+            ),
+        )
 
     # -------------------------------------------------------- end-to-end
     def run_bronze_silver(self, names: Sequence[str] | None = None) -> None:

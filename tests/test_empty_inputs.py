@@ -278,6 +278,31 @@ def test_expectations_gate_rejects_empty_rules(spark):
         expectations_gate(df, [], "drop")
 
 
+def test_dq_counts_on_empty_input_are_zero(spark):
+    """Every rule counts 0 over an empty frame, not NULL — in the
+    aggregation and in the counts ``apply`` observes during its
+    sink's write."""
+    from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.quality import (
+        QualityEngine,
+        null_pk_rule,
+        positive_rule,
+    )
+
+    empty = spark.range(0).select(
+        F.col("id").alias("pk"), F.col("id").cast("double").alias("amt")
+    )
+    eng = QualityEngine([null_pk_rule(["pk"]), positive_rule(["amt"])])
+    zero = {"null_pk[pk]": 0, "positive[amt]": 0}
+    counts = eng.violation_counts(empty).collect()
+    assert {r.rule: r.n_violations for r in counts} == zero
+    observed = eng.apply(
+        empty,
+        "e",
+        lambda rows: rows.write.format("noop").mode("overwrite").save(),
+    ).collect()
+    assert {r.rule: r.n_violations for r in observed} == zero
+
+
 def test_dp_release_empty_and_als_half_step_empty(spark):
     """The r9 operators under S10's neutral-element discipline: a DP
     release over an empty aggregate table is an empty release (zero

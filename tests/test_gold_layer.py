@@ -11,6 +11,9 @@ count and rescans bounded:
   disjoint date ranges; a larger one, or a table already partitioned,
   gets one directory per date and one file per date per micro-batch,
   however many tasks the input spans;
+- the bound on a write's bytes is the sum of its plan's leaf sizes,
+  so a batch fact joined to parquet dims is sized by the bytes it
+  reads, not by the optimizer's join estimate;
 - a clustered dim is written clustered in its one write — no snapshot
   copy, no second rewrite;
 - Bronze infers an entity's schema once, when its table is created;
@@ -37,7 +40,13 @@ from pyspark.sql.types import (
 )
 
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.catalog import Lakehouse
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.star import (
+    DimSpec,
+    build_fact,
+)
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.sources.tables import (
+    _bytes_bound,
+    _target_file_bytes,
     local_table,
 )
 from lakehouse_alchemy_bronze_to_gold_pipeline_spark.streaming import (
@@ -238,6 +247,56 @@ def test_layout_runs_no_job(spark, lakehouse, tmp_path, streaming):
         assert parts == []
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         run()  # the second pass sizes an existing table
+
+
+def test_batch_fact_with_parquet_dims_is_unpartitioned(
+    spark, lakehouse, tmp_path
+):
+    """A batch fact over parquet orders and two parquet dims is bounded
+    by the bytes it reads, the sum of its three scans.  The optimizer's
+    estimate of the joins is the product of their inputs' sizes,
+    gigabytes for these KB-sized tables, which would hive-partition
+    the fact by date."""
+    base = tmp_path / "star"
+    spark.range(2000).select(
+        F.col("id").alias("order_id"),
+        (F.col("id") % 50).alias("customer_id"),
+        (F.col("id") % 20).alias("product_id"),
+        F.timestamp_seconds(
+            F.lit(1704067200) + F.col("id") % 3 * 86400
+        ).alias("ts"),
+    ).write.parquet(str(base / "orders"))
+    for name, n in (("customers", 50), ("products", 20)):
+        spark.range(n).select(
+            F.col("id").alias("k"),
+            F.concat(F.lit(name), F.col("id")).alias("label"),
+        ).write.parquet(str(base / name))
+
+    def read(name):
+        return spark.read.parquet(str(base / name))
+
+    fact = build_fact(
+        read("orders"),
+        [
+            DimSpec(read("customers"), "customer_id", "k",
+                    {"label": "customer"}),
+            DimSpec(read("products"), "product_id", "k",
+                    {"label": "product"}),
+        ],
+        partition_date_source="ts",
+    )
+    on_disk = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, names in os.walk(base)
+        for f in names
+        if f.endswith(".parquet")
+    )
+    assert _bytes_bound(fact) == on_disk < _target_file_bytes(spark)
+    pipe = MedallionPipeline(spark, lakehouse, [])
+    table = pipe.build_gold_fact(fact, "fact_orders", partition_by=["order_date"])
+    assert pipe.io._partition_columns(table) == []
+    assert all(os.sep not in f for f in _data_files(pipe, table))
+    assert spark.read.table(table).count() == 2000
 
 
 def test_clustered_dim_is_one_write_with_disjoint_ranges(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -26,6 +28,10 @@ from lakehouse_alchemy_bronze_to_gold_pipeline_spark.operators.star import (
     DimSpec,
     build_dim,
     build_fact,
+)
+from lakehouse_alchemy_bronze_to_gold_pipeline_spark.plans.inspect import (
+    formatted,
+    ops,
 )
 
 
@@ -76,9 +82,9 @@ def test_quality_single_pass_counts_and_rows(spark):
 
 
 def test_quality_observed_metrics_during_write(spark):
-    """``observed`` collects the SAME counters as violation_counts,
-    but during the production action (here a noop write) — no second
-    scan job."""
+    """``apply`` collects the SAME counters as violation_counts, but
+    during the sink's one action (here a noop write) — no second scan
+    job."""
     df = spark.createDataFrame(
         [
             Row(id=None, email="x@y.com", qty=2.0, name=" pad"),
@@ -88,12 +94,60 @@ def test_quality_observed_metrics_during_write(spark):
     )
     rules = [null_pk_rule(["id"]), email_rule("email"), positive_rule(["qty"])]
     eng = QualityEngine(rules)
-    observed_df, obs = eng.observed(df)
-    observed_df.write.format("noop").mode("overwrite").save()
+    counts = eng.apply(
+        df, "t", lambda rows: rows.write.format("noop").mode("overwrite").save()
+    )
     expected = {
         r.rule: r.n_violations for r in eng.violation_counts(df).collect()
     }
-    assert obs.get == expected
+    assert {r.rule: r.n_violations for r in counts.collect()} == expected
+    assert counts.schema.simpleString() == "struct<rule:string,n_violations:bigint>"
+
+
+def _dq_rows_and_rules(spark):
+    # id=2 violates two rules; id=4's email is NULL, so email[email]'s
+    # predicate is NULL there and the row violates nothing
+    df = spark.createDataFrame(
+        [
+            Row(id=None, email="x@y.com", qty=2.0),
+            Row(id=2, email="bad", qty=-1.0),
+            Row(id=3, email="a@b.io", qty=1.5),
+            Row(id=4, email=None, qty=1.0),
+        ],
+        "id bigint, email string, qty double",
+    )
+    return df, [null_pk_rule(["id"]), email_rule("email"), positive_rule(["qty"])]
+
+
+def test_failing_rows_equals_per_rule_filters(spark):
+    """The one-scan explode gives exactly the rows of one filter per
+    rule unioned by name, the engine's former form."""
+    df, rules = _dq_rows_and_rules(spark)
+    got = QualityEngine(rules).failing_rows(df, "t")
+    ref = None
+    for r in rules:
+        part = df.filter(r.predicate).withColumn("rule", F.lit(r.name))
+        ref = part if ref is None else ref.unionByName(part)
+    cols = ["id", "email", "qty", "rule"]
+    key = lambda row: (row.rule, row.id is None, row.id or 0)
+    assert sorted(got.select(*cols).collect(), key=key) == sorted(
+        ref.select(*cols).collect(), key=key
+    )
+    assert sorted((r.id, r.rule) for r in got.collect() if r.id == 2) == [
+        (2, "email[email]"), (2, "positive[qty]"),
+    ]
+    assert all(r.entity == "t" for r in got.collect())
+    assert not [r for r in got.collect() if r.id == 4]
+
+
+def test_failing_rows_scan_the_input_once(spark, tmp_path):
+    df, rules = _dq_rows_and_rules(spark)
+    path = str(tmp_path / "t")
+    df.write.parquet(path)
+    rows = QualityEngine(rules).failing_rows(spark.read.parquet(path), "t")
+    tree = formatted(rows).split("\n\n")[0]
+    assert len(re.findall(r"Scan parquet\s+\(\d+\)", tree)) == 1
+    assert "Union" not in ops(formatted(rows))
 
 
 def test_orphan_rule_anti_join(spark):

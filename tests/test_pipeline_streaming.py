@@ -101,6 +101,25 @@ def test_quality_layer_end_to_end(spark, pipeline):
     assert json.loads(bad[0].record)["customer_id"] == 2
 
 
+def test_run_quality_counts_collect_with_no_job(spark, pipeline):
+    """The counts are observed during the audit write, so collecting
+    ``run_quality``'s result runs no Spark job."""
+    pipe, src, lh = pipeline
+    pipe.run_bronze_silver(["customers"])
+    counts = pipe.run_quality("customers")
+    sc = spark.sparkContext
+    group = "run_quality_collect"
+    sc.setJobGroup(group, "collect")
+    try:
+        rows = counts.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert {r.rule: r.n_violations for r in rows} == {
+        "null_pk[customer_id]": 0, "email[email]": 1,
+    }
+
+
 def test_quality_audit_shared_by_entities_with_different_columns(
     spark, tmp_path
 ):
